@@ -15,8 +15,6 @@ engine under test only ever sees the generated files:
   NULL-LSN noise rows.
 - :func:`documents` builds the ``documents`` corpus (fixture schema) with a
   planted share of near-duplicates.
-- :class:`TxlogPlan` is the commit plan of the long-lived txlog table of
-  the ``txlog_reads`` workload, plus the answers every read must return.
 """
 
 from __future__ import annotations
@@ -239,68 +237,3 @@ def write_documents(corpus_dir: str, seed: int, n_docs: int) -> None:
     pq.write_table(
         pa.table(cols, schema=schema), os.path.join(corpus_dir, "documents.parquet")
     )
-
-
-# ---------------------------------------------------------------------------
-# txlog commit plan
-# ---------------------------------------------------------------------------
-
-class TxlogPlan:
-    """Commit plan of a long-lived ``(id BIGINT, val BIGINT)`` table.
-
-    Most versions append ``rows_per_commit`` new even ids (the ``c``-th
-    append owns ``[2cR, 2(c+1)R)``, so per-file id stats are tight and
-    point lookups can skip files). ``n_merges`` upserts are interleaved
-    early in the history, one every ``merge_every`` appends: each rewrites
-    a narrow window of existing ids (every even key gets a new value) and
-    inserts some of the window's free odd ids, so a merge rewrites only the
-    window's files. The plan replays itself in Python to predict every
-    read's answer.
-    """
-
-    SCHEMA = "id BIGINT, val BIGINT"
-
-    def __init__(self, seed: int, n_appends: int, rows_per_commit: int, n_merges: int,
-                 merge_every: int = 20):
-        rng = random.Random(f"txlog-{seed}")
-        r = rows_per_commit
-        #: ("append" | "merge", rows) per version, in commit order
-        self.versions: list[tuple[str, list[tuple[int, int]]]] = []
-        #: live row count, and rows of the change feed, per version
-        self.count_at: list[int] = []
-        self.changes_at: list[int] = []
-        state: dict[int, int] = {}
-        merges_left = n_merges
-        for c in range(n_appends):
-            rows = [(2 * (c * r + i), rng.randrange(1_000_000)) for i in range(r)]
-            state.update(rows)
-            self._add("append", rows, len(rows), state)
-            if merges_left and (c + 1) % merge_every == 0:
-                merges_left -= 1
-                lo = 2 * r * rng.randrange(c - 1)
-                window = range(lo, lo + 4 * r)
-                updates = [(k, state[k] + 1 + rng.randrange(1000)) for k in window if k in state]
-                free = [k for k in window if k not in state]
-                inserts = [(k, rng.randrange(1_000_000))
-                           for k in sorted(rng.sample(free, min(len(free), r // 2)))]
-                state.update(updates + inserts)
-                # an update is a pre/post image pair; unchanged rows the
-                # rewrite carries along are not changes
-                self._add("merge", updates + inserts, 2 * len(updates) + len(inserts), state)
-        self.final = state
-
-    def _add(self, kind, rows, changes, state) -> None:
-        self.versions.append((kind, rows))
-        self.count_at.append(len(state))
-        self.changes_at.append(changes)
-
-    @property
-    def tip(self) -> int:
-        return len(self.versions) - 1
-
-    @property
-    def max_id(self) -> int:
-        return max(self.final)
-
-    def changes_between(self, start: int, end: int) -> int:
-        return sum(self.changes_at[start:end + 1])

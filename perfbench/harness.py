@@ -21,7 +21,9 @@ import traceback
 
 #: a run refuses to start with less free space than this in its checkout
 MIN_FREE_BYTES = 3 << 30
-DRIVER_MEMORY = "2g"
+_CLK_TCK = os.sysconf("SC_CLK_TCK")
+#: see ``Stopwatch``
+STEAL_EXPONENT = 1.3
 
 
 # ---------------------------------------------------------------------------
@@ -47,11 +49,7 @@ class Workspace:
         # everything the JVM and Python spill goes under the workspace
         os.environ["TMPDIR"] = self.tmp
         os.environ["SPARK_LOCAL_DIRS"] = self.dir("spark-local")
-        # a bounded driver heap keeps peak RSS small and steady
-        os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
-        # a fixed-size heap makes peak RSS a steady figure instead of a
-        # record of when G1 chose to grow the heap
-        java_opts = f"-Xms{DRIVER_MEMORY} -Djava.io.tmpdir={self.tmp} -XX:-UsePerfData"
+        java_opts = f"-Djava.io.tmpdir={self.tmp} -XX:-UsePerfData"
         os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
             [
                 "--driver-java-options", shlex.quote(java_opts),
@@ -77,12 +75,13 @@ class Workspace:
 # Spark session lifecycle
 # ---------------------------------------------------------------------------
 
-def start_spark(app: str, cores: int):
-    """The engine's own session builder (``session.get_spark``) on
-    ``local[cores]``."""
+def start_spark(app: str):
+    """The engine's own session builder (``session.get_spark``) with its
+    own configuration: ``SPARK_GRAFT_CPUS`` (default: all cores) sets the
+    local parallelism and the shuffle partitions."""
     from change_data_capture_spark.session import get_spark
 
-    spark = get_spark(f"perfbench-{app}", master=f"local[{cores}]")
+    spark = get_spark(f"perfbench-{app}")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -127,6 +126,66 @@ def _vm_hwm_kb(pid: int | str) -> int:
     except OSError:
         pass
     return 0
+
+
+def _proc_cpu_ticks(pid: int | str) -> int:
+    """utime + stime of a process, in clock ticks."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return int(fields[11]) + int(fields[12])
+    except (OSError, IndexError, ValueError):
+        return 0
+
+
+def cpu_snapshot() -> tuple[int, int, int]:
+    """(CPU ticks of the driver JVM plus this process, host busy ticks,
+    host steal ticks): steal is time the hypervisor ran something else
+    while a vCPU of this host wanted to run."""
+    pid = jvm_pid()
+    own = _proc_cpu_ticks("self") + (_proc_cpu_ticks(pid) if pid else 0)
+    with open("/proc/stat") as f:
+        t = [int(x) for x in f.readline().split()[1:]]
+    user, nice, system, _idle, _iowait, irq, softirq, steal = t[:8]
+    return own, user + nice + system + irq + softirq, steal
+
+
+def steal_share(c0, c1) -> float:
+    """Share of the host's wanted CPU time that steal took between two
+    ``cpu_snapshot`` readings."""
+    steal = c1[2] - c0[2]
+    return steal / max(1, c1[1] - c0[1] + steal)
+
+
+class Stopwatch:
+    """Wall time of a block, and its steal-free time: what the block is
+    estimated to take on an unshared host.
+
+    On a shared virtual machine the hypervisor takes CPU from the guest
+    ("steal"); on the 4-vCPU guest this benchmark was built on, the steal
+    share during an operation swung between 0 and 50% within minutes, and
+    wall-clock latencies with it. With steal share ``s`` of the CPU time the
+    host wanted over the block, the steal-free time is
+    ``wall * (1 - s) ** STEAL_EXPONENT``. The exponent is above 1 because a
+    stolen vCPU also stalls the threads that wait on it (task completion,
+    locks), and that waiting shows as idle time, not as steal: regressing
+    log wall latency on ``-log(1 - s)`` over the operations of twenty runs
+    of both workloads gave 1.2 to 1.4 within runs. With exponent 1 latency
+    still rose with steal.
+    """
+
+    def __enter__(self):
+        self.c0 = cpu_snapshot()
+        self.t0 = time.perf_counter()
+        return self
+
+    def __exit__(self, *exc):
+        self.wall_s = time.perf_counter() - self.t0
+        c1 = cpu_snapshot()
+        self.steal = steal_share(self.c0, c1)
+        self.cpu_ms = (c1[0] - self.c0[0]) * 1000 / _CLK_TCK
+        self.net_s = self.wall_s * (1 - self.steal) ** STEAL_EXPONENT
+        return False
 
 
 def peak_rss_mb() -> float:
@@ -435,8 +494,15 @@ class Op:
 
 
 class LoopResult:
+    """Per successful operation: steal-free latency (``latencies_ms``, see
+    ``Stopwatch``), wall-clock latency, CPU time of the JVM plus this
+    process, and the steal share; ``busy_s`` sums the steal-free times."""
+
     def __init__(self):
         self.latencies_ms: list[float] = []
+        self.wall_ms: list[float] = []
+        self.cpu_ms: list[float] = []
+        self.steal_share: list[float] = []
         self.names: list[str] = []
         self.traced: list[bool] = []
         self.items = 0.0
@@ -462,9 +528,8 @@ def closed_loop(spark, next_op, seconds: float, tracer: Tracer, min_ops: int = 3
         res.attempted += 1
         traced = alternate_tracing and (res.attempted // 2) % 2 == 0
         tracer.enabled = traced
-        t0 = time.perf_counter()
         try:
-            with tracer.op(res.attempted, op.name):
+            with Stopwatch() as sw, tracer.op(res.attempted, op.name):
                 out = op.run()
         except Exception:
             traceback.print_exc(file=sys.stderr)
@@ -472,11 +537,13 @@ def closed_loop(spark, next_op, seconds: float, tracer: Tracer, min_ops: int = 3
             continue
         finally:
             tracer.enabled = False
-        dt = time.perf_counter() - t0
-        res.latencies_ms.append(dt * 1000)
+        res.latencies_ms.append(sw.net_s * 1000)
+        res.wall_ms.append(sw.wall_s * 1000)
+        res.cpu_ms.append(sw.cpu_ms)
+        res.steal_share.append(sw.steal)
         res.names.append(op.name)
         res.traced.append(traced)
-        res.busy_s += dt
+        res.busy_s += sw.net_s
         res.items += op.items
         if op.check is not None and not op.check(out):
             print(f"perfbench: wrong result from {op.name}", file=sys.stderr)

@@ -2,26 +2,32 @@
 
 Usage (from the root of a checkout)::
 
-    python3 perfbench/run.py --workload cdc_stream --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload cdc_stream --seed 1 --seconds 4 --trace 0
     python3 perfbench/run.py --describe
 
 A run generates its inputs from ``--seed``, starts the engine's own Spark
-session on ``local[<cores>]``, loads the workload's initial state, warms
-up, and then drives a closed loop (one client, one outstanding operation)
-for ``--seconds`` (and at least the workload's minimum number of
-operations). Every operation's result is checked, outside the timed
-region; a final check compares the end state with a reference. The last
-line of standard output is one JSON object::
+session (``session.get_spark``; ``SPARK_GRAFT_CPUS`` sets its local
+parallelism, all cores by default), loads the workload's initial state
+once, warms up, and then drives a closed loop (one client, one
+outstanding operation) for ``--seconds`` (and at least the workload's
+minimum number of operations). Every operation's result is checked,
+outside the timed region; a final check compares the end state with a
+reference. The last line of standard output is one JSON object::
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
-With ``--trace 0`` the metrics are the end-to-end ones (latency median and
-tail, throughput, peak RSS, set-up time). With ``--trace 1`` every second
-operation records spans around each call into the engine, Spark's stage
-counters are collected for the loop, and the metrics are the per-layer
-ones; the spans go to ``.perfbench_out/<workload>-seed<seed>.trace.json``.
-The latency ratio of traced to untraced operations is reported as the
-tracing overhead.
+Times are steal-free (``harness.Stopwatch``): wall time less the share of
+CPU the hypervisor took from this host meanwhile. The line before the
+result holds the wall-clock figures, per-operation CPU time and steal.
+
+With ``--trace 0`` the metrics are the end-to-end ones: latency median
+(averaged over the kinds of operation) and tail, throughput, and set-up
+time (session start, one load of the initial state, warm-up). With
+``--trace 1`` every second operation records spans around each call into
+the engine, Spark's stage counters are collected for the loop, and the
+metrics are the per-layer ones, peak RSS among them; the spans go to
+``.perfbench_out/<workload>-seed<seed>.trace.json``. The latency ratio of
+traced to untraced operations is reported as the tracing overhead.
 
 All files of a run live in ``.perfbench_work/`` under the checkout and are
 removed when the run ends.
@@ -41,6 +47,7 @@ sys.path.insert(0, HERE)
 
 from harness import (  # noqa: E402
     EngineCounters,
+    Stopwatch,
     Tracer,
     Workspace,
     attribute_stages,
@@ -62,8 +69,6 @@ def _parse(argv):
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cores", type=int, default=os.cpu_count() or 4,
-                    help="local[N] parallelism (default: all cores)")
     ap.add_argument("--describe", action="store_true",
                     help="print the metric catalogue and exit")
     args = ap.parse_args(argv)
@@ -98,29 +103,24 @@ def main(argv=None) -> int:
 
     ws = Workspace(root, f"{args.workload}-s{args.seed}")
     tracer = Tracer(enabled=False)
-    wl = WORKLOADS[args.workload](ws, args.seed, args.cores, tracer)
+    wl = WORKLOADS[args.workload](ws, args.seed, tracer)
     spark = None
     try:
         t0 = time.perf_counter()
         wl.generate()
         gen_s = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        spark = start_spark(args.workload, args.cores)
-        setup = {"session.start_s": time.perf_counter() - t0}
-        wl.bind(spark)
-        loads = []
-        for rep in range(wl.load_reps):
-            t0 = time.perf_counter()
-            wl.load(rep)
-            loads.append(time.perf_counter() - t0)
-        setup["session.load_s"] = statistics.median(loads)
-        t0 = time.perf_counter()
-        wl.warmup()
-        setup["session.warmup_s"] = time.perf_counter() - t0
+        setup, setup_wall = {}, {}
+        for phase, step in (("start", lambda: wl.bind(start_spark(args.workload))),
+                            ("load", wl.load), ("warmup", wl.warmup)):
+            with Stopwatch() as sw:
+                step()
+            setup[f"session.{phase}_s"] = sw.net_s
+            setup_wall[phase] = round(sw.wall_s, 2)
+            spark = wl.spark
         t0 = time.perf_counter()
         wl.prepare_checks()
-        _log(f"generate {gen_s:.2f}s, loads {[round(x, 2) for x in loads]}s, "
-             f"reference {time.perf_counter() - t0:.2f}s, {setup}")
+        _log(f"generate {gen_s:.2f}s, reference {time.perf_counter() - t0:.2f}s, "
+             f"set-up wall {setup_wall}, steal-free {setup}")
 
         if args.trace:
             res, layers = _traced(args, root, spark, wl, tracer)
@@ -143,26 +143,33 @@ def main(argv=None) -> int:
     if args.trace:
         layers.update(setup)
         layers["bench.error_rate"] = failed / res.attempted
+        layers["bench.steal_pct"] = 100 * statistics.median(res.steal_share)
+        layers["engine.peak_rss_mb"] = rss_mb
         metrics = render(layers, PER_LAYER)
     else:
         lat = res.latencies_ms
         tail, label = tail_summary(lat)
+        by_op = {k: statistics.median(x for n, x in zip(res.names, lat) if n == k)
+                 for k in sorted(set(res.names))}
         metrics = render(
             {
-                "latency_p50_ms": statistics.median(lat),
+                # kinds of operation run in equal shares; the median of a
+                # mix of two kinds would fall in the gap between them
+                "latency_p50_ms": statistics.fmean(by_op.values()),
                 "latency_tail_ms": tail,
                 "items_per_s": res.items / res.busy_s,
-                "peak_rss_mb": rss_mb,
                 "setup_s": sum(setup.values()),
             },
             END_TO_END,
         )
-        by_op = {k: statistics.median(x for n, x in zip(res.names, lat) if n == k)
-                 for k in sorted(set(res.names))}
         print(json.dumps({"workload": args.workload, "seed": args.seed, "ops": len(lat),
                           "tail_percentile": label, "generate_s": gen_s,
+                          "set_up_wall_s": setup_wall, "peak_rss_mb": rss_mb,
                           "error_rate": failed / res.attempted, "median_ms_by_op": by_op,
-                          "latencies_ms": [round(x) for x in lat]}))
+                          "latencies_ms": [round(x) for x in lat],
+                          "wall_ms": [round(x) for x in res.wall_ms],
+                          "cpu_ms": [round(x) for x in res.cpu_ms],
+                          "steal_pct": [round(100 * x, 1) for x in res.steal_share]}))
     print(json.dumps({"correct": ok and res.wrong == 0, "attempted": res.attempted,
                       "failed": failed, "metrics": metrics}))
     return 0

@@ -20,7 +20,7 @@ import tempfile
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-from gen import CdcLog, TxlogPlan, write_cdc_log, write_documents  # noqa: E402
+from gen import CdcLog, write_cdc_log, write_documents  # noqa: E402
 from metrics import END_TO_END, PER_LAYER  # noqa: E402
 
 
@@ -44,11 +44,7 @@ def _inputs(seed: int, tmp: str) -> dict[str, str]:
     out["scd2_query"] = _digest(d)
     d = os.path.join(tmp, f"corpus-{seed}")
     write_documents(d, seed, 300)
-    out["neardup_corpus"] = _digest(d)
-    plan = TxlogPlan(seed, 50, 10, 2)
-    out["txlog_reads"] = hashlib.sha256(
-        json.dumps([plan.versions, plan.count_at, plan.changes_at]).encode()
-    ).hexdigest()
+    out["documents"] = _digest(d)
     return out
 
 

@@ -2,13 +2,9 @@
 load; the one-line reasons are in ``BENCHMARK.json``."""
 
 from workloads.cdc_stream import CdcStream
-from workloads.neardup_corpus import NeardupCorpus
 from workloads.scd2_query import Scd2Query
-from workloads.txlog_reads import TxlogReads
 
 WORKLOADS = {
     "cdc_stream": CdcStream,
     "scd2_query": Scd2Query,
-    "txlog_reads": TxlogReads,
-    "neardup_corpus": NeardupCorpus,
 }

@@ -9,18 +9,14 @@ from harness import Op, Tracer, Workspace, median_or_zero
 
 
 class Workload:
-    #: how many times the state-loading step is repeated; ``setup_s``
-    #: takes the median of the repetitions
-    load_reps = 1
     #: operations run untimed before measuring, so JIT and codegen settle
     warmup_ops = 3
     #: the measured loop runs at least this many operations
     min_ops = 3
 
-    def __init__(self, ws: Workspace, seed: int, cores: int, tracer: Tracer):
+    def __init__(self, ws: Workspace, seed: int, tracer: Tracer):
         self.ws = ws
         self.seed = seed
-        self.cores = cores
         self.tracer = tracer
         self.spark = None
 
@@ -30,8 +26,8 @@ class Workload:
     def bind(self, spark) -> None:
         self.spark = spark
 
-    def load(self, rep: int) -> None:
-        """Build the initial state; the last repetition is the live one."""
+    def load(self) -> None:
+        """Build the initial state."""
 
     def prepare_checks(self) -> None:
         """Compute reference answers (untimed)."""

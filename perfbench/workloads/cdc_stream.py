@@ -26,9 +26,8 @@ APP_ID = "perfbench-cdc-stream"
 class CdcStream(Workload):
     SNAPSHOT_IDS = 1_000
     SEGMENT_LINES = 1_000
-    load_reps = 3
-    warmup_ops = 3
-    min_ops = 5
+    warmup_ops = 8
+    min_ops = 3
 
     def generate(self) -> None:
         self.log = CdcLog(self.seed)
@@ -46,16 +45,16 @@ class CdcStream(Workload):
 
         return decode_envelope(read_envelope_ndjson(self.spark, path))
 
-    def load(self, rep: int) -> None:
+    def load(self) -> None:
         from pyspark.sql import functions as F
 
         from change_data_capture_spark.sources import txlog
         from change_data_capture_spark.streaming.scd2_stream import Scd2State, apply_batch
 
         snap = self._decoded(self.snapshot_dir)
-        self.state = Scd2State(self.spark, self.ws.dir(f"state-{rep}"))
+        self.state = Scd2State(self.spark, self.ws.dir("state"))
         apply_batch(self.state, snap)
-        self.table = self.ws.dir(f"changes-{rep}")
+        self.table = self.ws.dir("changes")
         actions = txlog.write_files(snap.where(F.col("lsn").isNotNull()), self.table,
                                     stats_cols=["id"])
         txlog.commit(self.table, add=actions, operation="WRITE")

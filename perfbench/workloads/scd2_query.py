@@ -8,9 +8,8 @@ Correctness: for a seeded key subset both queries must equal DuckDB
 running the reference's SQL over the same files (SCD2 works per key, so a
 key subset stays exact).
 
-A traced run also probes the dedup layer once (see
-``neardup_corpus.dedup_probe``): the benchmark's time budget holds two
-workloads, and this keeps every layer measured.
+A traced run also makes one checked dedup pass (see ``dedup_probe``), so
+the dedup layer is measured without a workload of its own.
 """
 
 from __future__ import annotations
@@ -84,7 +83,7 @@ def _sorted(rows) -> list[tuple]:
 class Scd2Query(Workload):
     N_EVENTS = 80_000
     N_FILES = 4
-    warmup_ops = 6
+    warmup_ops = 12
     min_ops = 10
 
     def generate(self) -> None:
@@ -151,10 +150,10 @@ class Scd2Query(Workload):
         return ok and self.probe_ok
 
     def layer_metrics(self, ops, stages, n_ops) -> dict[str, float]:
-        from workloads.neardup_corpus import dedup_probe
+        from dedup_probe import dedup_probe
 
         output_rows = [self._plan(k).count() for k in ("scd2", "change_log")]
-        dedup, self.probe_ok = dedup_probe(self)
+        dedup, self.probe_ok = dedup_probe(self.spark, self.ws, self.seed)
         return {
             **dedup,
             "envelope.scan_stage_ms": self.per_op_stage_ms(
