@@ -2,40 +2,38 @@
 streaming piece (SURVEY.md §7 item 2): LEAD needs the *next* event, which a
 stream hasn't seen yet, so the batch window rewrite cannot run incrementally.
 
-Design (foreachBatch + bucketed upsert, the pattern SURVEY.md §4 flags):
-- state = the full SCD2 table so far, stored as parquet partitioned by
-  ``bucket = pmod(hash(id), N_BUCKETS)``;
-- per micro-batch: find the buckets containing the batch's keys, read ONLY
-  those partitions (partition pruning), re-chain the affected keys' full
-  interval history by LSN, and overwrite ONLY those partitions (dynamic
-  partition overwrite). Untouched buckets are never read or written — the
-  per-batch cost is O(touched buckets), the file-level skipping a Delta /
-  Iceberg MERGE would give (``WHEN MATCHED THEN UPDATE``); those formats
-  additionally make the partition swap transactional, which plain parquet
-  does not (documented trade; the dataflow is identical).
+Design (foreachBatch + MERGE INTO a transaction-log table, the Delta MERGE
+shape over add/remove actions):
+- state = the full SCD2 table so far, stored as a ``sources.txlog`` table
+  whose data files carry per-file ``id`` min/max stats;
+- per micro-batch: prune the snapshot's files to those whose ``id`` range
+  overlaps the batch's (driver-side, from the log's stats alone), find the
+  files that really hold a batch key with one broadcast semi join, re-chain
+  the affected keys' full interval history by LSN, and commit the rewrite
+  as ONE atomic version — the re-chained rows plus the touched files'
+  untouched rows added, the touched files removed. Files holding no batch
+  key are never read past that semi join and never rewritten; the
+  per-batch cost is O(touched files + batch), never O(table).
+- atomicity: the commit is guarded by ``expected_version = tip + 1``, so
+  readers see every version of the SCD2 table fully merged or not at all,
+  and a concurrent writer's lost race fails loudly instead of clobbering.
 - re-chaining a key from scratch (state rows become pseudo-events carrying
   their original (lsn, start-ts)) keeps history correct even for late
   events whose LSN lands between already-closed intervals — validity
   chaining is order-by-LSN, not arrival.
-- idempotent under batch replay: events already in state are anti-joined
-  out, so foreachBatch re-delivery (checkpoint recovery) re-chains to the
-  identical result.
+- idempotent under batch replay, at two levels: a foreachBatch caller
+  passes its ``batch_id`` and the commit carries a txn marker for it in
+  the SAME commit as the data, so a re-delivered batch (checkpoint
+  recovery) at or below the table's ``last_txn`` is a no-op; below the
+  batch level, events already in state are anti-joined out, so even a
+  replay without a marker re-chains to the identical result.
+- a batch with no non-null ``lsn`` (e.g. a segment of malformed lines that
+  PERMISSIVE decoding turned into null rows) commits nothing — the
+  ``merge_into`` empty-source rule.
 
 Correctness contract (tested + oracle-checked): after any partition of the
 event log into micro-batches, final state equals the batch
 ``operators.scd2.scd2`` output on the full log.
-
-Transactionality note — hot-path users should prefer the transactional
-composite: ``streaming_queries.streaming_scd2_txlog`` runs this same
-per-key re-chain as a MERGE INTO a txlog-governed table, giving atomic
-commits, txn markers (exactly-once under full checkpoint replay), time
-travel, and stats-pruned touched-file discovery. This module's dynamic
-partition swap is NOT transactional: a crash between deleting and
-rewriting a bucket's files leaves a torn window that concurrent readers
-can observe. It remains the right tool for single-writer,
-no-concurrent-reader backfills (cheaper: no log, no copy-on-write
-pre-images), but anything serving reads while writing belongs on the
-txlog composite.
 """
 
 from __future__ import annotations
@@ -46,53 +44,25 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from change_data_capture_spark.operators.scd2 import SENTINEL_TS
+from change_data_capture_spark.sources import txlog
 
 _PAYLOAD = ("name", "description", "price")
 
-N_BUCKETS = 64
+#: txn-marker app id of every SCD2 state commit made for a foreachBatch id
+APP_ID = "scd2_stream"
 
 
 class Scd2State:
-    """Bucket-partitioned parquet SCD2 state with per-bucket overwrite."""
+    """Handle on the txlog table holding the SCD2 state."""
 
-    def __init__(self, spark: SparkSession, state_dir: str):
+    def __init__(self, spark: SparkSession, table_dir: str):
         self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    @staticmethod
-    def bucket_of(id_col: F.Column) -> F.Column:
-        return F.pmod(F.hash(id_col), F.lit(N_BUCKETS))
-
-    def _initialized(self) -> bool:
-        # probed from disk (not a flag) so a foreachBatch restart against an
-        # existing checkpoint + state dir correctly MERGES its re-delivered
-        # batch instead of treating it as the first one
-        return any(e.startswith("bucket=") for e in os.listdir(self.state_dir))
+        self.table_dir = table_dir
 
     def read(self) -> DataFrame | None:
-        if not self._initialized():
+        if txlog.latest_version(self.table_dir) < 0:
             return None
-        return self.spark.read.parquet(self.state_dir).drop("bucket")
-
-    def read_buckets(self, buckets: list[int]) -> DataFrame:
-        df = self.spark.read.parquet(self.state_dir)
-        return df.where(F.col("bucket").isin(buckets)).drop("bucket")
-
-    def overwrite_buckets(self, df: DataFrame) -> None:
-        """Write rows (their buckets derive from id), replacing exactly the
-        partitions present in ``df`` — dynamic partition overwrite."""
-        (
-            df.withColumn("bucket", self.bucket_of(F.col("id")))
-            # explicit small task count: state writes are many-small-batch
-            # operations; inheriting a 200-partition default multiplies task
-            # overhead without adding parallelism (64 buckets max)
-            .repartition(16, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        return txlog.read_version(self.spark, self.table_dir)
 
 
 def _intervals(decoded: DataFrame) -> DataFrame:
@@ -110,71 +80,70 @@ def _intervals(decoded: DataFrame) -> DataFrame:
     )
 
 
-def apply_batch(state: Scd2State, batch: DataFrame) -> None:
-    """Merge one micro-batch of decoded CDC events into the SCD2 state,
-    touching only the state buckets that contain the batch's keys."""
+def apply_batch(
+    state: Scd2State, batch: DataFrame, batch_id: int | None = None
+) -> None:
+    """Merge one micro-batch of decoded CDC events into the SCD2 state as
+    one atomic txlog commit, rewriting only the files that hold the
+    batch's keys. ``batch_id`` (the foreachBatch id) makes a replayed
+    batch a no-op."""
+    spark, tdir = state.spark, state.table_dir
+    if batch_id is not None:
+        last = txlog.last_txn(tdir, APP_ID)
+        if last is not None and batch_id <= last:
+            return  # replayed batch: its txn marker is already committed
     new_events = (
         batch.where(F.col("lsn").isNotNull())
         .dropDuplicates(["id", "lsn"])
         .select("id", *_PAYLOAD, "lsn", "ts_ms")
     )
-    # cheap one-listdir probe — state.read() here would pay a full
-    # file-listing + footer read of the whole state dir every micro-batch
-    # just to learn "initialized: yes"
-    if not state._initialized():
-        state.overwrite_buckets(_intervals(new_events))
-        return
-
-    # buckets hit by this batch (collected: ≤ N_BUCKETS small ints)
-    buckets = [
-        r.b
-        for r in new_events.select(
-            Scd2State.bucket_of(F.col("id")).alias("b")
-        ).distinct().collect()
-    ]
-    affected_state = state.read_buckets(buckets)
+    n, lo, hi = new_events.agg(
+        F.count(F.lit(1)), F.min("id"), F.max("id")
+    ).first()
+    if n == 0:
+        return  # nothing to merge: no empty commit
+    tip = txlog.latest_version(tdir)
+    # stats prune on the batch's id range (metadata only; a null-id batch
+    # can match no state row, and an empty table has no files)
+    cand = (
+        txlog.snapshot_files(tdir, tip, predicate_range=("id", lo, hi))
+        if tip >= 0 and lo is not None
+        else []
+    )
     batch_keys = new_events.select("id").distinct()
-
-    # bucket-mates of the batch keys pass through unchanged; affected keys
-    # re-chain from scratch (state rows become pseudo-events)
-    passthrough = affected_state.join(batch_keys, "id", "left_anti")
-    pseudo_events = affected_state.join(batch_keys, "id", "left_semi").select(
-        "id",
-        *_PAYLOAD,
-        "lsn",
-        F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
+    touched: list[str] = []
+    if cand:
+        hit = (
+            spark.read.parquet(*cand)
+            .select(F.col("id"), F.input_file_name().alias("f"))
+            .join(F.broadcast(batch_keys), "id", "left_semi")
+            .select("f")
+            .distinct()
+            .collect()
+        )
+        hp = {txlog._local_path(r["f"]) for r in hit}
+        touched = [p for p in cand if os.path.abspath(p) in hp]
+    if touched:
+        # file-mates of the batch keys pass through unchanged; affected
+        # keys re-chain from scratch (state rows become pseudo-events)
+        aff = spark.read.parquet(*touched)
+        passthrough = aff.join(batch_keys, "id", "left_anti")
+        pseudo = aff.join(batch_keys, "id", "left_semi").select(
+            "id",
+            *_PAYLOAD,
+            "lsn",
+            F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
+        )
+        fresh = new_events.join(
+            pseudo.select("id", "lsn"), ["id", "lsn"], "left_anti"
+        )
+        out = passthrough.unionByName(_intervals(pseudo.unionByName(fresh)))
+    else:
+        out = _intervals(new_events)
+    txlog.commit(
+        tdir,
+        add=txlog.write_files(out, tdir, stats_cols=["id"]),
+        remove=touched,
+        expected_version=tip + 1,
+        txn=None if batch_id is None else {"app_id": APP_ID, "batch_id": batch_id},
     )
-    fresh = new_events.join(
-        pseudo_events.select("id", "lsn"), ["id", "lsn"], "left_anti"
-    )
-    rechained = _intervals(pseudo_events.unionByName(fresh))
-
-    state.overwrite_buckets(passthrough.unionByName(rechained))
-
-
-def run_incremental_scd2(
-    spark: SparkSession,
-    envelope_source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Stream the NDJSON change log and maintain SCD2 incrementally via
-    foreachBatch; returns the final state (drained with availableNow)."""
-    from change_data_capture_spark.functions.envelope import decode_envelope
-    from change_data_capture_spark.sources.ndjson import read_envelope_ndjson
-
-    state = Scd2State(spark, state_dir)
-    env = read_envelope_ndjson(spark, envelope_source_dir, streaming=True)
-
-    q = (
-        decode_envelope(env)
-        .writeStream.foreachBatch(lambda bdf, _bid: apply_batch(state, bdf))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = state.read()
-    if final is None:  # explicit, not assert: python -O must not skip it
-        raise RuntimeError("stream produced no batches")
-    return final

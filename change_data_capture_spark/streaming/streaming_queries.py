@@ -212,7 +212,9 @@ def streaming_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         decode_envelope(stream)
-        .writeStream.foreachBatch(lambda bdf, _bid: apply_batch(state, bdf))
+        .writeStream.foreachBatch(
+            lambda bdf, bid: apply_batch(state, bdf, batch_id=bid)
+        )
         .option("checkpointLocation", f"{ws}/ckpt")
         .trigger(availableNow=True)
         .start()
@@ -2460,37 +2462,19 @@ def streaming_scd2_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-star composite — "Structured Streaming + Kafka + Delta"
     (reference README's production stack) with every piece from this
     repo: a REAL Structured Streaming drain of the NDJSON change log,
-    foreachBatch MERGE INTO a TRANSACTION-LOG table (file-pruned
-    copy-on-write rewrite with per-file id stats, committed atomically
-    under an ``expected_version`` guard) carrying an ``(app_id,
-    batch_id)`` txn marker per commit — and then a full at-least-once
-    REPLAY with a fresh checkpoint that the markers must turn into
-    all-no-ops. Final state is the tip snapshot read back THROUGH the
-    log and must equal the batch flagship SCD2 (same oracle SQL).
-
-    This closes the trade ``scd2_stream`` documents: the bucket-
-    partitioned parquet state swaps partitions NON-transactionally (a
-    crash mid-overwrite is visible), while here each micro-batch's
-    rewrite is one atomic commit — readers see every version of the
-    SCD2 table fully merged or not at all, and the table's history
-    stays time-travelable like any txlog table.
-
-    Per-batch dataflow (the Delta MERGE shape over add/remove actions):
-    stats-envelope prune on the batch's id range → touched-file
-    discovery via one file-bounded semi join → affected keys re-chain
-    from scratch (state rows become pseudo-events, so LATE events
-    splice between closed intervals by LSN, and an (id, lsn) already in
-    state anti-joins out — idempotent below the batch level too) →
-    passthrough ∪ re-chained commits as add+remove. Cost is O(touched
-    files + batch), never O(table)."""
-    import os
-
+    foreachBatch MERGE INTO a TRANSACTION-LOG table (``scd2_stream``'s
+    file-pruned copy-on-write rewrite with per-file id stats, committed
+    atomically under an ``expected_version`` guard) carrying an
+    ``(app_id, batch_id)`` txn marker per commit — and then a full
+    at-least-once REPLAY with a fresh checkpoint that the markers must
+    turn into all-no-ops. Final state is the tip snapshot read back
+    THROUGH the log and must equal the batch flagship SCD2 (same oracle
+    SQL)."""
     from change_data_capture_spark.functions.envelope import decode_envelope
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.ndjson import read_envelope_ndjson
-    from change_data_capture_spark.streaming.scd2_stream import _PAYLOAD, _intervals
+    from change_data_capture_spark.streaming.scd2_stream import Scd2State, apply_batch
 
-    app = "scd2_txlog_merge"
     ws = tempfile.mkdtemp(prefix="cdc_scd2tx_")
     tdir = f"{ws}/table"
     src = f"{ws}/log"
@@ -2499,86 +2483,17 @@ def streaming_scd2_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     product_change_events(spark, sf_dir).repartition(8).write.mode(
         "overwrite"
     ).json(src)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        last = txlog.last_txn(tdir, app)
-        if last is not None and batch_id <= last:
-            return  # replayed batch: the txn marker makes it a no-op
-        new_events = (
-            batch_df.where(F.col("lsn").isNotNull())
-            .dropDuplicates(["id", "lsn"])
-            .select("id", *_PAYLOAD, "lsn", "ts_ms")
-        )
-        tip = txlog.latest_version(tdir)
-        if tip < 0:
-            txlog.commit(
-                tdir,
-                add=txlog.write_files(
-                    _intervals(new_events), tdir, stats_cols=["id"]
-                ),
-                expected_version=0,
-                txn={"app_id": app, "batch_id": batch_id},
-            )
-            return
-        # MERGE pass 1: stats prune + touched-file discovery (file-bounded)
-        lo, hi = new_events.agg(F.min("id"), F.max("id")).collect()[0]
-        cand = (
-            txlog.snapshot_files(tdir, tip, predicate_range=("id", lo, hi))
-            if lo is not None
-            else []
-        )
-        batch_keys = new_events.select("id").distinct()
-        touched: list[str] = []
-        if cand:
-            hit = (
-                spark.read.parquet(*cand)
-                .select(F.col("id"), F.input_file_name().alias("f"))
-                .join(F.broadcast(batch_keys), "id", "left_semi")
-                .select("f")
-                .distinct()
-                .collect()
-            )
-            from change_data_capture_spark.sources.txlog import _local_path
-
-            hp = {_local_path(r["f"]) for r in hit}
-            touched = [p for p in cand if os.path.abspath(p) in hp]
-        # MERGE pass 2: re-chain affected keys, pass bucket-mates through
-        if touched:
-            aff = spark.read.parquet(*touched)
-            passthrough = aff.join(batch_keys, "id", "left_anti")
-            pseudo = aff.join(batch_keys, "id", "left_semi").select(
-                "id",
-                *_PAYLOAD,
-                "lsn",
-                F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
-            )
-            fresh = new_events.join(
-                pseudo.select("id", "lsn"), ["id", "lsn"], "left_anti"
-            )
-            out = passthrough.unionByName(
-                _intervals(pseudo.unionByName(fresh))
-            )
-        else:
-            out = _intervals(new_events)
-        txlog.commit(
-            tdir,
-            add=txlog.write_files(out, tdir, stats_cols=["id"]),
-            remove=touched,
-            expected_version=tip + 1,
-            txn={"app_id": app, "batch_id": batch_id},
-        )
-
-    env_schema = read_envelope_ndjson(spark, src, streaming=False).schema
+    state = Scd2State(spark, tdir)
 
     def _drain(ckpt: str) -> None:
-        stream = (
-            spark.readStream.schema(env_schema)
-            .option("maxFilesPerTrigger", 2)
-            .json(src)
+        stream = read_envelope_ndjson(
+            spark, src, streaming=True, options={"maxFilesPerTrigger": 2}
         )
         q = (
             decode_envelope(stream)
-            .writeStream.foreachBatch(_process)
+            .writeStream.foreachBatch(
+                lambda b, i: apply_batch(state, b, batch_id=i)
+            )
             .option("checkpointLocation", f"{ws}/{ckpt}")
             .trigger(availableNow=True)
             .start()

@@ -18,6 +18,7 @@ from tests.oracle import compare
         "streaming_ingest_exactly_once",
         "streaming_scd2_incremental",
         "streaming_scd2_multibatch",
+        "streaming_scd2_txlog",
         "streaming_stream_stream_join",
         "streaming_anomaly_zscore",
         "streaming_static_enrich",
