@@ -198,9 +198,10 @@ def write_bucketed(
     small-files / §1.2). The caller's spec is validated against the
     CATALOG before any file lands (same fail-loud rule as
     :func:`compact_bucketed` — files hashed mod the wrong bucket count
-    silently drop join matches)."""
+    silently drop join matches), and so are the frame's column names and
+    types: files of a drifted schema would land unreadable as the table."""
     if mode == "append":
-        spec = _catalog_bucket_spec(df.sparkSession, table)
+        columns, spec = _catalog_layout(df.sparkSession, table)
         if spec is None:
             raise ValueError(
                 f"append target {table} has no bucket spec in the catalog"
@@ -209,6 +210,11 @@ def write_bucketed(
             raise ValueError(
                 f"append spec {(list(bucket_cols), num_buckets)} != catalog "
                 f"spec {spec} for {table}"
+            )
+        got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        if got != columns:
+            raise ValueError(
+                f"append schema {got} != catalog schema {columns} for {table}"
             )
         _append_bucketed_files(df, bucket_cols, num_buckets, path)
         return
@@ -235,7 +241,9 @@ def _append_bucketed_files(
     each file into the table directory under the ``part-..._0000N``
     bucket-suffix name the bucketed reader keys on
     (``BucketingUtils.getBucketId`` parses the trailing ``_(\\d+)``).
-    The rename is the PUBLISH: until it happens nothing under ``path``
+    The renames are the PUBLISH, all or nothing: a failure mid-loop
+    unlinks the files already renamed before it re-raises, so a retried
+    append cannot land a bucket twice. Until then nothing under ``path``
     changes, so a reader whose file listing was snapshotted earlier
     (relation cache / an already-planned scan) can never observe a
     half-landed append — strictly stronger isolation than the
@@ -261,6 +269,7 @@ def _append_bucketed_files(
         .partitionBy("_bucket")
         .parquet(staging)
     )
+    published: list[str] = []
     try:
         for i in range(num_buckets):
             d = f"{staging}/_bucket={i}"
@@ -275,26 +284,40 @@ def _append_bucketed_files(
                 path, f"part-00000-{tag}_{i:05d}.c000.snappy.parquet"
             )
             os.rename(os.path.join(d, parts[0]), dst)
+            published.append(dst)
+    except BaseException:
+        # all or nothing: a failed publish takes back the buckets it landed
+        for dst in published:
+            os.unlink(dst)
+        raise
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _catalog_bucket_spec(
+def _catalog_layout(
     spark: SparkSession, table: str
-) -> tuple[list[str], int] | None:
-    """The table's (bucket_cols, num_buckets) as the CATALOG declares
-    them (``DESCRIBE FORMATTED`` rows ``Bucket Columns`` / ``Num
-    Buckets``), or None for an unbucketed table. The catalog is the
-    single source of truth for the layout — rewrites must derive the
-    spec from it, never trust a caller's copy (a mismatched rewrite
-    lands files hashed mod the WRONG bucket count under a catalog entry
-    that still declares the old spec, and later same-spec joins skip
-    the shuffle on a false premise, silently dropping matches)."""
+) -> tuple[dict[str, str], tuple[list[str], int] | None]:
+    """The table's columns ({name: type string}) and (bucket_cols,
+    num_buckets) as the CATALOG declares them, from one ``DESCRIBE
+    FORMATTED`` (column rows up to the first blank or ``#`` row, then
+    ``Bucket Columns`` / ``Num Buckets``); the spec is None for an
+    unbucketed table. The catalog is the single source of truth for the
+    layout — rewrites must derive the spec from it, never trust a
+    caller's copy (a mismatched rewrite lands files hashed mod the WRONG
+    bucket count under a catalog entry that still declares the old spec,
+    and later same-spec joins skip the shuffle on a false premise,
+    silently dropping matches)."""
+    columns: dict[str, str] = {}
+    in_columns = True
     cols: list[str] | None = None
     n: int | None = None
     for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
         name = (row["col_name"] or "").strip()
-        if name == "Num Buckets":
+        if not name or name.startswith("#"):
+            in_columns = False
+        elif in_columns:
+            columns[name] = row["data_type"].strip()
+        elif name == "Num Buckets":
             n = int(row["data_type"].strip())
         elif name == "Bucket Columns":
             cols = [
@@ -303,8 +326,8 @@ def _catalog_bucket_spec(
                 if c.strip(" `")
             ]
     if cols is None or n is None:
-        return None
-    return cols, n
+        return columns, None
+    return columns, (cols, n)
 
 
 def compact_bucketed(
@@ -322,7 +345,7 @@ def compact_bucketed(
     Returns the compacted file count. The bucket spec (and the data
     ``path``) are DERIVED from the catalog; passing them is optional
     and validated — a mismatch raises instead of corrupting the layout
-    (see :func:`_catalog_bucket_spec`).
+    (see :func:`_catalog_layout`).
 
     Shape: the catalog scan of a bucketed table yields exactly ONE
     partition per bucket (all of a bucket's files coalesced), and its
@@ -350,7 +373,7 @@ def compact_bucketed(
     # caller-supplied spec as an assertion to validate, never as truth —
     # rewriting with the wrong bucket count silently corrupts every
     # later shuffle-free join against this table
-    spec = _catalog_bucket_spec(spark, table)
+    _, spec = _catalog_layout(spark, table)
     if spec is None:
         raise ValueError(f"table {table} has no bucket spec in the catalog")
     cat_cols, cat_n = spec

@@ -6,14 +6,16 @@ Design (foreachBatch + MERGE INTO a transaction-log table, the Delta MERGE
 shape over add/remove actions):
 - state = the full SCD2 table so far, stored as a ``sources.txlog`` table
   whose data files carry per-file ``id`` min/max stats;
-- per micro-batch: prune the snapshot's files to those whose ``id`` range
-  overlaps the batch's (driver-side, from the log's stats alone), find the
-  files that really hold a batch key with one broadcast semi join, re-chain
-  the affected keys' full interval history by LSN, and commit the rewrite
-  as ONE atomic version — the re-chained rows plus the touched files'
-  untouched rows added, the touched files removed. Files holding no batch
-  key are never read past that semi join and never rewritten; the
-  per-batch cost is O(touched files + batch), never O(table).
+- per micro-batch, three query shapes: (1) range: count/min/max ``id``
+  of the raw batch prunes the snapshot's files by their ``id`` stats;
+  (2) probe: one broadcast semi join finds the files that really hold a
+  batch key; (3) rewrite: their batch-key rows become pseudo-events, and
+  ONE shuffle on ``id`` serves both the (id, lsn) dedup and the LSN
+  re-chain; their other rows pass through outside it. One atomic version
+  adds the result and removes only the touched files: O(touched files +
+  batch), never O(table). State is read with ``_intervals``'s schema (no
+  footer-inference job); the batch is not persisted, as re-scanning a
+  small segment costs less than the jobs a cache adds.
 - atomicity: the commit is guarded by ``expected_version = tip + 1``, so
   readers see every version of the SCD2 table fully merged or not at all,
   and a concurrent writer's lost race fails loudly instead of clobbering.
@@ -25,8 +27,8 @@ shape over add/remove actions):
   passes its ``batch_id`` and the commit carries a txn marker for it in
   the SAME commit as the data, so a re-delivered batch (checkpoint
   recovery) at or below the table's ``last_txn`` is a no-op; below the
-  batch level, events already in state are anti-joined out, so even a
-  replay without a marker re-chains to the identical result.
+  batch level, an event already in state dedups against its pseudo-event,
+  so even a replay without a marker re-chains to the identical result.
 - a batch with no non-null ``lsn`` (e.g. a segment of malformed lines that
   PERMISSIVE decoding turned into null rows) commits nothing — the
   ``merge_into`` empty-source rule.
@@ -66,7 +68,8 @@ class Scd2State:
 
 
 def _intervals(decoded: DataFrame) -> DataFrame:
-    """Chain a (deduped, lsn-ordered) event set into validity intervals."""
+    """Chain an event set into validity intervals by LSN; the caller
+    dedups on (id, lsn) in the same shuffle on ``id``."""
     w = Window.partitionBy("id").orderBy("lsn")
     return decoded.select(
         "id",
@@ -92,14 +95,10 @@ def apply_batch(
         last = txlog.last_txn(tdir, APP_ID)
         if last is not None and batch_id <= last:
             return  # replayed batch: its txn marker is already committed
-    new_events = (
-        batch.where(F.col("lsn").isNotNull())
-        .dropDuplicates(["id", "lsn"])
-        .select("id", *_PAYLOAD, "lsn", "ts_ms")
+    events = batch.where(F.col("lsn").isNotNull()).select(
+        "id", *_PAYLOAD, "lsn", "ts_ms"
     )
-    n, lo, hi = new_events.agg(
-        F.count(F.lit(1)), F.min("id"), F.max("id")
-    ).first()
+    n, lo, hi = events.agg(F.count(F.lit(1)), F.min("id"), F.max("id")).first()
     if n == 0:
         return  # nothing to merge: no empty commit
     tip = txlog.latest_version(tdir)
@@ -110,13 +109,15 @@ def apply_batch(
         if tip >= 0 and lo is not None
         else []
     )
-    batch_keys = new_events.select("id").distinct()
+    schema = _intervals(events).schema  # analysis only: no footer job
+    keys = F.broadcast(events.select("id"))  # duplicates can't change a semi/anti join
     touched: list[str] = []
     if cand:
         hit = (
-            spark.read.parquet(*cand)
+            spark.read.schema(schema)
+            .parquet(*cand)
             .select(F.col("id"), F.input_file_name().alias("f"))
-            .join(F.broadcast(batch_keys), "id", "left_semi")
+            .join(keys, "id", "left_semi")
             .select("f")
             .distinct()
             .collect()
@@ -126,20 +127,19 @@ def apply_batch(
     if touched:
         # file-mates of the batch keys pass through unchanged; affected
         # keys re-chain from scratch (state rows become pseudo-events)
-        aff = spark.read.parquet(*touched)
-        passthrough = aff.join(batch_keys, "id", "left_anti")
-        pseudo = aff.join(batch_keys, "id", "left_semi").select(
+        aff = spark.read.schema(schema).parquet(*touched)
+        passthrough = aff.join(keys, "id", "left_anti")
+        events = aff.join(keys, "id", "left_semi").select(
             "id",
             *_PAYLOAD,
             "lsn",
             F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
-        )
-        fresh = new_events.join(
-            pseudo.select("id", "lsn"), ["id", "lsn"], "left_anti"
-        )
-        out = passthrough.unionByName(_intervals(pseudo.unionByName(fresh)))
-    else:
-        out = _intervals(new_events)
+        ).unionByName(events)
+    # one shuffle on id serves both the (id, lsn) dedup and the window;
+    # an equal (id, lsn) is the same source event, in state or in batch
+    out = _intervals(events.repartition("id").dropDuplicates(["id", "lsn"]))
+    if touched:
+        out = passthrough.unionByName(out)
     txlog.commit(
         tdir,
         add=txlog.write_files(out, tdir, stats_cols=["id"]),

@@ -381,3 +381,74 @@ def test_direct_bucketed_append_places_rows_by_spark_bucket_id(
             write_bucketed(delta, tbl, ["k", "b"], 16, path, mode="append")
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def _bucketed_table(spark, tmp_path, prefix):
+    import uuid
+
+    from change_data_capture_spark.operators.maintenance import write_bucketed
+
+    tbl = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    path = str(tmp_path / "t")
+    write_bucketed(
+        spark.range(100).selectExpr("id AS k", "id AS v"), tbl, ["k"], 4, path
+    )
+    return tbl, path
+
+
+def _file_set(path):
+    import os
+
+    return {os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs}
+
+
+def test_failed_bucket_publish_rolls_back(spark, tmp_path, monkeypatch):
+    """The per-bucket renames publish all or nothing: a rename failing on
+    the second bucket unlinks the first one it landed, so the table's file
+    set is unchanged and a retried append cannot land a bucket twice."""
+    import os
+
+    from change_data_capture_spark.operators.maintenance import write_bucketed
+
+    tbl, path = _bucketed_table(spark, tmp_path, "publish_rollback")
+    before = _file_set(path)
+    real_rename = os.rename
+    calls = []
+
+    def rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("injected publish failure")
+        real_rename(src, dst)
+
+    delta = spark.range(100, 200).selectExpr("id AS k", "id AS v")
+    try:
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected"):
+            write_bucketed(delta, tbl, ["k"], 4, path, mode="append")
+        monkeypatch.undo()
+        assert len(calls) == 2
+        assert _file_set(path) == before
+        spark.catalog.refreshTable(tbl)
+        assert spark.table(tbl).count() == 100
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_direct_append_rejects_schema_drift(spark, tmp_path):
+    """The direct append checks the frame's column names and types against
+    the catalog before any file lands, as a saveAsTable append would."""
+    from change_data_capture_spark.operators.maintenance import write_bucketed
+
+    tbl, path = _bucketed_table(spark, tmp_path, "schema_drift")
+    before = _file_set(path)
+    try:
+        renamed = spark.range(100, 200).selectExpr("id AS k", "id AS w")
+        with pytest.raises(ValueError, match="catalog schema"):
+            write_bucketed(renamed, tbl, ["k"], 4, path, mode="append")
+        retyped = spark.range(100, 200).selectExpr("id AS k", "CAST(id AS INT) AS v")
+        with pytest.raises(ValueError, match="catalog schema"):
+            write_bucketed(retyped, tbl, ["k"], 4, path, mode="append")
+        assert _file_set(path) == before
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import tempfile
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
     LongType,
@@ -53,11 +54,12 @@ def test_files_without_batch_keys_not_rewritten(spark):
     before = set(txlog.snapshot_files(ws))
     assert len(before) >= 2
 
-    # a one-key batch: only files that contained key 5 may be rewritten
-    apply_batch(
-        state,
-        spark.createDataFrame([(5, "n5b", "d", None, 52, _BASE + 999_000)], _SCHEMA),
-    )
+    # a one-key batch: only files that contained key 5 may be rewritten.
+    # It also replays key 5's committed event (lsn 51) and repeats its new
+    # event: both must dedup away, as the anti join against state did.
+    new = (5, "n5b", "d", None, 52, _BASE + 999_000)
+    replay = (5, "n5", "d", None, 51, _BASE + 5_000)  # as _events made it
+    apply_batch(state, spark.createDataFrame([new, replay, new], _SCHEMA))
     tip = txlog.latest_version(ws)
     assert tip == 2
     removed = set(_commit(ws, tip)["remove"])
@@ -74,8 +76,36 @@ def test_files_without_batch_keys_not_rewritten(spark):
         (r.lsn, r.row_valid_expiration_timestamp)
         for r in state.read().where("id = 5").collect()
     )
-    assert len(rows) == 2
+    assert [lsn for lsn, _ in rows] == [51, 52]
     assert rows[0][1] is not None
+
+
+def _max_job_id(spark):
+    """Highest job id in the status store once the listener bus drains:
+    max-id deltas count jobs from every thread, broadcasts included."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def test_merge_job_count(spark):
+    """One merge is three query shapes (range, touched-file probe,
+    rewrite); each extra exchange or footer read is one more Spark job,
+    and the fixed cost per job sets a trigger's latency floor."""
+    ws = tempfile.mkdtemp(prefix="scd2_state_")
+    state = Scd2State(spark, ws)
+
+    def jobs(batch):
+        j0 = _max_job_id(spark)
+        apply_batch(state, batch)
+        return _max_job_id(spark) - j0
+
+    assert jobs(_events(spark, range(100))) <= 4  # first batch: no state
+    jobs(_events(spark, range(100, 200)))
+    touching = _events(spark, [5, 150]).withColumn("lsn", F.col("lsn") + 1)
+    assert jobs(touching) <= 8
+    assert state.read().count() == 202
 
 
 def test_batch_without_lsn_commits_nothing(spark):
