@@ -65,10 +65,21 @@ log of add/remove file actions, folded into a snapshot):
   rewrite (DML, compaction/OPTIMIZE) reconciles them into plain files,
   and :func:`vacuum` reclaims unreferenced sidecars like data files.
 
+One log walk: :func:`_commits` is the only reader of commit files, and
+:func:`_fold` the only step that applies a commit — its removes, then
+its adds — to a dict keyed by action path (a re-added live path is one
+file, as in Delta). Snapshot resolution, :func:`history`,
+:func:`commit_timestamps`, :func:`vacuum`, :func:`table_changes` and
+the streaming source (``sources.txlog_stream``) all go through the pair.
+A rewrite resolves its snapshot once and hands it to the stats prune
+(:func:`_files_in`), the touched-file probe (:func:`_touched_files`,
+one function for every rewrite) and its scans (:func:`_scan_files`).
+
 Scale: the log is metadata — KB-sized JSON per commit, folded
-driver-side in O(tail since checkpoint). The data path stays fully
-distributed: a snapshot read is one parquet scan of the resolved file
-list, with normal pushdown/pruning below the file-level skip.
+driver-side in O(tail since checkpoint), each commit once. The data
+path stays fully distributed: a snapshot read is one parquet scan of the
+resolved file list, with normal pushdown/pruning below the file-level
+skip.
 """
 
 from __future__ import annotations
@@ -81,8 +92,17 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StringType
 
 _LOG_SUBDIR = "_txlog"
+
+#: the change feed's meta columns, appended to the table's own columns by
+#: :func:`table_changes` and the streaming source's readChangeFeed mode
+_CDF_META_FIELDS = (
+    ("_change_type", StringType()),
+    ("_commit_version", IntegerType()),
+    ("_operation", StringType()),
+)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -265,6 +285,26 @@ def _newest_checkpoint(table_dir: str, version: int) -> dict | None:
         return json.load(f)
 
 
+def _commits(table_dir: str, start: int, end: int):
+    """Commit payloads of versions ``start..end``, in version order — the
+    one reader of commit files. Lazy: a caller that stops early opens no
+    later commit."""
+    for v in range(start, end + 1):
+        with open(_commit_path(table_dir, v)) as f:
+            yield json.load(f)
+
+
+def _fold(live: dict, payload: dict) -> None:
+    """Apply one commit to ``live`` (``{action path: action}``): its
+    removes, then its adds. The path is the key, as in Delta: re-adding a
+    live path replaces its action, and a path removed and re-added in one
+    commit moves to the end, so insertion order is snapshot order."""
+    for p in payload.get("remove") or ():
+        live.pop(p, None)
+    for a in payload.get("add") or ():
+        live[_action_path(a)] = a
+
+
 def _resolve(
     table_dir: str, version: int | None
 ) -> tuple[list, dict, dict | None, int]:
@@ -278,16 +318,12 @@ def _resolve(
     if version > tip or version < 0:
         raise ValueError(f"version {version} not in log (tip {tip})")
     ckpt = _newest_checkpoint(table_dir, version)
-    actions: list = list(ckpt["actions"]) if ckpt else []
+    live = {_action_path(a): a for a in ckpt["actions"]} if ckpt else {}
     txns: dict = dict(ckpt["txn_app_versions"]) if ckpt else {}
     meta: dict | None = ckpt.get("metadata") if ckpt else None
     start = ckpt["version"] + 1 if ckpt else 0
-    for v in range(start, version + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            c = json.load(f)
-        removed = set(c["remove"])
-        actions = [a for a in actions if _action_path(a) not in removed]
-        actions.extend(c["add"])
+    for c in _commits(table_dir, start, version):
+        _fold(live, c)
         t = c.get("txn")
         if t:
             prev = txns.get(t["app_id"])
@@ -296,7 +332,7 @@ def _resolve(
                 txns[t["app_id"]] = b
         if c.get("metadata") is not None:
             meta = c["metadata"]
-    return actions, txns, meta, version
+    return list(live.values()), txns, meta, version
 
 
 def write_checkpoint(table_dir: str, version: int | None = None) -> int:
@@ -373,10 +409,9 @@ def commit_timestamps(table_dir: str) -> list[float]:
     each."""
     out: list[float] = []
     running = float("-inf")
-    for v in range(latest_version(table_dir) + 1):
+    for v, c in enumerate(_commits(table_dir, 0, latest_version(table_dir))):
+        raw = c.get("timestamp")
         path = _commit_path(table_dir, v)
-        with open(path) as f:
-            raw = json.load(f).get("timestamp")
         eff = float(raw) if raw is not None else os.stat(path).st_mtime
         running = max(running, eff)
         out.append(running)
@@ -470,7 +505,13 @@ def snapshot_files(
     physical name the per-file stats are keyed by (stats are collected
     over the written, physical-named frame), so skipping keeps working
     across renames."""
-    actions, _, meta, _ = _resolve(table_dir, version)
+    return _files_in(_resolve(table_dir, version), predicate_range)
+
+
+def _files_in(snap, predicate_range=None) -> list[str]:
+    """:func:`snapshot_files` of an already resolved snapshot (a
+    :func:`_resolve` tuple), so a rewrite walks the log once."""
+    actions, _, meta, _ = snap
     if predicate_range is None:
         return [_action_path(a) for a in actions]
     col, lo, hi = predicate_range
@@ -523,8 +564,9 @@ def read_version(
     DV state, so time travel before a merge-on-read DELETE still sees
     the rows and a restore across one resurrects them."""
     version = _resolve_travel(table_dir, version, timestamp, "read_version")
-    actions, _, meta, v = _resolve(table_dir, version)
-    files = snapshot_files(table_dir, v, predicate_range)
+    snap = _resolve(table_dir, version)
+    actions, _, meta, v = snap
+    files = _files_in(snap, predicate_range)
     reader = spark.read
     declared = (meta or {}).get("schema")
     mapping = _mapping_of(meta)
@@ -539,7 +581,7 @@ def read_version(
     if not files:
         if declared is not None:
             return spark.createDataFrame([], declared)
-        all_files = snapshot_files(table_dir, v)
+        all_files = _files_in(snap)
         if all_files:
             return spark.read.parquet(all_files[0]).limit(0)
         # zero files AND no declared schema: there is nothing to lift a
@@ -558,10 +600,10 @@ def read_version(
 
 
 def _local_path(p: str) -> str:
-    """Normalize an ``input_file_name()`` value to a comparable local
-    path (strip the ``file:`` scheme, absolutize) — the ONE place this
-    logic lives; touched-file discovery in MERGE/DELETE/UPDATE and the
-    stats keying in :func:`write_files` must agree on it exactly."""
+    """Normalize a scanned file URI to a comparable local path (strip
+    the ``file:`` scheme, absolutize) — the ONE place this logic lives;
+    touched-file discovery (:func:`_touched_files`) and the stats keying
+    in :func:`write_files` must agree on it exactly."""
     if p.startswith("file:"):
         p = p[len("file:"):]
     return os.path.abspath(p)
@@ -834,21 +876,18 @@ def _scan_files_with_dvs(
 
 
 def _scan_files(
-    spark: SparkSession,
-    table_dir: str,
-    version: int,
-    files: list[str],
-    with_meta: bool = False,
+    spark: SparkSession, snap, files: list[str], with_meta: bool = False
 ):
-    """Scan specific snapshot data files under the log-governed schema
-    with the snapshot's deletion vectors applied — the read primitive
+    """Scan specific data files of a resolved snapshot (a :func:`_resolve`
+    tuple) under its log-governed schema with its deletion vectors
+    applied — the read primitive
     every DML path (touched-file discovery, rewrite reads) shares with
     :func:`read_version`, so no path can resurrect merge-on-read-deleted
     rows by reading a data file raw. Under column mapping the scan is
     planned physical and projected to logical names (scan-meta scratch
     columns pass through), so DML predicates — written over logical
     names — resolve against any file vintage."""
-    actions, _, meta, _ = _resolve(table_dir, version)
+    actions, _, meta, _ = snap
     declared = (meta or {}).get("schema")
     mapping = _mapping_of(meta)
     if declared is not None:
@@ -867,6 +906,33 @@ def _scan_files(
     return scan
 
 
+def _touched_files(
+    spark: SparkSession, snap, files: list[str], match
+) -> dict[str, tuple[str, int]]:
+    """Touched-file discovery, shared by every rewrite: ``{path: (file
+    URI, matching rows)}`` for the ``files`` (in their order) holding at
+    least one row of ``match(scan)``, where ``match`` keeps the scan's
+    matching rows. One DV-aware scan (rows a deletion vector removed can
+    neither match nor keep a file touched) with the file name projected AT
+    THE SCAN — post-filter provenance IS the scan row's provenance — and
+    one per-file count: per-FILE metadata, bounded by file count."""
+    from pyspark.sql import functions as F
+
+    if not files:
+        return {}
+    scan = _scan_files(spark, snap, files, with_meta=True)
+    rows = (
+        match(scan)
+        .groupBy("__txlog_file")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    hits = {_local_path(f): (f, n) for f, n in rows}
+    return {
+        p: hits[os.path.abspath(p)] for p in files if os.path.abspath(p) in hits
+    }
+
+
 def merge_into(
     spark: SparkSession,
     table_dir: str,
@@ -883,10 +949,10 @@ def merge_into(
 
     1. **Touched-file discovery.** The source's key range prunes the
        snapshot via per-file stats (files that cannot contain a source
-       key are never listed), then one inner join of the surviving
-       files against the broadcast source keys collects the DISTINCT
-       ``input_file_name()`` set — per-FILE metadata, bounded by file
-       count. Files without a match are never rewritten.
+       key are never listed), then one semi join of the surviving
+       files against the broadcast source keys finds the files holding
+       a source key (:func:`_touched_files`). Files without a match are
+       never rewritten.
     2. **Rewrite.** One full-outer join of the touched files' rows with
        the source on ``key``: matched rows take the source image
        (``UPDATE SET *`` — including nulls, which is why this is a
@@ -908,6 +974,7 @@ def merge_into(
     tip = latest_version(table_dir)
     cols = read_version(spark, table_dir, tip).columns
     src = source.select(*cols)
+    snap = _resolve(table_dir, tip)
 
     # pass 1: prune by the source's key envelope, then find touched files
     # (row count, duplicate-key detection and the envelope share ONE
@@ -927,26 +994,18 @@ def merge_into(
         # empty batches never grow the snapshot's action list
         return tip, []
     cand = (
-        snapshot_files(table_dir, tip, predicate_range=(key, lo, hi))
+        _files_in(snap, predicate_range=(key, lo, hi))
         if lo is not None
         else []  # only-NULL-key source: no file can be touched
     )
-    touched: list[str] = []
-    if cand:
-        keys = src.select(key).distinct()
-        hit = (
-            # DV-aware scan: a key whose only occurrence is a
-            # merge-on-read-deleted row must NOT touch the file (the key
-            # is absent from the table — it is a plain insert)
-            _scan_files(spark, table_dir, tip, cand, with_meta=True)
-            .select(F.col(key), F.col("__txlog_file").alias("f"))
-            .join(F.broadcast(keys), key, "left_semi")
-            .select("f")
-            .distinct()
-            .collect()
+    # a key whose only occurrence is a merge-on-read-deleted row must NOT
+    # touch the file (the key is absent from the table — a plain insert)
+    keys = F.broadcast(src.select(key).distinct())
+    touched = list(
+        _touched_files(
+            spark, snap, cand, lambda s: s.join(keys, key, "left_semi")
         )
-        hit_paths = {_local_path(r["f"]) for r in hit}
-        touched = [p for p in cand if os.path.abspath(p) in hit_paths]
+    )
 
     # Delta MERGE semantics for duplicate source keys: duplicates that
     # match NO target row are plain multi-row inserts (allowed — the
@@ -966,7 +1025,7 @@ def merge_into(
             .select(key)
         )
         clash = (
-            _scan_files(spark, table_dir, tip, touched)
+            _scan_files(spark, snap, touched)
             .join(F.broadcast(dup_keys), key, "left_semi")
             .select(key)
             .limit(1)
@@ -996,7 +1055,7 @@ def merge_into(
     if touched:
         # DV-aware rewrite read: raw file rows that a deletion vector
         # already removed must not be carried along (resurrection)
-        tgt = _scan_files(spark, table_dir, tip, touched)
+        tgt = _scan_files(spark, snap, touched)
         joined = tgt.join(marked, key, "full_outer")
         merged = joined.select(
             F.col(key),
@@ -1012,9 +1071,7 @@ def merge_into(
     else:
         # nothing matched anywhere: pure insert, every row is new
         merged = src.withColumn("__txlog_modified", F.lit(True))
-    new_actions = _write_files_checked(
-        merged, table_dir, table_metadata(table_dir, tip), stats_cols
-    )
+    new_actions = _write_files_checked(merged, table_dir, snap[2], stats_cols)
     version = commit(
         table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
         operation="MERGE",
@@ -1075,48 +1132,33 @@ def delete_where(
     from pyspark.sql import functions as F
 
     tip = latest_version(table_dir)
-    cand = snapshot_files(table_dir, tip, predicate_range=prune_range)
+    snap = _resolve(table_dir, tip)
+    cand = _files_in(snap, predicate_range=prune_range)
     if not cand:
         return tip, []
-    actions, _, meta, _ = _resolve(table_dir, tip)
-    by_path = {os.path.abspath(_action_path(a)): a for a in actions}
-    # file name projected AT THE SCAN — post-filter provenance IS the
-    # scan row's provenance, same discipline as merge_into; the per-file
-    # match COUNT feeds the DV-vs-rewrite routing below
-    hit = (
-        _scan_files(spark, table_dir, tip, cand, with_meta=True)
-        .select(
-            F.col("__txlog_file").alias("f"),
-            F.coalesce(F.expr(predicate), F.lit(False)).alias("__del"),
-        )
-        .where(F.col("__del"))
-        .groupBy("f")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    matches = {_local_path(r["f"]): r["n"] for r in hit}
-    uri_by_path = {_local_path(r["f"]): r["f"] for r in hit}
-    touched = [p for p in cand if os.path.abspath(p) in matches]
-    if not touched:
+    actions, _, meta, _ = snap
+    by_path = {_action_path(a): a for a in actions}
+    cond = F.coalesce(F.expr(predicate), F.lit(False))
+    # the per-file match COUNT feeds the DV-vs-rewrite routing below
+    hits = _touched_files(spark, snap, cand, lambda s: s.where(cond))
+    if not hits:
         return tip, []  # no matching row anywhere: metadata-only no-op
+    touched = list(hits)
     dv_class: list[str] = []
     rw_class: list[str] = []
-    for p in touched:
-        ap = os.path.abspath(p)
-        a = by_path[ap]
+    for p, (_, n) in hits.items():
+        a = by_path[p]
         num_rows = a.get("num_rows") if isinstance(a, dict) else None
         if dv_fraction_threshold > 0 and num_rows:
             old_card = ((a.get("dv") or {}).get("cardinality")) or 0
             live = int(num_rows) - int(old_card)
-            if live > 0 and matches[ap] / live <= dv_fraction_threshold:
+            if live > 0 and n / live <= dv_fraction_threshold:
                 dv_class.append(p)
                 continue
         rw_class.append(p)
     new_actions: list = []
     if rw_class:
-        kept = _scan_files(spark, table_dir, tip, rw_class).where(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
-        )
+        kept = _scan_files(spark, snap, rw_class).where(~cond)
         new_actions.extend(
             write_files(
                 _to_physical(kept, meta),
@@ -1127,7 +1169,7 @@ def delete_where(
     if dv_class:
         new_actions.extend(
             _write_deletion_vectors(
-                spark, table_dir, tip, dv_class, predicate, by_path, uri_by_path
+                spark, table_dir, snap, dv_class, cond, by_path, hits
             )
         )
     version = commit(
@@ -1140,11 +1182,11 @@ def delete_where(
 def _write_deletion_vectors(
     spark: SparkSession,
     table_dir: str,
-    version: int,
+    snap,
     files: list[str],
-    predicate: str,
+    cond,
     by_path: dict,
-    uri_by_path: dict[str, str],
+    hits: dict[str, tuple[str, int]],
 ) -> list[dict]:
     """Materialize ONE deletion-vector sidecar (parquet dir of
     ``(file, pos)`` rows) for a DELETE's dv-routed files and return
@@ -1160,19 +1202,17 @@ def _write_deletion_vectors(
     :func:`write_files`' stats."""
     from pyspark.sql import functions as F
 
-    scan = _scan_files(spark, table_dir, version, files, with_meta=True)
-    newly = scan.where(
-        F.coalesce(F.expr(predicate), F.lit(False))
-    ).select(
+    scan = _scan_files(spark, snap, files, with_meta=True)
+    newly = scan.where(cond).select(
         F.col("__txlog_file").alias("file"),
         F.col("__txlog_pos").alias("pos"),
     )
-    uris = [uri_by_path[os.path.abspath(p)] for p in files]
+    uris = [hits[p][0] for p in files]
     old_dirs = sorted(
         {
             dv["path"]
             for p in files
-            for dv in ((by_path[os.path.abspath(p)].get("dv"),) if isinstance(by_path[os.path.abspath(p)], dict) else ())
+            for dv in ((by_path[p].get("dv"),) if isinstance(by_path[p], dict) else ())
             if dv
         }
     )
@@ -1191,9 +1231,9 @@ def _write_deletion_vectors(
     }
     acts = []
     for p in files:
-        a = by_path[os.path.abspath(p)]
+        a = by_path[p]
         new_a = dict(a) if isinstance(a, dict) else {"path": a}
-        card = int(counts.get(uri_by_path[os.path.abspath(p)], 0))
+        card = int(counts.get(hits[p][0], 0))
         new_a["dv"] = {"path": out, "cardinality": card}
         acts.append(new_a)
     return acts
@@ -1284,10 +1324,9 @@ def update_where(
 
     1. **Touched-file discovery.** ``prune_range`` skips files whose
        committed stats cannot contain a matching row (driver-side,
-       metadata only); one distributed scan of the survivors collects
-       the DISTINCT ``input_file_name()`` set of files holding at least
-       one row where the predicate is TRUE — per-FILE metadata, bounded
-       by file count.
+       metadata only); one DV-aware scan of the survivors finds the
+       files holding at least one row where the predicate is TRUE
+       (:func:`_touched_files`).
     2. **Rewrite.** Touched files are rewritten with the SET
        expressions applied to matching rows ONLY (SQL UPDATE
        semantics: a NULL predicate leaves the row unchanged, hence the
@@ -1313,39 +1352,24 @@ def update_where(
     from pyspark.sql import functions as F
 
     tip = latest_version(table_dir)
-    cand = snapshot_files(table_dir, tip, predicate_range=prune_range)
-    snap = read_version(spark, table_dir, tip)
-    cols = snap.columns
+    snap = _resolve(table_dir, tip)
+    cand = _files_in(snap, predicate_range=prune_range)
+    cur = read_version(spark, table_dir, tip)
+    cols = cur.columns
     unknown = set(set_exprs) - set(cols)
     if unknown:
         raise ValueError(
             f"UPDATE SET references non-existent column(s) {sorted(unknown)}; "
             f"table columns are {cols}"
         )
-    _check_update_types(snap, set_exprs)
-    touched: list[str] = []
-    if cand:
-        hit = (
-            # DV-aware scan: a predicate matching only merge-on-read-
-            # deleted rows must not touch (or resurrect through) a file
-            _scan_files(spark, table_dir, tip, cand, with_meta=True)
-            # file name projected AT THE SCAN — post-filter provenance
-            # IS the scan row's provenance, same discipline as merge_into
-            .select(
-                F.col("__txlog_file").alias("f"),
-                F.coalesce(F.expr(predicate), F.lit(False)).alias("__upd"),
-            )
-            .where(F.col("__upd"))
-            .select("f")
-            .distinct()
-            .collect()
-        )
-        hit_paths = {_local_path(r["f"]) for r in hit}
-        touched = [p for p in cand if os.path.abspath(p) in hit_paths]
+    _check_update_types(cur, set_exprs)
+    cond = F.coalesce(F.expr(predicate), F.lit(False))
+    touched = list(
+        _touched_files(spark, snap, cand, lambda s: s.where(cond))
+    )
     if not touched:
         return tip, []  # no matching row anywhere: metadata-only no-op
-    cond = F.coalesce(F.expr(predicate), F.lit(False))
-    tgt = _scan_files(spark, table_dir, tip, touched)
+    tgt = _scan_files(spark, snap, touched)
     # one select over the old row image: all SET expressions (and the
     # predicate) see pre-update values, and each output keeps the
     # column's original type (UPDATE never changes the schema). The
@@ -1363,9 +1387,7 @@ def update_where(
         ],
         cond.alias("__txlog_modified"),
     )
-    new_actions = _write_files_checked(
-        updated, table_dir, table_metadata(table_dir, tip), stats_cols
-    )
+    new_actions = _write_files_checked(updated, table_dir, snap[2], stats_cols)
     version = commit(
         table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
         operation="UPDATE",
@@ -1981,9 +2003,7 @@ def history(table_dir: str) -> list[dict]:
     exposes DESCRIBE HISTORY for exactly this "what changed the table,
     when" audit."""
     rows: list[dict] = []
-    for v in range(latest_version(table_dir) + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            payload = json.load(f)
+    for v, payload in enumerate(_commits(table_dir, 0, latest_version(table_dir))):
         add = payload.get("add") or []
         remove = payload.get("remove") or []
         meta = payload.get("metadata")
@@ -2037,8 +2057,8 @@ def vacuum(
     version are bit-identical (vacuum never touches their files) and
     time travel past the horizon fails loudly at read time — pinned in
     ``tests/test_txlog.py``. ``dry_run=True`` lists without deleting.
-    The walk is metadata-only: O(files on disk) + O(retained actions),
-    no data read.
+    The walk is metadata-only: one pass over the log, reading each
+    commit once, plus O(files on disk); no data read.
 
     **Uncommitted-writer safety**: a concurrent writer's
     :func:`write_files` output sits on disk referenced by NO commit
@@ -2085,30 +2105,42 @@ def vacuum(
 
     now = _time.time()
     tip = latest_version(table_dir)
-    live: set[str] = set()
-    live_dv: set[str] = set()
-    for v in range(max(0, tip - max(0, retention_versions)), tip + 1):
-        acts = _resolve(table_dir, v)[0]
-        live.update(os.path.abspath(_action_path(a)) for a in acts)
-        live_dv.update(
-            os.path.abspath(d["path"]) for d in _dv_map(acts).values()
+    keep_from = max(0, tip - max(0, retention_versions))
+    # ONE forward pass over the log. The actions live in any retained
+    # snapshot (tip-N .. tip) are the snapshot at tip-N plus every later
+    # add. ``ever`` holds every action ANY commit added: a data file it
+    # never names was never committed — either garbage from a crashed
+    # writer (old) or an IN-FLIGHT writer's pending output (young,
+    # protected below). Deletion-vector sidecar DIRS are tracked the same
+    # way: a sidecar is row data (deleted positions) whose lifecycle
+    # follows its actions.
+    snap: dict = {}
+    retained: list = []
+    ever: list = []
+    for v, c in enumerate(_commits(table_dir, 0, tip)):
+        _fold(snap, c)
+        ever.extend(c.get("add") or ())
+        if v == keep_from:
+            retained = list(snap.values())
+        elif v > keep_from:
+            retained.extend(c.get("add") or ())
+
+    def refs(acts) -> tuple[set[str], set[str]]:
+        """(data file paths, deletion-vector sidecar dirs) of actions —
+        per ACTION, not through the path-keyed :func:`_dv_map`: two
+        retained actions on one data file can carry different sidecars,
+        and both stay referenced."""
+        return (
+            {os.path.abspath(_action_path(a)) for a in acts},
+            {
+                os.path.abspath(a["dv"]["path"])
+                for a in acts
+                if isinstance(a, dict) and a.get("dv")
+            },
         )
-    # every path ANY commit ever added: a data file absent from this set
-    # was never committed — either garbage from a crashed writer (old)
-    # or an IN-FLIGHT writer's pending output (young, protected below).
-    # Deletion-vector sidecar DIRS are tracked the same way: a sidecar is
-    # row data (deleted positions) whose lifecycle follows its actions.
-    ever_referenced: set[str] = set()
-    ever_dv: set[str] = set()
-    for v in range(tip + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            adds = json.load(f).get("add") or ()
-        ever_referenced.update(
-            os.path.abspath(_action_path(a)) for a in adds
-        )
-        ever_dv.update(
-            os.path.abspath(d["path"]) for d in _dv_map(adds).values()
-        )
+
+    live, live_dv = refs(retained)
+    ever_referenced, ever_dv = refs(ever)
     victims = []
     for dirpath, _, files in os.walk(os.path.join(table_dir, "data")):
         for f in files:
@@ -2329,12 +2361,31 @@ def table_changes(
             f"table_changes range [{start_version}, {end}] outside the "
             f"log's committed range [0, {tip}]"
         )
-    # one reader, resolved ONCE at the END version's log-governed schema
-    # (Delta CDF semantics: the feed is served in the reading snapshot's
-    # schema — files written pre-evolution null-fill the new columns), so
-    # every per-version frame has identical columns for the final union
-    # and the driver-side log fold stays O(range), not O(range × prefix)
-    _, _, end_meta, _ = _resolve(table_dir, end)
+    # ONE pass over the range, folding on from the snapshot before it:
+    # each commit gets the deletion-vector state before and after it
+    # (each side of its diff reads under ITS version's DV state — a DV
+    # commit, the same file re-referenced with a bigger vector, therefore
+    # feeds exactly the newly-deleted rows as `delete`s, and a rewrite of
+    # a DV'd file diffs only its LIVE pre-image rows), and the pass ends
+    # holding the END version's snapshot and metadata
+    if start_version > 0:
+        acts, _, end_meta, _ = _resolve(table_dir, start_version - 1)
+    else:
+        acts, end_meta = [], None
+    state = {_action_path(a): a for a in acts}
+    post_dv = _dv_map(acts)
+    commits: list[tuple[dict, dict, dict]] = []
+    for payload in _commits(table_dir, start_version, end):
+        pre_dv = post_dv
+        _fold(state, payload)
+        post_dv = _dv_map(state.values())
+        commits.append((payload, pre_dv, post_dv))
+        if payload.get("metadata") is not None:
+            end_meta = payload["metadata"]
+    # one reader at the END version's log-governed schema (Delta CDF
+    # semantics: the feed is served in the reading snapshot's schema —
+    # files written pre-evolution null-fill the new columns), so every
+    # per-version frame has identical columns for the final union
     declared = (end_meta or {}).get("schema")
     end_mapping = _mapping_of(end_meta)
     reader = (
@@ -2354,10 +2405,6 @@ def table_changes(
         s = _scan_files_with_dvs(spark, files_, dv_, reader)
         return _project_logical(s, end_meta) if end_mapping else s
 
-    commits: list[dict] = []
-    for v in range(start_version, end + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            commits.append(json.load(f))
     # the feed's meta columns and join-scratch flags live in the Delta-style
     # underscore namespace; a table whose DATA already uses one would
     # silently corrupt classification (withColumn replaces) or duplicate an
@@ -2368,21 +2415,18 @@ def table_changes(
     # anyway). One tip file is not enough when heterogeneous-schema files
     # entered the log without metadata, and neither is one file per side:
     # a reserved name can hide in any file of a multi-file commit
-    reserved = {
-        "_change_type", "_commit_version", "_operation",
+    reserved = {n for n, _ in _CDF_META_FIELDS} | {
         "_b_present", "_a_present", "_b_dupn", "_a_dupn",
     }
     if declared is not None:
-        from pyspark.sql.types import StructType
-
-        data_columns = set(StructType.fromDDL(declared).fieldNames())
+        data_columns = {n for n, _ in _ddl_fields(declared)}
     else:
         import pyarrow.parquet as _pq
 
         data_columns = set()
         probe_paths = {
             _action_path(a)
-            for payload in commits
+            for payload, _, _ in commits
             for acts in (payload.get("add") or (), payload.get("remove") or ())
             for a in acts
         }
@@ -2398,32 +2442,11 @@ def table_changes(
     from pyspark.sql.window import Window
 
     per_version: list[DataFrame] = []
-    # deletion-vector awareness: each side reads under ITS version's DV
-    # state (pre = before the commit, post = after), maintained by ONE
-    # incremental action fold across the range — a DV commit (same file
-    # re-referenced with a bigger vector) therefore feeds exactly the
-    # newly-deleted rows as `delete`s, and a rewrite of a DV'd file
-    # diffs only its LIVE pre-image rows
-    state: dict[str, dict | str] = {
-        os.path.abspath(_action_path(a)): a
-        for a in (
-            _resolve(table_dir, start_version - 1)[0]
-            if start_version > 0
-            else ()
-        )
-    }
-    for payload in commits:
+    for payload, pre_dv, post_dv in commits:
         v = payload["version"]
-        add_actions = payload.get("add") or ()
-        adds = [_action_path(a) for a in add_actions]
+        adds = [_action_path(a) for a in payload.get("add") or ()]
         removes = [_action_path(a) for a in payload.get("remove") or ()]
         op = payload.get("operation")
-        pre_dv = _dv_map(state.values())
-        for p in removes:
-            state.pop(os.path.abspath(p), None)
-        for a in add_actions:
-            state[os.path.abspath(_action_path(a))] = a
-        post_dv = _dv_map(state.values())
         meta = (
             F.lit(v).alias("_commit_version"),
             F.lit(op).alias("_operation"),
@@ -2533,7 +2556,7 @@ def table_changes(
     if not per_version:
         # metadata-only range: an EMPTY feed in the end-version schema
         # (Delta contract — "no changes" is a row count, not an error)
-        files = snapshot_files(table_dir, end) or snapshot_files(table_dir)
+        files = list(state) or snapshot_files(table_dir)
         if files:
             base = _cdf_scan([files[0]], {})
         elif declared is not None:

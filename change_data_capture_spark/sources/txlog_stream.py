@@ -80,7 +80,6 @@ same O(churned files) unit as the batch ``table_changes``).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -88,23 +87,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import IntegerType, StringType, StructType
+from pyspark.sql.types import StructType
 
 from change_data_capture_spark.sources import txlog
-
-#: CDF meta columns appended to the table schema in readChangeFeed mode
-#: (same names/types the batch ``txlog.table_changes`` emits)
-_CDF_META_FIELDS = (
-    ("_change_type", StringType()),
-    ("_commit_version", IntegerType()),
-    ("_operation", StringType()),
-)
-
-
-def _commit_payload(table_dir: str, v: int) -> dict:
-    # txlog owns the commit-path format; never re-derive it here
-    with open(txlog._commit_path(table_dir, v)) as f:
-        return json.load(f)
 
 
 def _added_files(
@@ -123,8 +108,7 @@ def _added_files(
     already emitted (forwarding them double-counts; forwarding only
     their changed rows is the CDF reader's job, not this one's)."""
     out: list[str] = []
-    for v in range(from_v + 1, to_v + 1):
-        c = _commit_payload(table_dir, v)
+    for c in txlog._commits(table_dir, from_v + 1, to_v):
         # an add action CARRYING a deletion vector is not a pure append
         # either: it re-references a file whose rows the stream already
         # emitted (a RESTORE re-adding a DV'd action is the add-only
@@ -137,7 +121,7 @@ def _added_files(
             if skip_change_commits:
                 continue
             raise ValueError(
-                f"txlog stream source: commit {v} rewrites data "
+                f"txlog stream source: commit {c['version']} rewrites data "
                 "(remove actions or deletion-vector re-references "
                 "present); the streaming source is "
                 "append-only — compact/merge on a downstream copy, "
@@ -585,8 +569,8 @@ class TxlogStreamReader(DataSourceStreamReader):
         # always include >= 1 version so the stream makes progress past
         # any single oversized commit
         v, count, size = self._consumed, 0, 0
-        while v < tip:
-            adds = _commit_payload(self.table_dir, v + 1).get("add") or ()
+        for c in txlog._commits(self.table_dir, v + 1, tip):
+            adds = c.get("add") or ()
             n = len(adds)
             sz = sum(_add_size(a) for a in adds) if self.max_bytes else 0
             if (count or size) and (
@@ -611,9 +595,9 @@ class TxlogStreamReader(DataSourceStreamReader):
             _check_not_vacuumed(files, start_v, end_v)
             return [_AddedFile(p) for p in files]
         # CDF planning: per-version dv-state fold from the batch start
-        state: dict[str, dict | str] = (
+        state = (
             {
-                os.path.abspath(txlog._action_path(a)): a
+                txlog._action_path(a): a
                 for a in txlog._resolve(self.table_dir, start_v)[0]
             }
             if start_v >= 0
@@ -621,21 +605,18 @@ class TxlogStreamReader(DataSourceStreamReader):
         )
 
         def dv_of(p: str, actions: dict) -> str | None:
-            a = actions.get(os.path.abspath(p))
+            a = actions.get(p)
             dv = a.get("dv") if isinstance(a, dict) else None
             return dv["path"] if dv else None
 
         parts: list[InputPartition] = []
-        for v in range(start_v + 1, end_v + 1):
-            c = _commit_payload(self.table_dir, v)
+        for c in txlog._commits(self.table_dir, start_v + 1, end_v):
+            v = c["version"]
             adds = [txlog._action_path(a) for a in c.get("add") or ()]
             removes = list(c.get("remove") or ())
             op = c.get("operation")
             pre = [(p, dv_of(p, state)) for p in removes]
-            for p in removes:
-                state.pop(os.path.abspath(p), None)
-            for a in c.get("add") or ():
-                state[os.path.abspath(txlog._action_path(a))] = a
+            txlog._fold(state, c)
             if not removes:
                 parts.extend(
                     _CdfInsert(p, v, op, dv_of(p, state)) for p in adds
@@ -662,7 +643,7 @@ class TxlogStreamReader(DataSourceStreamReader):
         meta columns excluded — the reader appends them itself)."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        meta = {n for n, _ in _CDF_META_FIELDS}
+        meta = {n for n, _ in txlog._CDF_META_FIELDS}
         arrow = to_arrow_schema(self.schema_)
         return [(f.name, f.type) for f in arrow if f.name not in meta]
 
@@ -723,70 +704,45 @@ class TxlogStreamDataSource(DataSource):
         # NOTE: this runs in a session-less Python worker — DDL strings
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
-        meta = txlog.table_metadata(table_dir) or {}
-        declared = meta.get("schema")
+        declared = (txlog.table_metadata(table_dir) or {}).get("schema")
         cdf = str(_opt(self.options, "readChangeFeed", "false")).lower() == "true"
-        reserved = {n for n, _ in _CDF_META_FIELDS}
         if declared is not None:
-            if not cdf:
-                return declared  # DDL string, accepted by the DataSource API
-            clash = reserved & set(_ddl_top_level_fields(declared))
-            if clash:
+            names = [n for n, _ in txlog._ddl_fields(declared)]
+        else:
+            files = txlog.snapshot_files(table_dir)
+            if not files:
                 raise ValueError(
-                    f"readChangeFeed reserves column names {sorted(clash)}; "
-                    "the table's data already uses them — rename before "
-                    "streaming the feed"
+                    f"cdc_txlog source: table {table_dir} has no committed "
+                    "metadata and no data files to infer a schema from; pass "
+                    ".schema(...) explicitly or commit table metadata"
                 )
-            return (
-                f"{declared}, _change_type STRING, "
-                "_commit_version INT, _operation STRING"
-            )
-        files = txlog.snapshot_files(table_dir)
-        if not files:
-            raise ValueError(
-                f"cdc_txlog source: table {table_dir} has no committed "
-                "metadata and no data files to infer a schema from; pass "
-                ".schema(...) explicitly or commit table metadata"
-            )
-        import pyarrow.parquet as pq
+            import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import from_arrow_schema
+            from pyspark.sql.pandas.types import from_arrow_schema
 
-        base = from_arrow_schema(pq.read_schema(files[0]))
+            base = from_arrow_schema(pq.read_schema(files[0]))
+            names = base.fieldNames()
         if not cdf:
-            return base
-        clash = reserved & set(base.fieldNames())
+            # a DDL string is accepted by the DataSource API
+            return declared if declared is not None else base
+        clash = {n for n, _ in txlog._CDF_META_FIELDS} & set(names)
         if clash:
             raise ValueError(
                 f"readChangeFeed reserves column names {sorted(clash)}; "
                 "the table's data already uses them — rename before "
                 "streaming the feed"
             )
+        if declared is not None:
+            return declared + "".join(
+                f", {n} {t.simpleString()}" for n, t in txlog._CDF_META_FIELDS
+            )
         out = StructType(list(base.fields))
-        for n, t in _CDF_META_FIELDS:
+        for n, t in txlog._CDF_META_FIELDS:
             out = out.add(n, t)
         return out
 
     def streamReader(self, schema: StructType):
         return TxlogStreamReader(schema, self.options)
-
-
-def _ddl_top_level_fields(ddl: str) -> list[str]:
-    """Top-level field NAMES of a ``name TYPE, ...`` DDL string, parsed
-    without a Spark session (nesting in ``<>``/``()`` tracked so struct
-    element commas don't split fields)."""
-    fields, depth, start = [], 0, 0
-    for i, ch in enumerate(ddl + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            part = ddl[start:i].strip()
-            if part:
-                fields.append(part.split()[0].strip("`"))
-            start = i + 1
-    return fields
 
 
 def _required_path(options: dict) -> str:

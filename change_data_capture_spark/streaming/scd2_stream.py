@@ -9,13 +9,19 @@ shape over add/remove actions):
 - per micro-batch, three query shapes: (1) range: count/min/max ``id``
   of the raw batch prunes the snapshot's files by their ``id`` stats;
   (2) probe: one broadcast semi join finds the files that really hold a
-  batch key; (3) rewrite: their batch-key rows become pseudo-events, and
+  batch key (``txlog._touched_files``, the probe every txlog rewrite
+  shares); (3) rewrite: their batch-key rows become pseudo-events, and
   ONE shuffle on ``id`` serves both the (id, lsn) dedup and the LSN
   re-chain; their other rows pass through outside it. One atomic version
   adds the result and removes only the touched files: O(touched files +
-  batch), never O(table). State is read with ``_intervals``'s schema (no
-  footer-inference job); the batch is not persisted, as re-scanning a
+  batch), never O(table). The batch is not persisted, as re-scanning a
   small segment costs less than the jobs a cache adds.
+- state reads: the merge reads state only through txlog's DV-aware,
+  log-schema scan (``txlog._scan_files``), like every other txlog reader,
+  so rows a deletion-vector DELETE removed stay removed. The state's
+  first commit declares its schema, so every later scan is planned with
+  it and launches no footer-inference job (a state table written
+  without a declared schema still merges, at one inference job a scan).
 - atomicity: the commit is guarded by ``expected_version = tip + 1``, so
   readers see every version of the SCD2 table fully merged or not at all,
   and a concurrent writer's lost race fails loudly instead of clobbering.
@@ -39,8 +45,6 @@ event log into micro-batches, final state equals the batch
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -102,32 +106,26 @@ def apply_batch(
     if n == 0:
         return  # nothing to merge: no empty commit
     tip = txlog.latest_version(tdir)
+    # one log walk per merge: the prune, the probe and the rewrite read
+    # the same resolved snapshot
+    snap = txlog._resolve(tdir, tip) if tip >= 0 else None
     # stats prune on the batch's id range (metadata only; a null-id batch
     # can match no state row, and an empty table has no files)
     cand = (
-        txlog.snapshot_files(tdir, tip, predicate_range=("id", lo, hi))
-        if tip >= 0 and lo is not None
+        txlog._files_in(snap, predicate_range=("id", lo, hi))
+        if snap is not None and lo is not None
         else []
     )
-    schema = _intervals(events).schema  # analysis only: no footer job
     keys = F.broadcast(events.select("id"))  # duplicates can't change a semi/anti join
-    touched: list[str] = []
-    if cand:
-        hit = (
-            spark.read.schema(schema)
-            .parquet(*cand)
-            .select(F.col("id"), F.input_file_name().alias("f"))
-            .join(keys, "id", "left_semi")
-            .select("f")
-            .distinct()
-            .collect()
+    touched = list(
+        txlog._touched_files(
+            spark, snap, cand, lambda s: s.join(keys, "id", "left_semi")
         )
-        hp = {txlog._local_path(r["f"]) for r in hit}
-        touched = [p for p in cand if os.path.abspath(p) in hp]
+    )
     if touched:
         # file-mates of the batch keys pass through unchanged; affected
         # keys re-chain from scratch (state rows become pseudo-events)
-        aff = spark.read.schema(schema).parquet(*touched)
+        aff = txlog._scan_files(spark, snap, touched)
         passthrough = aff.join(keys, "id", "left_anti")
         events = aff.join(keys, "id", "left_semi").select(
             "id",
@@ -146,4 +144,7 @@ def apply_batch(
         remove=touched,
         expected_version=tip + 1,
         txn=None if batch_id is None else {"app_id": APP_ID, "batch_id": batch_id},
+        # the first commit declares the state's schema: every later scan
+        # is planned with it, so no read launches a footer-inference job
+        metadata={"schema": out.schema.toDDL()} if tip < 0 else None,
     )

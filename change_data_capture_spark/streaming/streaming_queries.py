@@ -42,9 +42,11 @@ def _write_mtime_slices(
     order = micro-batch order under ``maxFilesPerTrigger=1``). Rows
     whose slice id is NULL match no slice — the same rows the old
     per-slice equality filters dropped. A degenerate empty slice still
-    lands as a typed empty file so the drain sees one file per
-    micro-batch either way."""
+    lands as a typed empty file (a copy of :func:`_typed_empty_file`'s
+    one per call) so the drain sees one file per micro-batch either
+    way."""
     import os
+    import shutil
     import time as _time
 
     (
@@ -56,19 +58,28 @@ def _write_mtime_slices(
     )
     os.makedirs(slices_dir, exist_ok=True)
     now = _time.time()
+    empty = None
     for i in range(n_slices):
         sdir = f"{tmp_dir}/_slice={i}"
+        dst = f"{slices_dir}/slice_{i}.parquet"
         if os.path.isdir(sdir):
             part = [f for f in os.listdir(sdir) if f.endswith(".parquet")][0]
-            src = os.path.join(sdir, part)
+            os.rename(os.path.join(sdir, part), dst)
         else:
-            edir = f"{tmp_dir}/_empty_{i}"
-            df.limit(0).repartition(1).write.mode("overwrite").parquet(edir)
-            part = [f for f in os.listdir(edir) if f.endswith(".parquet")][0]
-            src = os.path.join(edir, part)
-        dst = f"{slices_dir}/slice_{i}.parquet"
-        os.rename(src, dst)
+            empty = empty or _typed_empty_file(df, f"{tmp_dir}/_empty")
+            shutil.copyfile(empty, dst)
         os.utime(dst, (now + i, now + i))
+
+
+def _typed_empty_file(df: DataFrame, out_dir: str) -> str:
+    """Write ONE zero-row parquet file with ``df``'s schema under
+    ``out_dir`` and return its path; the slice writers copy it into
+    every empty slot instead of running one empty write job per slot."""
+    import os
+
+    df.limit(0).repartition(1).write.mode("overwrite").parquet(out_dir)
+    part = [f for f in os.listdir(out_dir) if f.endswith(".parquet")][0]
+    return os.path.join(out_dir, part)
 
 
 def _staged_commit_slices(
@@ -90,6 +101,7 @@ def _staged_commit_slices(
     footer-lifted stats actions carrying Delta's ``size``/``stats``/
     ``numRecords`` fields (:func:`txlog.stats_actions_for`)."""
     import os
+    import shutil
     import uuid as _uuid
 
     from change_data_capture_spark.sources import txlog as _txlog
@@ -105,6 +117,7 @@ def _staged_commit_slices(
         .parquet(out)
     )
     per_slice: list[list] = []
+    empty = None
     for i in range(n_slices):
         paths = []
         for j in range(per_slice_files):
@@ -114,15 +127,11 @@ def _staged_commit_slices(
                 # partitionBy writes no dir. The pre-r13 per-commit
                 # repartition(2) writes landed a typed EMPTY file for it;
                 # do the same so every commit keeps exactly
-                # per_slice_files files (mirrors _write_mtime_slices)
-                edir = f"{out}/_empty_{i}_{j}"
-                df.limit(0).repartition(1).write.mode("overwrite").parquet(
-                    edir
-                )
-                part = [
-                    f for f in os.listdir(edir) if f.endswith(".parquet")
-                ][0]
-                paths.append(os.path.join(edir, part))
+                # per_slice_files files (mirrors _write_mtime_slices);
+                # each commit adds its own copy of the one empty file
+                empty = empty or _typed_empty_file(df, f"{out}/_empty")
+                paths.append(f"{out}/_empty/slot_{i}_{j}.parquet")
+                shutil.copyfile(empty, paths[-1])
                 continue
             parts = sorted(
                 f for f in os.listdir(d) if f.endswith(".parquet")
@@ -2819,10 +2828,7 @@ def streaming_txlog_rate_limit_bytes(
     executor-memory-sized regardless of how file sizes drift."""
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.tables import load_table
-    from change_data_capture_spark.sources.txlog_stream import (
-        TxlogStreamReader,
-        _commit_payload,
-    )
+    from change_data_capture_spark.sources.txlog_stream import TxlogStreamReader
 
     tdir = tempfile.mkdtemp(prefix="cdc_txratebytes_")
     o = load_table(spark, sf_dir, "orders").select(
@@ -2853,8 +2859,8 @@ def streaming_txlog_rate_limit_bytes(
             ),
         )
     sizes = []
-    for v in range(6):
-        adds = _commit_payload(tdir, v).get("add") or ()
+    for c in txlog._commits(tdir, 0, 5):
+        adds = c.get("add") or ()
         if not all(isinstance(a, dict) and a.get("size") for a in adds):
             raise RuntimeError(
                 "add actions must carry their byte size in the LOG — "

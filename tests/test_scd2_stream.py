@@ -1,6 +1,7 @@
 """The txlog-backed SCD2 state must only rewrite files holding batch keys —
 the file-skipping property that makes incremental maintenance incremental —
-and must commit nothing for a batch without events or a replayed batch."""
+must read state as every txlog reader does (deletion vectors applied), and
+must commit nothing for a batch without events or a replayed batch."""
 
 from __future__ import annotations
 
@@ -106,6 +107,56 @@ def test_merge_job_count(spark):
     touching = _events(spark, [5, 150]).withColumn("lsn", F.col("lsn") + 1)
     assert jobs(touching) <= 8
     assert state.read().count() == 202
+
+
+def test_merge_keeps_deletion_vector_deletes(spark):
+    """A merge that rewrites a file must not bring back rows a
+    deletion-vector DELETE removed from it: the merge reads state through
+    txlog's DV-aware scan, like every other txlog reader."""
+    ws = tempfile.mkdtemp(prefix="scd2_state_")
+    state = Scd2State(spark, ws)
+    apply_batch(state, _events(spark, range(100)))
+    txlog.delete_where(
+        spark, ws, "id = 7", stats_cols=["id"], dv_fraction_threshold=1.0
+    )
+    (f7,) = [
+        f for f in txlog.snapshot_files(ws)
+        if spark.read.parquet(f).where("id = 7").count()
+    ]
+    assert txlog._dv_map(txlog._resolve(ws, None)[0]), "DELETE took the DV path"
+    assert spark.read.parquet(f7).where("id = 8").count() == 1  # a file-mate
+
+    apply_batch(state, _events(spark, [8]).withColumn("lsn", F.col("lsn") + 1))
+    assert f7 in _commit(ws, txlog.latest_version(ws))["remove"]
+    assert state.read().where("id = 7").count() == 0
+    assert state.read().where("id = 8").count() == 2
+
+
+def test_touching_merge_resolves_the_log_once(spark, monkeypatch):
+    """A touching merge folds the log once: the stats prune, the
+    touched-file probe and the rewrite's scan share one resolved
+    snapshot (a ``batch_id`` adds the ``last_txn`` replay check). Its
+    first commit declared the state's schema, which those scans are
+    planned with."""
+    ws = tempfile.mkdtemp(prefix="scd2_state_")
+    state = Scd2State(spark, ws)
+    apply_batch(state, _events(spark, range(100)))
+    declared = txlog.table_metadata(ws)["schema"]
+    assert [n for n, _ in txlog._ddl_fields(declared)] == state.read().columns
+
+    calls = []
+    resolve = txlog._resolve
+    monkeypatch.setattr(
+        txlog, "_resolve", lambda *a: calls.append(a) or resolve(*a)
+    )
+    apply_batch(state, _events(spark, [5]).withColumn("lsn", F.col("lsn") + 1))
+    assert txlog.latest_version(ws) == 1
+    assert len(calls) == 1
+    calls.clear()
+    batch = _events(spark, [6]).withColumn("lsn", F.col("lsn") + 1)
+    apply_batch(state, batch, batch_id=0)
+    assert txlog.latest_version(ws) == 2
+    assert len(calls) == 2
 
 
 def test_batch_without_lsn_commits_nothing(spark):

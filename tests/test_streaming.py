@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from tests.oracle import compare
+from tests.test_scd2_stream import _max_job_id
 
 
 @pytest.mark.parametrize(
@@ -76,6 +77,27 @@ def test_zscore_ttl_resets_sessions_across_batches(spark, sf_dir):
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+def test_zscore_ttl_four_batches_match_oracle(spark, sf_dir):
+    """The TTL gate drained in four micro-batches equals the same oracle:
+    the cross-batch TTL carry and the eager sweep stay covered over
+    several batch boundaries, whatever the gate's default batch count."""
+    from change_data_capture_spark.streaming.streaming_queries import (
+        streaming_anomaly_zscore_ttl,
+    )
+
+    compare(
+        "streaming_anomaly_zscore_ttl",
+        spark,
+        sf_dir,
+        {
+            "streaming_anomaly_zscore_ttl": lambda s, d: (
+                streaming_anomaly_zscore_ttl(s, d, n_slices=4)
+            )
+        },
+        entrymod.oracle_sql(),
+    )
 
 
 def test_zscore_state_survives_arrow_chunking(spark, sf_dir):
@@ -283,12 +305,21 @@ def test_csv_streaming_sink_roundtrips_with_explicit_schema(spark, sf_dir):
     assert got == want
 
 
+def _jobs(spark, fn):
+    """(Spark jobs ``fn()`` launches, its result): the job count is a
+    max-id delta of the status store."""
+    j0 = _max_job_id(spark)
+    out = fn()
+    return _max_job_id(spark) - j0, out
+
+
 def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
     """r13 slice-writer invariants: one file per slice, strictly
     increasing mtimes (file order = micro-batch order), slice content
     exactly the rows whose slice id matches (NULL slice ids drop — the
     rows the old per-slice equality filters dropped), and a degenerate
-    empty slice still lands as a typed empty file."""
+    empty slice still lands as a typed empty file. Empty slices share
+    ONE empty write: at most one job more than a dense run."""
     import os
 
     from change_data_capture_spark.streaming.streaming_queries import (
@@ -300,7 +331,10 @@ def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
         "k int, v string",
     )
     sl = str(tmp_path / "slices")
-    _write_mtime_slices(df, F.col("k") % 2, 2, sl, str(tmp_path / "h"))
+    dense, _ = _jobs(
+        spark,
+        lambda: _write_mtime_slices(df, F.col("k") % 2, 2, sl, str(tmp_path / "h")),
+    )
     files = sorted(os.listdir(sl))
     assert files == ["slice_0.parquet", "slice_1.parquet"]
     m0 = os.path.getmtime(f"{sl}/slice_0.parquet")
@@ -320,12 +354,26 @@ def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
     assert empty.count() == 0
     assert empty.schema == df.schema
 
+    # three empty slices of four: one empty write, copied into each slot
+    sl3 = str(tmp_path / "slices3")
+    sparse, _ = _jobs(
+        spark,
+        lambda: _write_mtime_slices(
+            df.where(F.col("k") == 0), F.col("k") % 4, 4, sl3, str(tmp_path / "h3")
+        ),
+    )
+    assert sparse <= dense + 1, (sparse, dense)
+    for i in (1, 2, 3):
+        empty = spark.read.parquet(f"{sl3}/slice_{i}.parquet")
+        assert empty.count() == 0 and empty.schema == df.schema
+
 
 def test_staged_commit_slices_layout(spark, tmp_path):
     """r13 one-pass commit staging: every slice owns exactly
     per_slice_files files, the union of a slice's files is exactly its
     predicate's rows, and stats actions carry footer-exact
-    size/stats/num_rows (the byte-admission fields)."""
+    size/stats/num_rows (the byte-admission fields). Empty slots share
+    ONE empty write: at most one job more than a dense run."""
     import os
 
     from change_data_capture_spark.streaming.streaming_queries import (
@@ -334,7 +382,9 @@ def test_staged_commit_slices_layout(spark, tmp_path):
 
     df = spark.range(0, 3000).selectExpr("id AS k", "id * 2 AS v")
     tdir = str(tmp_path / "t")
-    per_slice = _staged_commit_slices(df, F.col("k") % 3, 3, tdir)
+    dense, per_slice = _jobs(
+        spark, lambda: _staged_commit_slices(df, F.col("k") % 3, 3, tdir)
+    )
     assert len(per_slice) == 3
     for i, paths in enumerate(per_slice):
         assert len(paths) == 2
@@ -359,9 +409,15 @@ def test_staged_commit_slices_layout(spark, tmp_path):
     # SPARSE commit (r14, ADVICE item): a slice with no rows must land a
     # typed EMPTY file per half — same per-commit file count, zero rows —
     # not an opaque FileNotFoundError from the missing partition dir
-    sparse = _staged_commit_slices(
-        df.where("k < 2"), F.col("k") % 3, 3, str(tmp_path / "t3")
+    sparse_jobs, sparse = _jobs(
+        spark,
+        lambda: _staged_commit_slices(
+            df.where("k < 2"), F.col("k") % 3, 3, str(tmp_path / "t3")
+        ),
     )
+    assert sparse_jobs <= dense + 1, (sparse_jobs, dense)
     assert [len(p) for p in sparse] == [2, 2, 2]
+    # four empty slots, each its own file (each commit adds its own)
+    assert len({p for paths in sparse for p in paths}) == 6
     assert spark.read.parquet(*sparse[2]).count() == 0
     assert spark.read.parquet(*sparse[2]).columns == ["k", "v"]

@@ -840,6 +840,52 @@ def test_vacuum_retention_keeps_recent_versions(spark, tmp_path):
     assert [r.v for r in txlog.read_version(spark, t).collect()] == ["v2"]
 
 
+def test_log_walk_reads_each_commit_once(tmp_path, monkeypatch):
+    """Commit files read per call stay bounded by the log tail: vacuum
+    folds the whole log in ONE forward pass (not one snapshot resolution
+    per retained version), a resolution after a checkpoint reads only
+    the commits after it, and the fold is keyed by path — a commit that
+    re-adds a live path without removing it leaves one live file."""
+    import builtins
+    import collections
+    import re
+
+    t = str(tmp_path / "t")
+    f = [os.path.join(t, "data", f"f{v}.parquet") for v in range(20)]
+    for v in range(20):  # odd versions rewrite the previous version's file
+        txlog.commit(
+            t, add=[f[v]], remove=[f[v - 1]] if v % 2 else [], expected_version=v
+        )
+    opens: collections.Counter = collections.Counter()
+    real_open = builtins.open
+    commit_file = re.compile(r"_txlog[/\\](\d{20})\.json$")
+
+    def counting_open(file, *args, **kwargs):
+        m = commit_file.search(str(file))
+        if m:
+            opens[int(m.group(1))] += 1
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    txlog.vacuum(t, retention_versions=5)
+    assert sorted(opens) == list(range(20))
+    assert max(opens.values()) == 1, opens
+
+    txlog.write_checkpoint(t, 14)
+    opens.clear()
+    txlog._resolve(t, None)
+    assert sorted(opens) == list(range(15, 20)) and max(opens.values()) == 1
+    monkeypatch.undo()
+
+    live = f[1::2]
+    assert txlog.snapshot_files(t) == live
+    txlog.commit(t, add=[f[19]], expected_version=20)  # re-add, no remove
+    assert txlog.snapshot_files(t) == live
+    # removed and re-added in one commit: the path moves to the end
+    txlog.commit(t, add=[f[1]], remove=[f[1]], expected_version=21)
+    assert txlog.snapshot_files(t) == live[1:] + [f[1]]
+
+
 def test_schema_evolution_read_is_log_governed(spark, tmp_path):
     """The log's declared schema governs every snapshot read: after an
     evolution commit, OLD files are planned with the evolved shape and
@@ -1811,6 +1857,22 @@ def test_dv_retention_vacuum_keeps_referenced_sidecars(spark, tmp_path):
         txlog.os.path.dirname(v) in sidecar_dirs for v in victims
     )
     assert txlog.read_version(spark, t).count() == 99
+
+
+def test_dv_retention_vacuum_keeps_both_sidecars_of_one_file(spark, tmp_path):
+    """Two DV deletes on the same data file inside the retained window:
+    v1 adds the file with sidecar D1, v2 re-adds it with D2. Both
+    versions are retained, so both sidecars stay and v1 still reads the
+    same rows after vacuum."""
+    t = _dv_table(spark, tmp_path)
+    txlog.delete_where(spark, t, "id = 1", dv_fraction_threshold=0.5)  # v1
+    txlog.delete_where(spark, t, "id = 2", dv_fraction_threshold=0.5)  # v2
+    dvs = [txlog._dv_map(txlog._resolve(t, v)[0]) for v in (1, 2)]
+    assert dvs[0].keys() == dvs[1].keys() and dvs[0] != dvs[1]  # same file
+    before = txlog.read_version(spark, t, 1).count()
+    txlog.vacuum(t, retention_versions=1, data_grace_seconds=0.0)
+    assert txlog.read_version(spark, t, 1).count() == before == 99
+    assert txlog.read_version(spark, t).count() == 98
 
 
 # ---------------------------------------------------------------------------

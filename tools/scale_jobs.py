@@ -2,35 +2,22 @@
 
 Runs named queries from a given repo tree against a (shared) replicated
 data dir and reports, per query: wall seconds per run and the number of
-Spark jobs + stages the invocation submitted (UI REST API delta — counts
-jobs from ALL threads, including the streaming gates' overlap pools,
-which thread-local job groups would miss). Job counts are deterministic
-per code path, so this is the host-noise-immune evidence of pass-count
-reductions.
+Spark jobs + stages the invocation submitted (max-id deltas from the
+status store, read by the benchmark's own collector,
+``perfbench/harness.py::EngineCounters`` — counts jobs from ALL threads,
+including the streaming gates' overlap pools, which thread-local job
+groups would miss). Job counts are deterministic per code path, so this
+is the host-noise-immune evidence of pass-count reductions.
 """
 import argparse
 import json
+import os
 import sys
 import time
-import urllib.request
 
-
-def counts(spark):
-    # AppStatusStore sees jobs from ALL threads (the overlap pools too),
-    # with no UI needed. Use MAX ids, not list sizes: ids are monotonic,
-    # so deltas stay correct even after retained-jobs eviction. Submitted
-    # stage count comes from each job's planned stageIds (monotonic too).
-    store = spark.sparkContext._jsc.sc().statusStore()
-    jobs = store.jobsList(None)
-    max_job = -1
-    max_stage = -1
-    for i in range(jobs.size()):
-        j = jobs.apply(i)
-        max_job = max(max_job, j.jobId())
-        sids = j.stageIds()
-        for k in range(sids.size()):
-            max_stage = max(max_stage, sids.apply(k))
-    return max_job, max_stage
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, "perfbench"))
+from harness import EngineCounters  # noqa: E402
 
 
 def main():
@@ -42,7 +29,6 @@ def main():
     args = ap.parse_args()
 
     sys.path.insert(0, args.repo)
-    import os
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     os.chdir(args.repo)
     from change_data_capture_spark.session import get_spark
@@ -52,16 +38,16 @@ def main():
     import __spark_entry__ as entry
 
     qs = entry.queries()
+    counters = EngineCounters(spark)
     out = {}
     for name in args.queries.split(","):
         recs = []
         for i in range(args.runs):
-            j0, s0 = counts(spark)
+            j0, s0 = counters.settle()
             t0 = time.perf_counter()
             qs[name](spark, args.data_dir).write.mode("overwrite").format("noop").save()
             dt = time.perf_counter() - t0
-            time.sleep(1.0)  # let async UI event bus drain before counting
-            j1, s1 = counts(spark)
+            j1, s1 = counters.settle()
             spark.catalog.clearCache()
             recs.append({"sec": round(dt, 2), "jobs": j1 - j0, "stages": s1 - s0})
             print(f"  {name} run{i}: {dt:.2f}s jobs={j1-j0} stages={s1-s0}",
