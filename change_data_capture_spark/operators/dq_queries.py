@@ -164,7 +164,7 @@ def provenance_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3-sink.json:14, exist for exactly this). Zero extra I/O: the metadata
     struct is constant per split. The oracle replays it with DuckDB's
     ``filename=true``. Per-file row counts + key ranges are also the
-    inputs a compaction planner (maintenance.compact_parquet) works from."""
+    inputs a compaction planner works from."""
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     from change_data_capture_spark.session import ensure_runtime_confs
 

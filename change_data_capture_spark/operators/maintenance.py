@@ -1,9 +1,11 @@
-"""Table-maintenance operators: small-file compaction and data profiling.
+"""Table-maintenance operators: bucketed-table compaction and data profiling.
 
 Both are pipeline chores every 100 TB deployment runs on a schedule:
 streaming sinks accumulate per-micro-batch files until scan planning (file
 listing + footer reads) dominates query time; profiling feeds data-quality
-gates and optimizer-statistics decisions.
+gates and optimizer-statistics decisions. Transaction-log tables compact
+and Z-order through ``sources.txlog.optimize``; this module keeps the
+catalog-bucketed layout, whose shuffle-free joins need its own rewrite.
 """
 
 from __future__ import annotations
@@ -16,8 +18,8 @@ from change_data_capture_spark.sources.tables import load_table
 
 
 def _recover_interrupted_swap(path: str) -> None:
-    """Crash-recovery preamble shared by both compaction entry points: if a
-    prior :func:`_swap_compacted` died between its two renames, the
+    """Crash-recovery preamble of :func:`compact_bucketed`: if a
+    prior compaction died between its swap's two renames, the
     canonical directory is ABSENT and the only complete copies live at
     ``path__compacting`` (the finished rewrite — it is fully written before
     the swap starts) and ``path__old`` (the pre-compaction data). A retry
@@ -40,64 +42,6 @@ def _recover_interrupted_swap(path: str) -> None:
             f"table directory {path!r} is missing and no recovery copy "
             f"exists at {tmp!r} or {old!r}"
         )
-
-
-def _swap_compacted(path: str) -> None:
-    """The crash-safe two-rename swap shared by both compaction paths:
-    the rewrite has landed at ``path__compacting``; rename the old
-    directory aside, the new one into place, then delete the old. The
-    canonical path is absent only between the two renames (two
-    syscalls), and a crash at any step leaves a complete copy
-    recoverable at ``path``, ``path__old``, or ``path__compacting`` —
-    never a half-written table at the canonical path. (On object stores
-    rename is a copy; a lakehouse table format makes this a metadata
-    swap instead.)"""
-    import os
-    import shutil
-
-    tmp, old = f"{path}__compacting", f"{path}__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files; returns the new
-    file count.
-
-    Sizing: estimated from the *input* bytes (sum of file sizes), not row
-    counts — compression ratio carries over between rewrites of the same
-    data. ``sort_within_by`` optionally sorts rows within each output file
-    so min/max row-group stats become selective (poor-man's clustering;
-    Z-order on a lakehouse).
-
-    Safety: the :func:`_swap_compacted` two-rename dance.
-    """
-    import os
-
-    _recover_interrupted_swap(path)
-    df = spark.read.parquet(path)
-    in_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _dirs, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, round(in_bytes / target_file_bytes))
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-
-    out.write.mode("overwrite").parquet(f"{path}__compacting")
-    _swap_compacted(path)
-    return n_files
 
 
 def _profile_col(df: DataFrame, col: str, numeric: bool) -> DataFrame:
@@ -357,11 +301,13 @@ def compact_bucketed(
     embarrassingly parallel per-bucket rewrite with zero network, the
     same property Delta's OPTIMIZE has on a clustered table.
 
-    Safety: same two-rename swap as :func:`compact_parquet` — the
-    compacted files are written under a throwaway table name to a
-    sibling directory, the catalog entry of the REAL table is never
-    dropped, and a crash leaves a complete copy at ``path``,
-    ``path__old``, or ``path__compacting``. A retry after a crash
+    Safety: a two-rename swap — the compacted files are written under a
+    throwaway table name to a sibling directory, the catalog entry of
+    the REAL table is never dropped, the old directory is renamed aside
+    and the new one into place, and a crash leaves a complete copy at
+    ``path``, ``path__old``, or ``path__compacting`` (on object stores
+    rename is a copy; a lakehouse table format makes this a metadata
+    swap instead). A retry after a crash
     restores the canonical directory from the recovery copy FIRST
     (:func:`_recover_interrupted_swap`) — the leftover sweep never runs
     while ``path`` is absent."""
@@ -397,7 +343,7 @@ def compact_bucketed(
 
     tmp_tbl = f"{table}__compacting_{_uuid.uuid4().hex[:8]}"
     tmp, old = f"{path}__compacting", f"{path}__old"
-    # recover BEFORE sweeping: after a crash between _swap_compacted's two
+    # recover BEFORE sweeping: after a crash between the swap's two
     # renames the canonical dir is absent and tmp/old hold the only copies
     _recover_interrupted_swap(path)
     for d in (tmp, old):
@@ -422,73 +368,13 @@ def compact_bucketed(
         # the throwaway name is EXTERNAL (explicit path): dropping it
         # unregisters the catalog entry, the files stay for the swap
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    _swap_compacted(path)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
     spark.catalog.refreshTable(table)
     return sum(
         1
         for _root, _dirs, files in os.walk(path)
         for f in files
         if f.endswith(".parquet")
-    )
-
-
-def zorder_value(cols: list[Column], mins: list[Column], maxs: list[Column],
-                 bits: int = 16) -> Column:
-    """Morton (Z-order) key: each column min-max normalized onto a
-    2^bits grid, then bit-interleaved. Pure JVM bit arithmetic (shifts and
-    ORs inside whole-stage codegen) — no UDF.
-
-    The interleaved key must fit a signed 64-bit long: bits are clamped so
-    ``bits * len(cols) <= 63`` (Java shiftleft wraps its distance mod 64, so
-    overshooting would silently corrupt sort order rather than error)."""
-    bits = min(bits, 63 // len(cols))
-    grid = (1 << bits) - 1
-    normed = [
-        F.when(mx > mn, ((c.cast("double") - mn) / (mx - mn) * grid))
-        .otherwise(F.lit(0.0))
-        .cast("bigint")
-        for c, mn, mx in zip(cols, mins, maxs)
-    ]
-    z = F.lit(0).cast("bigint")
-    n = len(normed)
-    for bit in range(bits):
-        for j, x in enumerate(normed):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(x, bit).bitwiseAND(F.lit(1)), bit * n + j)
-            )
-    return z
-
-
-def cluster_zorder(
-    df: DataFrame, cluster_cols: list[str], out_path: str, num_files: int = 8
-) -> None:
-    """Rewrite a table Z-order-clustered on the given columns.
-
-    Range-partitioning on the Morton key then sorting within partitions
-    gives every output file a narrow min/max envelope on EVERY cluster
-    column — parquet footer stats then let multi-dimensional point/range
-    predicates skip most files, where a single-column sort only helps its
-    leading column. This is the open-format equivalent of OPTIMIZE ZORDER
-    BY; skipping effectiveness is pinned by
-    test_zorder_clusters_file_ranges."""
-    cols = [F.col(c) for c in cluster_cols]
-    stats = df.agg(
-        *[F.min(c).alias(f"mn{i}") for i, c in enumerate(cluster_cols)],
-        *[F.max(c).alias(f"mx{i}") for i, c in enumerate(cluster_cols)],
-    )
-    with_z = df.join(F.broadcast(stats)).withColumn(
-        "_z",
-        zorder_value(
-            cols,
-            [F.col(f"mn{i}") for i in range(len(cols))],
-            [F.col(f"mx{i}") for i in range(len(cols))],
-        ),
-    )
-    (
-        with_z.repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z", *[f"mn{i}" for i in range(len(cols))],
-              *[f"mx{i}" for i in range(len(cols))])
-        .write.mode("overwrite")
-        .parquet(out_path)
     )

@@ -23,7 +23,6 @@ change feed free to compute afterward.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,6 +95,8 @@ SELECT id, name, description, price FROM merge_src
 """
 
 _ZORDER_LO, _ZORDER_HI = 930.0, 960.0
+#: OPTIMIZE target of the z-order gate: about 8 files at sf0.01
+_ZORDER_FILE_BYTES = 2560
 
 _ZORDER_ORACLE = f"""
 WITH {CDC_EVENTS_SQL},
@@ -272,10 +273,10 @@ def txlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("txlog_compaction", oracle=_TIP_STATE_ORACLE)
 def txlog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction (Delta ``OPTIMIZE``) + log checkpoint over the
-    3-version products txlog: bin-pack the tip snapshot's many small
-    files into one commit's worth of right-sized files (a rewrite commit
-    — add compacted, remove fragments, ``expected_version`` guarded like
-    any rewrite), then :func:`txlog.write_checkpoint` so later readers
+    3-version products txlog: :func:`txlog.optimize` bin-packs the tip
+    snapshot's many small files into right-sized files (one rewrite
+    commit — add compacted, remove fragments, ``expected_version``
+    guarded like any rewrite), then :func:`txlog.write_checkpoint` so later readers
     fold from the materialized snapshot instead of replaying the whole
     log. Data is bit-identical before/after BY CONSTRUCTION (compaction
     moves bytes, never rows — the oracle recomputes the same state
@@ -303,21 +304,7 @@ def txlog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove=txlog.snapshot_files(tdir, tip),
         expected_version=tip + 1,
     )
-    tip += 1
-    frag = txlog.snapshot_files(tdir, tip)
-    # bin count from snapshot BYTES (Delta OPTIMIZE's maxFileSize knob) —
-    # and repartition, NOT coalesce: coalesce(1) collapses the whole
-    # upstream snapshot scan into one task (the repo's measured
-    # anti-pattern — see streaming_queries.py's slice writer), while the
-    # shuffle keeps the read wide and funnels only the write into the
-    # right-sized bins. sf0.01's snapshot packs into 1 bin; a 100 TB
-    # partition packs into bytes/128MB bins, each written in parallel.
-    target_bytes = 128 * 1024 * 1024
-    n_bins = max(1, -(-sum(os.path.getsize(f) for f in frag) // target_bytes))
-    compacted = txlog.write_files(
-        txlog.read_version(spark, tdir, tip).repartition(n_bins), tdir
-    )
-    txlog.commit(tdir, add=compacted, remove=frag, expected_version=tip + 1)
+    txlog.optimize(spark, tdir)
     txlog.write_checkpoint(tdir)
     return txlog.read_version(spark, tdir)
 
@@ -427,9 +414,10 @@ def txlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("txlog_zorder_skipping", oracle=_ZORDER_ORACLE)
 def txlog_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering (Delta ``OPTIMIZE ZORDER BY (id, price)``):
-    interleave the bits of both columns' min-max bucket ranks into one
-    Morton key, range-partition the tip state on that key, and commit
-    with per-file stats on BOTH columns. Because the Morton curve keeps
+    :func:`txlog.optimize` rewrites the products table in place,
+    range-partitioned on the Morton key of both columns
+    (:func:`txlog.zorder_value`) into about 8 files at sf0.01, with
+    per-file stats on BOTH columns. Because the Morton curve keeps
     each file a small rectangle in (id, price) space, a range predicate
     on EITHER column prunes files from log metadata — unlike single-key
     clustering, where files are tight on the leading column and span
@@ -441,55 +429,17 @@ def txlog_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: multi-dimensional skipping is how a 100 TB table answers
     range lookups on more than one column without duplicate layouts;
-    the bucket ranks come from one broadcast 1-row min/max join and the
-    interleave is pure codegen bit math, so the clustering write costs
-    one extra range shuffle."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txz_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base)
-    zed = _zorder_key(state, "id", "price").repartitionByRange(
-        8, "__z"
-    ).select(*state.columns)
-    actions = txlog.write_files(zed, tdir, stats_cols=["id", "price"])
-    txlog.commit(tdir, add=actions, expected_version=0)
+    the grid bounds come from one min/max aggregate and the interleave
+    is pure codegen bit math, so the clustering write costs one extra
+    range shuffle."""
+    tdir = build_products_txlog(spark, sf_dir)
+    txlog.optimize(
+        spark, tdir, zorder_by=["id", "price"], target_file_bytes=_ZORDER_FILE_BYTES
+    )
     lo, hi = _ZORDER_LO, _ZORDER_HI
     return txlog.read_version(
         spark, tdir, predicate_range=("price", lo, hi)
     ).where(F.col("price").between(lo, hi))
-
-
-def _zorder_key(df: DataFrame, c1: str, c2: str, bits: int = 8) -> DataFrame:
-    """Append a ``__z`` Morton key: each column min-max-normalized to a
-    ``bits``-bit bucket (one broadcast 1-row min/max join — the only
-    non-local step), buckets bit-interleaved with pure codegen
-    shift/or arithmetic. Constant columns degrade to bucket 0, which is
-    correct (no information to cluster on)."""
-    mm = df.agg(
-        F.min(c1).alias("__mn1"),
-        F.max(c1).alias("__mx1"),
-        F.min(c2).alias("__mn2"),
-        F.max(c2).alias("__mx2"),
-    )
-    j = df.crossJoin(F.broadcast(mm))
-
-    def bucket(c: str, mn: str, mx: str):
-        span = F.col(mx).cast("double") - F.col(mn).cast("double")
-        frac = F.when(
-            span > 0, (F.col(c).cast("double") - F.col(mn).cast("double")) / span
-        ).otherwise(F.lit(0.0))
-        return F.least(
-            F.floor(frac * (1 << bits)).cast("int"), F.lit((1 << bits) - 1)
-        )
-
-    b1, b2 = bucket(c1, "__mn1", "__mx1"), bucket(c2, "__mn2", "__mx2")
-    z = F.lit(0)
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(b1, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(b2, i).bitwiseAND(F.lit(1)), 2 * i)
-        )
-    return j.withColumn("__z", z).drop("__mn1", "__mx1", "__mn2", "__mx2")
 
 
 _METADATA_COUNT_ORACLE = f"""

@@ -62,8 +62,13 @@ log of add/remove file actions, folded into a snapshot):
   trickle deletes O(deleted rows) of sidecar instead of O(touched
   files) of rewrite; every reader applies the vectors with one
   broadcast anti-join at scan time (:func:`_scan_files_with_dvs`), any
-  rewrite (DML, compaction/OPTIMIZE) reconciles them into plain files,
+  rewrite (DML, :func:`optimize`) reconciles them into plain files,
   and :func:`vacuum` reclaims unreferenced sidecars like data files.
+- **OPTIMIZE (compaction and Z-order clustering).** Every streaming
+  trigger commits its own small files. :func:`optimize` rewrites the
+  tip's live files into target-sized files, optionally range-clustered
+  on the :func:`zorder_value` Morton key so stats prune on every
+  clustered column, as ONE rewrite commit that changes no row.
 
 One log walk: :func:`_commits` is the only reader of commit files, and
 :func:`_fold` the only step that applies a commit — its removes, then
@@ -73,7 +78,8 @@ file, as in Delta). Snapshot resolution, :func:`history`,
 the streaming source (``sources.txlog_stream``) all go through the pair.
 A rewrite resolves its snapshot once and hands it to the stats prune
 (:func:`_files_in`), the touched-file probe (:func:`_touched_files`,
-one function for every rewrite) and its scans (:func:`_scan_files`).
+one function for every rewrite) and its scans (:func:`_scan_files`,
+which also plans every :func:`read_version` and :func:`optimize` scan).
 
 Scale: the log is metadata — KB-sized JSON per commit, folded
 driver-side in O(tail since checkpoint), each commit once. The data
@@ -91,7 +97,7 @@ import logging
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType
 
 _LOG_SUBDIR = "_txlog"
@@ -565,38 +571,23 @@ def read_version(
     the rows and a restore across one resurrects them."""
     version = _resolve_travel(table_dir, version, timestamp, "read_version")
     snap = _resolve(table_dir, version)
-    actions, _, meta, v = snap
     files = _files_in(snap, predicate_range)
-    reader = spark.read
-    declared = (meta or {}).get("schema")
-    mapping = _mapping_of(meta)
+    if files:
+        return _scan_files(spark, snap, files)
+    declared = (snap[2] or {}).get("schema")
     if declared is not None:
-        # under column mapping (RENAME/DROP COLUMN without rewrite) the
-        # files carry PHYSICAL names: plan the scan physical, project to
-        # the snapshot's logical names after; unmapped tables keep the
-        # byte-identical pre-mapping plan
-        reader = reader.schema(
-            _physical_ddl(declared, meta) if mapping else declared
-        )
-    if not files:
-        if declared is not None:
-            return spark.createDataFrame([], declared)
-        all_files = _files_in(snap)
-        if all_files:
-            return spark.read.parquet(all_files[0]).limit(0)
-        # zero files AND no declared schema: there is nothing to lift a
-        # schema from — raise the real reason instead of letting the
-        # zero-path reader fail with an unrelated inference error
-        raise ValueError(
-            f"snapshot v{v} of {table_dir} has no data files and no "
-            "declared schema; commit table metadata to make empty "
-            "snapshots readable"
-        )
-    # deletion vectors (merge-on-read): files whose action carries a dv
-    # descriptor drop their deleted rows via one broadcast anti-join at
-    # scan time; dv-less snapshots take the identical pre-DV plan
-    scan = _scan_files_with_dvs(spark, files, _dv_map(actions), reader)
-    return _project_logical(scan, meta) if mapping else scan
+        return spark.createDataFrame([], declared)
+    all_files = _files_in(snap)
+    if all_files:
+        return spark.read.parquet(all_files[0]).limit(0)
+    # zero files AND no declared schema: there is nothing to lift a
+    # schema from — raise the real reason instead of letting the
+    # zero-path reader fail with an unrelated inference error
+    raise ValueError(
+        f"snapshot v{snap[3]} of {table_dir} has no data files and no "
+        "declared schema; commit table metadata to make empty "
+        "snapshots readable"
+    )
 
 
 def _local_path(p: str) -> str:
@@ -1393,6 +1384,110 @@ def update_where(
         operation="UPDATE",
     )
     return version, touched
+
+
+def zorder_value(
+    cols: list[Column], mins: list[Column], maxs: list[Column], bits: int = 16
+) -> Column:
+    """Morton (Z-order) key: each column min-max normalized onto a
+    2^bits grid, then bit-interleaved. Pure JVM bit arithmetic (shifts and
+    ORs inside whole-stage codegen) — no UDF.
+
+    The interleaved key must fit a signed 64-bit long: bits are clamped so
+    ``bits * len(cols) <= 63`` (Java shiftleft wraps its distance mod 64, so
+    overshooting would silently corrupt sort order rather than error)."""
+    from pyspark.sql import functions as F
+
+    bits = min(bits, 63 // len(cols))
+    grid = (1 << bits) - 1
+    normed = [
+        F.when(mx > mn, ((c.cast("double") - mn) / (mx - mn) * grid))
+        .otherwise(F.lit(0.0))
+        .cast("bigint")
+        for c, mn, mx in zip(cols, mins, maxs)
+    ]
+    z = F.lit(0).cast("bigint")
+    n = len(normed)
+    for bit in range(bits):
+        for j, x in enumerate(normed):
+            z = z.bitwiseOR(
+                F.shiftleft(F.shiftright(x, bit).bitwiseAND(F.lit(1)), bit * n + j)
+            )
+    return z
+
+
+def optimize(
+    spark: SparkSession,
+    table_dir: str,
+    zorder_by: list[str] | None = None,
+    target_file_bytes: int = 128 * 1024 * 1024,
+) -> int:
+    """Delta ``OPTIMIZE [ZORDER BY (cols)]``: rewrite the tip's live files
+    into ``max(1, ceil(live bytes / target_file_bytes))`` files as ONE
+    rewrite commit (add the new files, remove every live file,
+    ``expected_version`` guarded, ``operation="OPTIMIZE"``). Returns the
+    committed version; an empty snapshot commits nothing and returns the
+    tip.
+
+    The rows come from one DV-aware :func:`_scan_files` scan, so deletion
+    vectors are reconciled into plain files (no new action carries a
+    ``dv``). Without ``zorder_by`` the rows are bin-packed with a
+    ``repartition``; with it they are range-partitioned and sorted on the
+    :func:`zorder_value` Morton key of those (logical) columns, so every
+    file is a small box in their space and a range predicate on ANY of
+    them prunes files. The new files carry stats on the columns the live
+    actions already had plus ``zorder_by``, under physical names for a
+    column-mapped table. OPTIMIZE moves rows, never changes them: reads
+    of the tip, time travel to earlier versions and :func:`table_changes`
+    over the OPTIMIZE version (empty) all see that.
+
+    Scale: one scan and one shuffle of the table's live bytes (plus one
+    min/max aggregate and the range sampling with ``zorder_by``);
+    pre-OPTIMIZE files stay on disk for time travel until
+    :func:`vacuum`."""
+    from pyspark.sql import functions as F
+
+    tip = latest_version(table_dir)
+    snap = _resolve(table_dir, tip)
+    actions, _, meta, _ = snap
+    files = _files_in(snap)
+    if not files:
+        return tip
+    live_bytes = sum(os.path.getsize(p) for p in files)
+    n_files = max(1, -(-live_bytes // target_file_bytes))
+    rows = _scan_files(spark, snap, files)
+    if zorder_by:
+        k = len(zorder_by)
+        bounds = rows.agg(
+            *[F.min(c) for c in zorder_by], *[F.max(c) for c in zorder_by]
+        ).first()
+        z = zorder_value(
+            [F.col(c) for c in zorder_by],
+            [F.lit(b) for b in bounds[:k]],
+            [F.lit(b) for b in bounds[k:]],
+        )
+        rows = (
+            rows.withColumn("__z", z)
+            .repartitionByRange(n_files, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__z")
+        )
+    else:
+        rows = rows.repartition(n_files)
+    out = _to_physical(rows, meta)
+    had = [c for a in actions if isinstance(a, dict) for c in a.get("stats", {})]
+    stats_cols = [
+        c
+        for c in dict.fromkeys(had + (_physical_stats_cols(zorder_by, meta) or []))
+        if c in out.columns
+    ]
+    return commit(
+        table_dir,
+        add=write_files(out, table_dir, stats_cols=stats_cols),
+        remove=files,
+        expected_version=tip + 1,
+        operation="OPTIMIZE",
+    )
 
 
 def rewrite_with_retry(

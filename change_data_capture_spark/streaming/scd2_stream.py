@@ -11,11 +11,12 @@ shape over add/remove actions):
   (2) probe: one broadcast semi join finds the files that really hold a
   batch key (``txlog._touched_files``, the probe every txlog rewrite
   shares); (3) rewrite: their batch-key rows become pseudo-events, and
-  ONE shuffle on ``id`` serves both the (id, lsn) dedup and the LSN
-  re-chain; their other rows pass through outside it. One atomic version
-  adds the result and removes only the touched files: O(touched files +
-  batch), never O(table). The batch is not persisted, as re-scanning a
-  small segment costs less than the jobs a cache adds.
+  the batch ``operators.scd2.scd2`` chain re-chains them with the batch,
+  its ONE window exchange on ``id`` serving both the (id, lsn) dedup and
+  the LSN re-chain; their other rows pass through outside it. One atomic
+  version adds the result and removes only the touched files:
+  O(touched files + batch), never O(table). The batch is not persisted,
+  as re-scanning a small segment costs less than the jobs a cache adds.
 - state reads: the merge reads state only through txlog's DV-aware,
   log-schema scan (``txlog._scan_files``), like every other txlog reader,
   so rows a deletion-vector DELETE removed stay removed. The state's
@@ -32,24 +33,25 @@ shape over add/remove actions):
 - idempotent under batch replay, at two levels: a foreachBatch caller
   passes its ``batch_id`` and the commit carries a txn marker for it in
   the SAME commit as the data, so a re-delivered batch (checkpoint
-  recovery) at or below the table's ``last_txn`` is a no-op; below the
-  batch level, an event already in state dedups against its pseudo-event,
-  so even a replay without a marker re-chains to the identical result.
+  recovery) at or below the marker of the snapshot the merge resolves
+  anyway is a no-op; below the batch level, an event already in state
+  dedups against its pseudo-event, so even a replay without a marker
+  re-chains to the identical result.
 - a batch with no non-null ``lsn`` (e.g. a segment of malformed lines that
   PERMISSIVE decoding turned into null rows) commits nothing — the
   ``merge_into`` empty-source rule.
 
 Correctness contract (tested + oracle-checked): after any partition of the
 event log into micro-batches, final state equals the batch
-``operators.scd2.scd2`` output on the full log.
+``operators.scd2.scd2`` output on the full log — the same chain code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from change_data_capture_spark.operators.scd2 import SENTINEL_TS
+from change_data_capture_spark.operators.scd2 import scd2
 from change_data_capture_spark.sources import txlog
 
 _PAYLOAD = ("name", "description", "price")
@@ -71,22 +73,6 @@ class Scd2State:
         return txlog.read_version(self.spark, self.table_dir)
 
 
-def _intervals(decoded: DataFrame) -> DataFrame:
-    """Chain an event set into validity intervals by LSN; the caller
-    dedups on (id, lsn) in the same shuffle on ``id``."""
-    w = Window.partitionBy("id").orderBy("lsn")
-    return decoded.select(
-        "id",
-        *_PAYLOAD,
-        "lsn",
-        F.timestamp_millis(F.col("ts_ms")).alias("row_valid_start_timestamp"),
-        F.coalesce(
-            F.lead(F.timestamp_millis(F.col("ts_ms")), 1).over(w),
-            F.lit(SENTINEL_TS).cast("timestamp"),
-        ).alias("row_valid_expiration_timestamp"),
-    )
-
-
 def apply_batch(
     state: Scd2State, batch: DataFrame, batch_id: int | None = None
 ) -> None:
@@ -95,9 +81,13 @@ def apply_batch(
     batch's keys. ``batch_id`` (the foreachBatch id) makes a replayed
     batch a no-op."""
     spark, tdir = state.spark, state.table_dir
-    if batch_id is not None:
-        last = txlog.last_txn(tdir, APP_ID)
-        if last is not None and batch_id <= last:
+    tip = txlog.latest_version(tdir)
+    # one log walk per merge: the replay check, the prune, the probe and
+    # the rewrite read the same resolved snapshot
+    snap = txlog._resolve(tdir, tip) if tip >= 0 else None
+    if batch_id is not None and snap is not None:
+        last = snap[1].get(APP_ID)
+        if last is not None and batch_id <= int(last):
             return  # replayed batch: its txn marker is already committed
     events = batch.where(F.col("lsn").isNotNull()).select(
         "id", *_PAYLOAD, "lsn", "ts_ms"
@@ -105,10 +95,6 @@ def apply_batch(
     n, lo, hi = events.agg(F.count(F.lit(1)), F.min("id"), F.max("id")).first()
     if n == 0:
         return  # nothing to merge: no empty commit
-    tip = txlog.latest_version(tdir)
-    # one log walk per merge: the prune, the probe and the rewrite read
-    # the same resolved snapshot
-    snap = txlog._resolve(tdir, tip) if tip >= 0 else None
     # stats prune on the batch's id range (metadata only; a null-id batch
     # can match no state row, and an empty table has no files)
     cand = (
@@ -133,9 +119,10 @@ def apply_batch(
             "lsn",
             F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
         ).unionByName(events)
-    # one shuffle on id serves both the (id, lsn) dedup and the window;
-    # an equal (id, lsn) is the same source event, in state or in batch
-    out = _intervals(events.repartition("id").dropDuplicates(["id", "lsn"]))
+    # the batch SCD2 chain: its one window exchange on id serves both the
+    # (id, lsn) dedup and the re-chain; an equal (id, lsn) is the same
+    # source event, in state or in batch
+    out = scd2(events, payload=(*_PAYLOAD, "lsn"), min_events=1)
     if touched:
         out = passthrough.unionByName(out)
     txlog.commit(

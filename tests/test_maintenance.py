@@ -34,27 +34,27 @@ def test_dq_audit_catches_injected_violations(spark, sf_dir):
 
 
 def test_compaction_preserves_rows_and_reduces_files(spark, sf_dir):
-    from change_data_capture_spark.operators.maintenance import compact_parquet
+    from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.tables import load_table
 
-    ws = tempfile.mkdtemp(prefix="cdc_compact_")
+    t = tempfile.mkdtemp(prefix="cdc_compact_")
     li = load_table(spark, sf_dir, "lineitem")
     # simulate a streaming sink's debris: many tiny files
-    li.repartition(40).write.mode("overwrite").parquet(f"{ws}/t")
-    before_files = len(glob.glob(f"{ws}/t/*.parquet"))
+    txlog.commit(t, add=txlog.write_files(li.repartition(40), t), expected_version=0)
+    before_files = len(txlog.snapshot_files(t))
     before = li.count()
 
-    compact_parquet(spark, f"{ws}/t", target_file_bytes=64 * 1024 * 1024,
-                    sort_within_by=["l_orderkey"])
+    txlog.optimize(spark, t, zorder_by=["l_orderkey"],
+                   target_file_bytes=64 * 1024 * 1024)
 
-    after_files = len(glob.glob(f"{ws}/t/*.parquet"))
-    after = spark.read.parquet(f"{ws}/t").count()
+    after_files = txlog.snapshot_files(t)
+    after = txlog.read_version(spark, t).count()
     assert after == before
-    assert after_files < before_files
+    assert len(after_files) < before_files
     # clustering: rows within each file are sorted by the cluster key
     import pyarrow.parquet as pq
 
-    for f in glob.glob(f"{ws}/t/*.parquet"):
+    for f in after_files:
         keys = pq.read_table(f, columns=["l_orderkey"])["l_orderkey"].to_pylist()
         assert keys == sorted(keys)
 
@@ -67,32 +67,39 @@ def test_compaction_retry_recovers_interrupted_swap(spark, tmp_path):
     (no recovery copy either) raises instead of proceeding."""
     import os
     import shutil
+    import uuid
 
     from change_data_capture_spark.operators.maintenance import (
         _recover_interrupted_swap,
-        compact_parquet,
+        compact_bucketed,
+        write_bucketed,
     )
 
+    tbl = f"swap_retry_{uuid.uuid4().hex[:8]}"
     p = str(tmp_path / "t")
-    spark.range(100).repartition(4).write.parquet(p)
-    # simulate the crash point: rewrite finished at __compacting, old data
-    # renamed aside, canonical path absent
-    spark.read.parquet(p).repartition(1).write.parquet(p + "__compacting")
-    os.rename(p, p + "__old")
-    compact_parquet(spark, p, target_file_bytes=64 * 1024 * 1024)
-    assert spark.read.parquet(p).count() == 100
-    assert not os.path.exists(p + "__old")
-    assert not os.path.exists(p + "__compacting")
+    write_bucketed(spark.range(100).selectExpr("id AS k"), tbl, ["k"], 4, p)
+    try:
+        # simulate the crash point: rewrite finished at __compacting, old
+        # data renamed aside, canonical path absent
+        shutil.copytree(p, p + "__compacting")
+        os.rename(p, p + "__old")
+        compact_bucketed(spark, tbl)
+        assert spark.table(tbl).count() == 100
+        assert not os.path.exists(p + "__old")
+        assert not os.path.exists(p + "__compacting")
 
-    # crash BEFORE the rewrite landed: only __old holds data → recover it
-    os.rename(p, p + "__old")
-    _recover_interrupted_swap(p)
-    assert spark.read.parquet(p).count() == 100
+        # crash BEFORE the rewrite landed: only __old holds data → recover it
+        os.rename(p, p + "__old")
+        _recover_interrupted_swap(p)
+        spark.catalog.refreshTable(tbl)
+        assert spark.table(tbl).count() == 100
 
-    # no canonical dir and no recovery copy: raise, never sweep-and-scan
-    shutil.rmtree(p)
-    with pytest.raises(RuntimeError, match="no recovery copy"):
-        compact_parquet(spark, p)
+        # no canonical dir and no recovery copy: raise, never sweep-and-scan
+        shutil.rmtree(p)
+        with pytest.raises(RuntimeError, match="no recovery copy"):
+            compact_bucketed(spark, tbl)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def test_base64_decimal_wart_yields_null_price(spark):
@@ -218,14 +225,20 @@ def test_zorder_clusters_file_ranges(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from change_data_capture_spark.operators.maintenance import cluster_zorder
+    import os
+
+    from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     out = str(tmp_path / "zordered")
-    cluster_zorder(li, ["l_partkey", "l_suppkey"], out, num_files=8)
+    txlog.commit(out, add=txlog.write_files(li, out), expected_version=0)
+    live = sum(os.path.getsize(p) for p in txlog.snapshot_files(out))
+    # a target of an eighth of the table: 8 clustered files
+    txlog.optimize(spark, out, zorder_by=["l_partkey", "l_suppkey"],
+                   target_file_bytes=-(-live // 8))
 
     # full-table extents
     row = li.agg(
@@ -248,7 +261,7 @@ def test_zorder_clusters_file_ranges(spark, sf_dir, tmp_path):
             areas.append(((r[1] - r[0]) / pk_range) * ((r[3] - r[2]) / sk_range))
         return sum(areas) / len(areas)
 
-    clustered = mean_area(glob.glob(f"{out}/part-*.parquet"))
+    clustered = mean_area(txlog.snapshot_files(out))
     # unclustered control: hash-partitioned write of the same relation
     ctrl = str(tmp_path / "control")
     li.repartition(8).write.mode("overwrite").parquet(ctrl)
@@ -256,7 +269,7 @@ def test_zorder_clusters_file_ranges(spark, sf_dir, tmp_path):
 
     assert clustered < control * 0.5, (clustered, control)
     # row fidelity: clustering is a rewrite, not a transform
-    assert spark.read.parquet(out).count() == li.count()
+    assert txlog.read_version(spark, out).count() == li.count()
 
 
 def test_zorder_bits_clamped_to_long_range(spark):
@@ -265,7 +278,7 @@ def test_zorder_bits_clamped_to_long_range(spark):
     strictly monotone in each column at the clamped resolution."""
     from pyspark.sql import functions as F
 
-    from change_data_capture_spark.operators.maintenance import zorder_value
+    from change_data_capture_spark.sources.txlog import zorder_value
 
     df = spark.range(1).select(
         *[F.lit(float(v)).alias(c) for c, v in

@@ -135,7 +135,7 @@ def test_merge_keeps_deletion_vector_deletes(spark):
 def test_touching_merge_resolves_the_log_once(spark, monkeypatch):
     """A touching merge folds the log once: the stats prune, the
     touched-file probe and the rewrite's scan share one resolved
-    snapshot (a ``batch_id`` adds the ``last_txn`` replay check). Its
+    snapshot, and so does the ``batch_id`` replay check. Its
     first commit declared the state's schema, which those scans are
     planned with."""
     ws = tempfile.mkdtemp(prefix="scd2_state_")
@@ -156,7 +156,7 @@ def test_touching_merge_resolves_the_log_once(spark, monkeypatch):
     batch = _events(spark, [6]).withColumn("lsn", F.col("lsn") + 1)
     apply_batch(state, batch, batch_id=0)
     assert txlog.latest_version(ws) == 2
-    assert len(calls) == 2
+    assert len(calls) == 1
 
 
 def test_batch_without_lsn_commits_nothing(spark):

@@ -140,10 +140,7 @@ def test_compaction_preserves_data_and_history(spark, sf_dir):
     frag = txlog.snapshot_files(t, tip)
     assert len(frag) > 1
     rows_before = txlog.read_version(spark, t, tip).count()
-    compacted = txlog.write_files(
-        txlog.read_version(spark, t, tip).coalesce(1), t
-    )
-    txlog.commit(t, add=compacted, remove=frag, expected_version=tip + 1)
+    assert txlog.optimize(spark, t) == tip + 1
     assert len(txlog.snapshot_files(t)) < len(frag)
     after = txlog.read_version(spark, t)
     assert after.count() == rows_before
@@ -151,6 +148,62 @@ def test_compaction_preserves_data_and_history(spark, sf_dir):
     assert txlog.read_version(spark, t, 1).count() > 0
     old = txlog.read_version(spark, t, tip)
     assert old.exceptAll(after).count() == 0 and after.exceptAll(old).count() == 0
+
+
+def test_optimize_reconciles_dvs_under_column_mapping(spark, tmp_path):
+    """OPTIMIZE on a table with a deletion-vector DELETE and a renamed
+    column: one commit rewrites every live file into the computed bin
+    count, changes no row (tip, time travel and the change feed agree),
+    drops the DV-deleted row for good and keeps stats pruning on the
+    logical name."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "t")
+    df = spark.range(0, 400).select(
+        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("v")
+    )
+    txlog.commit(
+        t,
+        add=txlog.write_files(df.repartition(6), t, stats_cols=["id"]),
+        expected_version=0,
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    txlog.delete_where(spark, t, "id = 7", dv_fraction_threshold=0.5)
+    txlog.rename_column(t, "id", "k")
+    pre = txlog.latest_version(t)
+    before = txlog.read_version(spark, t)
+    assert txlog._dv_map(txlog._resolve(t, pre)[0]), "DELETE took the DV path"
+    live = sum(os.path.getsize(p) for p in txlog.snapshot_files(t))
+    target = -(-live // 3)
+    n_bins = max(1, -(-live // target))
+
+    assert txlog.optimize(spark, t, zorder_by=["k"], target_file_bytes=target) == pre + 1
+
+    after = txlog.read_version(spark, t)
+    assert after.columns == ["k", "v"]
+    assert before.exceptAll(after).count() == 0
+    assert after.exceptAll(before).count() == 0
+    acts = txlog._resolve(t, None)[0]
+    assert len(acts) == n_bins == 3
+    assert not any(a.get("dv") for a in acts)
+    assert after.where("k = 7").count() == 0
+    # the pre-OPTIMIZE version reads the same rows, under its own DVs
+    old = txlog.read_version(spark, t, pre)
+    assert old.exceptAll(after).count() == 0 and after.exceptAll(old).count() == 0
+    assert txlog.table_changes(spark, t, pre + 1, key="k").count() == 0
+    assert txlog.history(t)[-1]["operation"] == "OPTIMIZE"
+    # stats sit under the physical name and prune on the logical one
+    assert all("id" in a["stats"] for a in acts)
+    kept = txlog.snapshot_files(t, predicate_range=("k", 0, 10))
+    assert 0 < len(kept) < n_bins
+    got = txlog.read_version(spark, t, predicate_range=("k", 0, 10)).where(
+        "k BETWEEN 0 AND 10"
+    )
+    assert sorted(r.k for r in got.collect()) == [i for i in range(11) if i != 7]
+    # an empty snapshot commits nothing
+    e = str(tmp_path / "e")
+    txlog.commit(e, add=[], expected_version=0, metadata={"schema": "id BIGINT"})
+    assert txlog.optimize(spark, e) == 0 and txlog.latest_version(e) == 0
 
 
 def test_data_skipping_prunes_files_conservatively(spark, tmp_path):
@@ -280,20 +333,15 @@ def test_zorder_prunes_both_axes_single_key_does_not(spark, tmp_path):
     """The contrast that justifies ZORDER: on a z-ordered table a range
     predicate on EITHER column prunes files; on a single-key-clustered
     table only the leading column prunes."""
-    from change_data_capture_spark.operators.txlog_queries import _zorder_key
-
     df = spark.range(0, 4096).selectExpr(
         "id AS x", "(id * 2654435761) % 4096 AS y"
     )
-    # z-ordered layout
+    # z-ordered layout: OPTIMIZE ZORDER BY (x, y) into 16 files
     tz = str(tmp_path / "tz")
-    zed = _zorder_key(df, "x", "y").repartitionByRange(16, "__z").select(
-        "x", "y"
-    )
-    txlog.commit(
-        tz,
-        add=txlog.write_files(zed, tz, stats_cols=["x", "y"]),
-        expected_version=0,
+    txlog.commit(tz, add=txlog.write_files(df, tz), expected_version=0)
+    live = sum(os.path.getsize(p) for p in txlog.snapshot_files(tz))
+    txlog.optimize(
+        spark, tz, zorder_by=["x", "y"], target_file_bytes=-(-live // 16)
     )
     # single-key layout (clustered on x only)
     tx = str(tmp_path / "tx")
@@ -306,6 +354,7 @@ def test_zorder_prunes_both_axes_single_key_does_not(spark, tmp_path):
     )
     nz = len(txlog.snapshot_files(tz))
     nx = len(txlog.snapshot_files(tx))
+    assert nz == 16
     # leading axis: both layouts prune
     assert len(txlog.snapshot_files(tz, predicate_range=("x", 0, 255))) < nz
     assert len(txlog.snapshot_files(tx, predicate_range=("x", 0, 255))) < nx
