@@ -935,14 +935,15 @@ def txlog_cdf_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata carries enough structure to rebuild the images after the
     fact, because every rewrite is file-bounded.
 
-    Scale: O(churned files) per version — the v1 diff scans only the
-    files the UPDATE rewrote, v2 only the DELETE's; at 100 TB a day of
-    feed reads the day's rewritten files, never the table. Unchanged
-    copies carried along in rewritten files (both DMLs rewrite whole
-    touched files) are dropped by image equality inside the per-version
-    join; the no-op-SET edge (new image == old image emits nothing) and
-    the insert branch (an append commit feeds pure inserts) are pinned
-    in ``tests/test_txlog.py``."""
+    Scale: O(churned files) per version — the v1 diff reads only the
+    files the UPDATE rewrote, v2 only the DELETE's, one task per
+    version; at 100 TB a day of feed reads the day's rewritten files,
+    never the table. Unchanged copies carried along in rewritten files
+    (both DMLs rewrite whole touched files) are dropped by image
+    equality inside the per-version arrow diff (the streaming source's,
+    ``sources.txlog_stream``); the no-op-SET edge (new image == old
+    image emits nothing) and the insert branch (an append commit feeds
+    pure inserts) are pinned in ``tests/test_txlog.py``."""
     tdir = tempfile.mkdtemp(prefix="cdc_txcdf_")
     base = build_products_txlog(spark, sf_dir)
     state = txlog.read_version(spark, base).repartitionByRange(8, "id")
@@ -1082,7 +1083,7 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     read nets both transports through the same scan: files with vectors
     drop their dead rows via one broadcast anti-join on
     ``(_metadata.file_path, _metadata.row_index)``
-    (:func:`txlog._scan_files_with_dvs`); rewritten and untouched files
+    (:func:`txlog._scan_files`); rewritten and untouched files
     scan plain. The gate verifies a vector actually landed (RuntimeError
     otherwise) and returns the tip state; the oracle recomputes it
     relationally from the raw change events.

@@ -60,10 +60,12 @@ log of add/remove file actions, folded into a snapshot):
   :func:`delete_where` writes one instead of rewriting when a touched
   file's deleted fraction is small (``dv_fraction_threshold``), making
   trickle deletes O(deleted rows) of sidecar instead of O(touched
-  files) of rewrite; every reader applies the vectors with one
-  broadcast anti-join at scan time (:func:`_scan_files_with_dvs`), any
-  rewrite (DML, :func:`optimize`) reconciles them into plain files,
-  and :func:`vacuum` reclaims unreferenced sidecars like data files.
+  files) of rewrite; every snapshot and DML scan applies the vectors
+  with one broadcast anti-join (:func:`_scan_files`), the change feed
+  drops their positions from each arrow file read
+  (``txlog_stream._apply_dv``), any rewrite (DML, :func:`optimize`)
+  reconciles them into plain files, and :func:`vacuum` reclaims
+  unreferenced sidecars like data files.
 - **OPTIMIZE (compaction and Z-order clustering).** Every streaming
   trigger commits its own small files. :func:`optimize` rewrites the
   tip's live files into target-sized files, optionally range-clustered
@@ -91,10 +93,10 @@ skip.
 from __future__ import annotations
 
 import contextlib
-import functools
 import json
 import logging
 import os
+import urllib.parse
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -570,7 +572,16 @@ def read_version(
     DV state, so time travel before a merge-on-read DELETE still sees
     the rows and a restore across one resurrects them."""
     version = _resolve_travel(table_dir, version, timestamp, "read_version")
-    snap = _resolve(table_dir, version)
+    return _read_snapshot(
+        spark, table_dir, _resolve(table_dir, version), predicate_range
+    )
+
+
+def _read_snapshot(
+    spark: SparkSession, table_dir: str, snap, predicate_range=None
+) -> DataFrame:
+    """:func:`read_version` of an already resolved snapshot (a
+    :func:`_resolve` tuple), so a DML that holds one walks the log once."""
     files = _files_in(snap, predicate_range)
     if files:
         return _scan_files(spark, snap, files)
@@ -592,11 +603,13 @@ def read_version(
 
 def _local_path(p: str) -> str:
     """Normalize a scanned file URI to a comparable local path (strip
-    the ``file:`` scheme, absolutize) — the ONE place this logic lives;
-    touched-file discovery (:func:`_touched_files`) and the stats keying
-    in :func:`write_files` must agree on it exactly."""
+    the ``file:`` scheme, undo the URL encoding Spark applies to
+    ``_metadata.file_path`` — a space is recorded as ``%20`` — and
+    absolutize) — the ONE place this logic lives; touched-file discovery
+    (:func:`_touched_files`), the stats keying in :func:`write_files` and
+    the change feed's deletion-vector match must agree on it exactly."""
     if p.startswith("file:"):
-        p = p[len("file:"):]
+        p = urllib.parse.unquote(p[len("file:"):])
     return os.path.abspath(p)
 
 
@@ -819,81 +832,70 @@ def _dv_map(actions) -> dict[str, dict]:
     }
 
 
-def _scan_files_with_dvs(
-    spark: SparkSession,
-    files: list[str],
-    dv_by_path: dict[str, dict],
-    reader,
-    with_meta: bool = False,
-):
-    """DV-aware distributed scan of specific data files: rows listed in
-    a file's deletion vector are removed by ONE broadcast anti-join on
-    ``(_metadata.file_path, _metadata.row_index)`` against the union of
-    the referenced sidecars — merge-on-read, no data file rewritten.
-    Files without a DV and ``with_meta=False`` take the exact pre-DV
-    fast path (one plain parquet scan, plan unchanged). ``with_meta``
-    keeps ``__txlog_file``/``__txlog_pos`` provenance columns (reserved
-    scratch names — a table using them fails analysis loudly).
-
-    Scale: the DV relation is bounded by the deleted-row count of the
-    files being read — trickle-delete-sized by construction
-    (:func:`delete_where` only routes small per-file fractions to a DV;
-    OPTIMIZE/compaction reconciles accumulated DVs into rewrites, the
-    same escape Delta documents when DVs grow)."""
-    from pyspark.sql import functions as F
-
-    dv_files = [p for p in files if os.path.abspath(p) in dv_by_path]
-    if not dv_files and not with_meta:
-        return reader.parquet(*files)
-    base = reader.parquet(*files).select(
-        "*",
-        F.col("_metadata.file_path").alias("__txlog_file"),
-        F.col("_metadata.row_index").alias("__txlog_pos"),
-    )
-    if dv_files:
-        dirs = sorted(
-            {dv_by_path[os.path.abspath(p)]["path"] for p in dv_files}
-        )
-        dv_rel = spark.read.parquet(*dirs).select(
-            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-        )
-        base = base.join(
-            F.broadcast(dv_rel),
-            (F.col("__txlog_file") == F.col("__dv_file"))
-            & (F.col("__txlog_pos") == F.col("__dv_pos")),
-            "left_anti",
-        )
-    return base if with_meta else base.drop("__txlog_file", "__txlog_pos")
-
-
 def _scan_files(
     spark: SparkSession, snap, files: list[str], with_meta: bool = False
 ):
     """Scan specific data files of a resolved snapshot (a :func:`_resolve`
     tuple) under its log-governed schema with its deletion vectors
-    applied — the read primitive
-    every DML path (touched-file discovery, rewrite reads) shares with
-    :func:`read_version`, so no path can resurrect merge-on-read-deleted
-    rows by reading a data file raw. Under column mapping the scan is
-    planned physical and projected to logical names (scan-meta scratch
-    columns pass through), so DML predicates — written over logical
-    names — resolve against any file vintage."""
+    applied — the read primitive every DML path (touched-file discovery,
+    rewrite reads) shares with :func:`read_version` and
+    :func:`optimize`, so no path can resurrect merge-on-read-deleted rows
+    by reading a data file raw. Rows listed in a file's deletion vector
+    are removed by ONE broadcast anti-join on ``(_metadata.file_path,
+    _metadata.row_index)`` against the union of the referenced sidecars;
+    files without a DV and ``with_meta=False`` keep the plain parquet
+    scan. ``with_meta`` keeps ``__txlog_file``/``__txlog_pos`` provenance
+    columns (reserved scratch names — a table using them fails analysis
+    loudly). Under column mapping the scan is planned physical and
+    projected to logical names (scan-meta scratch columns pass through),
+    so DML predicates — written over logical names — resolve against any
+    file vintage.
+
+    Scale: the DV relation is bounded by the deleted-row count of the
+    files being read — trickle-delete-sized by construction
+    (:func:`delete_where` only routes small per-file fractions to a DV;
+    :func:`optimize` reconciles accumulated DVs into rewrites, the same
+    escape Delta documents when DVs grow)."""
+    from pyspark.sql import functions as F
+
     actions, _, meta, _ = snap
     declared = (meta or {}).get("schema")
     mapping = _mapping_of(meta)
+    reader = spark.read
     if declared is not None:
-        reader = spark.read.schema(
+        reader = reader.schema(
             _physical_ddl(declared, meta) if mapping else declared
         )
-    else:
-        reader = spark.read
-    scan = _scan_files_with_dvs(
-        spark, files, _dv_map(actions), reader, with_meta=with_meta
+    dv_by_path = _dv_map(actions)
+    dv_dirs = sorted(
+        {
+            dv_by_path[p]["path"]
+            for p in map(os.path.abspath, files)
+            if p in dv_by_path
+        }
     )
-    if mapping:
-        scan = _project_logical(
-            scan, meta, keep=("__txlog_file", "__txlog_pos") if with_meta else ()
+    scan = reader.parquet(*files)
+    prov = ("__txlog_file", "__txlog_pos")
+    if dv_dirs or with_meta:
+        scan = scan.select(
+            "*",
+            F.col("_metadata.file_path").alias(prov[0]),
+            F.col("_metadata.row_index").alias(prov[1]),
         )
+    if dv_dirs:
+        dv_rel = spark.read.parquet(*dv_dirs).select(
+            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
+        )
+        scan = scan.join(
+            F.broadcast(dv_rel),
+            (F.col(prov[0]) == F.col("__dv_file"))
+            & (F.col(prov[1]) == F.col("__dv_pos")),
+            "left_anti",
+        )
+        if not with_meta:
+            scan = scan.drop(*prov)
+    if mapping:
+        scan = _project_logical(scan, meta, keep=prov if with_meta else ())
     return scan
 
 
@@ -963,9 +965,9 @@ def merge_into(
     from pyspark.sql import functions as F
 
     tip = latest_version(table_dir)
-    cols = read_version(spark, table_dir, tip).columns
-    src = source.select(*cols)
     snap = _resolve(table_dir, tip)
+    cols = _read_snapshot(spark, table_dir, snap).columns
+    src = source.select(*cols)
 
     # pass 1: prune by the source's key envelope, then find touched files
     # (row count, duplicate-key detection and the envelope share ONE
@@ -1101,7 +1103,7 @@ def delete_where(
        rows, merged with the file's existing DV and attached to its
        re-committed add action as ``{"dv": {"path", "cardinality"}}``;
        the data file is NOT rewritten, and every reader anti-joins the
-       DV at scan time (:func:`_scan_files_with_dvs`). Files above the
+       DV at scan time (:func:`_scan_files`). Files above the
        threshold (or without a recorded ``num_rows`` to judge by, or
        with ``f=0.0`` — the default, pure copy-on-write) are rewritten
        WITHOUT the matching rows (SQL DELETE semantics: a row is
@@ -1345,7 +1347,7 @@ def update_where(
     tip = latest_version(table_dir)
     snap = _resolve(table_dir, tip)
     cand = _files_in(snap, predicate_range=prune_range)
-    cur = read_version(spark, table_dir, tip)
+    cur = _read_snapshot(spark, table_dir, snap)
     cols = cur.columns
     unknown = set(set_exprs) - set(cols)
     if unknown:
@@ -1892,14 +1894,13 @@ def validated_write(
     caller still commits them (validation is write-side, atomicity is
     the commit's).
 
-    With declared constraints the frame is PERSISTED across the check
-    and the write (the same fusion as the DML path's
-    :func:`_write_files_checked`), so a constrained append evaluates its
-    source plan once and the rows checked are the rows written — a
-    non-deterministic or expensive source is not computed twice. Same
-    caveat as the DML fusion: ``persist`` is a cache, not a barrier (see
-    :func:`_write_files_checked`). Without constraints the write is
-    exactly :func:`write_files` — no persist, no extra job."""
+    The write is the DML path's :func:`_write_files_checked` with every
+    row flagged modified: with declared constraints the frame is
+    PERSISTED across the check and the write, so a constrained append
+    evaluates its source plan once and the rows checked are the rows
+    written (``persist`` is a cache, not a barrier — see there). Without
+    constraints the write is exactly :func:`write_files` — no persist,
+    no extra job."""
     meta = table_metadata(table_dir) or {}
     declared = meta.get("schema")
     if declared is not None and not evolve:
@@ -1911,24 +1912,12 @@ def validated_write(
                 f"schema {want}; pass evolve=True (and commit new "
                 "metadata) to change the table's schema deliberately"
             )
-    if not (meta.get("constraints") or {}):
-        return write_files(
-            _to_physical(df, meta),
-            table_dir,
-            stats_cols=_physical_stats_cols(stats_cols, meta),
-        )
-    df = df.persist()
-    try:
-        _enforce_constraints(df, meta)
-        # under column mapping the write renames logical→physical ON TOP
-        # of the cache — the written plan still reads the persisted frame
-        return write_files(
-            _to_physical(df, meta),
-            table_dir,
-            stats_cols=_physical_stats_cols(stats_cols, meta),
-        )
-    finally:
-        df.unpersist()
+    from pyspark.sql import functions as F
+
+    return _write_files_checked(
+        df.withColumn("__txlog_modified", F.lit(True)), table_dir, meta,
+        stats_cols,
+    )
 
 
 def _enforce_constraints(df: DataFrame, meta: dict | None) -> None:
@@ -2039,10 +2028,11 @@ def add_constraints(
     policy-free), accepting that legacy violations then live outside any
     DML's responsibility."""
     tip = latest_version(table_dir)
-    meta = dict(table_metadata(table_dir) or {})
-    if tip >= 0 and snapshot_files(table_dir, tip):
+    snap = _resolve(table_dir, tip) if tip >= 0 else None
+    meta = dict(snap[2] or {}) if snap else {}
+    if snap and snap[0]:
         _enforce_constraints(
-            read_version(spark, table_dir, tip), {"constraints": constraints}
+            _read_snapshot(spark, table_dir, snap), {"constraints": constraints}
         )
     merged = dict(meta.get("constraints") or {})
     merged.update(constraints)
@@ -2347,65 +2337,60 @@ def table_changes(
     ``update_preimage`` / ``update_postimage``, plus the commit's
     ``_commit_version`` and stamped ``_operation`` (underscore-prefixed
     like Delta's own CDF meta columns, keeping the feed out of the user
-    namespace; a table whose data already uses a reserved meta/scratch
-    name raises at plan build instead of silently colliding).
+    namespace; a table whose data already uses a reserved meta name
+    raises at plan build instead of silently colliding).
 
-    Per version the feed is a key-joined diff of the REMOVED files (the
-    pre-image side) against the ADDED files (the post-image side), both
-    read under the log-governed schema:
+    Every row is served by the txlog source's batch reader
+    (``spark.read.format("cdc_txlog")`` with ``readChangeFeed`` —
+    ``sources.txlog_stream``), the same planner and the same arrow diff
+    the streaming ``readChangeFeed`` runs, so batch and streaming feeds
+    cannot drift. Per version the feed is a key diff of the REMOVED
+    files (the pre-image side) against the ADDED files (the post-image
+    side):
 
     - add-only commit (append / initial WRITE): every added row is an
-      ``insert`` — no diff, no join;
-    - rewrite commit: full-outer join on ``key``; a key only in the
-      post side is an ``insert``, only in the pre side a ``delete``,
-      in both with a changed image an ``update_preimage`` +
-      ``update_postimage`` pair, and in both with an IDENTICAL image an
-      unchanged copy the rewrite carried along (UPDATE/DELETE rewrite
-      whole touched files) — dropped, it is not a change.
+      ``insert`` — no diff;
+    - rewrite commit: full-outer on ``key``; a key only in the post side
+      is an ``insert``, only in the pre side a ``delete``, in both with a
+      changed image an ``update_preimage`` + ``update_postimage`` pair,
+      and in both with an IDENTICAL image (Spark ``eqNullSafe``
+      semantics: NaN equals NaN, nested types compare structurally) an
+      unchanged copy the rewrite carried along — dropped, it is not a
+      change;
+    - OPTIMIZE commit: nothing — it moves rows and changes none (Delta
+      marks it ``dataChange=false``).
 
-    This is the read-side reconstruction Delta enables with
-    ``delta.enableChangeDataFeed`` write-side tracking; here the
-    copy-on-write remove/add pairs carry enough structure to rebuild
-    the same rows AFTER the fact, because rewrites are file-bounded
-    (only touched files move through a commit). Deletion-vector commits
-    diff the same way — each side reads under ITS version's DV state
-    (one incremental action fold across the range), so a DV DELETE
-    feeds exactly the newly-deleted rows. Cost per version is
-    O(churned files), never O(table): at 100 TB, reading a day of
-    changes off a range-clustered table scans only the files its
-    commits actually rewrote, and each per-version diff shuffles only
-    those rows on the key. Versions stay independent — Spark unions
-    their per-version plans, so a multi-version feed parallelizes
-    across commits as well as within them.
+    Deletion-vector commits diff the same way — each side reads under
+    ITS version's DV state, so a DV DELETE feeds exactly the
+    newly-deleted rows. Cost per version is O(churned files), never
+    O(table): an append plans one task per added file, a rewrite one
+    task carrying its churn, and versions stay independent tasks.
+
+    The feed is served in the END version's declared schema (Delta CDF
+    semantics: files written before an evolution null-fill the new
+    columns; under column mapping, files of every vintage read through
+    the END version's physical names). A table without a declared
+    schema takes the unified parquet-footer schema of the range's files.
 
     ``key`` must UNIQUELY identify rows within every DIFFED (rewrite)
     commit the way the table's DML used it (the same contract
     :func:`merge_into` places on its ``key``); a duplicated non-NULL key
-    on either side of a diffed commit would cross-product through the
-    full-outer join into a silently wrong feed, so the read FAILS LOUD
-    instead — the guard is FUSED INTO THE RETURNED PLAN: each diff side
-    carries a per-key window count (the window's hash partitioning on
-    ``key`` is exactly the full-outer join's requirement, so the
-    exchange is shared — no extra scan, no extra shuffle), and an
-    ``assert_true`` filter over the joined rows raises on first
-    evaluation of a duplicated key. Building the feed therefore runs NO
-    job (the plan stays lazy); the guard fires when the feed is
-    EVALUATED — which is exact for any evaluation that touches the
-    offending version's rows (a duplicated side is non-empty by
-    definition, and the filter sits before the unchanged-copy drop); a
-    deliberately partial evaluation (``limit(1)`` satisfied by another
-    version) can finish without reaching it, the inherent trade of any
-    lazy validation. NULL keys are exempt from the guard
-    because NULL never equi-joins: a NULL-key row's pre and post images
-    can never pair, so a rewrite that carries one along (even UNCHANGED)
+    on either side of a diffed commit would cross-product into a
+    silently wrong feed, so the read FAILS LOUD when that commit's task
+    runs. Building the feed runs no job; a deliberately partial
+    evaluation (``limit(1)`` satisfied by another version) can finish
+    without reaching the offending commit. NULL keys are exempt because
+    NULL never equi-joins: a NULL-key row's pre and post images can
+    never pair, so a rewrite that carries one along (even UNCHANGED)
     emits a faithful-but-unpaired ``delete`` + ``insert`` instead of an
     update pair or a drop — net-equivalent to any downstream applier,
     just not minimal (pinned in ``tests/test_txlog.py``).
 
-    A range containing only metadata commits returns an EMPTY feed in
-    the end-version schema (Delta's ``table_changes`` contract — pollers
-    distinguish "no changes" from a bad call by row count, not by
-    catching errors); only a range outside the log raises.
+    A range that plans no change — metadata-only or OPTIMIZE commits —
+    returns an EMPTY feed in the end-version schema (Delta's
+    ``table_changes`` contract — pollers distinguish "no changes" from a
+    bad call by row count, not by catching errors); only a range outside
+    the log raises.
 
     The range can be given on the TIMESTAMP axis instead (Delta pairs
     every CDF version argument with a timestamp form):
@@ -2419,7 +2404,9 @@ def table_changes(
     read per-operation change rows off the wire log
     (``/root/reference/README.md:86-125``); this is the same feed
     recovered from the TABLE's own history, no wire log needed."""
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from change_data_capture_spark.sources import txlog_stream
 
     ts_stamps = (
         commit_timestamps(table_dir)
@@ -2456,216 +2443,63 @@ def table_changes(
             f"table_changes range [{start_version}, {end}] outside the "
             f"log's committed range [0, {tip}]"
         )
-    # ONE pass over the range, folding on from the snapshot before it:
-    # each commit gets the deletion-vector state before and after it
-    # (each side of its diff reads under ITS version's DV state — a DV
-    # commit, the same file re-referenced with a bigger vector, therefore
-    # feeds exactly the newly-deleted rows as `delete`s, and a rewrite of
-    # a DV'd file diffs only its LIVE pre-image rows), and the pass ends
-    # holding the END version's snapshot and metadata
-    if start_version > 0:
-        acts, _, end_meta, _ = _resolve(table_dir, start_version - 1)
-    else:
-        acts, end_meta = [], None
-    state = {_action_path(a): a for a in acts}
-    post_dv = _dv_map(acts)
-    commits: list[tuple[dict, dict, dict]] = []
-    for payload in _commits(table_dir, start_version, end):
-        pre_dv = post_dv
-        _fold(state, payload)
-        post_dv = _dv_map(state.values())
-        commits.append((payload, pre_dv, post_dv))
-        if payload.get("metadata") is not None:
-            end_meta = payload["metadata"]
-    # one reader at the END version's log-governed schema (Delta CDF
-    # semantics: the feed is served in the reading snapshot's schema —
-    # files written pre-evolution null-fill the new columns), so every
-    # per-version frame has identical columns for the final union
-    declared = (end_meta or {}).get("schema")
-    end_mapping = _mapping_of(end_meta)
-    reader = (
-        spark.read.schema(
-            _physical_ddl(declared, end_meta) if end_mapping else declared
-        )
-        if declared is not None
-        else spark.read
-    )
-
-    def _cdf_scan(files_, dv_):
-        """One side's DV-aware scan, projected to the END version's
-        LOGICAL names under column mapping (the same rule as the
-        schema: the feed is served in the reading snapshot's shape —
-        physical names are frozen, so files from every vintage in the
-        range read uniformly)."""
-        s = _scan_files_with_dvs(spark, files_, dv_, reader)
-        return _project_logical(s, end_meta) if end_mapping else s
-
-    # the feed's meta columns and join-scratch flags live in the Delta-style
-    # underscore namespace; a table whose DATA already uses one would
-    # silently corrupt classification (withColumn replaces) or duplicate an
+    parts = txlog_stream._cdf_partitions(table_dir, start_version - 1, end, key)
+    snap = _resolve(table_dir, end)
+    declared = (snap[2] or {}).get("schema")
+    # the feed's meta columns live in the Delta-style underscore
+    # namespace; a table whose DATA already uses one would duplicate an
     # output name — refuse up front. With a declared schema the column set
-    # IS the declaration (no file opened); without one, probe EVERY file
-    # the range's commits add or remove (footer-only pyarrow reads,
-    # bounded by the range's churn — the same files the feed scans
-    # anyway). One tip file is not enough when heterogeneous-schema files
-    # entered the log without metadata, and neither is one file per side:
-    # a reserved name can hide in any file of a multi-file commit
-    reserved = {n for n, _ in _CDF_META_FIELDS} | {
-        "_b_present", "_a_present", "_b_dupn", "_a_dupn",
-    }
+    # IS the declaration (no file opened); without one, EVERY file the
+    # range's parts read is probed (footer-only reads, bounded by the
+    # range's churn) and their unified footer schema types the feed: a
+    # reserved name can hide in any file of a multi-file commit
     if declared is not None:
+        schema = declared + "".join(
+            f", {n} {t.simpleString()}" for n, t in _CDF_META_FIELDS
+        )
         data_columns = {n for n, _ in _ddl_fields(declared)}
     else:
-        import pyarrow.parquet as _pq
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        data_columns = set()
-        probe_paths = {
-            _action_path(a)
-            for payload, _, _ in commits
-            for acts in (payload.get("add") or (), payload.get("remove") or ())
-            for a in acts
-        }
-        for p in sorted(probe_paths):
-            data_columns.update(_pq.read_schema(p).names)
-    clash = reserved & data_columns
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        paths = sorted(
+            {p for part in parts for p, _ in txlog_stream._sides(part)}
+        ) or _files_in(snap)[:1]
+        if not paths:
+            raise ValueError(
+                f"table_changes range [{start_version}, {end}] of "
+                f"{table_dir} has no row changes, and the table has no "
+                "data files or declared schema to type an empty feed with"
+            )
+        base = from_arrow_schema(
+            pa.unify_schemas([pq.read_schema(p) for p in paths])
+        )
+        schema = StructType(list(base.fields))
+        for n, t in _CDF_META_FIELDS:
+            schema = schema.add(n, t)
+        data_columns = set(base.fieldNames())
+    clash = {n for n, _ in _CDF_META_FIELDS} & data_columns
     if clash:
         raise ValueError(
             f"table_changes reserves column names {sorted(clash)}; "
             "the table's data already uses them — rename before "
             "reading the feed"
         )
-    from pyspark.sql.window import Window
-
-    per_version: list[DataFrame] = []
-    for payload, pre_dv, post_dv in commits:
-        v = payload["version"]
-        adds = [_action_path(a) for a in payload.get("add") or ()]
-        removes = [_action_path(a) for a in payload.get("remove") or ()]
-        op = payload.get("operation")
-        meta = (
-            F.lit(v).alias("_commit_version"),
-            F.lit(op).alias("_operation"),
-        )
-        if not removes:
-            if not adds:
-                continue  # metadata-only commit: no row changes
-            per_version.append(
-                _cdf_scan(adds, post_dv).select(
-                    "*", F.lit("insert").alias("_change_type"), *meta
-                )
-            )
-            continue
-        # side-presence flags, NOT key nullness: a NULL-key row never
-        # equi-joins (NULL != NULL), and inferring its side from b.key /
-        # a.key would misread its delete as an all-null insert. Each
-        # side also carries its per-key window COUNT — the lazy, in-plan
-        # duplicate-key guard (see docstring): the window hash-partitions
-        # on exactly the join key, so the full-outer join reuses its
-        # exchange and the guard costs no extra scan or shuffle.
-        dup_w = Window.partitionBy(key)
-        pre = (
-            _cdf_scan(removes, pre_dv)
-            .withColumn("_b_present", F.lit(True))
-            .withColumn("_b_dupn", F.count(F.lit(1)).over(dup_w))
-            .alias("b")
-        )
-        post = (
-            (
-                _cdf_scan(adds, post_dv)
-                if adds
-                else _cdf_scan(removes, pre_dv).limit(0)
-            )
-            .withColumn("_a_present", F.lit(True))
-            .withColumn("_a_dupn", F.count(F.lit(1)).over(dup_w))
-            .alias("a")
-        )
-        scratch = {"_b_present", "_b_dupn"}
-        cols = [f.name for f in pre.schema.fields if f.name not in scratch]
-        data_cols = [c for c in cols if c != key]
-        img_b = F.struct(*[F.col(f"b.{c}").alias(c) for c in cols])
-        img_a = F.struct(*[F.col(f"a.{c}").alias(c) for c in cols])
-        differ = functools.reduce(
-            lambda x, y: x | y,
-            [
-                ~F.col(f"b.{c}").eqNullSafe(F.col(f"a.{c}"))
-                for c in data_cols
-            ],
-            F.lit(False),
-        )
-        entry = lambda t, img: F.struct(  # noqa: E731
-            F.lit(t).alias("t"), img.alias("img")
-        )
-        entries = (
-            F.when(
-                F.col("_b_present").isNull(),
-                F.array(entry("insert", img_a)),
-            )
-            .when(
-                F.col("_a_present").isNull(),
-                F.array(entry("delete", img_b)),
-            )
-            .when(
-                differ,
-                F.array(
-                    entry("update_preimage", img_b),
-                    entry("update_postimage", img_a),
-                ),
-            )
-            .otherwise(F.array())  # unchanged copy in a rewritten file
-        )
-        # the fail-loud duplicate-key guard, fused into the plan: a
-        # duplicated non-NULL key on either side raises on FIRST
-        # EVALUATION of its joined rows (the filter sits BEFORE the
-        # unchanged-copy drop, so even a dup whose change rows would all
-        # be dropped still trips it). NULL keys and absent sides are
-        # exempt (their bad-flags resolve False through 3-valued AND).
-        bad_b = F.col(f"b.{key}").isNotNull() & (F.col("_b_dupn") > 1)
-        bad_a = F.col(f"a.{key}").isNotNull() & (F.col("_a_dupn") > 1)
-        dup_msg = F.concat(
-            F.lit(
-                f"table_changes key {key!r} is duplicated within commit "
-                f"{v} ("
-            ),
-            F.when(F.coalesce(bad_b, F.lit(False)), F.lit("pre"))
-            .otherwise(F.lit("post")),
-            F.lit(" side, e.g. value "),
-            F.coalesce(
-                F.col(f"b.{key}").cast("string"),
-                F.col(f"a.{key}").cast("string"),
-            ),
-            F.lit(
-                "): the per-version diff would cross-product into a "
-                "wrong feed — diff on a key that uniquely identifies "
-                "rows the way the table's DML did"
-            ),
-        )
-        dup_ok = ~F.coalesce(bad_b | bad_a, F.lit(False))
-        joined = pre.join(
-            post, F.col(f"b.{key}") == F.col(f"a.{key}"), "full_outer"
-        ).where(F.assert_true(dup_ok, dup_msg).isNull())
-        per_version.append(
-            joined.select(F.explode(entries).alias("e")).select(
-                "e.img.*", F.col("e.t").alias("_change_type"), *meta
-            )
-        )
-    if not per_version:
-        # metadata-only range: an EMPTY feed in the end-version schema
-        # (Delta contract — "no changes" is a row count, not an error)
-        files = list(state) or snapshot_files(table_dir)
-        if files:
-            base = _cdf_scan([files[0]], {})
-        elif declared is not None:
-            base = spark.createDataFrame([], declared)
-        else:
-            raise ValueError(
-                f"table_changes range [{start_version}, {end}] of "
-                f"{table_dir} has no row changes, and the table has no "
-                "data files or declared schema to type an empty feed with"
-            )
-        return base.limit(0).select(
-            "*",
-            F.lit("insert").alias("_change_type"),
-            F.lit(0).alias("_commit_version"),
-            F.lit("WRITE").alias("_operation"),
-        )
-    return functools.reduce(lambda x, y: x.unionByName(y), per_version)
+    if not parts:
+        # no change in the range: an EMPTY feed in the end-version schema
+        # (Delta contract — "no changes" is a row count, not an error);
+        # a Python source with zero partitions fails to plan
+        return spark.createDataFrame([], schema)
+    spark.dataSource.register(txlog_stream.TxlogStreamDataSource)
+    return (
+        spark.read.format("cdc_txlog")
+        .schema(schema)
+        .option("path", table_dir)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", start_version)
+        .option("endingVersion", end)
+        .option("cdfKey", key)
+        .load()
+    )

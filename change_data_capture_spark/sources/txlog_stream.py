@@ -25,20 +25,24 @@ immutability:
   already-emitted rows) and the stream continues over later appends.
 - ``.option("readChangeFeed", "true")`` is the third stance (Delta's
   streaming CDF): data-changing commits are FORWARDED as change rows —
-  each consumed version feeds its :func:`txlog.table_changes`-shaped
   ``insert`` / ``delete`` / ``update_preimage`` / ``update_postimage``
   rows with ``_commit_version`` / ``_operation`` meta columns, appends
-  included (pure inserts). ``.option("startingVersion", N)`` starts a
-  FRESH checkpoint at commit ``N`` (both modes);
-  ``.option("startingTimestamp", ts)`` is its timestamp twin — the
-  first version committed at or after ``ts``
+  included (pure inserts), OPTIMIZE commits skipped (they change no
+  row). ``.option("startingVersion", N)`` starts a FRESH checkpoint at
+  commit ``N`` (both modes); ``.option("startingTimestamp", ts)`` is its
+  timestamp twin — the first version committed at or after ``ts``
   (:func:`txlog.version_at_timestamp`; a ``ts`` past the tip starts
   AFTER it, waiting for future commits — Delta's streaming behavior),
   mutually exclusive with ``startingVersion``. ``.option("cdfKey",
-  col)`` names the diff key (default ``id``), with the same
-  fail-loud duplicate-key guard as the batch reader. Deletion-vector
-  commits feed exactly their newly-deleted rows — each side of the
-  per-commit diff applies ITS version's DV state.
+  col)`` names the diff key (default ``id``), with a fail-loud
+  duplicate-key guard. Deletion-vector commits feed exactly their
+  newly-deleted rows — each side of the per-commit diff applies ITS
+  version's DV state. The planner (:func:`_cdf_partitions`) and the
+  arrow diff (:func:`_diff_commit`) are the ONE change-feed
+  implementation: a batch ``spark.read.format("cdc_txlog")`` with
+  ``readChangeFeed`` (:class:`TxlogChangeFeedReader`) serves the same
+  rows over ``startingVersion .. endingVersion``, and
+  :func:`txlog.table_changes` reads through it.
 - ``.option("maxFilesPerTrigger", N)`` is admission control (Delta's
   backpressure knob of the same name): ``latestOffset`` stops
   advancing at the version boundary where the cumulative added-file
@@ -74,8 +78,8 @@ any distributed parquet scan, while the offset stays one integer.
 In CDF mode an append version still plans one partition per added file;
 a data-changing version plans ONE partition carrying its remove/add
 sides — the diff needs that commit's churn co-located, and a
-copy-on-write/DV commit's churn is delta-sized by construction (the
-same O(churned files) unit as the batch ``table_changes``).
+copy-on-write/DV commit's churn is delta-sized by construction
+(O(churned files) per version, batch or streaming).
 """
 
 from __future__ import annotations
@@ -84,6 +88,7 @@ import os
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -188,7 +193,7 @@ def _check_not_vacuumed(paths, start_v: int, end_v: int) -> None:
         raise ValueError(
             f"cdc_txlog source: {len(missing)} file(s) referenced by "
             f"commits ({start_v}, {end_v}] no longer exist (vacuumed "
-            f"past this stream's position), e.g. {missing[0]} — restart "
+            f"past this read's position), e.g. {missing[0]} — restart "
             "from a retained version (startingVersion) or raise vacuum "
             "retention_versions"
         )
@@ -234,40 +239,33 @@ def _opt(options: dict, name: str, default=None):
     return options.get(name.lower(), options.get(name, default))
 
 
-def _file_uri(path: str) -> str:
-    """The ``_metadata.file_path`` URI spark records for a local file —
-    the sidecar's ``file`` key. Spark URL-encodes special characters in
-    ``_metadata.file_path``; this reconstruction does not, so a table
-    path needing encoding would diverge — :func:`_apply_dv` detects that
-    (an attached vector with zero positions for its file) and fails loud
-    rather than silently re-emitting deleted rows."""
-    return "file:" + os.path.abspath(path)
-
-
 def _read_data_file(path: str, fields) -> "pyarrow.Table":  # noqa: F821
-    """One columnar read of a data file projected to the declared
-    ``(name, arrow type)`` fields — columns a pre-evolution file lacks
-    are null-filled (the log-governed schema rule, arrow-side)."""
+    """One columnar read of a data file projected to the feed's
+    ``(logical name, physical name, arrow type)`` fields — columns a
+    pre-evolution file lacks are null-filled (the log-governed schema
+    rule, arrow-side), and under column mapping each physical column is
+    served under its logical name."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     avail = set(pq.read_schema(path).names)
-    present = [n for n, _ in fields if n in avail]
-    tbl = pq.read_table(path, columns=present)
-    cols = []
-    for n, t in fields:
-        if n in avail:
-            cols.append(tbl.column(n).cast(t))
-        else:
-            cols.append(pa.nulls(len(tbl), t))
-    return pa.table(dict(zip([n for n, _ in fields], cols)))
+    tbl = pq.read_table(path, columns=[p for _, p, _ in fields if p in avail])
+    return pa.table(
+        {
+            n: tbl.column(p).cast(t) if p in avail else pa.nulls(len(tbl), t)
+            for n, p, t in fields
+        }
+    )
 
 
 def _apply_dv(tbl, path: str, dv_dir: str | None):
     """Drop a data file's deletion-vector positions from its arrow
-    table — the executor-side twin of the broadcast anti-join in
-    :func:`txlog._scan_files_with_dvs` (row index IS arrow row order:
-    ``_read_data_file`` reads the whole file in file order)."""
+    table — the arrow twin of the broadcast anti-join in
+    :func:`txlog._scan_files` (row index IS arrow row order:
+    ``_read_data_file`` reads the whole file in file order). Sidecar rows
+    name their file by the URI Spark recorded; they are matched through
+    :func:`txlog._local_path`, the same normalization the DML probe
+    uses."""
     if not dv_dir:
         return tbl
     import numpy as np
@@ -276,22 +274,26 @@ def _apply_dv(tbl, path: str, dv_dir: str | None):
     import pyarrow.parquet as pq
 
     dv = pq.read_table(dv_dir, columns=["file", "pos"])
-    pos = dv.filter(pc.equal(dv.column("file"), _file_uri(path)))
-    positions = pos.column("pos").to_pylist()
+    local = os.path.abspath(path)
+    uris = [
+        u
+        for u in pc.unique(dv.column("file")).to_pylist()
+        if txlog._local_path(u) == local
+    ]
+    positions = dv.filter(
+        pc.is_in(dv.column("file"), value_set=pa.array(uris, pa.string()))
+    ).column("pos").to_pylist()
     if not positions:
         # a dv descriptor is only ever attached to a file the sidecar
         # holds >= 1 position for (delete_where routes a file to the DV
         # class only when it has matching rows, and every kept action
-        # unions its own prior positions) — zero hits therefore means
-        # _file_uri's reconstruction diverged from the URI Spark recorded
-        # at DELETE time (e.g. a table path with characters
-        # _metadata.file_path URL-encodes). Silently returning the table
-        # would RE-EMIT deleted rows into the stream; fail loud instead.
+        # unions its own prior positions) — zero hits therefore means the
+        # sidecar's URIs and this path disagree. Silently returning the
+        # table would RE-EMIT deleted rows into the feed; fail loud.
         raise ValueError(
             f"deletion-vector sidecar {dv_dir} holds no positions for "
-            f"{_file_uri(path)!r}: the reconstructed file URI does not "
-            "match what Spark recorded (URL-encoded table path?) — "
-            "refusing to stream rows a deletion vector may have removed"
+            f"{local!r}: no recorded file URI maps to this path — "
+            "refusing to serve rows a deletion vector may have removed"
         )
     mask = np.ones(len(tbl), dtype=bool)
     mask[positions] = False
@@ -305,25 +307,26 @@ def _read_side(parts, fields):
     tables = [_apply_dv(_read_data_file(p, fields), p, dv) for p, dv in parts]
     if not tables:
         return pa.table(
-            {n: pa.nulls(0, t) for n, t in fields}
+            {n: pa.nulls(0, t) for n, _, t in fields}
         )
     return pa.concat_tables(tables)
 
 
 def _guard_keys(tbl, key: str, version: int, side: str) -> None:
-    """The batch reader's duplicate-key discipline, arrow-side: a
-    duplicated non-NULL key on either side of a diffed commit would
-    cross-product into a wrong feed — fail loud. NULL keys are exempt
-    (they never join; handled as unpaired delete/insert)."""
+    """The feed's duplicate-key discipline: a duplicated non-NULL key on
+    either side of a diffed commit would cross-product into a wrong
+    feed — fail loud. NULL keys are exempt (they never join; handled as
+    unpaired delete/insert)."""
     import pyarrow.compute as pc
 
     k = tbl.column(key).drop_null()
     if len(k) != len(pc.unique(k)):
         raise ValueError(
-            f"readChangeFeed: key {key!r} is duplicated within commit "
+            f"change feed: key {key!r} is duplicated within commit "
             f"{version} ({side} side) — the per-version diff would "
-            "cross-product into a wrong feed; set .option('cdfKey', ...) "
-            "to a column that uniquely identifies rows"
+            "cross-product into a wrong feed; diff on a key (cdfKey / "
+            "table_changes key=) that uniquely identifies rows the way "
+            "the table's DML did"
         )
 
 
@@ -332,7 +335,7 @@ def _with_meta(tbl, fields, change_type: str, version: int, op: str | None):
     import pyarrow as pa
 
     n = len(tbl)
-    out = {name: tbl.column(name) for name, _ in fields}
+    out = {name: tbl.column(name) for name, _, _ in fields}
     out["_change_type"] = pa.array([change_type] * n, pa.string())
     out["_commit_version"] = pa.array([version] * n, pa.int32())
     out["_operation"] = pa.array([op] * n, pa.string())
@@ -341,10 +344,9 @@ def _with_meta(tbl, fields, change_type: str, version: int, op: str | None):
 
 def _eq_null_safe(a, b):
     """Column-wise equality matching Spark's ``eqNullSafe`` binary
-    comparison semantics, which the batch ``table_changes`` uses for the
-    unchanged-copy drop: NULL <=> NULL is TRUE, NaN <=> NaN is TRUE
-    (Spark's comparator, unlike IEEE), nested types compare
-    structurally. Arrow's ``pc.equal`` gives IEEE NaN semantics and has
+    comparison semantics, for the unchanged-copy drop: NULL <=> NULL is
+    TRUE, NaN <=> NaN is TRUE (Spark's comparator, unlike IEEE), nested
+    types compare structurally. Arrow's ``pc.equal`` gives IEEE NaN semantics and has
     no nested-type kernel, so floats get an explicit both-NaN term and
     nested columns fall back to a per-row python structural compare
     (bounded by the commit's churn — the unit this partition already
@@ -384,9 +386,10 @@ def _eq_null_safe(a, b):
 
 
 def _diff_commit(part: _CdfDiff, fields):
-    """Executor-side per-commit CDF diff — the arrow twin of the batch
-    ``txlog.table_changes`` per-version join: full-outer on the key
-    (index-only: side presence = index validity, so key nullness never
+    """Executor-side per-commit CDF diff — the one change-feed diff,
+    served to the stream and to :func:`txlog.table_changes` alike, and
+    the only place ``update_preimage`` rows are built: full-outer on the
+    key (index-only: side presence = index validity, so key nullness never
     classifies and payload columns never ride the hash join), unchanged
     copies carried by whole-file rewrites are dropped by Spark-semantics
     null-safe image equality (:func:`_eq_null_safe` — NaN <=> NaN true,
@@ -423,7 +426,7 @@ def _diff_commit(part: _CdfDiff, fields):
     joined = pre_k.join(post_k, keys=[key], join_type="full outer")
     b_here = pc.is_valid(joined.column("_b_idx"))
     a_here = pc.is_valid(joined.column("_a_idx"))
-    data_cols = [n for n, _ in fields if n != key]
+    data_cols = [n for n, _, _ in fields if n != key]
     deletes = pre_nn.take(
         joined.filter(pc.and_(b_here, pc.invert(a_here))).column("_b_idx")
     )
@@ -447,14 +450,121 @@ def _diff_commit(part: _CdfDiff, fields):
         out.append(_with_meta(ma.filter(differ), fields, "update_postimage", part.version, part.op))
     if not out:
         schema = pa.schema(
-            [(n, t) for n, t in fields]
+            [(n, t) for n, _, t in fields]
             + [("_change_type", pa.string()), ("_commit_version", pa.int32()), ("_operation", pa.string())]
         )
         return pa.table({f.name: pa.nulls(0, f.type) for f in schema})
     return pa.concat_tables(out)
 
 
-class TxlogStreamReader(DataSourceStreamReader):
+def _sides(part) -> list[tuple[str, str | None]]:
+    """The ``(data file, DV sidecar | None)`` pairs a CDF part reads."""
+    if isinstance(part, _CdfInsert):
+        return [(part.path, part.dv_dir)]
+    return part.pre + part.post
+
+
+def _cdf_partitions(
+    table_dir: str, start_v: int, end_v: int, key: str
+) -> list[InputPartition]:
+    """Plan the change feed of commits ``(start_v .. end_v]`` — the one
+    CDF planner, behind the stream's ``readChangeFeed`` micro-batches and
+    the batch :func:`txlog.table_changes` alike. One pass folds the
+    deletion-vector state on from the snapshot at ``start_v``, so each
+    side of a diffed commit reads under ITS version's DV state (the
+    remove side before the commit, the add side after it): a DV DELETE —
+    the same file re-referenced with a bigger vector — feeds exactly its
+    newly-deleted rows. An append plans one :class:`_CdfInsert` per added
+    file, a data-changing commit ONE :class:`_CdfDiff` carrying its
+    churn, a metadata-only commit nothing. OPTIMIZE commits plan nothing
+    either: they move rows and change none (Delta marks them
+    ``dataChange=false``), and diffing one would load the whole table
+    into one task. Files vacuum already reclaimed fail here, at planning
+    (:func:`_check_not_vacuumed`)."""
+    state = (
+        {txlog._action_path(a): a for a in txlog._resolve(table_dir, start_v)[0]}
+        if start_v >= 0
+        else {}
+    )
+
+    def dv_of(p: str) -> str | None:
+        a = state.get(p)
+        dv = a.get("dv") if isinstance(a, dict) else None
+        return dv["path"] if dv else None
+
+    parts: list[InputPartition] = []
+    for c in txlog._commits(table_dir, start_v + 1, end_v):
+        v, op = c["version"], c.get("operation")
+        removes = list(c.get("remove") or ())
+        pre = [(p, dv_of(p)) for p in removes]
+        txlog._fold(state, c)
+        if op == "OPTIMIZE":
+            continue
+        post = [
+            (p, dv_of(p)) for p in map(txlog._action_path, c.get("add") or ())
+        ]
+        if removes:
+            parts.append(_CdfDiff(v, op, key, pre, post))
+        else:
+            parts.extend(_CdfInsert(p, v, op, dv) for p, dv in post)
+    _check_not_vacuumed(
+        [x for part in parts for pair in _sides(part) for x in pair if x],
+        start_v,
+        end_v,
+    )
+    return parts
+
+
+class _TxlogRead:
+    """``read`` shared by the streaming and the batch reader: one pyarrow
+    read per partition on an EXECUTOR, handed to Spark as Arrow
+    RecordBatches (the DataSource API takes them directly, so the read
+    stays columnar end to end). Subclasses set ``schema_`` and ``meta``
+    (the table metadata whose column mapping the files are read with)."""
+
+    def _data_fields(self):
+        """``(logical, physical, arrow type)`` of the DATA columns (CDF
+        meta columns excluded — the reader appends them itself)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        reserved = {n for n, _ in txlog._CDF_META_FIELDS}
+        mapped = txlog._mapping_of(self.meta)
+        return [
+            (
+                f.name,
+                txlog._physical_name(self.meta, f.name) if mapped else f.name,
+                f.type,
+            )
+            for f in to_arrow_schema(self.schema_)
+            if f.name not in reserved
+        ]
+
+    def read(self, partition):
+        import pyarrow.parquet as pq
+
+        if isinstance(partition, _AddedFile):
+            names = self.schema_.fieldNames()
+            yield from pq.read_table(partition.path, columns=names).to_batches()
+            return
+        fields = self._data_fields()
+        if isinstance(partition, _CdfDiff):
+            tbl = _diff_commit(partition, fields)
+        else:
+            tbl = _with_meta(
+                _apply_dv(
+                    _read_data_file(partition.path, fields),
+                    partition.path,
+                    partition.dv_dir,
+                ),
+                fields,
+                "insert",
+                partition.version,
+                partition.op,
+            )
+        yield from tbl.to_batches()
+
+
+class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
     """Offsets are log versions: ``{"version": N}`` means commits
     ``0..N`` are consumed. Planning (``latestOffset``/``partitions``) is
     driver-side metadata; ``read`` runs on executors, one file per
@@ -471,7 +581,7 @@ class TxlogStreamReader(DataSourceStreamReader):
         # ("streaming reads from a table with column mapping changes are
         # unsupported"). An identity mapping (enabled, nothing renamed
         # yet) is harmless and allowed.
-        meta = txlog.table_metadata(self.table_dir) or {}
+        self.meta = meta = txlog.table_metadata(self.table_dir) or {}
         mapping = meta.get("column_mapping") or {}
         if any(l != p for l, p in mapping.items()) or meta.get(
             "dropped_physical"
@@ -594,84 +704,7 @@ class TxlogStreamReader(DataSourceStreamReader):
             )
             _check_not_vacuumed(files, start_v, end_v)
             return [_AddedFile(p) for p in files]
-        # CDF planning: per-version dv-state fold from the batch start
-        state = (
-            {
-                txlog._action_path(a): a
-                for a in txlog._resolve(self.table_dir, start_v)[0]
-            }
-            if start_v >= 0
-            else {}
-        )
-
-        def dv_of(p: str, actions: dict) -> str | None:
-            a = actions.get(p)
-            dv = a.get("dv") if isinstance(a, dict) else None
-            return dv["path"] if dv else None
-
-        parts: list[InputPartition] = []
-        for c in txlog._commits(self.table_dir, start_v + 1, end_v):
-            v = c["version"]
-            adds = [txlog._action_path(a) for a in c.get("add") or ()]
-            removes = list(c.get("remove") or ())
-            op = c.get("operation")
-            pre = [(p, dv_of(p, state)) for p in removes]
-            txlog._fold(state, c)
-            if not removes:
-                parts.extend(
-                    _CdfInsert(p, v, op, dv_of(p, state)) for p in adds
-                )
-                continue
-            post = [(p, dv_of(p, state)) for p in adds]
-            parts.append(_CdfDiff(v, op, self.cdf_key, pre, post))
-        refs: list[str] = []
-        for part in parts:
-            if isinstance(part, _CdfInsert):
-                refs.append(part.path)
-                if part.dv_dir:
-                    refs.append(part.dv_dir)
-            else:
-                for p, dv in part.pre + part.post:
-                    refs.append(p)
-                    if dv:
-                        refs.append(dv)
-        _check_not_vacuumed(refs, start_v, end_v)
-        return parts
-
-    def _data_fields(self):
-        """Declared (name, arrow type) pairs of the DATA columns (CDF
-        meta columns excluded — the reader appends them itself)."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        meta = {n for n, _ in txlog._CDF_META_FIELDS}
-        arrow = to_arrow_schema(self.schema_)
-        return [(f.name, f.type) for f in arrow if f.name not in meta]
-
-    def read(self, partition):
-        # executor-side: one columnar parquet read per added file, handed
-        # to Spark as Arrow RecordBatches — the DataSource API accepts
-        # them directly, so the read stays columnar end to end (the
-        # earlier to_pylist + zip form materialized every row as Python
-        # tuples: ~3× the memory and per-row conversion cost for nothing)
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _CdfDiff):
-            yield from _diff_commit(partition, self._data_fields()).to_batches()
-            return
-        if isinstance(partition, _CdfInsert):
-            fields = self._data_fields()
-            tbl = _apply_dv(
-                _read_data_file(partition.path, fields),
-                partition.path,
-                partition.dv_dir,
-            )
-            yield from _with_meta(
-                tbl, fields, "insert", partition.version, partition.op
-            ).to_batches()
-            return
-        names = self.schema_.fieldNames()
-        tbl = pq.read_table(partition.path, columns=names)
-        yield from tbl.to_batches()
+        return _cdf_partitions(self.table_dir, start_v, end_v, self.cdf_key)
 
     def commit(self, end: dict) -> None:
         # offsets are derived from the immutable log; nothing to release,
@@ -679,11 +712,46 @@ class TxlogStreamReader(DataSourceStreamReader):
         self._consumed = int(end["version"])
 
 
+class TxlogChangeFeedReader(_TxlogRead, DataSourceReader):
+    """Batch change feed of commits ``startingVersion .. endingVersion``
+    (both inclusive; default the whole log) — the reader
+    :func:`txlog.table_changes` serves every row through: the same
+    planner (:func:`_cdf_partitions`) and the same executor-side
+    ``read`` as the stream. The files are read with the END version's
+    column mapping, so a renamed column keeps serving its bytes under
+    its END-version name."""
+
+    def __init__(self, schema: StructType, options: dict):
+        self.schema_ = schema
+        self.table_dir = _required_path(options)
+        if str(_opt(options, "readChangeFeed", "false")).lower() != "true":
+            raise ValueError(
+                "cdc_txlog source: a batch read serves the change feed — "
+                "set .option('readChangeFeed', 'true'); snapshot reads go "
+                "through txlog.read_version"
+            )
+        ev = _opt(options, "endingVersion")
+        self.end_v = (
+            int(ev) if ev is not None else txlog.latest_version(self.table_dir)
+        )
+        self.start_v = int(_opt(options, "startingVersion", 0))
+        self.key = _opt(options, "cdfKey", "id")
+        self.meta = txlog.table_metadata(self.table_dir, self.end_v)
+
+    def partitions(self):
+        return _cdf_partitions(
+            self.table_dir, self.start_v - 1, self.end_v, self.key
+        )
+
+
 class TxlogStreamDataSource(DataSource):
     """``readStream.format("cdc_txlog").option("path", table_dir)`` —
     register with ``spark.dataSource.register(TxlogStreamDataSource)``.
-    Batch reads of the same table go through :func:`txlog.read_version`
-    (plain distributed parquet scan); this class is the streaming tail.
+    A batch ``spark.read.format("cdc_txlog")`` serves the change feed
+    (``readChangeFeed`` with ``startingVersion`` / ``endingVersion`` /
+    ``cdfKey`` — :class:`TxlogChangeFeedReader`, what
+    :func:`txlog.table_changes` reads through); snapshot reads of the
+    same table go through :func:`txlog.read_version`.
 
     SELF-DESCRIBING like the Delta source it models: ``schema()``
     resolves from the table's committed ``metaData`` action (the log
@@ -704,7 +772,10 @@ class TxlogStreamDataSource(DataSource):
         # NOTE: this runs in a session-less Python worker — DDL strings
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
-        declared = (txlog.table_metadata(table_dir) or {}).get("schema")
+        ev = _opt(self.options, "endingVersion")
+        declared = (
+            txlog.table_metadata(table_dir, None if ev is None else int(ev)) or {}
+        ).get("schema")
         cdf = str(_opt(self.options, "readChangeFeed", "false")).lower() == "true"
         if declared is not None:
             names = [n for n, _ in txlog._ddl_fields(declared)]
@@ -743,6 +814,9 @@ class TxlogStreamDataSource(DataSource):
 
     def streamReader(self, schema: StructType):
         return TxlogStreamReader(schema, self.options)
+
+    def reader(self, schema: StructType):
+        return TxlogChangeFeedReader(schema, self.options)
 
 
 def _required_path(options: dict) -> str:

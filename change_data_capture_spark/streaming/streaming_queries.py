@@ -2600,18 +2600,18 @@ def streaming_txlog_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds its per-commit change rows (``insert`` / ``delete`` /
     ``update_preimage`` / ``update_postimage`` with ``_commit_version``
     and ``_operation``), computed EXECUTOR-SIDE as an arrow full-outer
-    key diff of the commit's remove/add sides — the streaming twin of
-    :func:`txlog.table_changes`, sharing ITS oracle: the streamed feed
-    must hash-match the same relational recomputation the batch gate
-    matches.
+    key diff of the commit's remove/add sides — the same planner and
+    diff the batch :func:`txlog.table_changes` reads through, sharing
+    ITS oracle: the streamed feed must hash-match the same relational
+    recomputation the batch gate matches.
 
     The DELETE deliberately runs MERGE-ON-READ (``dv_fraction_threshold
     = 1.0``): the commit ships a deletion-vector sidecar instead of
     rewritten files, and the streamed feed must still emit exactly the
     deleted pre-images — each diff side applies ITS version's DV state,
     so the feed is transport-independent (copy-on-write and DV deletes
-    stream identically; the duplicate-key and NULL-key disciplines of
-    the batch reader apply unchanged, pinned in ``tests/test_txlog.py``).
+    stream identically; the duplicate-key and NULL-key disciplines are
+    the batch feed's own, pinned in ``tests/test_txlog.py``).
 
     Scale: planning stays one-integer offsets + O(commits) driver
     metadata; an append version plans one partition per added file, a

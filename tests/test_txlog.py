@@ -2408,12 +2408,153 @@ def test_table_changes_probes_all_files_within_one_commit(spark, tmp_path):
     t = str(tmp_path / "t")
     clean = txlog.write_files(_df(spark, [(1, "a")]), t)
     poisoned = txlog.write_files(
-        spark.createDataFrame([(2, "b", True)], "id long, v string, _a_present boolean"),
+        spark.createDataFrame([(2, "b", "x")], "id long, v string, _operation string"),
         t,
     )
     txlog.commit(t, add=clean + poisoned, expected_version=0, operation="WRITE")
-    with pytest.raises(ValueError, match="_a_present"):
+    with pytest.raises(ValueError, match="_operation"):
         txlog.table_changes(spark, t, 0, 0)
+
+
+def _drain_cdf_stream(spark, t, start, name, ckpt):
+    """Run a readChangeFeed stream from ``start`` to the tip (availableNow)
+    into a memory sink and return its rows."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamDataSource,
+    )
+
+    spark.dataSource.register(TxlogStreamDataSource)
+    q = (
+        spark.readStream.format("cdc_txlog")
+        .option("path", t)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", str(start))
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def test_dml_resolves_the_log_once(spark, tmp_path, monkeypatch):
+    """MERGE, UPDATE and ADD CONSTRAINT each fold the log once: the
+    column list, the type check and the existing-data validation read
+    the snapshot the command already resolved."""
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, [(1, "a"), (2, "b")]), t),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    calls = []
+    resolve = txlog._resolve
+    monkeypatch.setattr(
+        txlog, "_resolve", lambda *a: calls.append(a) or resolve(*a)
+    )
+    txlog.merge_into(spark, t, _df(spark, [(1, "A"), (3, "c")]), "id")
+    assert len(calls) == 1
+    calls.clear()
+    txlog.update_where(spark, t, "id = 2", {"v": "upper(v)"})
+    assert len(calls) == 1
+    calls.clear()
+    txlog.add_constraints(spark, t, {"v_set": "v IS NOT NULL"})
+    assert len(calls) == 1
+    monkeypatch.undo()
+    assert sorted(map(tuple, txlog.read_version(spark, t).collect())) == [
+        (1, "A"),
+        (2, "B"),
+        (3, "c"),
+    ]
+    assert txlog.table_metadata(t)["constraints"] == {"v_set": "v IS NOT NULL"}
+
+
+def test_dml_and_feeds_under_url_encoded_table_path(spark, tmp_path):
+    """Spark records ``_metadata.file_path`` URL-encoded (``a b%c#d`` as
+    ``a%20b%25c%23d``). The touched-file probe and the feed's
+    deletion-vector match must decode it: otherwise DELETE and MERGE
+    touch no file (the row survives, the upsert duplicates its key),
+    ``apply_batch`` rewrites nothing, and a DV'd feed refuses."""
+    from change_data_capture_spark.streaming.scd2_stream import (
+        Scd2State,
+        apply_batch,
+    )
+
+    root = tmp_path / "a b%c#d"
+    t = str(root / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(
+            _df(spark, [(1, "a"), (2, "b"), (3, "c")]), t, stats_cols=["id"]
+        ),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    _, touched = txlog.delete_where(spark, t, "id = 2", stats_cols=["id"])
+    assert len(touched) == 1
+    txlog.merge_into(spark, t, _df(spark, [(1, "A")]), "id", stats_cols=["id"])
+    assert sorted(map(tuple, txlog.read_version(spark, t).collect())) == [
+        (1, "A"),
+        (3, "c"),
+    ]
+    # a merge-on-read DELETE, read back by the batch and the streaming feed
+    v, _ = txlog.delete_where(
+        spark, t, "id = 3", stats_cols=["id"], dv_fraction_threshold=1.0
+    )
+    assert txlog._dv_map(txlog._resolve(t, v)[0])
+    batch = [
+        (r["_change_type"], r["id"], r["v"])
+        for r in txlog.table_changes(spark, t, v, v).collect()
+    ]
+    assert batch == [("delete", 3, "c")]
+    streamed = _drain_cdf_stream(
+        spark, t, v, "cdf_encoded_path", str(root / "ckpt")
+    )
+    assert [(r["_change_type"], r["id"], r["v"]) for r in streamed] == batch
+
+    # the SCD2 merge takes the same probe: a touching batch rewrites
+    ws = str(root / "scd2")
+    state = Scd2State(spark, ws)
+    ddl = (
+        "id long, name string, description string, price decimal(10,2), "
+        "lsn long, ts_ms long"
+    )
+    apply_batch(state, spark.createDataFrame([(5, "n", "d", None, 51, 1000)], ddl))
+    apply_batch(state, spark.createDataFrame([(5, "m", "d", None, 52, 2000)], ddl))
+    (c1,) = txlog._commits(ws, 1, 1)
+    assert c1["remove"]
+    assert state.read().count() == 2
+
+
+def test_optimize_commit_feeds_no_change(spark, tmp_path):
+    """An OPTIMIZE commit moves rows and changes none (Delta's
+    ``dataChange=false``): both feeds skip it. A table holding a NULL-key
+    row and a duplicated key would otherwise feed an unpaired
+    delete/insert and fail the duplicate-key guard."""
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(
+            _df(spark, [(None, "ghost"), (1, "a"), (1, "a2"), (2, "b")]), t
+        ),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    v = txlog.optimize(spark, t)
+    assert v == 1 and txlog.history(t)[-1]["operation"] == "OPTIMIZE"
+    feed = txlog.table_changes(spark, t, v, v)
+    assert feed.collect() == []
+    assert feed.columns == [
+        "id", "v", "_change_type", "_commit_version", "_operation",
+    ]
+    assert _drain_cdf_stream(spark, t, v, "cdf_optimize", str(tmp_path / "ck")) == []
 
 
 def test_stream_cdf_checkpoint_restart_continues(spark, tmp_path):
