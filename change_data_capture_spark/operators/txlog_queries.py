@@ -876,8 +876,8 @@ def txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDF_UPD_LO, _CDF_UPD_HI = 100, 299
-_CDF_DEL_LO, _CDF_DEL_HI = 400, 499
+_CDF_UPD_LO, _CDF_UPD_HI = 20, 99
+_CDF_DEL_LO, _CDF_DEL_HI = 150, 199
 
 # The feed the gate must produce: v1 = UPDATE pre/post image pairs for
 # every row the SET actually changed (a no-op image — price*1.10 == price

@@ -100,7 +100,7 @@ import urllib.parse
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.types import IntegerType, StringType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 _LOG_SUBDIR = "_txlog"
 
@@ -111,6 +111,32 @@ _CDF_META_FIELDS = (
     ("_commit_version", IntegerType()),
     ("_operation", StringType()),
 )
+
+
+def _cdf_schema(base):
+    """The change feed's schema: ``base`` (a DDL string or a
+    ``StructType``) with :data:`_CDF_META_FIELDS` appended. A base whose
+    data already uses a reserved name would duplicate an output name —
+    refused up front."""
+    names = (
+        [n for n, _ in _ddl_fields(base)]
+        if isinstance(base, str)
+        else base.fieldNames()
+    )
+    clash = {n for n, _ in _CDF_META_FIELDS} & set(names)
+    if clash:
+        raise ValueError(
+            f"the change feed reserves column names {sorted(clash)}; the "
+            "table's data already uses them — rename before reading the "
+            "feed"
+        )
+    if isinstance(base, str):
+        return base + "".join(
+            f", {n} {t.simpleString()}" for n, t in _CDF_META_FIELDS
+        )
+    return StructType(
+        list(base.fields) + [StructField(n, t) for n, t in _CDF_META_FIELDS]
+    )
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1238,7 +1264,7 @@ def _nullability_norm(dt):
     struct as non-null-elements while the stored column (parquet default)
     is nullable-elements; store assignment must treat those as the SAME
     type (Spark's own ANSI policy ignores nullability for compatibility)."""
-    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+    from pyspark.sql.types import ArrayType, MapType
 
     if isinstance(dt, ArrayType):
         return ArrayType(_nullability_norm(dt.elementType), True)
@@ -2404,8 +2430,6 @@ def table_changes(
     read per-operation change rows off the wire log
     (``/root/reference/README.md:86-125``); this is the same feed
     recovered from the TABLE's own history, no wire log needed."""
-    from pyspark.sql.types import StructType
-
     from change_data_capture_spark.sources import txlog_stream
 
     ts_stamps = (
@@ -2445,20 +2469,15 @@ def table_changes(
         )
     parts = txlog_stream._cdf_partitions(table_dir, start_version - 1, end, key)
     snap = _resolve(table_dir, end)
-    declared = (snap[2] or {}).get("schema")
     # the feed's meta columns live in the Delta-style underscore
-    # namespace; a table whose DATA already uses one would duplicate an
-    # output name — refuse up front. With a declared schema the column set
-    # IS the declaration (no file opened); without one, EVERY file the
-    # range's parts read is probed (footer-only reads, bounded by the
-    # range's churn) and their unified footer schema types the feed: a
-    # reserved name can hide in any file of a multi-file commit
-    if declared is not None:
-        schema = declared + "".join(
-            f", {n} {t.simpleString()}" for n, t in _CDF_META_FIELDS
-        )
-        data_columns = {n for n, _ in _ddl_fields(declared)}
-    else:
+    # namespace (:func:`_cdf_schema` refuses a table whose data uses one).
+    # With a declared schema the column set IS the declaration (no file
+    # opened); without one, EVERY file the range's parts read is probed
+    # (footer-only reads, bounded by the range's churn) and their unified
+    # footer schema types the feed: a reserved name can hide in any file
+    # of a multi-file commit
+    base = (snap[2] or {}).get("schema")
+    if base is None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -2476,17 +2495,7 @@ def table_changes(
         base = from_arrow_schema(
             pa.unify_schemas([pq.read_schema(p) for p in paths])
         )
-        schema = StructType(list(base.fields))
-        for n, t in _CDF_META_FIELDS:
-            schema = schema.add(n, t)
-        data_columns = set(base.fieldNames())
-    clash = {n for n, _ in _CDF_META_FIELDS} & data_columns
-    if clash:
-        raise ValueError(
-            f"table_changes reserves column names {sorted(clash)}; "
-            "the table's data already uses them — rename before "
-            "reading the feed"
-        )
+    schema = _cdf_schema(base)
     if not parts:
         # no change in the range: an EMPTY feed in the end-version schema
         # (Delta contract — "no changes" is a row count, not an error);

@@ -10,19 +10,28 @@ one integer, O(1), instead of a content-addressed file list that grows
 with segment count. Everything exactly-once falls out of log
 immutability:
 
-- A micro-batch is the set of files ADDED by commits
-  ``(start.version .. end.version]``; ``partitions(start, end)`` plans
-  one ``InputPartition`` per such file from log metadata alone.
+- A micro-batch is commits ``(start.version .. end.version]``, planned
+  from log metadata alone by the ONE planner every ``cdc_txlog`` read
+  shares (:func:`_cdf_partitions`): an append plans one
+  ``InputPartition`` per added file, and each stance is a policy over
+  the range's change commits. Every partition reads its files through
+  the one arrow file read (:func:`_read_data_file` + :func:`_apply_dv`),
+  so pre-evolution files null-fill the declared schema's newer columns
+  in every stance.
 - Replanning a committed range is bit-identical — commits and data
   files are both immutable once published, so checkpoint recovery
   re-reads exactly the same rows (pinned in ``tests/test_txlog.py``).
 - The source is APPEND-ONLY by default, like Delta's streaming source:
-  a commit carrying ``remove`` actions in the consumed range raises
-  instead of silently emitting rewritten rows twice or dropping
-  retractions the sink never sees. ``.option("skipChangeCommits",
-  "true")`` opts into Delta's documented escape hatch — data-changing
-  commits are skipped WHOLE (their adds carry re-images of
-  already-emitted rows) and the stream continues over later appends.
+  a commit carrying ``remove`` actions (or an add re-referencing a file
+  under a deletion vector) in the consumed range raises instead of
+  silently emitting rewritten rows twice or dropping retractions the
+  sink never sees. OPTIMIZE commits are passed over: they move rows and
+  change none (Delta marks them ``dataChange=false``).
+  ``.option("skipChangeCommits", "true")`` opts into Delta's documented
+  escape hatch — data-changing commits are skipped WHOLE (their adds
+  carry re-images of already-emitted rows) and the stream continues
+  over later appends. The append-only stances stream the data columns
+  only, so a data column named like a CDF meta column still streams.
 - ``.option("readChangeFeed", "true")`` is the third stance (Delta's
   streaming CDF): data-changing commits are FORWARDED as change rows —
   ``insert`` / ``delete`` / ``update_preimage`` / ``update_postimage``
@@ -67,19 +76,19 @@ immutability:
   before the source sees a batch).
 
 Scale: the reader is the PARTITION-BASED ``DataSourceStreamReader`` —
-``partitions(start, end)`` plans one ``InputPartition`` per file added in
-the consumed commit range (driver-side, metadata only), and ``read``
-executes on EXECUTORS, one pyarrow parquet read per partition. Rows never
-flow through the driver (the ``SimpleDataSourceStreamReader`` alternative
-routes every row driver-side — measured 55 s at 100× on the same gate
-query vs 35 s partitioned, and the residual is the gate's own 3× slice
-writes, not the read). The whole micro-batch therefore scales like
-any distributed parquet scan, while the offset stays one integer.
-In CDF mode an append version still plans one partition per added file;
-a data-changing version plans ONE partition carrying its remove/add
-sides — the diff needs that commit's churn co-located, and a
-copy-on-write/DV commit's churn is delta-sized by construction
-(O(churned files) per version, batch or streaming).
+``partitions(start, end)`` plans the consumed commit range driver-side
+from log metadata, and ``read`` executes on EXECUTORS, one pyarrow read
+per partition, so rows never flow through the driver and a micro-batch
+scales like any distributed parquet scan while the offset stays one
+integer. An append version plans one partition per added file; in CDF
+mode a data-changing version plans ONE partition carrying its
+remove/add sides — the diff needs that commit's churn co-located, and
+a copy-on-write/DV commit's churn is delta-sized by construction
+(O(churned files) per version, batch or streaming). Planning opens only
+the range's commit files unless a CDF diff needs the deletion-vector
+state below its commit, which is resolved once, at the first such
+commit — so per-batch planning of an append stream does not grow with
+the log's age.
 """
 
 from __future__ import annotations
@@ -97,59 +106,12 @@ from pyspark.sql.types import StructType
 from change_data_capture_spark.sources import txlog
 
 
-def _added_files(
-    table_dir: str,
-    from_v: int,
-    to_v: int,
-    skip_change_commits: bool = False,
-) -> list[str]:
-    """Files added by commits ``(from_v .. to_v]``, in commit order.
-    Raises on any ``remove`` action in the range — this source is
-    append-only (Delta streaming-source contract: data-changing commits
-    are an error unless the reader opts into skipping them). With
-    ``skip_change_commits`` (Delta's ``skipChangeCommits``) a
-    data-changing commit is skipped WHOLE — its adds too, because a
-    rewrite's added files carry updated images of rows the stream
-    already emitted (forwarding them double-counts; forwarding only
-    their changed rows is the CDF reader's job, not this one's)."""
-    out: list[str] = []
-    for c in txlog._commits(table_dir, from_v + 1, to_v):
-        # an add action CARRYING a deletion vector is not a pure append
-        # either: it re-references a file whose rows the stream already
-        # emitted (a RESTORE re-adding a DV'd action is the add-only
-        # case) — reading it raw would re-emit rows, reading it DV'd
-        # would still double-count the survivors
-        dv_adds = any(
-            isinstance(a, dict) and a.get("dv") for a in c["add"]
-        )
-        if c["remove"] or dv_adds:
-            if skip_change_commits:
-                continue
-            raise ValueError(
-                f"txlog stream source: commit {c['version']} rewrites data "
-                "(remove actions or deletion-vector re-references "
-                "present); the streaming source is "
-                "append-only — compact/merge on a downstream copy, "
-                "restart the stream from the rewritten snapshot, opt "
-                "into .option('skipChangeCommits', 'true'), or read "
-                "the change rows with .option('readChangeFeed', 'true')"
-            )
-        out.extend(txlog._action_path(a) for a in c["add"])
-    return out
-
-
-class _AddedFile(InputPartition):
-    """One data file added by a consumed commit — the unit of executor
-    parallelism for a micro-batch."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-
 class _CdfInsert(InputPartition):
-    """CDF mode: one file added by an append commit — feeds pure
-    ``insert`` rows (``dv_dir`` set when the action carries a deletion
-    vector, e.g. a restored DV action re-entering as an add)."""
+    """One file added by an append commit — the unit of executor
+    parallelism for appends in every stance: pure ``insert`` rows in CDF
+    mode, plain data rows otherwise (``dv_dir`` set when the action
+    carries a deletion vector, e.g. a restored DV action re-entering as
+    an add; only the CDF stance plans such a file)."""
 
     def __init__(self, path: str, version: int, op: str | None, dv_dir: str | None):
         self.path = path
@@ -458,55 +420,78 @@ def _diff_commit(part: _CdfDiff, fields):
 
 
 def _sides(part) -> list[tuple[str, str | None]]:
-    """The ``(data file, DV sidecar | None)`` pairs a CDF part reads."""
+    """The ``(data file, DV sidecar | None)`` pairs a part reads."""
     if isinstance(part, _CdfInsert):
         return [(part.path, part.dv_dir)]
     return part.pre + part.post
 
 
+def _dv_path(action) -> str | None:
+    """The deletion-vector sidecar an add action carries, or None."""
+    dv = action.get("dv") if isinstance(action, dict) else None
+    return dv["path"] if dv else None
+
+
 def _cdf_partitions(
-    table_dir: str, start_v: int, end_v: int, key: str
+    table_dir: str, start_v: int, end_v: int, key: str, changes: str = "feed"
 ) -> list[InputPartition]:
-    """Plan the change feed of commits ``(start_v .. end_v]`` — the one
-    CDF planner, behind the stream's ``readChangeFeed`` micro-batches and
-    the batch :func:`txlog.table_changes` alike. One pass folds the
-    deletion-vector state on from the snapshot at ``start_v``, so each
-    side of a diffed commit reads under ITS version's DV state (the
-    remove side before the commit, the add side after it): a DV DELETE —
-    the same file re-referenced with a bigger vector — feeds exactly its
-    newly-deleted rows. An append plans one :class:`_CdfInsert` per added
-    file, a data-changing commit ONE :class:`_CdfDiff` carrying its
-    churn, a metadata-only commit nothing. OPTIMIZE commits plan nothing
-    either: they move rows and change none (Delta marks them
-    ``dataChange=false``), and diffing one would load the whole table
-    into one task. Files vacuum already reclaimed fail here, at planning
-    (:func:`_check_not_vacuumed`)."""
-    state = (
-        {txlog._action_path(a): a for a in txlog._resolve(table_dir, start_v)[0]}
-        if start_v >= 0
-        else {}
-    )
+    """Plan commits ``(start_v .. end_v]`` — the one planner of every
+    ``cdc_txlog`` read: the stream in each stance and the batch change
+    feed behind :func:`txlog.table_changes`. An append plans one
+    :class:`_CdfInsert` per added file, a metadata-only commit nothing.
+    OPTIMIZE commits plan nothing either: they move rows and change none
+    (Delta marks them ``dataChange=false``), and diffing one would load
+    the whole table into one task. A CHANGE commit — one with removes, or
+    an add carrying a deletion vector (it re-references rows already
+    served) — follows the ``changes`` stance: ``"feed"`` (the change
+    feed) plans a data-changing commit as ONE :class:`_CdfDiff` carrying
+    its churn, ``"skip"`` (``skipChangeCommits``) drops the commit whole,
+    and ``"raise"`` (the append-only stream) refuses it.
 
-    def dv_of(p: str) -> str | None:
-        a = state.get(p)
-        dv = a.get("dv") if isinstance(a, dict) else None
-        return dv["path"] if dv else None
-
+    Each side of a diff reads under ITS version's deletion-vector state
+    (the remove side before the commit, the add side after it), so a DV
+    DELETE — the same file re-referenced with a bigger vector — feeds
+    exactly its newly-deleted rows. An add takes its DV from its own
+    action; the snapshot below a commit is resolved, and folded on from
+    there, only when the first remove side needs it, so an append range
+    opens only its own commit files. Files vacuum already reclaimed fail
+    here, at planning (:func:`_check_not_vacuumed`) — after the stance,
+    so a skipped commit's files are never stat'ed."""
+    state: dict | None = None  # {path: action}, seeded at the first remove side
     parts: list[InputPartition] = []
     for c in txlog._commits(table_dir, start_v + 1, end_v):
         v, op = c["version"], c.get("operation")
-        removes = list(c.get("remove") or ())
-        pre = [(p, dv_of(p)) for p in removes]
-        txlog._fold(state, c)
-        if op == "OPTIMIZE":
-            continue
-        post = [
-            (p, dv_of(p)) for p in map(txlog._action_path, c.get("add") or ())
-        ]
-        if removes:
+        adds = c.get("add") or ()
+        removes = c.get("remove") or ()
+        change = bool(removes) or any(map(_dv_path, adds))
+        if op == "OPTIMIZE" or (change and changes == "skip"):
+            pass
+        elif change and changes == "raise":
+            raise ValueError(
+                f"txlog stream source: commit {v} rewrites data "
+                "(remove actions or deletion-vector re-references "
+                "present); the streaming source is "
+                "append-only — compact/merge on a downstream copy, "
+                "restart the stream from the rewritten snapshot, opt "
+                "into .option('skipChangeCommits', 'true'), or read "
+                "the change rows with .option('readChangeFeed', 'true')"
+            )
+        elif removes:
+            if state is None:
+                state = {
+                    txlog._action_path(a): a
+                    for a in (txlog._resolve(table_dir, v - 1)[0] if v else ())
+                }
+            pre = [(p, _dv_path(state.get(p))) for p in removes]
+            post = [(txlog._action_path(a), _dv_path(a)) for a in adds]
             parts.append(_CdfDiff(v, op, key, pre, post))
         else:
-            parts.extend(_CdfInsert(p, v, op, dv) for p, dv in post)
+            parts.extend(
+                _CdfInsert(txlog._action_path(a), v, op, _dv_path(a))
+                for a in adds
+            )
+        if state is not None:
+            txlog._fold(state, c)
     _check_not_vacuumed(
         [x for part in parts for pair in _sides(part) for x in pair if x],
         start_v,
@@ -519,15 +504,20 @@ class _TxlogRead:
     """``read`` shared by the streaming and the batch reader: one pyarrow
     read per partition on an EXECUTOR, handed to Spark as Arrow
     RecordBatches (the DataSource API takes them directly, so the read
-    stays columnar end to end). Subclasses set ``schema_`` and ``meta``
-    (the table metadata whose column mapping the files are read with)."""
+    stays columnar end to end). Subclasses set ``schema_``, ``meta``
+    (the table metadata whose column mapping the files are read with)
+    and ``read_change_feed`` (CDF rows with meta columns, or plain data
+    rows)."""
 
     def _data_fields(self):
-        """``(logical, physical, arrow type)`` of the DATA columns (CDF
-        meta columns excluded — the reader appends them itself)."""
+        """``(logical, physical, arrow type)`` of the DATA columns (in CDF
+        mode the meta columns are excluded — the reader appends them
+        itself)."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        reserved = {n for n, _ in txlog._CDF_META_FIELDS}
+        reserved = (
+            {n for n, _ in txlog._CDF_META_FIELDS} if self.read_change_feed else ()
+        )
         mapped = txlog._mapping_of(self.meta)
         return [
             (
@@ -540,27 +530,19 @@ class _TxlogRead:
         ]
 
     def read(self, partition):
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _AddedFile):
-            names = self.schema_.fieldNames()
-            yield from pq.read_table(partition.path, columns=names).to_batches()
-            return
         fields = self._data_fields()
         if isinstance(partition, _CdfDiff):
             tbl = _diff_commit(partition, fields)
         else:
-            tbl = _with_meta(
-                _apply_dv(
-                    _read_data_file(partition.path, fields),
-                    partition.path,
-                    partition.dv_dir,
-                ),
-                fields,
-                "insert",
-                partition.version,
-                partition.op,
+            tbl = _apply_dv(
+                _read_data_file(partition.path, fields),
+                partition.path,
+                partition.dv_dir,
             )
+            if self.read_change_feed:
+                tbl = _with_meta(
+                    tbl, fields, "insert", partition.version, partition.op
+                )
         yield from tbl.to_batches()
 
 
@@ -575,12 +557,11 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
         self.schema_ = schema
         self.table_dir = _required_path(options)
         # column mapping: a table whose columns were RENAMED or DROPPED
-        # reads through a logical→physical projection the streaming
-        # reader does not perform (its per-file arrow reads are keyed by
-        # the declared names) — refuse up front, Delta's own restriction
-        # ("streaming reads from a table with column mapping changes are
-        # unsupported"). An identity mapping (enabled, nothing renamed
-        # yet) is harmless and allowed.
+        # is refused up front, Delta's own restriction ("streaming reads
+        # from a table with column mapping changes are unsupported") — a
+        # rename would change the columns a running query serves. An
+        # identity mapping (enabled, nothing renamed yet) is harmless and
+        # allowed.
         self.meta = meta = txlog.table_metadata(self.table_dir) or {}
         mapping = meta.get("column_mapping") or {}
         if any(l != p for l, p in mapping.items()) or meta.get(
@@ -593,18 +574,19 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
                 "snapshot read instead, or restart the pipeline on a "
                 "rewritten copy"
             )
-        self.skip_change_commits = (
-            str(_opt(options, "skipChangeCommits", "false")).lower() == "true"
-        )
+        skip = str(_opt(options, "skipChangeCommits", "false")).lower() == "true"
         self.read_change_feed = (
             str(_opt(options, "readChangeFeed", "false")).lower() == "true"
         )
-        if self.read_change_feed and self.skip_change_commits:
+        if self.read_change_feed and skip:
             raise ValueError(
                 "cdc_txlog source: readChangeFeed and skipChangeCommits "
                 "are mutually exclusive — the CDF reader FORWARDS change "
                 "commits, skipChangeCommits drops them"
             )
+        self.changes = (
+            "feed" if self.read_change_feed else "skip" if skip else "raise"
+        )
         self.cdf_key = _opt(options, "cdfKey", "id")
         sv = _opt(options, "startingVersion")
         st = _opt(options, "startingTimestamp")
@@ -698,13 +680,9 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
         # bind the admission-control base to the batch being planned:
         # the next latestOffset caps relative to this batch's end
         self._consumed = end_v
-        if not self.read_change_feed:
-            files = _added_files(
-                self.table_dir, start_v, end_v, self.skip_change_commits
-            )
-            _check_not_vacuumed(files, start_v, end_v)
-            return [_AddedFile(p) for p in files]
-        return _cdf_partitions(self.table_dir, start_v, end_v, self.cdf_key)
+        return _cdf_partitions(
+            self.table_dir, start_v, end_v, self.cdf_key, self.changes
+        )
 
     def commit(self, end: dict) -> None:
         # offsets are derived from the immutable log; nothing to release,
@@ -720,6 +698,8 @@ class TxlogChangeFeedReader(_TxlogRead, DataSourceReader):
     ``read`` as the stream. The files are read with the END version's
     column mapping, so a renamed column keeps serving its bytes under
     its END-version name."""
+
+    read_change_feed = True
 
     def __init__(self, schema: StructType, options: dict):
         self.schema_ = schema
@@ -773,13 +753,10 @@ class TxlogStreamDataSource(DataSource):
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
         ev = _opt(self.options, "endingVersion")
-        declared = (
+        base = (
             txlog.table_metadata(table_dir, None if ev is None else int(ev)) or {}
         ).get("schema")
-        cdf = str(_opt(self.options, "readChangeFeed", "false")).lower() == "true"
-        if declared is not None:
-            names = [n for n, _ in txlog._ddl_fields(declared)]
-        else:
+        if base is None:
             files = txlog.snapshot_files(table_dir)
             if not files:
                 raise ValueError(
@@ -792,25 +769,10 @@ class TxlogStreamDataSource(DataSource):
             from pyspark.sql.pandas.types import from_arrow_schema
 
             base = from_arrow_schema(pq.read_schema(files[0]))
-            names = base.fieldNames()
-        if not cdf:
-            # a DDL string is accepted by the DataSource API
-            return declared if declared is not None else base
-        clash = {n for n, _ in txlog._CDF_META_FIELDS} & set(names)
-        if clash:
-            raise ValueError(
-                f"readChangeFeed reserves column names {sorted(clash)}; "
-                "the table's data already uses them — rename before "
-                "streaming the feed"
-            )
-        if declared is not None:
-            return declared + "".join(
-                f", {n} {t.simpleString()}" for n, t in txlog._CDF_META_FIELDS
-            )
-        out = StructType(list(base.fields))
-        for n, t in txlog._CDF_META_FIELDS:
-            out = out.add(n, t)
-        return out
+        # a DDL string is accepted by the DataSource API
+        if str(_opt(self.options, "readChangeFeed", "false")).lower() == "true":
+            return txlog._cdf_schema(base)
+        return base
 
     def streamReader(self, schema: StructType):
         return TxlogStreamReader(schema, self.options)

@@ -2314,10 +2314,10 @@ def streaming_txlog_source_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract: a rewrite commit in the consumed range raises rather than
     double-emitting rewritten rows).
 
-    Scale: the simple reader routes rows through the driver (Spark's
-    stated fit: control-plane/low-volume sources); the scale path is the
-    partition-based reader with one InputPartition per added file —
-    same offsets, executor-side reads. The downstream state is
+    Scale: the source is the partition-based reader — the driver plans
+    one InputPartition per added file from the consumed commits alone,
+    and executors read the files (the change feed's arrow file read), so
+    no row passes through the driver. The downstream state is
     op-cardinality-sized, the classic streaming-agg footprint."""
     import uuid as _uuid
 

@@ -31,6 +31,11 @@ from tests.test_scd2_stream import _max_job_id
         "streaming_python_datasource_drain",
         "streaming_anomaly_zscore_ttl",
         "streaming_sink_orc_roundtrip",
+        "streaming_txlog_source_feed",
+        "streaming_txlog_skip_change_commits",
+        "streaming_txlog_rate_limit",
+        "streaming_txlog_rate_limit_bytes",
+        "streaming_txlog_cdf_feed",
     ],
 )
 def test_streaming_oracle_parity(spark, sf_dir, name):

@@ -2303,7 +2303,6 @@ def test_stream_append_only_refuses_dv_rereference_adds(spark, tmp_path):
     skip it whole, and the CDF reader remains the forwarding path."""
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamReader,
-        _added_files,
     )
 
     t = str(tmp_path / "t")
@@ -2332,14 +2331,14 @@ def test_stream_append_only_refuses_dv_rereference_adds(spark, tmp_path):
 
         payload = _json.load(f)
     assert payload["remove"] == [] and payload["add"]  # the add-only shape
-    with pytest.raises(ValueError, match="deletion-vector re-references"):
-        _added_files(t, 2, 3)
-    assert _added_files(t, 2, 3, skip_change_commits=True) == []
-    # and the restored tip still batch-reads correctly (2 live rows)
-    assert txlog.read_version(spark, t).count() == 2
-    # option parsing path: the reader object enforces the same contract
     schema = spark.createDataFrame([], "id long, v string").schema
     strict = TxlogStreamReader(schema, {"path": t})
+    with pytest.raises(ValueError, match="deletion-vector re-references"):
+        strict.partitions({"version": 2}, {"version": 3})
+    skip = TxlogStreamReader(schema, {"path": t, "skipChangeCommits": "true"})
+    assert skip.partitions({"version": 2}, {"version": 3}) == []
+    # and the restored tip still batch-reads correctly (2 live rows)
+    assert txlog.read_version(spark, t).count() == 2
     with pytest.raises(ValueError, match="append-only"):
         strict.partitions({"version": 2}, {"version": 3})
 
@@ -2895,6 +2894,159 @@ def test_stream_vacuumed_horizon_fails_at_planning(spark, tmp_path):
     cdf = TxlogStreamReader(schema, {"path": t, "readchangefeed": "true"})
     with pytest.raises(ValueError, match="vacuumed"):
         cdf.partitions({"version": 0}, {"version": 1})
+    # a skipped commit's vacuumed pre-image is never stat'ed
+    skip = TxlogStreamReader(schema, {"path": t, "skipChangeCommits": "true"})
+    assert skip.partitions({"version": 0}, {"version": 1}) == []
+
+
+def test_txlog_cdf_ops_oracle_parity(spark, sf_dir):
+    """The batch change feed over the gate's UPDATE and DELETE commits
+    matches its DuckDB oracle."""
+    import __spark_entry__ as entrymod
+    from tests.oracle import compare
+
+    compare(
+        "txlog_cdf_ops", spark, sf_dir, entrymod.queries(), entrymod.oracle_sql()
+    )
+
+
+def _drain_append_stream(spark, t, name, ckpt):
+    """Run an append-only stream from version 0 to the tip (availableNow)
+    into a memory sink and return its rows."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamDataSource,
+    )
+
+    spark.dataSource.register(TxlogStreamDataSource)
+    q = (
+        spark.readStream.format("cdc_txlog")
+        .option("path", t)
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def test_stream_append_only_reads_evolved_schema(spark, tmp_path):
+    """The append-only stream reads files through the feed's file read:
+    over a table whose declared schema evolved, pre-evolution files
+    null-fill the new column, and a data column named like a feed meta
+    column (``_operation``) streams as data — only the CDF stance
+    reserves those names."""
+    t = str(tmp_path / "t")
+    txlog.commit(t, add=[], expected_version=0,
+                 metadata={"schema": "id BIGINT, _operation STRING"})
+    old = spark.createDataFrame([(1, "old")], "id long, _operation string")
+    txlog.commit(t, add=txlog.validated_write(old, t), expected_version=1)
+    new = spark.createDataFrame(
+        [(2, "new", 7)], "id long, _operation string, b int"
+    )
+    txlog.commit(
+        t,
+        add=txlog.validated_write(new, t, evolve=True),
+        expected_version=2,
+        metadata={"schema": "id BIGINT, _operation STRING, b INT"},
+    )
+    got = _drain_append_stream(spark, t, "append_evolved", str(tmp_path / "ck"))
+    assert [tuple(r) for r in sorted(got)] == [(1, "old", None), (2, "new", 7)]
+    assert got[0].__fields__ == ["id", "_operation", "b"]
+
+
+def test_stream_append_only_passes_over_optimize(spark, tmp_path):
+    """An OPTIMIZE commit moves rows and changes none (Delta's
+    ``dataChange=false``): the append-only stream plans nothing for it
+    and does not raise, and the appends around it stream exactly once."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamReader,
+    )
+
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, [(1, "a"), (2, "b")]).repartition(2), t),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    txlog.commit(t, add=txlog.write_files(_df(spark, [(3, "c")]), t),
+                 expected_version=1, operation="WRITE")
+    assert txlog.optimize(spark, t) == 2
+    txlog.commit(t, add=txlog.write_files(_df(spark, [(4, "d")]), t),
+                 expected_version=3, operation="WRITE")
+    schema = spark.createDataFrame([], "id long, v string").schema
+    strict = TxlogStreamReader(schema, {"path": t})
+    assert strict.partitions({"version": 1}, {"version": 2}) == []
+    got = sorted(
+        tuple(row.values())
+        for p in strict.partitions({"version": -1}, {"version": 3})
+        for batch in strict.read(p)
+        for row in batch.to_pylist()
+    )
+    assert got == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+
+
+def test_append_range_plans_from_its_own_commits(spark, tmp_path, monkeypatch):
+    """Planning an append range opens only the range's commit files, in
+    every stance: the planner seeds its deletion-vector state lazily, at
+    the first commit that needs a remove side, so an append range never
+    resolves the snapshot below it. ``table_changes`` also resolves the
+    END version's metadata, which reads the log tail after the newest
+    checkpoint — with a checkpoint at the range's base, only the range."""
+    import builtins
+    import collections
+    import re
+
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamReader,
+    )
+
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, [(1, "a"), (2, "b")]), t),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    txlog.update_where(spark, t, "id = 1", {"v": "'A'"})  # v1: a rewrite
+    for v in range(2, 6):
+        txlog.commit(
+            t,
+            add=txlog.write_files(_df(spark, [(v + 10, "x")]).repartition(1), t),
+            expected_version=v,
+            operation="WRITE",
+        )
+    opens: collections.Counter = collections.Counter()
+    real_open = builtins.open
+    commit_file = re.compile(r"_txlog[/\\](\d{20})\.json$")
+
+    def counting_open(file, *args, **kwargs):
+        m = commit_file.search(str(file))
+        if m:
+            opens[int(m.group(1))] += 1
+        return real_open(file, *args, **kwargs)
+
+    schema = spark.createDataFrame([], "id long, v string").schema
+    stances = [{}, {"skipChangeCommits": "true"}, {"readChangeFeed": "true"}]
+    readers = [TxlogStreamReader(schema, {"path": t, **o}) for o in stances]
+    monkeypatch.setattr(builtins, "open", counting_open)
+    for reader in readers:
+        opens.clear()
+        parts = reader.partitions({"version": 2}, {"version": 5})
+        assert len(parts) == 3
+        assert sorted(opens) == [3, 4, 5] and max(opens.values()) == 1, opens
+    monkeypatch.undo()
+    txlog.write_checkpoint(t, 2)
+    monkeypatch.setattr(builtins, "open", counting_open)
+    opens.clear()
+    txlog.table_changes(spark, t, 3, 5)
+    monkeypatch.undo()
+    assert sorted(opens) == [3, 4, 5], opens
 
 
 def test_column_mapping_rename_drop_metadata_only(spark, tmp_path):
