@@ -96,6 +96,7 @@ import contextlib
 import json
 import logging
 import os
+import pickle
 import urllib.parse
 import uuid
 
@@ -236,10 +237,7 @@ def commit(
         path = _commit_path(table_dir, version)
         tmp = f"{path}.{uuid.uuid4().hex}.tmp"
         try:
-            with open(tmp, "w") as f:
-                f.write(body)
-                f.flush()
-                os.fsync(f.fileno())
+            _write_synced(tmp, body)
             try:
                 os.link(tmp, path)  # atomic + exclusive, full content
                 won = True
@@ -275,15 +273,7 @@ def commit(
                             ) from None
                         continue  # append: rebase on the new tip and retry
                     raise  # EPERM/EXDEV/...: surface, finally sweeps tmp
-            # Durability: fsync the LOG DIRECTORY so the new entry (not
-            # just its content) survives power loss — without this a
-            # crash can silently lose the newest commit after commit()
-            # already returned.
-            dfd = os.open(_log_dir(table_dir), os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            _sync_dir(_log_dir(table_dir))
             return version
         finally:
             # every exit path (publish, lost race retry, serialization or
@@ -291,6 +281,26 @@ def commit(
             # still strand one, which vacuum() sweeps from _txlog/
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
+
+
+def _write_synced(path: str, body: str) -> None:
+    """Write ``body`` to a private temp file and fsync it, so the name a
+    caller publishes next can never point at empty or partial content."""
+    with open(path, "w") as f:
+        f.write(body)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def _sync_dir(path: str) -> None:
+    """fsync a directory, so a name just published in it (not only the
+    file's content) survives power loss — without this a crash can
+    silently lose an entry its writer already reported."""
+    dfd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 def _checkpoint_path(table_dir: str, version: int) -> str:
@@ -380,17 +390,17 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> int:
     actions, txns, meta, version = _resolve(table_dir, version)
     path = _checkpoint_path(table_dir, version)
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "actions": actions,
-                "txn_app_versions": txns,
-                "metadata": meta,
-            },
-            f,
-        )
+    body = json.dumps(
+        {
+            "version": version,
+            "actions": actions,
+            "txn_app_versions": txns,
+            "metadata": meta,
+        }
+    )
+    _write_synced(tmp, body)
     os.rename(tmp, path)  # atomic publish; idempotent (same fold content)
+    _sync_dir(_log_dir(table_dir))
     return version
 
 
@@ -2366,13 +2376,13 @@ def table_changes(
     namespace; a table whose data already uses a reserved meta name
     raises at plan build instead of silently colliding).
 
-    Every row is served by the txlog source's batch reader
-    (``spark.read.format("cdc_txlog")`` with ``readChangeFeed`` —
-    ``sources.txlog_stream``), the same planner and the same arrow diff
-    the streaming ``readChangeFeed`` runs, so batch and streaming feeds
-    cannot drift. Per version the feed is a key diff of the REMOVED
-    files (the pre-image side) against the ADDED files (the post-image
-    side):
+    The range is planned once, on the driver, by the planner the
+    streaming ``readChangeFeed`` runs (``sources.txlog_stream``); one row
+    per planned part goes into a local DataFrame, and ``mapInArrow``
+    reads each part through the stream's own per-part read and arrow
+    diff, so batch and streaming feeds cannot drift. Per version the
+    feed is a key diff of the REMOVED files (the pre-image side) against
+    the ADDED files (the post-image side):
 
     - add-only commit (append / initial WRITE): every added row is an
       ``insert`` — no diff;
@@ -2389,8 +2399,9 @@ def table_changes(
     Deletion-vector commits diff the same way — each side reads under
     ITS version's DV state, so a DV DELETE feeds exactly the
     newly-deleted rows. Cost per version is O(churned files), never
-    O(table): an append plans one task per added file, a rewrite one
-    task carrying its churn, and versions stay independent tasks.
+    O(table): an append plans one part per added file, a rewrite one
+    part carrying its churn, and Spark slices the parts into at most
+    ``defaultParallelism`` tasks.
 
     The feed is served in the END version's declared schema (Delta CDF
     semantics: files written before an evolution null-fill the new
@@ -2398,7 +2409,9 @@ def table_changes(
     the END version's physical names). A table without a declared
     schema takes the unified parquet-footer schema of the range's files.
 
-    ``key`` must UNIQUELY identify rows within every DIFFED (rewrite)
+    ``key`` must be a data column of the feed (anything else raises
+    when the feed is built) and must UNIQUELY identify rows within every
+    DIFFED (rewrite)
     commit the way the table's DML used it (the same contract
     :func:`merge_into` places on its ``key``); a duplicated non-NULL key
     on either side of a diffed commit would cross-product into a
@@ -2496,19 +2509,23 @@ def table_changes(
             pa.unify_schemas([pq.read_schema(p) for p in paths])
         )
     schema = _cdf_schema(base)
-    if not parts:
-        # no change in the range: an EMPTY feed in the end-version schema
-        # (Delta contract — "no changes" is a row count, not an error);
-        # a Python source with zero partitions fails to plan
-        return spark.createDataFrame([], schema)
-    spark.dataSource.register(txlog_stream.TxlogStreamDataSource)
-    return (
-        spark.read.format("cdc_txlog")
-        .schema(schema)
-        .option("path", table_dir)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", start_version)
-        .option("endingVersion", end)
-        .option("cdfKey", key)
-        .load()
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    fields = txlog_stream._data_fields(schema, snap[2], True)
+    txlog_stream._check_key(key, fields)
+
+    def read(batches):
+        for b in batches:
+            for blob in b.column(0).to_pylist():
+                part = pickle.loads(blob)
+                yield from txlog_stream._read_part(part, fields, True).to_batches()
+
+    # one row per planned part, in at most defaultParallelism slices and
+    # never more slices than rows: an empty slice still costs a Python
+    # worker round trip. Zero rows read as the typed empty feed.
+    sc = spark.sparkContext
+    rows = sc.parallelize(
+        [(pickle.dumps(p),) for p in parts],
+        min(len(parts), sc.defaultParallelism) or 1,
     )
+    return spark.createDataFrame(rows, "part BINARY").mapInArrow(read, schema)

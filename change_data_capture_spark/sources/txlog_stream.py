@@ -44,14 +44,15 @@ immutability:
   AFTER it, waiting for future commits — Delta's streaming behavior),
   mutually exclusive with ``startingVersion``. ``.option("cdfKey",
   col)`` names the diff key (default ``id``), with a fail-loud
-  duplicate-key guard. Deletion-vector commits feed exactly their
+  duplicate-key guard; a key that is not a data column is refused when
+  the reader is built. Deletion-vector commits feed exactly their
   newly-deleted rows — each side of the per-commit diff applies ITS
-  version's DV state. The planner (:func:`_cdf_partitions`) and the
-  arrow diff (:func:`_diff_commit`) are the ONE change-feed
-  implementation: a batch ``spark.read.format("cdc_txlog")`` with
-  ``readChangeFeed`` (:class:`TxlogChangeFeedReader`) serves the same
-  rows over ``startingVersion .. endingVersion``, and
-  :func:`txlog.table_changes` reads through it.
+  version's DV state. The planner (:func:`_cdf_partitions`), the
+  per-part read (:func:`_read_part`) and the arrow diff
+  (:func:`_diff_commit`) are the ONE change-feed implementation: the
+  batch :func:`txlog.table_changes` plans its range with the same
+  planner and reads the parts with the same read through
+  ``mapInArrow`` — a batch range has no offsets, so it needs no source.
 - ``.option("maxFilesPerTrigger", N)`` is admission control (Delta's
   backpressure knob of the same name): ``latestOffset`` stops
   advancing at the version boundary where the cumulative added-file
@@ -84,11 +85,13 @@ integer. An append version plans one partition per added file; in CDF
 mode a data-changing version plans ONE partition carrying its
 remove/add sides — the diff needs that commit's churn co-located, and
 a copy-on-write/DV commit's churn is delta-sized by construction
-(O(churned files) per version, batch or streaming). Planning opens only
-the range's commit files unless a CDF diff needs the deletion-vector
-state below its commit, which is resolved once, at the first such
-commit — so per-batch planning of an append stream does not grow with
-the log's age.
+(O(churned files) per version, batch or streaming). The batch feed
+reads the same planned parts, sliced by Spark into at most
+``defaultParallelism`` tasks instead of one task per part. Planning
+opens only the range's commit files unless a CDF diff needs the
+deletion-vector state below its commit, which is resolved once, at the
+first such commit — so per-batch planning of an append stream does not
+grow with the log's age.
 """
 
 from __future__ import annotations
@@ -97,7 +100,6 @@ import os
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -107,11 +109,13 @@ from change_data_capture_spark.sources import txlog
 
 
 class _CdfInsert(InputPartition):
-    """One file added by an append commit — the unit of executor
-    parallelism for appends in every stance: pure ``insert`` rows in CDF
-    mode, plain data rows otherwise (``dv_dir`` set when the action
-    carries a deletion vector, e.g. a restored DV action re-entering as
-    an add; only the CDF stance plans such a file)."""
+    """One file added by an append commit — the stream's unit of
+    executor parallelism for appends in every stance (the batch feed
+    slices its parts into at most ``defaultParallelism`` tasks): pure
+    ``insert`` rows in CDF mode, plain data rows otherwise (``dv_dir``
+    set when the action carries a deletion vector, e.g. a restored DV
+    action re-entering as an add; only the CDF stance plans such a
+    file)."""
 
     def __init__(self, path: str, version: int, op: str | None, dv_dir: str | None):
         self.path = path
@@ -210,8 +214,9 @@ def _read_data_file(path: str, fields) -> "pyarrow.Table":  # noqa: F821
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    avail = set(pq.read_schema(path).names)
-    tbl = pq.read_table(path, columns=[p for _, p, _ in fields if p in avail])
+    with pq.ParquetFile(path) as f:
+        avail = set(f.schema_arrow.names)
+        tbl = f.read(columns=[p for _, p, _ in fields if p in avail])
     return pa.table(
         {
             n: tbl.column(p).cast(t) if p in avail else pa.nulls(len(tbl), t)
@@ -500,53 +505,48 @@ def _cdf_partitions(
     return parts
 
 
-class _TxlogRead:
-    """``read`` shared by the streaming and the batch reader: one pyarrow
-    read per partition on an EXECUTOR, handed to Spark as Arrow
-    RecordBatches (the DataSource API takes them directly, so the read
-    stays columnar end to end). Subclasses set ``schema_``, ``meta``
-    (the table metadata whose column mapping the files are read with)
-    and ``read_change_feed`` (CDF rows with meta columns, or plain data
-    rows)."""
+def _data_fields(schema: StructType, meta: dict | None, change_feed: bool):
+    """``(logical, physical, arrow type)`` of the DATA columns of
+    ``schema``, read under ``meta``'s column mapping (in change-feed mode
+    the meta columns are excluded — :func:`_read_part` appends them)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _data_fields(self):
-        """``(logical, physical, arrow type)`` of the DATA columns (in CDF
-        mode the meta columns are excluded — the reader appends them
-        itself)."""
-        from pyspark.sql.pandas.types import to_arrow_schema
+    reserved = {n for n, _ in txlog._CDF_META_FIELDS} if change_feed else ()
+    mapped = txlog._mapping_of(meta)
+    return [
+        (f.name, txlog._physical_name(meta, f.name) if mapped else f.name, f.type)
+        for f in to_arrow_schema(schema)
+        if f.name not in reserved
+    ]
 
-        reserved = (
-            {n for n, _ in txlog._CDF_META_FIELDS} if self.read_change_feed else ()
+
+def _check_key(key: str, fields) -> None:
+    """The diff key must be a data column of the feed — refused up front,
+    on the driver, instead of serving an append range undiffed and
+    failing a rewrite commit's task with a raw arrow ``KeyError``."""
+    names = [n for n, _, _ in fields]
+    if key not in names:
+        raise ValueError(
+            f"change feed: diff key {key!r} is not a data column of the "
+            f"feed {names} — pass a key (cdfKey / table_changes key=) "
+            "that names one"
         )
-        mapped = txlog._mapping_of(self.meta)
-        return [
-            (
-                f.name,
-                txlog._physical_name(self.meta, f.name) if mapped else f.name,
-                f.type,
-            )
-            for f in to_arrow_schema(self.schema_)
-            if f.name not in reserved
-        ]
-
-    def read(self, partition):
-        fields = self._data_fields()
-        if isinstance(partition, _CdfDiff):
-            tbl = _diff_commit(partition, fields)
-        else:
-            tbl = _apply_dv(
-                _read_data_file(partition.path, fields),
-                partition.path,
-                partition.dv_dir,
-            )
-            if self.read_change_feed:
-                tbl = _with_meta(
-                    tbl, fields, "insert", partition.version, partition.op
-                )
-        yield from tbl.to_batches()
 
 
-class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
+def _read_part(part, fields, change_feed: bool):
+    """One planned part as an arrow table — the one per-part read, run on
+    an executor by the stream's ``read`` and by the batch feed's
+    ``mapInArrow``: a diff part through :func:`_diff_commit`, an added
+    file as change-feed ``insert`` rows or as plain data rows."""
+    if isinstance(part, _CdfDiff):
+        return _diff_commit(part, fields)
+    tbl = _apply_dv(_read_data_file(part.path, fields), part.path, part.dv_dir)
+    if change_feed:
+        return _with_meta(tbl, fields, "insert", part.version, part.op)
+    return tbl
+
+
+class TxlogStreamReader(DataSourceStreamReader):
     """Offsets are log versions: ``{"version": N}`` means commits
     ``0..N`` are consumed. Planning (``latestOffset``/``partitions``) is
     driver-side metadata; ``read`` runs on executors, one file per
@@ -588,6 +588,8 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
             "feed" if self.read_change_feed else "skip" if skip else "raise"
         )
         self.cdf_key = _opt(options, "cdfKey", "id")
+        if self.read_change_feed:
+            _check_key(self.cdf_key, self._data_fields())
         sv = _opt(options, "startingVersion")
         st = _opt(options, "startingTimestamp")
         if sv is not None and st is not None:
@@ -601,7 +603,7 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
             # raise, not silently start at the tip), then resolve; a
             # timestamp past the tip starts AFTER it — a stream waits
             # for future commits instead of refusing (Delta's streaming
-            # behavior, unlike the batch reader's raise).
+            # behavior, unlike table_changes' raise).
             ts = txlog._ts_seconds(st)
             stamps = txlog.commit_timestamps(self.table_dir)
             if stamps and ts <= stamps[-1]:
@@ -689,49 +691,21 @@ class TxlogStreamReader(_TxlogRead, DataSourceStreamReader):
         # but the committed end re-binds the admission-control base
         self._consumed = int(end["version"])
 
+    def _data_fields(self):
+        return _data_fields(self.schema_, self.meta, self.read_change_feed)
 
-class TxlogChangeFeedReader(_TxlogRead, DataSourceReader):
-    """Batch change feed of commits ``startingVersion .. endingVersion``
-    (both inclusive; default the whole log) — the reader
-    :func:`txlog.table_changes` serves every row through: the same
-    planner (:func:`_cdf_partitions`) and the same executor-side
-    ``read`` as the stream. The files are read with the END version's
-    column mapping, so a renamed column keeps serving its bytes under
-    its END-version name."""
-
-    read_change_feed = True
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.table_dir = _required_path(options)
-        if str(_opt(options, "readChangeFeed", "false")).lower() != "true":
-            raise ValueError(
-                "cdc_txlog source: a batch read serves the change feed — "
-                "set .option('readChangeFeed', 'true'); snapshot reads go "
-                "through txlog.read_version"
-            )
-        ev = _opt(options, "endingVersion")
-        self.end_v = (
-            int(ev) if ev is not None else txlog.latest_version(self.table_dir)
-        )
-        self.start_v = int(_opt(options, "startingVersion", 0))
-        self.key = _opt(options, "cdfKey", "id")
-        self.meta = txlog.table_metadata(self.table_dir, self.end_v)
-
-    def partitions(self):
-        return _cdf_partitions(
-            self.table_dir, self.start_v - 1, self.end_v, self.key
-        )
+    def read(self, partition):
+        yield from _read_part(
+            partition, self._data_fields(), self.read_change_feed
+        ).to_batches()
 
 
 class TxlogStreamDataSource(DataSource):
     """``readStream.format("cdc_txlog").option("path", table_dir)`` —
     register with ``spark.dataSource.register(TxlogStreamDataSource)``.
-    A batch ``spark.read.format("cdc_txlog")`` serves the change feed
-    (``readChangeFeed`` with ``startingVersion`` / ``endingVersion`` /
-    ``cdfKey`` — :class:`TxlogChangeFeedReader`, what
-    :func:`txlog.table_changes` reads through); snapshot reads of the
-    same table go through :func:`txlog.read_version`.
+    The source is stream-only: the batch change feed is
+    :func:`txlog.table_changes` (same planner, same per-part read, no
+    source), and snapshot reads go through :func:`txlog.read_version`.
 
     SELF-DESCRIBING like the Delta source it models: ``schema()``
     resolves from the table's committed ``metaData`` action (the log
@@ -742,7 +716,7 @@ class TxlogStreamDataSource(DataSource):
     ``readChangeFeed`` mode the resolved schema gains the CDF meta
     columns (``_change_type``, ``_commit_version``, ``_operation``) —
     and refuses a table whose data already uses one of those reserved
-    names, the batch reader's collision rule."""
+    names, the batch feed's collision rule."""
 
     @classmethod
     def name(cls) -> str:
@@ -752,10 +726,7 @@ class TxlogStreamDataSource(DataSource):
         # NOTE: this runs in a session-less Python worker — DDL strings
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
-        ev = _opt(self.options, "endingVersion")
-        base = (
-            txlog.table_metadata(table_dir, None if ev is None else int(ev)) or {}
-        ).get("schema")
+        base = (txlog.table_metadata(table_dir) or {}).get("schema")
         if base is None:
             files = txlog.snapshot_files(table_dir)
             if not files:
@@ -776,9 +747,6 @@ class TxlogStreamDataSource(DataSource):
 
     def streamReader(self, schema: StructType):
         return TxlogStreamReader(schema, self.options)
-
-    def reader(self, schema: StructType):
-        return TxlogChangeFeedReader(schema, self.options)
 
 
 def _required_path(options: dict) -> str:

@@ -1575,12 +1575,12 @@ def test_table_changes_refuses_duplicate_keys_in_diffed_commit(spark, tmp_path):
     """A duplicated non-NULL key on either side of a diffed (rewrite)
     commit would cross-product through the per-version full-outer join
     into a silently wrong feed — the read fails loud naming the commit,
-    side, and an offending key value (merge_into's duplicate-source
-    discipline). The guard is FUSED into the plan (a per-key window
-    count + assert_true filter — no extra scan, no eager job), so
+    side and key (merge_into's duplicate-source discipline). The guard
+    runs inside the commit's executor-side arrow diff
+    (``txlog_stream._diff_commit`` — no extra scan, no eager job), so
     building the feed stays lazy and the raise fires at evaluation.
-    Append-only commits never join, so duplicate keys in a
-    plain insert commit stay legal."""
+    Append-only commits never join, so duplicate keys in a plain insert
+    commit stay legal."""
     t = str(tmp_path / "t")
     dup = spark.createDataFrame(
         [(1, "a"), (1, "a2"), (2, "b")], "id long, v string"
@@ -1607,7 +1607,7 @@ def test_table_changes_refuses_duplicate_keys_in_diffed_commit(spark, tmp_path):
     )
     # building the feed is lazy (no job, no raise) ...
     feed = txlog.table_changes(spark, t, 1, 1)
-    # ... the fused guard fires on evaluation, naming commit and key
+    # ... the guard fires on evaluation, naming commit and key
     with pytest.raises(Exception, match="duplicated within commit 1"):
         feed.collect()
 
@@ -1647,6 +1647,121 @@ def test_table_changes_empty_feed_for_metadata_only_range(spark, tmp_path):
     # never "no changes"
     with pytest.raises(ValueError, match="outside the log"):
         txlog.table_changes(spark, t, 0, 99)
+
+
+def _jobs_run(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``."""
+    sc = spark.sparkContext
+    group = f"jobs-run-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rewrite_table(spark, t, before, after):
+    """v0 writes ``before`` under a declared schema, v1 rewrites the whole
+    table as ``after``."""
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, before), t),
+        expected_version=0,
+        operation="WRITE",
+        metadata={"schema": "id BIGINT, v STRING"},
+    )
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, after), t),
+        remove=txlog.snapshot_files(t),
+        expected_version=1,
+        operation="UPDATE",
+    )
+
+
+def test_table_changes_refuses_unknown_key(spark, tmp_path):
+    """A diff key that is not a data column of the feed is refused when
+    the feed is built, on the driver, with no job run: over an append
+    range (which never diffs, so the key would go unchecked) and over a
+    rewrite range (whose task would fail with a raw arrow KeyError). A
+    reserved meta column is not a data column either. The stream's
+    ``cdfKey`` gets the same check when its reader is built."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamReader,
+    )
+
+    t = str(tmp_path / "t")
+    _rewrite_table(spark, t, [(1, "a")], [(1, "A")])
+    for lo, hi, key in ((0, 0, "nope"), (1, 1, "nope"), (0, 1, "_operation")):
+
+        def build():
+            with pytest.raises(ValueError, match=f"{key!r} is not a data column"):
+                txlog.table_changes(spark, t, lo, hi, key=key)
+
+        assert _jobs_run(spark, build)[1] == 0
+    schema = txlog.table_changes(spark, t, 0, 1).schema
+    with pytest.raises(ValueError, match="'nope' is not a data column"):
+        TxlogStreamReader(
+            schema, {"path": t, "readchangefeed": "true", "cdfkey": "nope"}
+        )
+
+
+def test_table_changes_builds_lazily(spark, tmp_path):
+    """Building the feed runs no Spark job and raises nothing; the
+    executor-side duplicate-key guard fires only when it is evaluated."""
+    t = str(tmp_path / "t")
+    _rewrite_table(spark, t, [(1, "a"), (1, "a2")], [(2, "b")])
+    feed, jobs = _jobs_run(spark, lambda: txlog.table_changes(spark, t, 1, 1))
+    assert jobs == 0
+    with pytest.raises(Exception, match="duplicated within commit 1"):
+        feed.collect()
+
+
+def test_table_changes_reads_many_files_in_bounded_tasks(spark, tmp_path):
+    """A range that adds 31 files is read in at most defaultParallelism
+    tasks, not one task per file, and serves every row once."""
+    t = str(tmp_path / "t")
+    rows = [(i, f"v{i}") for i in range(93)]
+    files = txlog.write_files(_df(spark, rows).repartition(31), t)
+    assert len(files) == 31
+    txlog.commit(t, add=files, expected_version=0, operation="WRITE")
+    feed = txlog.table_changes(spark, t, 0, 0)
+    assert feed.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    got = sorted((r["id"], r["v"], r["_change_type"]) for r in feed.collect())
+    assert got == [(i, v, "insert") for i, v in rows]
+
+
+def test_write_checkpoint_is_durable(tmp_path, monkeypatch):
+    """``write_checkpoint`` publishes like ``commit``: the temp file is
+    fsync'ed before the rename makes it visible, and the log directory
+    after it — a crash can never leave an empty checkpoint that every
+    later resolution at or above its version would fail to load."""
+    import stat
+
+    t = str(tmp_path / "t")
+    txlog.commit(t, add=["a.parquet"], expected_version=0)
+    txlog.commit(t, add=["b.parquet"], expected_version=1)
+    events = []
+    fsync, rename = os.fsync, os.rename
+
+    def record_fsync(fd):
+        events.append(("fsync", stat.S_IFMT(os.fstat(fd).st_mode)))
+        fsync(fd)
+
+    def record_rename(src, dst):
+        events.append(("rename", None))
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "fsync", record_fsync)
+    monkeypatch.setattr(os, "rename", record_rename)
+    assert txlog.write_checkpoint(t) == 1
+    assert events == [
+        ("fsync", stat.S_IFREG),
+        ("rename", None),
+        ("fsync", stat.S_IFDIR),
+    ]
+    assert txlog.snapshot_files(t) == ["a.parquet", "b.parquet"]
 
 
 def test_table_changes_null_key_unchanged_copy_contract(spark, tmp_path):
