@@ -936,8 +936,10 @@ def txlog_cdf_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact, because every rewrite is file-bounded.
 
     Scale: O(churned files) per version — the v1 diff reads only the
-    files the UPDATE rewrote, v2 only the DELETE's, one task per
-    version; at 100 TB a day of feed reads the day's rewritten files,
+    files the UPDATE rewrote, v2 only the DELETE's, one planned part
+    per version, the parts read by ``mapInArrow`` in at most
+    ``defaultParallelism`` tasks; at 100 TB a day of feed reads the
+    day's rewritten files,
     never the table. Unchanged copies carried along in rewritten files
     (both DMLs rewrite whole touched files) are dropped by image
     equality inside the per-version arrow diff (the streaming source's,

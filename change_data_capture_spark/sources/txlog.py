@@ -2411,12 +2411,11 @@ def table_changes(
 
     ``key`` must be a data column of the feed (anything else raises
     when the feed is built) and must UNIQUELY identify rows within every
-    DIFFED (rewrite)
-    commit the way the table's DML used it (the same contract
-    :func:`merge_into` places on its ``key``); a duplicated non-NULL key
-    on either side of a diffed commit would cross-product into a
-    silently wrong feed, so the read FAILS LOUD when that commit's task
-    runs. Building the feed runs no job; a deliberately partial
+    DIFFED (rewrite) commit the way the table's DML used it (the same
+    contract :func:`merge_into` places on its ``key``); a duplicated
+    non-NULL key on either side of a diffed commit would cross-product
+    into a silently wrong feed, so the read FAILS LOUD when that
+    commit's task runs. Building the feed runs no job; a deliberately partial
     evaluation (``limit(1)`` satisfied by another version) can finish
     without reaching the offending commit. NULL keys are exempt because
     NULL never equi-joins: a NULL-key row's pre and post images can
