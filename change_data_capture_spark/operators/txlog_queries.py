@@ -1121,8 +1121,7 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=["id"],
         dv_fraction_threshold=0.25,
     )
-    acts, _, _, _ = txlog._resolve(tdir, None)
-    if not txlog._dv_map(acts):
+    if not txlog._dv_map(txlog._resolve(tdir).actions):
         raise RuntimeError(
             "trickle delete did not produce a deletion vector — the "
             "merge-on-read path was not exercised"

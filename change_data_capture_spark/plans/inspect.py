@@ -47,7 +47,8 @@ def plan_stats(df: DataFrame) -> PlanStats:
     return PlanStats(
         shuffle_exchanges=sum(1 for o in ops if o == "Exchange"),
         broadcast_exchanges=sum(1 for o in ops if o == "BroadcastExchange"),
-        parquet_scans=sum(1 for o in ops if o == "Scan"),
+        # a LocalRelation or ExistingRDD scan is a "(n) Scan" too
+        parquet_scans=len(re.findall(r"^\(\d+\) Scan parquet\b", txt, re.M)),
         pushed_filters=[
             m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", txt) if m
         ],

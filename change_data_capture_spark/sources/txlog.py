@@ -78,6 +78,13 @@ its adds — to a dict keyed by action path (a re-added live path is one
 file, as in Delta). Snapshot resolution, :func:`history`,
 :func:`commit_timestamps`, :func:`vacuum`, :func:`table_changes` and
 the streaming source (``sources.txlog_stream``) all go through the pair.
+:func:`_resolve` returns a named :class:`Snapshot` (``actions``,
+``txns``, ``meta``, ``version``) and reads the tip and the newest
+checkpoint from ONE listing of ``_txlog/`` (:func:`_log_listing`,
+which :func:`latest_version` shares). Every
+operation resolves once: a rewrite commits on ``snap.version + 1``
+without listing the tip first, and a call that accepts a table with no
+commits guards with :func:`latest_version` and resolves that tip.
 A rewrite resolves its snapshot once and hands it to the stats prune
 (:func:`_files_in`), the touched-file probe (:func:`_touched_files`,
 one function for every rewrite) and its scans (:func:`_scan_files`,
@@ -99,6 +106,7 @@ import os
 import pickle
 import urllib.parse
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -148,17 +156,27 @@ def _log_dir(table_dir: str) -> str:
     return os.path.join(table_dir, _LOG_SUBDIR)
 
 
-def latest_version(table_dir: str) -> int:
-    """Highest committed version, or -1 for an empty/absent log."""
+def _log_listing(table_dir: str) -> tuple[int, list[int]]:
+    """``(tip, checkpoint versions)`` from ONE listing of ``_txlog/`` —
+    the listing every snapshot resolution and :func:`latest_version`
+    read (:func:`vacuum`'s temp-file sweep is the only other); the tip
+    is -1 for an empty or absent log. A ``_last_checkpoint`` pointer
+    would replace this listing."""
     ldir = _log_dir(table_dir)
     if not os.path.isdir(ldir):
-        return -1
-    versions = [
-        int(f[: -len(".json")])
-        for f in os.listdir(ldir)
-        if f.endswith(".json") and not f.endswith(".checkpoint.json")
-    ]
-    return max(versions, default=-1)
+        return -1, []
+    tip, ckpts = -1, []
+    for f in os.listdir(ldir):
+        if f.endswith(".checkpoint.json"):
+            ckpts.append(int(f[: -len(".checkpoint.json")]))
+        elif f.endswith(".json"):
+            tip = max(tip, int(f[: -len(".json")]))
+    return tip, ckpts
+
+
+def latest_version(table_dir: str) -> int:
+    """Highest committed version, or -1 for an empty/absent log."""
+    return _log_listing(table_dir)[0]
 
 
 def _commit_path(table_dir: str, version: int) -> str:
@@ -307,28 +325,6 @@ def _checkpoint_path(table_dir: str, version: int) -> str:
     return os.path.join(_log_dir(table_dir), f"{version:020d}.checkpoint.json")
 
 
-def _newest_checkpoint(table_dir: str, version: int) -> dict | None:
-    """Newest checkpoint at or below ``version``, or None. Checkpoints
-    never replace commits (time travel to pre-checkpoint versions replays
-    from an older checkpoint, or from 0) — they only shorten the fold."""
-    ldir = _log_dir(table_dir)
-    if not os.path.isdir(ldir):
-        return None
-    best = max(
-        (
-            int(f[: -len(".checkpoint.json")])
-            for f in os.listdir(ldir)
-            if f.endswith(".checkpoint.json")
-            and int(f[: -len(".checkpoint.json")]) <= version
-        ),
-        default=None,
-    )
-    if best is None:
-        return None
-    with open(_checkpoint_path(table_dir, best)) as f:
-        return json.load(f)
-
-
 def _commits(table_dir: str, start: int, end: int):
     """Commit payloads of versions ``start..end``, in version order — the
     one reader of commit files. Lazy: a caller that stops early opens no
@@ -349,24 +345,39 @@ def _fold(live: dict, payload: dict) -> None:
         live[_action_path(a)] = a
 
 
-def _resolve(
-    table_dir: str, version: int | None
-) -> tuple[list, dict, dict | None, int]:
-    """(actions, txn_app_versions, metadata, version) as of ``version`` —
-    fold from the newest checkpoint ≤ version, replaying only the tail
-    commits. ``metadata`` is the LATEST metaData action at or below the
-    version (None if the table never declared one)."""
-    tip = latest_version(table_dir)
+class Snapshot(NamedTuple):
+    """A table as of one version: its live add actions (snapshot order),
+    the per-app txn high-water marks, the governing metaData action
+    (None if the table never declared one) and the version itself."""
+
+    actions: list
+    txns: dict
+    meta: dict | None
+    version: int
+
+
+def _resolve(table_dir: str, version: int | None = None) -> Snapshot:
+    """The :class:`Snapshot` as of ``version`` (default: the tip). The
+    tip and the newest checkpoint at or below the target come from one
+    :func:`_log_listing`; the fold starts from that checkpoint and
+    replays only the tail commits. A version outside ``[0, tip]`` —
+    including the default on an empty log — raises ``not in log``."""
+    tip, ckpts = _log_listing(table_dir)
     if version is None:
         version = tip
     if version > tip or version < 0:
         raise ValueError(f"version {version} not in log (tip {tip})")
-    ckpt = _newest_checkpoint(table_dir, version)
-    live = {_action_path(a): a for a in ckpt["actions"]} if ckpt else {}
-    txns: dict = dict(ckpt["txn_app_versions"]) if ckpt else {}
-    meta: dict | None = ckpt.get("metadata") if ckpt else None
-    start = ckpt["version"] + 1 if ckpt else 0
-    for c in _commits(table_dir, start, version):
+    # checkpoints never replace commits: time travel below the newest one
+    # replays from an older checkpoint, or from version 0
+    best = max((c for c in ckpts if c <= version), default=None)
+    ckpt = {"version": -1, "actions": [], "txn_app_versions": {}}
+    if best is not None:
+        with open(_checkpoint_path(table_dir, best)) as f:
+            ckpt = json.load(f)
+    live = {_action_path(a): a for a in ckpt["actions"]}
+    txns = dict(ckpt["txn_app_versions"])
+    meta = ckpt.get("metadata")
+    for c in _commits(table_dir, ckpt["version"] + 1, version):
         _fold(live, c)
         t = c.get("txn")
         if t:
@@ -376,7 +387,7 @@ def _resolve(
                 txns[t["app_id"]] = b
         if c.get("metadata") is not None:
             meta = c["metadata"]
-    return list(live.values()), txns, meta, version
+    return Snapshot(list(live.values()), txns, meta, version)
 
 
 def write_checkpoint(table_dir: str, version: int | None = None) -> int:
@@ -387,21 +398,21 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> int:
     Also carries the per-app txn high-water marks and the table
     metadata so :func:`last_txn` / :func:`table_metadata` stay
     checkpoint-compatible."""
-    actions, txns, meta, version = _resolve(table_dir, version)
-    path = _checkpoint_path(table_dir, version)
+    snap = _resolve(table_dir, version)
+    path = _checkpoint_path(table_dir, snap.version)
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     body = json.dumps(
         {
-            "version": version,
-            "actions": actions,
-            "txn_app_versions": txns,
-            "metadata": meta,
+            "version": snap.version,
+            "actions": snap.actions,
+            "txn_app_versions": snap.txns,
+            "metadata": snap.meta,
         }
     )
     _write_synced(tmp, body)
     os.rename(tmp, path)  # atomic publish; idempotent (same fold content)
     _sync_dir(_log_dir(table_dir))
-    return version
+    return snap.version
 
 
 def _ts_seconds(ts) -> float:
@@ -553,20 +564,19 @@ def snapshot_files(
 
 
 def _files_in(snap, predicate_range=None) -> list[str]:
-    """:func:`snapshot_files` of an already resolved snapshot (a
-    :func:`_resolve` tuple), so a rewrite walks the log once."""
-    actions, _, meta, _ = snap
+    """:func:`snapshot_files` of an already resolved :class:`Snapshot`,
+    so a rewrite walks the log once."""
     if predicate_range is None:
-        return [_action_path(a) for a in actions]
+        return [_action_path(a) for a in snap.actions]
     col, lo, hi = predicate_range
-    if _mapping_of(meta):
-        col = _physical_name(meta, col)
+    if _mapping_of(snap.meta):
+        col = _physical_name(snap.meta, col)
     # normalize the caller's bounds the same way the stats were encoded
     # (dates→ISO strings, decimals→outward-widened floats) so the
     # comparison is type-consistent and conservatively widened
     lo, hi = _prune_bound(lo, "lo"), _prune_bound(hi, "hi")
     keep = []
-    for a in actions:
+    for a in snap.actions:
         stats = a.get("stats", {}) if isinstance(a, dict) else {}
         if col in stats:
             mn, mx = stats[col]
@@ -616,12 +626,12 @@ def read_version(
 def _read_snapshot(
     spark: SparkSession, table_dir: str, snap, predicate_range=None
 ) -> DataFrame:
-    """:func:`read_version` of an already resolved snapshot (a
-    :func:`_resolve` tuple), so a DML that holds one walks the log once."""
+    """:func:`read_version` of an already resolved :class:`Snapshot`, so
+    a DML that holds one walks the log once."""
     files = _files_in(snap, predicate_range)
     if files:
         return _scan_files(spark, snap, files)
-    declared = (snap[2] or {}).get("schema")
+    declared = (snap.meta or {}).get("schema")
     if declared is not None:
         return spark.createDataFrame([], declared)
     all_files = _files_in(snap)
@@ -631,7 +641,7 @@ def _read_snapshot(
     # schema from — raise the real reason instead of letting the
     # zero-path reader fail with an unrelated inference error
     raise ValueError(
-        f"snapshot v{snap[3]} of {table_dir} has no data files and no "
+        f"snapshot v{snap.version} of {table_dir} has no data files and no "
         "declared schema; commit table metadata to make empty "
         "snapshots readable"
     )
@@ -871,10 +881,10 @@ def _dv_map(actions) -> dict[str, dict]:
 def _scan_files(
     spark: SparkSession, snap, files: list[str], with_meta: bool = False
 ):
-    """Scan specific data files of a resolved snapshot (a :func:`_resolve`
-    tuple) under its log-governed schema with its deletion vectors
-    applied — the read primitive every DML path (touched-file discovery,
-    rewrite reads) shares with :func:`read_version` and
+    """Scan specific data files of a resolved :class:`Snapshot` under
+    its log-governed schema with its deletion vectors applied — the
+    read primitive every DML path (touched-file discovery, rewrite
+    reads) shares with :func:`read_version` and
     :func:`optimize`, so no path can resurrect merge-on-read-deleted rows
     by reading a data file raw. Rows listed in a file's deletion vector
     are removed by ONE broadcast anti-join on ``(_metadata.file_path,
@@ -894,7 +904,7 @@ def _scan_files(
     escape Delta documents when DVs grow)."""
     from pyspark.sql import functions as F
 
-    actions, _, meta, _ = snap
+    meta = snap.meta
     declared = (meta or {}).get("schema")
     mapping = _mapping_of(meta)
     reader = spark.read
@@ -902,7 +912,7 @@ def _scan_files(
         reader = reader.schema(
             _physical_ddl(declared, meta) if mapping else declared
         )
-    dv_by_path = _dv_map(actions)
+    dv_by_path = _dv_map(snap.actions)
     dv_dirs = sorted(
         {
             dv_by_path[p]["path"]
@@ -1000,8 +1010,7 @@ def merge_into(
     """
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    snap = _resolve(table_dir, tip)
+    snap = _resolve(table_dir)
     cols = _read_snapshot(spark, table_dir, snap).columns
     src = source.select(*cols)
 
@@ -1021,7 +1030,7 @@ def merge_into(
         # empty source (a common CDC micro-batch): metadata-only no-op,
         # NO commit — same contract as delete_where/update_where, so
         # empty batches never grow the snapshot's action list
-        return tip, []
+        return snap.version, []
     cand = (
         _files_in(snap, predicate_range=(key, lo, hi))
         if lo is not None
@@ -1100,10 +1109,10 @@ def merge_into(
     else:
         # nothing matched anywhere: pure insert, every row is new
         merged = src.withColumn("__txlog_modified", F.lit(True))
-    new_actions = _write_files_checked(merged, table_dir, snap[2], stats_cols)
+    new_actions = _write_files_checked(merged, table_dir, snap.meta, stats_cols)
     version = commit(
-        table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
-        operation="MERGE",
+        table_dir, add=new_actions, remove=touched,
+        expected_version=snap.version + 1, operation="MERGE",
     )
     return version, touched
 
@@ -1160,18 +1169,17 @@ def delete_where(
     exactly: each version reads under its own DV state."""
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    snap = _resolve(table_dir, tip)
+    snap = _resolve(table_dir)
     cand = _files_in(snap, predicate_range=prune_range)
     if not cand:
-        return tip, []
-    actions, _, meta, _ = snap
-    by_path = {_action_path(a): a for a in actions}
+        return snap.version, []
+    meta = snap.meta
+    by_path = {_action_path(a): a for a in snap.actions}
     cond = F.coalesce(F.expr(predicate), F.lit(False))
     # the per-file match COUNT feeds the DV-vs-rewrite routing below
     hits = _touched_files(spark, snap, cand, lambda s: s.where(cond))
     if not hits:
-        return tip, []  # no matching row anywhere: metadata-only no-op
+        return snap.version, []  # no matching row anywhere: metadata-only no-op
     touched = list(hits)
     dv_class: list[str] = []
     rw_class: list[str] = []
@@ -1202,8 +1210,8 @@ def delete_where(
             )
         )
     version = commit(
-        table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
-        operation="DELETE",
+        table_dir, add=new_actions, remove=touched,
+        expected_version=snap.version + 1, operation="DELETE",
     )
     return version, touched
 
@@ -1380,8 +1388,7 @@ def update_where(
     :func:`vacuum`."""
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    snap = _resolve(table_dir, tip)
+    snap = _resolve(table_dir)
     cand = _files_in(snap, predicate_range=prune_range)
     cur = _read_snapshot(spark, table_dir, snap)
     cols = cur.columns
@@ -1397,7 +1404,7 @@ def update_where(
         _touched_files(spark, snap, cand, lambda s: s.where(cond))
     )
     if not touched:
-        return tip, []  # no matching row anywhere: metadata-only no-op
+        return snap.version, []  # no matching row anywhere: metadata-only no-op
     tgt = _scan_files(spark, snap, touched)
     # one select over the old row image: all SET expressions (and the
     # predicate) see pre-update values, and each output keeps the
@@ -1416,10 +1423,10 @@ def update_where(
         ],
         cond.alias("__txlog_modified"),
     )
-    new_actions = _write_files_checked(updated, table_dir, snap[2], stats_cols)
+    new_actions = _write_files_checked(updated, table_dir, snap.meta, stats_cols)
     version = commit(
-        table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
-        operation="UPDATE",
+        table_dir, add=new_actions, remove=touched,
+        expected_version=snap.version + 1, operation="UPDATE",
     )
     return version, touched
 
@@ -1485,12 +1492,11 @@ def optimize(
     :func:`vacuum`."""
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    snap = _resolve(table_dir, tip)
-    actions, _, meta, _ = snap
+    snap = _resolve(table_dir)
+    meta = snap.meta
     files = _files_in(snap)
     if not files:
-        return tip
+        return snap.version
     live_bytes = sum(os.path.getsize(p) for p in files)
     n_files = max(1, -(-live_bytes // target_file_bytes))
     rows = _scan_files(spark, snap, files)
@@ -1513,7 +1519,9 @@ def optimize(
     else:
         rows = rows.repartition(n_files)
     out = _to_physical(rows, meta)
-    had = [c for a in actions if isinstance(a, dict) for c in a.get("stats", {})]
+    had = [
+        c for a in snap.actions if isinstance(a, dict) for c in a.get("stats", {})
+    ]
     stats_cols = [
         c
         for c in dict.fromkeys(had + (_physical_stats_cols(zorder_by, meta) or []))
@@ -1523,7 +1531,7 @@ def optimize(
         table_dir,
         add=write_files(out, table_dir, stats_cols=stats_cols),
         remove=files,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         operation="OPTIMIZE",
     )
 
@@ -1618,21 +1626,20 @@ def restore(table_dir: str, version: int | None = None, timestamp=None) -> int:
     version = _resolve_travel(table_dir, version, timestamp, "restore")
     if version is None:
         raise ValueError("restore: pass version= or timestamp=")
-    tip = latest_version(table_dir)
-    cur_actions, _, cur_meta, _ = _resolve(table_dir, tip)
-    old_actions, _, old_meta, _ = _resolve(table_dir, version)
+    cur_snap = _resolve(table_dir)
+    old_snap = _resolve(table_dir, version)
     # compare whole ACTIONS, not just paths: a path present in both
     # versions under a DIFFERENT action (a deletion vector attached, a
     # stats change) must be removed and re-added with the target
     # version's action, or the restore silently keeps the current
     # descriptor (e.g. rows a later DV DELETE removed stay dead)
-    cur = {_action_path(a): a for a in cur_actions}
-    old = {_action_path(a): a for a in old_actions}
+    cur = {_action_path(a): a for a in cur_snap.actions}
+    old = {_action_path(a): a for a in old_snap.actions}
     # existence must cover deletion-vector sidecars too: restoring a
     # version whose actions reference a vacuumed DV would commit a tip
     # whose every read throws at the anti-join load
-    cur_dvs = {d["path"] for d in _dv_map(cur_actions).values()}
-    old_dvs = {d["path"] for d in _dv_map(old_actions).values()}
+    cur_dvs = {d["path"] for d in _dv_map(cur_snap.actions).values()}
+    old_dvs = {d["path"] for d in _dv_map(old_snap.actions).values()}
     missing = sorted(
         p for p in old if p not in cur and not os.path.exists(p)
     ) + sorted(
@@ -1648,8 +1655,8 @@ def restore(table_dir: str, version: int | None = None, timestamp=None) -> int:
         table_dir,
         add=[a for p, a in old.items() if cur.get(p) != a],
         remove=[p for p, a in cur.items() if old.get(p) != a],
-        expected_version=tip + 1,
-        metadata=old_meta if old_meta is not None and old_meta != cur_meta else None,
+        expected_version=cur_snap.version + 1,
+        metadata=old_snap.meta if old_snap.meta not in (None, cur_snap.meta) else None,
         operation="RESTORE",
     )
 
@@ -1662,10 +1669,11 @@ def table_metadata(table_dir: str, version: int | None = None) -> dict | None:
     includes a FRESH table with no commits at all (``version=None``
     only; asking for an explicit version of an empty log still raises),
     so :func:`validated_write` works as a table's first-ever write."""
-    if version is None and latest_version(table_dir) < 0:
-        return None
-    _, _, meta, _ = _resolve(table_dir, version)
-    return meta
+    if version is None:
+        version = latest_version(table_dir)
+        if version < 0:
+            return None
+    return _resolve(table_dir, version).meta
 
 
 def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
@@ -1797,7 +1805,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     mapping"); the reference's production sink names Delta as its table
     format (repo:BASELINE.json)."""
     tip = latest_version(table_dir)
-    meta = dict(table_metadata(table_dir) or {})
+    meta = dict((_resolve(table_dir, tip).meta if tip >= 0 else None) or {})
     declared = meta.get("schema")
     if declared is None:
         raise ValueError(
@@ -1843,7 +1851,7 @@ def drop_column(table_dir: str, col: str) -> int:
     physical name). Same refusals as :func:`rename_column`, plus the
     last remaining column (a table must keep a schema)."""
     tip = latest_version(table_dir)
-    meta = dict(table_metadata(table_dir) or {})
+    meta = dict((_resolve(table_dir, tip).meta if tip >= 0 else None) or {})
     declared = meta.get("schema")
     if declared is None:
         raise ValueError(
@@ -2065,8 +2073,8 @@ def add_constraints(
     DML's responsibility."""
     tip = latest_version(table_dir)
     snap = _resolve(table_dir, tip) if tip >= 0 else None
-    meta = dict(snap[2] or {}) if snap else {}
-    if snap and snap[0]:
+    meta = dict(snap.meta or {}) if snap else {}
+    if snap and snap.actions:
         _enforce_constraints(
             _read_snapshot(spark, table_dir, snap), {"constraints": constraints}
         )
@@ -2091,11 +2099,12 @@ def count_rows(table_dir: str, version: int | None = None) -> int | None:
     fresh table with no commits has no snapshot to count: also None
     (``version=None`` only; an explicit version still raises).
     O(actions) driver-side fold, zero data read."""
-    if version is None and latest_version(table_dir) < 0:
-        return None
-    actions, _, _, _ = _resolve(table_dir, version)
+    if version is None:
+        version = latest_version(table_dir)
+        if version < 0:
+            return None
     total = 0
-    for a in actions:
+    for a in _resolve(table_dir, version).actions:
         if not isinstance(a, dict) or "num_rows" not in a:
             return None
         dv = a.get("dv") or {}
@@ -2347,10 +2356,10 @@ def vacuum(
 def last_txn(table_dir: str, app_id: str) -> int | None:
     """Highest ``batch_id`` committed under ``app_id``, or None — the
     foreachBatch idempotence check (skip when ``batch_id <= last_txn``)."""
-    if latest_version(table_dir) < 0:
+    tip = latest_version(table_dir)
+    if tip < 0:
         return None
-    _, txns, _, _ = _resolve(table_dir, None)
-    b = txns.get(app_id)
+    b = _resolve(table_dir, tip).txns.get(app_id)
     return int(b) if b is not None else None
 
 
@@ -2488,7 +2497,7 @@ def table_changes(
     # (footer-only reads, bounded by the range's churn) and their unified
     # footer schema types the feed: a reserved name can hide in any file
     # of a multi-file commit
-    base = (snap[2] or {}).get("schema")
+    base = (snap.meta or {}).get("schema")
     if base is None:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -2510,7 +2519,7 @@ def table_changes(
     schema = _cdf_schema(base)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    fields = txlog_stream._data_fields(schema, snap[2], True)
+    fields = txlog_stream._data_fields(schema, snap.meta, True)
     txlog_stream._check_key(key, fields)
 
     def read(batches):

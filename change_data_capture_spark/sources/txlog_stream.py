@@ -298,14 +298,16 @@ def _guard_keys(tbl, key: str, version: int, side: str) -> None:
 
 
 def _with_meta(tbl, fields, change_type: str, version: int, op: str | None):
-    """Append the CDF meta columns to a data table."""
+    """Append the CDF meta columns (:data:`txlog._CDF_META_FIELDS`) to a
+    data table."""
     import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_type
 
     n = len(tbl)
     out = {name: tbl.column(name) for name, _, _ in fields}
-    out["_change_type"] = pa.array([change_type] * n, pa.string())
-    out["_commit_version"] = pa.array([version] * n, pa.int32())
-    out["_operation"] = pa.array([op] * n, pa.string())
+    for (name, t), v in zip(txlog._CDF_META_FIELDS, (change_type, version, op)):
+        out[name] = pa.array([v] * n, to_arrow_type(t))
     return pa.table(out)
 
 
@@ -415,12 +417,8 @@ def _diff_commit(part: _CdfDiff, fields):
     if len(matched) and pc.any(differ).as_py():
         out.append(_with_meta(mb.filter(differ), fields, "update_preimage", part.version, part.op))
         out.append(_with_meta(ma.filter(differ), fields, "update_postimage", part.version, part.op))
-    if not out:
-        schema = pa.schema(
-            [(n, t) for n, _, t in fields]
-            + [("_change_type", pa.string()), ("_commit_version", pa.int32()), ("_operation", pa.string())]
-        )
-        return pa.table({f.name: pa.nulls(0, f.type) for f in schema})
+    if not out:  # no row changed: the typed empty feed
+        return _with_meta(pre.slice(0, 0), fields, "insert", part.version, part.op)
     return pa.concat_tables(out)
 
 
@@ -485,7 +483,7 @@ def _cdf_partitions(
             if state is None:
                 state = {
                     txlog._action_path(a): a
-                    for a in (txlog._resolve(table_dir, v - 1)[0] if v else ())
+                    for a in (txlog._resolve(table_dir, v - 1).actions if v else ())
                 }
             pre = [(p, _dv_path(state.get(p))) for p in removes]
             post = [(txlog._action_path(a), _dv_path(a)) for a in adds]
@@ -554,15 +552,17 @@ class TxlogStreamReader(DataSourceStreamReader):
     docstring for the contract."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
         self.table_dir = _required_path(options)
+        # one resolution serves the mapping check, the feed's fields and
+        # the startingVersion bound; a table with no commits yet has none
+        tip = txlog.latest_version(self.table_dir)
+        meta = (txlog._resolve(self.table_dir, tip).meta if tip >= 0 else None) or {}
         # column mapping: a table whose columns were RENAMED or DROPPED
         # is refused up front, Delta's own restriction ("streaming reads
         # from a table with column mapping changes are unsupported") — a
         # rename would change the columns a running query serves. An
         # identity mapping (enabled, nothing renamed yet) is harmless and
         # allowed.
-        self.meta = meta = txlog.table_metadata(self.table_dir) or {}
         mapping = meta.get("column_mapping") or {}
         if any(l != p for l, p in mapping.items()) or meta.get(
             "dropped_physical"
@@ -588,8 +588,10 @@ class TxlogStreamReader(DataSourceStreamReader):
             "feed" if self.read_change_feed else "skip" if skip else "raise"
         )
         self.cdf_key = _opt(options, "cdfKey", "id")
+        #: ``(logical, physical, arrow type)`` of the data columns read
+        self.fields = _data_fields(schema, meta, self.read_change_feed)
         if self.read_change_feed:
-            _check_key(self.cdf_key, self._data_fields())
+            _check_key(self.cdf_key, self.fields)
         sv = _opt(options, "startingVersion")
         st = _opt(options, "startingTimestamp")
         if sv is not None and st is not None:
@@ -619,7 +621,6 @@ class TxlogStreamReader(DataSourceStreamReader):
         # same stance as a past-tip startingTimestamp); anything beyond
         # is a typo'd version, refused at construction like Delta's
         # "provided version is greater than the latest" error.
-        tip = txlog.latest_version(self.table_dir)
         if self.starting_version > tip + 1:
             raise ValueError(
                 f"cdc_txlog source: startingVersion "
@@ -691,12 +692,9 @@ class TxlogStreamReader(DataSourceStreamReader):
         # but the committed end re-binds the admission-control base
         self._consumed = int(end["version"])
 
-    def _data_fields(self):
-        return _data_fields(self.schema_, self.meta, self.read_change_feed)
-
     def read(self, partition):
         yield from _read_part(
-            partition, self._data_fields(), self.read_change_feed
+            partition, self.fields, self.read_change_feed
         ).to_batches()
 
 
@@ -726,9 +724,11 @@ class TxlogStreamDataSource(DataSource):
         # NOTE: this runs in a session-less Python worker — DDL strings
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
-        base = (txlog.table_metadata(table_dir) or {}).get("schema")
+        tip = txlog.latest_version(table_dir)
+        snap = txlog._resolve(table_dir, tip) if tip >= 0 else None
+        base = (snap.meta or {}).get("schema") if snap else None
         if base is None:
-            files = txlog.snapshot_files(table_dir)
+            files = txlog._files_in(snap) if snap else []
             if not files:
                 raise ValueError(
                     f"cdc_txlog source: table {table_dir} has no committed "

@@ -68,9 +68,10 @@ class Scd2State:
         self.table_dir = table_dir
 
     def read(self) -> DataFrame | None:
-        if txlog.latest_version(self.table_dir) < 0:
+        tip = txlog.latest_version(self.table_dir)
+        if tip < 0:
             return None
-        return txlog.read_version(self.spark, self.table_dir)
+        return txlog.read_version(self.spark, self.table_dir, tip)
 
 
 def apply_batch(
@@ -86,7 +87,7 @@ def apply_batch(
     # the rewrite read the same resolved snapshot
     snap = txlog._resolve(tdir, tip) if tip >= 0 else None
     if batch_id is not None and snap is not None:
-        last = snap[1].get(APP_ID)
+        last = snap.txns.get(APP_ID)
         if last is not None and batch_id <= int(last):
             return  # replayed batch: its txn marker is already committed
     events = batch.where(F.col("lsn").isNotNull()).select(

@@ -1134,8 +1134,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is per-(user, open-session) and bounded by the
     watermark horizon; the sentinel trick is test harness only —
     production streams never need finalization because they never end."""
-    import os
-    import time as _time
     import uuid
 
     from change_data_capture_spark.sources.tables import load_table
@@ -1144,27 +1142,24 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    src = f"{ws}/slices"
-    os.makedirs(src)
-    events.coalesce(1).write.mode("overwrite").parquet(f"{ws}/real")
     sentinel = spark.sql(
         "SELECT CAST(-1 AS BIGINT) AS event_id, "
         "timestamp'2100-01-01 00:00:00' AS ts, "
         "CAST(-1 AS BIGINT) AS user_id, CAST(0.0 AS DOUBLE) AS value"
     )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(f"{ws}/sent")
-    now = _time.time()
-    for i, stage in enumerate(("real", "sent")):
-        d = f"{ws}/{stage}"
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{part}", dst)
-        os.utime(dst, (now + i, now + i))
+    # slice 0 is the real events, slice 1 the sentinel (negative event id)
+    _write_mtime_slices(
+        events.unionByName(sentinel),
+        (F.col("event_id") < 0).cast("int"),
+        2,
+        f"{ws}/slices",
+        f"{ws}/tmp",
+    )
 
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(f"{ws}/slices")
         .withWatermark("ts", "1 minute")
     )
     gap = f"{_SESSION_GAP_MIN} minutes"
@@ -1211,8 +1206,6 @@ def streaming_tumbling_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store, append mode emits each window when the watermark passes
     it, and the drained result must equal the batch ``events_tumbling_
     hourly`` — it SHARES that query's oracle SQL verbatim."""
-    import os
-    import time as _time
     import uuid
 
     from change_data_capture_spark.sources.tables import load_table
@@ -1221,26 +1214,24 @@ def streaming_tumbling_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    src = f"{ws}/slices"
-    os.makedirs(src)
-    events.coalesce(1).write.mode("overwrite").parquet(f"{ws}/real")
-    spark.sql(
+    sentinel = spark.sql(
         "SELECT CAST(-1 AS BIGINT) AS event_id, "
         "timestamp'2100-01-01 00:00:00' AS ts, CAST(-1 AS BIGINT) AS user_id, "
         "'sentinel' AS event_type, CAST(0.0 AS DOUBLE) AS value"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{ws}/sent")
-    now = _time.time()
-    for i, stage in enumerate(("real", "sent")):
-        d = f"{ws}/{stage}"
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{part}", dst)
-        os.utime(dst, (now + i, now + i))
+    )
+    # slice 0 is the real events, slice 1 the sentinel (negative event id)
+    _write_mtime_slices(
+        events.unionByName(sentinel),
+        (F.col("event_id") < 0).cast("int"),
+        2,
+        f"{ws}/slices",
+        f"{ws}/tmp",
+    )
 
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(f"{ws}/slices")
         .withWatermark("ts", "1 minute")
     )
     # exact distinct users is not available in streaming append aggs
@@ -1333,8 +1324,6 @@ def streaming_outer_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFram
     O(rate × bound), not O(stream); NULL-emission is exactly the state
     eviction sweep, so it costs nothing extra. The sentinel is harness-only:
     production streams never end, so their watermark always advances."""
-    import os
-    import time as _time
     import uuid
 
     from change_data_capture_spark.sources.tables import load_table
@@ -1343,9 +1332,6 @@ def streaming_outer_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    src = f"{ws}/slices"
-    os.makedirs(src)
-    events.coalesce(1).write.mode("overwrite").parquet(f"{ws}/real")
     sentinel = spark.sql(
         "SELECT CAST(-1 AS BIGINT) AS event_id, "
         "timestamp'2100-01-01 00:00:00' AS ts, "
@@ -1354,19 +1340,19 @@ def streaming_outer_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFram
         "SELECT CAST(-2 AS BIGINT), timestamp'2100-01-01 00:00:00', "
         "CAST(-1 AS BIGINT), 'purchase'"
     )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(f"{ws}/sent")
-    now = _time.time()
-    for i, stage in enumerate(("real", "sent")):
-        d = f"{ws}/{stage}"
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{part}", dst)
-        os.utime(dst, (now + i, now + i))
+    # slice 0 is the real events, slice 1 the sentinel (negative event id)
+    _write_mtime_slices(
+        events.unionByName(sentinel),
+        (F.col("event_id") < 0).cast("int"),
+        2,
+        f"{ws}/slices",
+        f"{ws}/tmp",
+    )
 
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(f"{ws}/slices")
     )
     views = (
         stream.where(F.col("event_type") == "view")
@@ -1438,35 +1424,21 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog-consuming sink (Kafka compacted topic, key-value store)
     ingests in production — reducing it here stands in for the store's
     last-write-wins compaction."""
-    import os
-    import time as _time
     import uuid
 
     from change_data_capture_spark.sources.tables import load_table
 
     ws = tempfile.mkdtemp(prefix="cdc_upd_q_")
     events = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    src = f"{ws}/slices"
-    os.makedirs(src)
     # two halves by event id — both batches update most groups
-    events.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ws}/h0")
-    events.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ws}/h1")
-    now = _time.time()
-    for i in (0, 1):
-        d = f"{ws}/h{i}"
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{part}", dst)
-        os.utime(dst, (now + i, now + i))
+    _write_mtime_slices(
+        events, F.col("event_id") % 2, 2, f"{ws}/slices", f"{ws}/tmp"
+    )
 
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(f"{ws}/slices")
     )
     counts = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1523,34 +1495,21 @@ def streaming_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest when the result is small — exactly the leaderboard case; the
     unbounded-key form belongs to update mode + changelog compaction
     (``streaming_update_mode_counts``)."""
-    import os
-    import time as _time
     import uuid
 
     from change_data_capture_spark.sources.tables import load_table
 
     ws = tempfile.mkdtemp(prefix="cdc_cmp_q_")
     events = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    src = f"{ws}/slices"
-    os.makedirs(src)
-    events.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ws}/h0")
-    events.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ws}/h1")
-    now = _time.time()
-    for i in (0, 1):
-        d = f"{ws}/h{i}"
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{part}", dst)
-        os.utime(dst, (now + i, now + i))
+    # two halves by event id — both batches update most groups
+    _write_mtime_slices(
+        events, F.col("event_id") % 2, 2, f"{ws}/slices", f"{ws}/tmp"
+    )
 
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(f"{ws}/slices")
     )
     top = (
         stream.groupBy("user_id")
@@ -2665,8 +2624,7 @@ def streaming_txlog_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         prune_range=("id", _CDF_DEL_LO, _CDF_DEL_HI),
         dv_fraction_threshold=1.0,  # merge-on-read: the feed must not care
     )
-    acts, _, _, _ = txlog._resolve(tdir, None)
-    if not txlog._dv_map(acts):
+    if not txlog._dv_map(txlog._resolve(tdir).actions):
         raise RuntimeError(
             "the DELETE did not take the deletion-vector path — the gate "
             "would no longer prove transport-independence of the feed"

@@ -935,6 +935,113 @@ def test_log_walk_reads_each_commit_once(tmp_path, monkeypatch):
     assert txlog.snapshot_files(t) == live[1:] + [f[1]]
 
 
+def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
+    """A snapshot resolution lists ``_txlog/`` once: the tip and the
+    newest checkpoint come from the same listing, and a rewrite commits
+    on the version it resolved instead of listing the tip first. The
+    only other listings are an empty-table guard (``latest_version``)
+    where a call accepts a table with no commits, and ``commit``'s own
+    tip check."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamDataSource,
+        TxlogStreamReader,
+    )
+    from change_data_capture_spark.streaming.scd2_stream import (
+        Scd2State,
+        apply_batch,
+    )
+
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t, add=[], expected_version=0, metadata={"schema": "id BIGINT, v STRING"}
+    )
+    rows = [(i, f"v{i}") for i in range(8)]
+    txlog.commit(
+        t,
+        add=txlog.write_files(_df(spark, rows), t, stats_cols=["id"]),
+        expected_version=1,
+    )
+    txlog.write_checkpoint(t)  # a checkpoint costs no listing of its own
+    scd2_ddl = (
+        "id BIGINT, name STRING, description STRING, price DECIMAL(10,2), "
+        "lsn BIGINT, ts_ms BIGINT"
+    )
+    state = Scd2State(spark, str(tmp_path / "s"))
+    apply_batch(
+        state,
+        spark.createDataFrame(
+            [(i, f"n{i}", "d", None, 1, 1_000 * i) for i in range(8)], scd2_ddl
+        ),
+        batch_id=0,
+    )
+    touching = spark.createDataFrame([(3, "n3b", "d", None, 2, 9_000)], scd2_ddl)
+
+    seen = []
+    real_listdir = os.listdir
+
+    def counting_listdir(path="."):
+        if os.path.basename(os.path.normpath(str(path))) == "_txlog":
+            seen.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+
+    def listings(call) -> int:
+        before = len(seen)
+        call()
+        return len(seen) - before
+
+    schema = spark.createDataFrame([], "id long, v string").schema
+    counts = {
+        "_resolve": listings(lambda: txlog._resolve(t)),
+        "snapshot_files": listings(lambda: txlog.snapshot_files(t)),
+        "read_version": listings(lambda: txlog.read_version(spark, t)),
+        "table_metadata": listings(lambda: txlog.table_metadata(t)),
+        "count_rows": listings(lambda: txlog.count_rows(t)),
+        "last_txn": listings(lambda: txlog.last_txn(t, "app")),
+        "TxlogStreamReader": listings(
+            lambda: TxlogStreamReader(schema, {"path": t})
+        ),
+        "schema": listings(
+            lambda: TxlogStreamDataSource({"path": t}).schema()
+        ),
+        "merge_into": listings(
+            lambda: txlog.merge_into(spark, t, _df(spark, [(1, "m")]), "id")
+        ),
+        "delete_where": listings(lambda: txlog.delete_where(spark, t, "id = 2")),
+        "update_where": listings(
+            lambda: txlog.update_where(spark, t, "id = 3", {"v": "'u'"})
+        ),
+        "optimize": listings(lambda: txlog.optimize(spark, t)),
+        "rename_column": listings(lambda: txlog.rename_column(t, "v", "w")),
+        "drop_column": listings(lambda: txlog.drop_column(t, "w")),
+        "apply_batch": listings(lambda: apply_batch(state, touching, batch_id=1)),
+        "Scd2State.read": listings(state.read),
+    }
+    monkeypatch.undo()
+    assert counts == {
+        "_resolve": 1,
+        "snapshot_files": 1,
+        "read_version": 1,
+        "table_metadata": 2,
+        "count_rows": 2,
+        "last_txn": 2,
+        "TxlogStreamReader": 2,
+        "schema": 2,
+        "merge_into": 2,
+        "delete_where": 2,
+        "update_where": 2,
+        "optimize": 2,
+        "rename_column": 3,
+        "drop_column": 3,
+        "apply_batch": 3,
+        "Scd2State.read": 2,
+    }
+    # every rewrite committed: a no-op would have skipped commit's listing
+    assert txlog.latest_version(t) == 7
+    assert txlog.latest_version(state.table_dir) == 1
+
+
 def test_schema_evolution_read_is_log_governed(spark, tmp_path):
     """The log's declared schema governs every snapshot read: after an
     evolution commit, OLD files are planned with the evolved shape and
@@ -2192,7 +2299,7 @@ def test_stream_cdf_duplicate_and_null_keys(spark, tmp_path):
     )
     schema = spark.createDataFrame([], "id long, v string").schema
     reader = TxlogStreamReader(schema, {"path": t, "readchangefeed": "true"})
-    fields = reader._data_fields()
+    fields = reader.fields
     parts = reader.partitions({"version": 0}, {"version": 1})
     assert len(parts) == 1 and isinstance(parts[0], _CdfDiff)
     with pytest.raises(ValueError, match="duplicated within commit 1"):
@@ -2215,7 +2322,7 @@ def test_stream_cdf_duplicate_and_null_keys(spark, tmp_path):
     )
     reader3 = TxlogStreamReader(schema, {"path": t3, "readchangefeed": "true"})
     (part,) = reader3.partitions({"version": 0}, {"version": 1})
-    tbl = _diff_commit(part, reader3._data_fields())
+    tbl = _diff_commit(part, reader3.fields)
     rows = sorted(
         (r["_change_type"], r["id"], r["v"]) for r in tbl.to_pylist()
     )
@@ -2502,7 +2609,7 @@ def test_stream_cdf_nan_and_nested_match_batch_semantics(spark, tmp_path):
     schema = spark.createDataFrame([], ddl).schema
     reader = TxlogStreamReader(schema, {"path": t, "readchangefeed": "true"})
     (part,) = reader.partitions({"version": 0}, {"version": 1})
-    tbl = _diff_commit(part, reader._data_fields())
+    tbl = _diff_commit(part, reader.fields)
     got = sorted(
         str(r)
         for r in spark.createDataFrame(

@@ -49,7 +49,7 @@ SHOWCASE = [
     ("ngram_novelty_bloom", "Bloom production path: literal-bitset probe, NO join at all"),
     ("corpus_decontamination_bloom", "Bloom decontamination: eval-side bitset, train side never joined"),
     ("corpus_decontamination_bloom_sharded", "sharded Bloom: per-shard bitsets, one broadcast equi-join route"),
-    ("txlog_cdf_ops", "CDF: MapInArrow over local rows, one per planned part (the one Scan is that ExistingRDD, no table scan), at most defaultParallelism tasks, a rewrite part diffing only its churned files"),
+    ("txlog_cdf_ops", "CDF: MapInArrow over local rows, one per planned part (its one scan is that ExistingRDD: no parquet scan), at most defaultParallelism tasks, a rewrite part diffing only its churned files"),
     ("txlog_delete_dv", "deletion vectors: DV'd files anti-join a tiny broadcast sidecar, clean files scan plain"),
     ("txlog_rename_column", "column mapping: physical-named scan + zero-shuffle logical projection, rename costs no rewrite"),
 ]
