@@ -186,6 +186,24 @@ def build_products_txlog(
     return tdir
 
 
+def _clustered_products(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """A fresh txlog table (a ``tempfile.mkdtemp(prefix=prefix)``
+    directory) whose version 0 is one ``WRITE`` of the products tip
+    state, range-clustered on ``id`` into 8 files with per-file ``id``
+    stats: the fixture of the data-skipping, DML and change-feed gates."""
+    tdir = tempfile.mkdtemp(prefix=prefix)
+    state = txlog.read_version(
+        spark, build_products_txlog(spark, sf_dir)
+    ).repartitionByRange(8, "id")
+    txlog.commit(
+        tdir,
+        add=txlog.write_files(state, tdir, stats_cols=["id"]),
+        expected_version=0,
+        operation="WRITE",
+    )
+    return tdir
+
+
 @query("txlog_time_travel", oracle=_TIME_TRAVEL_ORACLE)
 def txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel over the transaction log — ``VERSION AS OF 1`` of the
@@ -292,17 +310,17 @@ def txlog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     of data, O(1) metadata; the checkpoint keeps the driver-side fold
     O(tail) on long-lived tables."""
     tdir = build_products_txlog(spark, sf_dir)
-    tip = txlog.latest_version(tdir)
+    snap = txlog._resolve(tdir)
     # reproduce streaming ingest's failure mode: rewrite the tip as many
     # small files (what a day of micro-batch commits leaves behind)
     small = txlog.write_files(
-        txlog.read_version(spark, tdir, tip).repartition(8), tdir
+        txlog._read_snapshot(spark, tdir, snap).repartition(8), tdir
     )
     txlog.commit(
         tdir,
         add=small,
-        remove=txlog.snapshot_files(tdir, tip),
-        expected_version=tip + 1,
+        remove=txlog._files_in(snap),
+        expected_version=snap.version + 1,
     )
     txlog.optimize(spark, tdir)
     txlog.write_checkpoint(tdir)
@@ -327,11 +345,7 @@ def txlog_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     affordable on a 100 TB range-clustered table — the scan cost becomes
     O(files overlapping the predicate), not O(table), and the pruning
     itself is a driver-side fold over KB-sized JSON."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txskip_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    actions = txlog.write_files(state, tdir, stats_cols=["id"])
-    txlog.commit(tdir, add=actions, expected_version=0)
+    tdir = _clustered_products(spark, sf_dir, "cdc_txskip_")
     lo, hi = _SKIP_LO, _SKIP_HI
     return txlog.read_version(
         spark, tdir, predicate_range=("id", lo, hi)
@@ -357,14 +371,7 @@ def txlog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintainable — cost O(touched files + delta), never O(table); the
     oracle proves the semantics relationally (anti-join ∪ source, which
     is exactly what UPDATE SET * / INSERT * reduce to)."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txmerge_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txmerge_")
     tgt = txlog.read_version(spark, tdir)
     upd = tgt.where(F.col("id").between(_MERGE_LO, _MERGE_HI)).select(
         "id",
@@ -485,14 +492,7 @@ def txlog_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is why ``SELECT COUNT(*)`` on a 100 TB lake table
     returns in milliseconds — the answer was priced at write time, once
     per file, and the read is a driver-side metadata fold."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txcount_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txcount_")
     n = txlog.count_rows(tdir)
     if n is None:  # every action came from the stats writer
         raise RuntimeError(
@@ -579,14 +579,7 @@ def txlog_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a range-clustered 100 TB table rewrites the handful of files
     whose stats admit the range; everything else is metadata. The
     pre-images stay time-travelable until vacuum."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txdel_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txdel_")
     txlog.delete_where(
         spark,
         tdir,
@@ -639,14 +632,7 @@ def txlog_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a range-clustered 100 TB table rewrites the handful of files
     whose stats admit the range; everything else is metadata. The
     pre-images stay time-travelable until vacuum."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txupd_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txupd_")
     txlog.update_where(
         spark,
         tdir,
@@ -946,15 +932,7 @@ def txlog_cdf_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sources.txlog_stream``); the no-op-SET edge (new image == old
     image emits nothing) and the insert branch (an append commit feeds
     pure inserts) are pinned in ``tests/test_txlog.py``."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txcdf_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-        operation="WRITE",
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txcdf_")
     txlog.update_where(
         spark,
         tdir,
@@ -1105,15 +1083,7 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     events into its sink (``/root/reference/README.md:86-125``); this is
     the table-format half — how a lake table absorbs those deletes
     without rewriting itself."""
-    tdir = tempfile.mkdtemp(prefix="cdc_txdv_")
-    base = build_products_txlog(spark, sf_dir)
-    state = txlog.read_version(spark, base).repartitionByRange(8, "id")
-    txlog.commit(
-        tdir,
-        add=txlog.write_files(state, tdir, stats_cols=["id"]),
-        expected_version=0,
-        operation="WRITE",
-    )
+    tdir = _clustered_products(spark, sf_dir, "cdc_txdv_")
     txlog.delete_where(
         spark,
         tdir,

@@ -82,9 +82,11 @@ the streaming source (``sources.txlog_stream``) all go through the pair.
 ``txns``, ``meta``, ``version``) and reads the tip and the newest
 checkpoint from ONE listing of ``_txlog/`` (:func:`_log_listing`,
 which :func:`latest_version` shares). Every
-operation resolves once: a rewrite commits on ``snap.version + 1``
-without listing the tip first, and a call that accepts a table with no
-commits guards with :func:`latest_version` and resolves that tip.
+operation resolves once and commits on ``snap.version + 1`` without
+listing the tip first. A table with no commits resolves to the initial
+snapshot (version -1, no actions, no txns, no metadata), so no caller
+special-cases an empty table, and every logged add action is a dict
+(:func:`commit` wraps a bare path as ``{"path": ...}``).
 A rewrite resolves its snapshot once and hands it to the stats prune
 (:func:`_files_in`), the touched-file probe (:func:`_touched_files`,
 one function for every rewrite) and its scans (:func:`_scan_files`,
@@ -112,6 +114,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 _LOG_SUBDIR = "_txlog"
+
+#: a ``*.tmp`` file in ``_txlog/`` older than this is a crashed
+#: committer's leftover, which :func:`vacuum` sweeps
+_TMP_GRACE_SECONDS = 600.0
 
 #: the change feed's meta columns, appended to the table's own columns by
 #: :func:`table_changes` and the streaming source's readChangeFeed mode
@@ -184,8 +190,10 @@ def _commit_path(table_dir: str, version: int) -> str:
 
 
 def _action_path(action) -> str:
-    """An ``add`` action is a bare path string or a
-    ``{"path": ..., "stats": {col: [min, max]}}`` dict."""
+    """The data file of an ``add`` action: a logged action is a
+    ``{"path": ..., ...}`` dict; a bare path string (stats-less
+    :func:`write_files` output, before :func:`commit` wraps it) is its
+    own path."""
     return action if isinstance(action, str) else action["path"]
 
 
@@ -203,7 +211,10 @@ def commit(
 
     ``add`` entries are data files entering the snapshot — bare paths,
     or ``{"path", "stats"}`` dicts when the writer collected per-file
-    min/max column stats (see :func:`write_files`); ``remove`` entries
+    min/max column stats (see :func:`write_files`). This is the one
+    place a bare path becomes an action: it is logged as
+    ``{"path": p}``, so the log, its checkpoints and every
+    :class:`Snapshot` hold only dict actions; ``remove`` entries
     are paths leaving it; ``txn`` is an optional
     ``{"app_id": ..., "batch_id": ...}`` marker; ``operation`` is the
     Delta ``commitInfo.operation`` twin — the DML entry points record
@@ -230,6 +241,7 @@ def commit(
     (Delta's classic behavior), and the payload stays byte-identical to
     the pre-timestamp format.
     """
+    add = [a if isinstance(a, dict) else {"path": a} for a in add]
     os.makedirs(_log_dir(table_dir), exist_ok=True)
     while True:
         version = latest_version(table_dir) + 1
@@ -240,7 +252,7 @@ def commit(
             )
         payload = {
             "version": version,
-            "add": list(add),
+            "add": add,
             "remove": list(remove or ()),
             "txn": txn,
             "metadata": metadata,
@@ -266,7 +278,7 @@ def commit(
                 # classic lockfile probe — only OUR link target can be the
                 # second name, so 2 means we won regardless of the errno.
                 # A vanished tmp (a concurrent vacuum swept it after a stall
-                # past _tmp_grace_seconds) leaves the race UNDECIDABLE by
+                # past _TMP_GRACE_SECONDS) leaves the race UNDECIDABLE by
                 # nlink — and guessing either way is wrong: "won" when we
                 # lost publishes nothing; "lost" when we actually won makes
                 # the append path re-commit the same payload at the next
@@ -346,9 +358,11 @@ def _fold(live: dict, payload: dict) -> None:
 
 
 class Snapshot(NamedTuple):
-    """A table as of one version: its live add actions (snapshot order),
-    the per-app txn high-water marks, the governing metaData action
-    (None if the table never declared one) and the version itself."""
+    """A table as of one version: its live add actions (snapshot order;
+    each a ``{"path", ...}`` dict), the per-app txn high-water marks, the
+    governing metaData action (None if the table never declared one) and
+    the version itself. A table with no commits is the initial snapshot
+    ``Snapshot([], {}, None, -1)``."""
 
     actions: list
     txns: dict
@@ -360,12 +374,13 @@ def _resolve(table_dir: str, version: int | None = None) -> Snapshot:
     """The :class:`Snapshot` as of ``version`` (default: the tip). The
     tip and the newest checkpoint at or below the target come from one
     :func:`_log_listing`; the fold starts from that checkpoint and
-    replays only the tail commits. A version outside ``[0, tip]`` —
-    including the default on an empty log — raises ``not in log``."""
+    replays only the tail commits. The default on a log with no commits
+    is the initial snapshot at version -1; an explicit version outside
+    ``[0, tip]`` raises ``not in log``."""
     tip, ckpts = _log_listing(table_dir)
     if version is None:
         version = tip
-    if version > tip or version < 0:
+    elif not 0 <= version <= tip:
         raise ValueError(f"version {version} not in log (tip {tip})")
     # checkpoints never replace commits: time travel below the newest one
     # replays from an older checkpoint, or from version 0
@@ -397,8 +412,11 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> int:
     after it, keeping the driver-side fold O(tail) for long-lived tables.
     Also carries the per-app txn high-water marks and the table
     metadata so :func:`last_txn` / :func:`table_metadata` stay
-    checkpoint-compatible."""
+    checkpoint-compatible. The initial snapshot of a table with no
+    commits has nothing to materialize: refused, no file written."""
     snap = _resolve(table_dir, version)
+    if snap.version < 0:
+        raise ValueError(f"{table_dir} has no commits to checkpoint")
     path = _checkpoint_path(table_dir, snap.version)
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     body = json.dumps(
@@ -577,7 +595,7 @@ def _files_in(snap, predicate_range=None) -> list[str]:
     lo, hi = _prune_bound(lo, "lo"), _prune_bound(hi, "hi")
     keep = []
     for a in snap.actions:
-        stats = a.get("stats", {}) if isinstance(a, dict) else {}
+        stats = a.get("stats", {})
         if col in stats:
             mn, mx = stats[col]
             if mn is not None and mx is not None and (mx < lo or mn > hi):
@@ -702,8 +720,9 @@ def write_files(
     return their add actions — NOT yet part of any snapshot until a
     :func:`commit` references them.
 
-    With ``stats_cols``, each action is a ``{"path", "size", "stats",
-    "num_rows"}`` dict carrying the file's byte size (Delta's required
+    Without ``stats_cols`` each action is the file's bare path, which
+    :func:`commit` logs as ``{"path": p}``. With ``stats_cols``, each
+    action is a ``{"path", "size", "stats", "num_rows"}`` dict carrying the file's byte size (Delta's required
     ``add.size`` field — what byte-budget stream admission reads from
     the LOG instead of re-statting the filesystem every trigger),
     per-file min/max for those columns (enables ``predicate_range``
@@ -767,10 +786,8 @@ def _footer_stats(paths: list[str], stats_cols: list[str]):
     not provably exact (missing, logical-typed beyond plain ints/floats,
     NaN-suppressed) — the caller then falls back to the distributed
     read-back so stored stats stay bit-identical either way."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow ships with pyspark
-        return None
+    import pyarrow.parquet as pq
+
     by_file: dict[str, dict] = {}
     nrows: dict[str, int] = {}
     for p in paths:
@@ -874,7 +891,7 @@ def _dv_map(actions) -> dict[str, dict]:
     return {
         os.path.abspath(a["path"]): a["dv"]
         for a in actions
-        if isinstance(a, dict) and a.get("dv")
+        if a.get("dv")
     }
 
 
@@ -1185,7 +1202,7 @@ def delete_where(
     rw_class: list[str] = []
     for p, (_, n) in hits.items():
         a = by_path[p]
-        num_rows = a.get("num_rows") if isinstance(a, dict) else None
+        num_rows = a.get("num_rows")
         if dv_fraction_threshold > 0 and num_rows:
             old_card = ((a.get("dv") or {}).get("cardinality")) or 0
             live = int(num_rows) - int(old_card)
@@ -1246,12 +1263,7 @@ def _write_deletion_vectors(
     )
     uris = [hits[p][0] for p in files]
     old_dirs = sorted(
-        {
-            dv["path"]
-            for p in files
-            for dv in ((by_path[p].get("dv"),) if isinstance(by_path[p], dict) else ())
-            if dv
-        }
+        {by_path[p]["dv"]["path"] for p in files if by_path[p].get("dv")}
     )
     if old_dirs:
         newly = newly.unionByName(
@@ -1268,8 +1280,7 @@ def _write_deletion_vectors(
     }
     acts = []
     for p in files:
-        a = by_path[p]
-        new_a = dict(a) if isinstance(a, dict) else {"path": a}
+        new_a = dict(by_path[p])
         card = int(counts.get(hits[p][0], 0))
         new_a["dv"] = {"path": out, "cardinality": card}
         acts.append(new_a)
@@ -1519,9 +1530,7 @@ def optimize(
     else:
         rows = rows.repartition(n_files)
     out = _to_physical(rows, meta)
-    had = [
-        c for a in snap.actions if isinstance(a, dict) for c in a.get("stats", {})
-    ]
+    had = [c for a in snap.actions for c in a.get("stats", {})]
     stats_cols = [
         c
         for c in dict.fromkeys(had + (_physical_stats_cols(zorder_by, meta) or []))
@@ -1666,13 +1675,10 @@ def table_metadata(table_dir: str, version: int | None = None) -> dict | None:
     tip): ``{"schema": <DDL string>, "constraints": {name: predicate}}``
     — the LATEST metadata commit wins (schema evolution is just a new
     metadata commit). None if the table never declared metadata — which
-    includes a FRESH table with no commits at all (``version=None``
-    only; asking for an explicit version of an empty log still raises),
-    so :func:`validated_write` works as a table's first-ever write."""
-    if version is None:
-        version = latest_version(table_dir)
-        if version < 0:
-            return None
+    includes a FRESH table with no commits at all, whose initial
+    snapshot declares nothing (``version=None`` only; asking for an
+    explicit version of an empty log still raises), so
+    :func:`validated_write` works as a table's first-ever write."""
     return _resolve(table_dir, version).meta
 
 
@@ -1804,8 +1810,8 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     public docs "Rename and drop columns with Delta Lake column
     mapping"); the reference's production sink names Delta as its table
     format (repo:BASELINE.json)."""
-    tip = latest_version(table_dir)
-    meta = dict((_resolve(table_dir, tip).meta if tip >= 0 else None) or {})
+    snap = _resolve(table_dir)
+    meta = dict(snap.meta or {})
     declared = meta.get("schema")
     if declared is None:
         raise ValueError(
@@ -1834,7 +1840,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
         table_dir,
         add=[],
         metadata=meta,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         operation="RENAME COLUMN",
     )
 
@@ -1850,8 +1856,8 @@ def drop_column(table_dir: str, col: str) -> int:
     (:func:`_physical_name` raises unless the re-add maps to a fresh
     physical name). Same refusals as :func:`rename_column`, plus the
     last remaining column (a table must keep a schema)."""
-    tip = latest_version(table_dir)
-    meta = dict((_resolve(table_dir, tip).meta if tip >= 0 else None) or {})
+    snap = _resolve(table_dir)
+    meta = dict(snap.meta or {})
     declared = meta.get("schema")
     if declared is None:
         raise ValueError(
@@ -1879,7 +1885,7 @@ def drop_column(table_dir: str, col: str) -> int:
         table_dir,
         add=[],
         metadata=meta,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         operation="DROP COLUMN",
     )
 
@@ -2071,10 +2077,9 @@ def add_constraints(
     can still declare unvalidated constraints (the protocol layer stays
     policy-free), accepting that legacy violations then live outside any
     DML's responsibility."""
-    tip = latest_version(table_dir)
-    snap = _resolve(table_dir, tip) if tip >= 0 else None
-    meta = dict(snap.meta or {}) if snap else {}
-    if snap and snap.actions:
+    snap = _resolve(table_dir)
+    meta = dict(snap.meta or {})
+    if snap.actions:
         _enforce_constraints(
             _read_snapshot(spark, table_dir, snap), {"constraints": constraints}
         )
@@ -2085,7 +2090,7 @@ def add_constraints(
         table_dir,
         add=[],
         metadata=meta,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         operation="ADD CONSTRAINT",
     )
 
@@ -2096,16 +2101,15 @@ def count_rows(table_dir: str, version: int | None = None) -> int | None:
     stats-collecting writer recorded per file. Returns None — refusing,
     not guessing — if ANY live file lacks a recorded count (e.g. it was
     added by a stats-less writer); callers then fall back to a scan. A
-    fresh table with no commits has no snapshot to count: also None
-    (``version=None`` only; an explicit version still raises).
-    O(actions) driver-side fold, zero data read."""
-    if version is None:
-        version = latest_version(table_dir)
-        if version < 0:
-            return None
+    fresh table with no commits (the initial snapshot) has nothing to
+    count: also None (``version=None`` only; an explicit version still
+    raises). O(actions) driver-side fold, zero data read."""
+    snap = _resolve(table_dir, version)
+    if snap.version < 0:
+        return None
     total = 0
-    for a in _resolve(table_dir, version).actions:
-        if not isinstance(a, dict) or "num_rows" not in a:
+    for a in snap.actions:
+        if "num_rows" not in a:
             return None
         dv = a.get("dv") or {}
         if dv and dv.get("cardinality") is None:
@@ -2150,7 +2154,7 @@ def history(table_dir: str) -> list[dict]:
             else:
                 op = "EMPTY"
         rows_added = None
-        if add and all(isinstance(a, dict) and "num_rows" in a for a in add):
+        if add and all("num_rows" in a for a in add):
             rows_added = sum(int(a["num_rows"]) for a in add)
         rows.append(
             {
@@ -2170,7 +2174,6 @@ def vacuum(
     table_dir: str,
     dry_run: bool = False,
     retention_versions: int = 0,
-    _tmp_grace_seconds: float = 600.0,
     data_grace_seconds: float = 600.0,
 ) -> list[str]:
     """Delete data files referenced by NO retained snapshot and return
@@ -2217,7 +2220,7 @@ def vacuum(
     Also sweeps ``*.tmp`` files stranded in ``_txlog/`` by a writer that
     crashed between publishing and unlinking its private temp file
     (harmless to readers — the log listing only folds ``*.json`` — but
-    they accumulate). Temp files younger than ``_tmp_grace_seconds``
+    they accumulate). Temp files younger than :data:`_TMP_GRACE_SECONDS`
     are kept: an IN-FLIGHT committer holds its tmp only for the
     instants between fsync and ``os.link``, so the grace window makes
     sweeping safe against live writers. Swept tmp files are NOT part of
@@ -2265,7 +2268,7 @@ def vacuum(
             {
                 os.path.abspath(a["dv"]["path"])
                 for a in acts
-                if isinstance(a, dict) and a.get("dv")
+                if a.get("dv")
             },
         )
 
@@ -2340,7 +2343,7 @@ def vacuum(
                 continue
             p = os.path.abspath(os.path.join(ldir, f))
             with contextlib.suppress(FileNotFoundError):
-                if now - os.stat(p).st_mtime > _tmp_grace_seconds:
+                if now - os.stat(p).st_mtime > _TMP_GRACE_SECONDS:
                     tmp_sweeps.append(p)
     if not dry_run:
         import shutil
@@ -2356,10 +2359,7 @@ def vacuum(
 def last_txn(table_dir: str, app_id: str) -> int | None:
     """Highest ``batch_id`` committed under ``app_id``, or None — the
     foreachBatch idempotence check (skip when ``batch_id <= last_txn``)."""
-    tip = latest_version(table_dir)
-    if tip < 0:
-        return None
-    b = _resolve(table_dir, tip).txns.get(app_id)
+    b = _resolve(table_dir).txns.get(app_id)
     return int(b) if b is not None else None
 
 

@@ -186,15 +186,14 @@ def _add_size(action) -> int:
     admission: the action's own ``size`` field when the writer recorded
     it (:func:`txlog.write_files` with stats — Delta's required
     ``add.size``, making the admission walk pure KB-JSON), else one
-    driver-side ``stat`` (bare-path legacy actions; same metadata cost
-    class as the vacuumed-horizon check). A vacuumed file reads as 0 —
-    admission must keep advancing so planning can raise its guided
-    error rather than the walk dying on a stat."""
-    if isinstance(action, dict) and action.get("size") is not None:
+    driver-side ``stat`` (a ``{"path"}``-only action from a stats-less
+    writer; same metadata cost class as the vacuumed-horizon check). A
+    vacuumed file reads as 0 — admission must keep advancing so planning
+    can raise its guided error rather than the walk dying on a stat."""
+    if action.get("size") is not None:
         return int(action["size"])
-    p = txlog._action_path(action)
     try:
-        return os.path.getsize(p)
+        return os.path.getsize(action["path"])
     except OSError:
         return 0
 
@@ -431,7 +430,7 @@ def _sides(part) -> list[tuple[str, str | None]]:
 
 def _dv_path(action) -> str | None:
     """The deletion-vector sidecar an add action carries, or None."""
-    dv = action.get("dv") if isinstance(action, dict) else None
+    dv = action.get("dv")
     return dv["path"] if dv else None
 
 
@@ -554,9 +553,11 @@ class TxlogStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self.table_dir = _required_path(options)
         # one resolution serves the mapping check, the feed's fields and
-        # the startingVersion bound; a table with no commits yet has none
-        tip = txlog.latest_version(self.table_dir)
-        meta = (txlog._resolve(self.table_dir, tip).meta if tip >= 0 else None) or {}
+        # the startingVersion bound (a table with no commits yet is the
+        # initial snapshot: no metadata, tip -1)
+        snap = txlog._resolve(self.table_dir)
+        tip = snap.version
+        meta = snap.meta or {}
         # column mapping: a table whose columns were RENAMED or DROPPED
         # is refused up front, Delta's own restriction ("streaming reads
         # from a table with column mapping changes are unsupported") — a
@@ -724,11 +725,10 @@ class TxlogStreamDataSource(DataSource):
         # NOTE: this runs in a session-less Python worker — DDL strings
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
-        tip = txlog.latest_version(table_dir)
-        snap = txlog._resolve(table_dir, tip) if tip >= 0 else None
-        base = (snap.meta or {}).get("schema") if snap else None
+        snap = txlog._resolve(table_dir)
+        base = (snap.meta or {}).get("schema")
         if base is None:
-            files = txlog._files_in(snap) if snap else []
+            files = txlog._files_in(snap)
             if not files:
                 raise ValueError(
                     f"cdc_txlog source: table {table_dir} has no committed "

@@ -68,10 +68,10 @@ class Scd2State:
         self.table_dir = table_dir
 
     def read(self) -> DataFrame | None:
-        tip = txlog.latest_version(self.table_dir)
-        if tip < 0:
+        snap = txlog._resolve(self.table_dir)
+        if snap.version < 0:
             return None
-        return txlog.read_version(self.spark, self.table_dir, tip)
+        return txlog._read_snapshot(self.spark, self.table_dir, snap)
 
 
 def apply_batch(
@@ -82,11 +82,11 @@ def apply_batch(
     batch's keys. ``batch_id`` (the foreachBatch id) makes a replayed
     batch a no-op."""
     spark, tdir = state.spark, state.table_dir
-    tip = txlog.latest_version(tdir)
     # one log walk per merge: the replay check, the prune, the probe and
-    # the rewrite read the same resolved snapshot
-    snap = txlog._resolve(tdir, tip) if tip >= 0 else None
-    if batch_id is not None and snap is not None:
+    # the rewrite read the same resolved snapshot (the initial snapshot,
+    # version -1, for a state with no commits yet)
+    snap = txlog._resolve(tdir)
+    if batch_id is not None:
         last = snap.txns.get(APP_ID)
         if last is not None and batch_id <= int(last):
             return  # replayed batch: its txn marker is already committed
@@ -97,10 +97,10 @@ def apply_batch(
     if n == 0:
         return  # nothing to merge: no empty commit
     # stats prune on the batch's id range (metadata only; a null-id batch
-    # can match no state row, and an empty table has no files)
+    # can match no state row)
     cand = (
         txlog._files_in(snap, predicate_range=("id", lo, hi))
-        if snap is not None and lo is not None
+        if lo is not None
         else []
     )
     keys = F.broadcast(events.select("id"))  # duplicates can't change a semi/anti join
@@ -130,9 +130,9 @@ def apply_batch(
         tdir,
         add=txlog.write_files(out, tdir, stats_cols=["id"]),
         remove=touched,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         txn=None if batch_id is None else {"app_id": APP_ID, "batch_id": batch_id},
         # the first commit declares the state's schema: every later scan
         # is planned with it, so no read launches a footer-inference job
-        metadata={"schema": out.schema.toDDL()} if tip < 0 else None,
+        metadata={"schema": out.schema.toDDL()} if snap.version < 0 else None,
     )

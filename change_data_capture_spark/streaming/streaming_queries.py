@@ -2166,6 +2166,22 @@ FROM cdc_events
 """.format(cdc_events_sql=CDC_EVENTS_SQL)
 
 
+def _products_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The products change events decoded off the wire, with the price
+    as a double: the rows the streaming txlog gates land as commits."""
+    from change_data_capture_spark.functions.envelope import decode_envelope
+
+    return decode_envelope(product_change_events(spark, sf_dir)).select(
+        "id",
+        "op",
+        "lsn",
+        "ts_ms",
+        "name",
+        "description",
+        F.col("price").cast("double").alias("price"),
+    )
+
+
 @query("streaming_txlog_idempotent_replay", oracle=_IDEMPOTENT_REPLAY_ORACLE)
 def streaming_txlog_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once foreachBatch ingest via transaction-log txn markers —
@@ -2188,21 +2204,12 @@ def streaming_txlog_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataF
     Scale: state per batch is one KB-sized commit JSON; the guard is a
     driver-side log fold, the data path an unchanged distributed append.
     """
-    from change_data_capture_spark.functions.envelope import decode_envelope
     from change_data_capture_spark.sources import txlog
 
     app = "products_wire_ingest"
     ws = tempfile.mkdtemp(prefix="cdc_txreplay_")
     tdir = f"{ws}/table"
-    wire = decode_envelope(product_change_events(spark, sf_dir)).select(
-        "id",
-        "op",
-        "lsn",
-        "ts_ms",
-        "name",
-        "description",
-        F.col("price").cast("double").alias("price"),
-    )
+    wire = _products_wire(spark, sf_dir)
 
     # the wire arrives as two micro-batches (parquet slices, mtime-ordered)
     # — ONE pass over the wire decode writes both (the per-slice form
@@ -2280,7 +2287,6 @@ def streaming_txlog_source_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     op-cardinality-sized, the classic streaming-agg footprint."""
     import uuid as _uuid
 
-    from change_data_capture_spark.functions.envelope import decode_envelope
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamDataSource,
@@ -2288,15 +2294,7 @@ def streaming_txlog_source_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ws = tempfile.mkdtemp(prefix="cdc_txsrc_")
     src_table = f"{ws}/src"
-    wire = decode_envelope(product_change_events(spark, sf_dir)).select(
-        "id",
-        "op",
-        "lsn",
-        "ts_ms",
-        "name",
-        "description",
-        F.col("price").cast("double").alias("price"),
-    )
+    wire = _products_wire(spark, sf_dir)
     spark.dataSource.register(TxlogStreamDataSource)
 
     state: list[str] = []  # dir of the current materialized state
@@ -2370,7 +2368,6 @@ def streaming_txlog_skip_change_commits(
     per-commit metadata decision inside the same O(commits-in-range)
     driver fold; partitions stay one-per-added-file, reads stay
     executor-side Arrow."""
-    from change_data_capture_spark.functions.envelope import decode_envelope
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamDataSource,
@@ -2378,15 +2375,7 @@ def streaming_txlog_skip_change_commits(
 
     ws = tempfile.mkdtemp(prefix="cdc_txskip_")
     src_table = f"{ws}/src"
-    wire = decode_envelope(product_change_events(spark, sf_dir)).select(
-        "id",
-        "op",
-        "lsn",
-        "ts_ms",
-        "name",
-        "description",
-        F.col("price").cast("double").alias("price"),
-    )
+    wire = _products_wire(spark, sf_dir)
     spark.dataSource.register(TxlogStreamDataSource)
     quarter = F.pmod(F.coalesce(F.col("id"), F.lit(0)), F.lit(4))
     # one pass over the wire decode stages all four quarters' files (the
@@ -2768,8 +2757,8 @@ def streaming_txlog_rate_limit_bytes(
     add action carries Delta's required ``add.size`` field — the gate
     asserts the sizes are IN THE LOG, because that is the scale story:
     admission stays a pure KB-JSON driver walk, no filesystem re-stat
-    per trigger (bare-path legacy actions fall back to one driver-side
-    ``stat``, pinned separately in ``tests/test_txlog.py``). The budget
+    per trigger (a ``{"path"}``-only action from a stats-less writer
+    falls back to one driver-side ``stat``, pinned separately in ``tests/test_txlog.py``). The budget
     is set from the log itself to the largest consecutive-commit-pair
     byte sum, so ``latestOffset`` must drain the backlog in exactly
     THREE version-aligned micro-batches of two commits each (the gate
@@ -2819,7 +2808,7 @@ def streaming_txlog_rate_limit_bytes(
     sizes = []
     for c in txlog._commits(tdir, 0, 5):
         adds = c.get("add") or ()
-        if not all(isinstance(a, dict) and a.get("size") for a in adds):
+        if not all(a.get("size") for a in adds):
             raise RuntimeError(
                 "add actions must carry their byte size in the LOG — "
                 "byte admission may never depend on a filesystem re-stat"

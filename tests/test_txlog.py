@@ -937,10 +937,10 @@ def test_log_walk_reads_each_commit_once(tmp_path, monkeypatch):
 
 def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
     """A snapshot resolution lists ``_txlog/`` once: the tip and the
-    newest checkpoint come from the same listing, and a rewrite commits
-    on the version it resolved instead of listing the tip first. The
-    only other listings are an empty-table guard (``latest_version``)
-    where a call accepts a table with no commits, and ``commit``'s own
+    newest checkpoint come from the same listing, a table with no
+    commits is the initial snapshot of that same listing (no guard of
+    its own), and a write commits on the version it resolved instead of
+    listing the tip first. The only other listing is ``commit``'s own
     tip check."""
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamDataSource,
@@ -1023,19 +1023,19 @@ def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
         "_resolve": 1,
         "snapshot_files": 1,
         "read_version": 1,
-        "table_metadata": 2,
-        "count_rows": 2,
-        "last_txn": 2,
-        "TxlogStreamReader": 2,
-        "schema": 2,
+        "table_metadata": 1,
+        "count_rows": 1,
+        "last_txn": 1,
+        "TxlogStreamReader": 1,
+        "schema": 1,
         "merge_into": 2,
         "delete_where": 2,
         "update_where": 2,
         "optimize": 2,
-        "rename_column": 3,
-        "drop_column": 3,
-        "apply_batch": 3,
-        "Scd2State.read": 2,
+        "rename_column": 2,
+        "drop_column": 2,
+        "apply_batch": 2,
+        "Scd2State.read": 1,
     }
     # every rewrite committed: a no-op would have skipped commit's listing
     assert txlog.latest_version(t) == 7
@@ -1224,6 +1224,37 @@ def test_fresh_table_metadata_count_and_first_validated_write(spark, tmp_path):
     acts = txlog.validated_write(_df(spark, [(1, "a")]), t, stats_cols=["id"])
     txlog.commit(t, add=acts, expected_version=0)
     assert txlog.count_rows(t) == 1
+
+
+def test_empty_table_is_the_initial_snapshot(spark, tmp_path):
+    """A table with no commits resolves to the initial snapshot: version
+    -1, no actions, no txns, no metadata. Readers and rewrites answer it
+    as a snapshot with no files, an explicit version still raises, and a
+    checkpoint of it is refused without writing a file. ``commit`` logs
+    a bare-path add as a ``{"path"}`` action."""
+    import json as _json
+
+    t = str(tmp_path / "fresh")
+    snap = txlog._resolve(t)
+    assert (snap.actions, snap.txns, snap.meta, snap.version) == ([], {}, None, -1)
+    with pytest.raises(ValueError, match="not in log"):
+        txlog._resolve(t, 0)
+    assert txlog.snapshot_files(t) == []
+    assert txlog.delete_where(spark, t, "id = 1") == (-1, [])
+    assert txlog.optimize(spark, t) == -1
+    assert txlog.latest_version(t) == -1  # neither committed
+    with pytest.raises(ValueError, match="no commits"):
+        txlog.write_checkpoint(t)
+    ldir = os.path.join(t, "_txlog")
+    assert not os.path.isdir(ldir) or not any(
+        f.endswith(".checkpoint.json") for f in os.listdir(ldir)
+    )
+    bare = txlog.write_files(_df(spark, [(1, "a")]), t)
+    assert bare and all(isinstance(p, str) for p in bare)
+    assert txlog.commit(t, add=bare, expected_version=0) == 0
+    with open(txlog._commit_path(t, 0)) as f:
+        assert _json.load(f)["add"] == [{"path": p} for p in bare]
+    assert txlog._resolve(t).actions == [{"path": p} for p in bare]
 
 
 def test_stats_on_date_and_decimal_columns_commit_and_prune(spark, tmp_path):
