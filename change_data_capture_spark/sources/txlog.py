@@ -49,8 +49,9 @@ log of add/remove file actions, folded into a snapshot):
   version and replay only the tail, so the driver-side fold stays
   O(commits since last checkpoint) no matter how long the table lives.
 - **File-level data skipping.** An ``add`` action may carry per-file
-  min/max column stats (Delta's ``stats`` field, which production
-  writers lift from parquet footers); :func:`snapshot_files` with a
+  min/max column stats and a row count (Delta's ``stats`` field),
+  decoded by :func:`write_files` from the footers of the parquet files
+  it just wrote — no pass re-reads them; :func:`snapshot_files` with a
   ``predicate_range`` prunes non-overlapping files DRIVER-SIDE, before
   Spark ever lists them — the metadata-only pruning that turns a
   100 TB scan into a few-file read when the data is range-clustered.
@@ -381,7 +382,10 @@ def _resolve(table_dir: str, version: int | None = None) -> Snapshot:
     if version is None:
         version = tip
     elif not 0 <= version <= tip:
-        raise ValueError(f"version {version} not in log (tip {tip})")
+        raise ValueError(
+            f"version {version} not in log: outside the log's committed "
+            f"range [0, {tip}]"
+        )
     # checkpoints never replace commits: time travel below the newest one
     # replays from an older checkpoint, or from version 0
     best = max((c for c in ckpts if c <= version), default=None)
@@ -730,15 +734,8 @@ def write_files(
     :func:`count_rows` — Delta's ``numRecords``). Stats are lifted from
     the PARQUET FOOTERS of the files just written — exactly what a
     production Delta writer does — a driver-side metadata read bounded
-    by file count, never row count (the pre-r13 form re-read the whole
-    write output through a distributed ``groupBy(input_file_name())``
-    aggregation: one full extra pass of every committed byte, per
-    commit). Footer min/max is exact for the int/float columns the
-    engine stats (parquet stores typed values, not truncated prefixes,
-    for physical INT/DOUBLE); any column whose footer stats are absent
-    or non-exact (strings truncate, NaN suppresses float stats,
-    decimals re-encode) falls back to the distributed read-back for
-    that write, keeping behavior identical."""
+    by file count, never row count, and no Spark job of its own
+    (:func:`_footer_stats`)."""
     out = os.path.join(table_dir, "data", uuid.uuid4().hex)
     df.write.parquet(out)
     paths = sorted(
@@ -748,137 +745,89 @@ def write_files(
     )
     if not stats_cols:
         return paths
-    return stats_actions_for(df.sparkSession, paths, stats_cols)
+    return stats_actions_for(paths, stats_cols)
 
 
-def stats_actions_for(
-    spark: SparkSession, paths: list[str], stats_cols: list[str]
-) -> list:
+def stats_actions_for(paths: list[str], stats_cols: list[str]) -> list:
     """Add actions (``path``/``size``/``stats``/``num_rows``) for
-    ALREADY-WRITTEN parquet files — footer-lifted stats with the same
-    distributed read-back fallback as :func:`write_files` (shared by
-    writers that land several commits' files in one pass and split the
-    actions per commit afterwards)."""
-    footer = _footer_stats(paths, stats_cols)
-    if footer is not None:
-        by_file, nrows = footer
-    else:
-        by_file, nrows = _readback_stats(spark, paths, stats_cols)
-    return [
-        {
-            "path": p,
-            "size": os.path.getsize(p),
-            "stats": by_file.get(os.path.abspath(p), {}),
-            "num_rows": nrows.get(os.path.abspath(p), 0),
-        }
-        for p in paths
-    ]
+    ALREADY-WRITTEN parquet files, from their footers
+    (:func:`_footer_stats`) — shared by :func:`write_files` and writers
+    that land several commits' files in one pass and split the actions
+    per commit afterwards."""
+    acts = []
+    for p in paths:
+        stats, num_rows = _footer_stats(p, stats_cols)
+        acts.append(
+            {
+                "path": p,
+                "size": os.path.getsize(p),
+                "stats": stats,
+                "num_rows": num_rows,
+            }
+        )
+    return acts
 
 
-#: parquet physical types whose footer min/max is the exact column
-#: min/max (typed values — no prefix truncation, no re-encoding)
-_FOOTER_EXACT_PHYSICAL = {"INT32", "INT64", "FLOAT", "DOUBLE"}
+def _footer_stats(path: str, stats_cols: list[str]) -> tuple[dict, int]:
+    """``({col: [min, max]}, row count)`` of one parquet file, decoded
+    from its footer's typed column statistics — the only source of
+    per-file stats. Row groups whose values are all null are skipped; a
+    column absent from the file, all null, or with a row group whose
+    footer holds no min/max (Spark's default INT96 timestamps, oversized
+    strings) records ``[None, None]``, the encoding that never prunes. A
+    stats column that exists only as a nested leaf raises, and so does a
+    footer that cannot be read: the file was just written."""
+    import decimal
 
-
-def _footer_stats(paths: list[str], stats_cols: list[str]):
-    """Per-file ``(min/max stats, row counts)`` lifted from parquet
-    footers, or ``None`` when any requested column's footer stats are
-    not provably exact (missing, logical-typed beyond plain ints/floats,
-    NaN-suppressed) — the caller then falls back to the distributed
-    read-back so stored stats stay bit-identical either way."""
     import pyarrow.parquet as pq
 
-    by_file: dict[str, dict] = {}
-    nrows: dict[str, int] = {}
-    for p in paths:
-        try:
-            md = pq.ParquetFile(p).metadata
-        except Exception:
-            return None
-        ap = os.path.abspath(p)
-        nrows[ap] = md.num_rows
-        # key leaves by their FULL dotted path, not the bare leaf name: a
-        # nested leaf like payload.id reports name 'id' and would shadow
-        # (or stand in for) the top-level column — footer stats of the
-        # wrong leaf drive predicate_range pruning, i.e. silently wrong
-        # results. Only a leaf whose path IS the stats column name is the
-        # top-level column; a name that matches some nested leaf only
-        # routes to the exact distributed read-back instead.
-        idx = {}
-        names = set()
-        for j in range(len(md.schema)):
-            col = md.schema.column(j)
-            idx[col.path] = (j, col.physical_type, col.logical_type.type)
-            names.add(col.name)
-        stats: dict[str, list] = {}
-        for c in stats_cols:
-            if c not in idx:
-                if c in names:
-                    # exists only as a nested leaf (struct field) — the
-                    # footer cannot represent the top-level column; fall
-                    # back to the read-back for this write
-                    return None
-                # column absent from this file (pre-evolution vintage):
-                # the read-back aggregation would yield NULL bounds too
-                stats[c] = [None, None]
-                continue
-            j, phys, logical = idx[c]
-            if phys not in _FOOTER_EXACT_PHYSICAL or logical not in (
-                "NONE",
-                "INT",
-            ):
-                return None
-            mn = mx = None
-            n_vals = 0
-            for g in range(md.num_row_groups):
-                cc = md.row_group(g).column(j)
-                n_vals += cc.num_values
-                st = cc.statistics
-                if cc.num_values == 0:
-                    continue
-                if st is None or not st.has_min_max:
-                    return None  # NaN-suppressed or writer omitted
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            if n_vals == 0:
-                stats[c] = [None, None]  # all-null column in this file
-            else:
-                stats[c] = [_stat_bound(mn, "min"), _stat_bound(mx, "max")]
-        by_file[ap] = stats
-    return by_file, nrows
-
-
-def _readback_stats(spark: SparkSession, paths: list[str], stats_cols: list[str]):
-    """The distributed stats fallback: one read-back aggregation grouped
-    by ``input_file_name()`` — exact for every type, at the cost of a
-    full extra pass over the written bytes."""
-    from pyspark.sql import functions as F
-
-    aggs = [F.count(F.lit(1)).alias("__num_rows")]
+    md = pq.ParquetFile(path).metadata
+    # key leaves by their FULL dotted path, not the bare leaf name: a
+    # nested leaf like payload.id reports name 'id' and would shadow (or
+    # stand in for) the top-level column — footer stats of the wrong leaf
+    # drive predicate_range pruning, i.e. silently wrong results
+    leaves = {}
+    names = set()
+    for j in range(len(md.schema)):
+        col = md.schema.column(j)
+        leaves[col.path] = (j, col)
+        names.add(col.name)
+    stats: dict[str, list] = {}
     for c in stats_cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    rows = (
-        spark.read.parquet(*paths)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(*aggs)
-        .collect()
-    )
-    by_file = {}
-    nrows = {}
-    for r in rows:
-        p = _local_path(r["f"])
-        by_file[p] = {
-            c: [
-                _stat_bound(r[f"min_{c}"], "min"),
-                _stat_bound(r[f"max_{c}"], "max"),
-            ]
-            for c in stats_cols
-        }
-        nrows[p] = r["__num_rows"]
-    return by_file, nrows
-
-
+        stats[c] = [None, None]
+        if c not in leaves:
+            if c in names:
+                raise ValueError(
+                    f"stats column {c!r} of {path} exists only as a nested "
+                    "field; per-file stats cover top-level columns"
+                )
+            continue  # absent from this file (pre-evolution vintage)
+        j, col = leaves[c]
+        chunks = (
+            md.row_group(g).column(j).statistics
+            for g in range(md.num_row_groups)
+        )
+        # skip row groups whose values are all null
+        groups = [st for st in chunks if st is None or st.num_values]
+        if not groups or any(st is None or not st.has_min_max for st in groups):
+            continue
+        if col.logical_type.type == "DECIMAL" and col.physical_type in (
+            "INT32",
+            "INT64",
+        ):
+            # pyarrow does not decode integer-backed decimal bounds
+            exp = -col.scale
+            lows = [decimal.Decimal(st.min_raw).scaleb(exp) for st in groups]
+            highs = [decimal.Decimal(st.max_raw).scaleb(exp) for st in groups]
+        else:
+            lows = [st.min for st in groups]
+            highs = [st.max for st in groups]
+        # across row groups NaN sorts above every number, as in Spark
+        stats[c] = [
+            _stat_bound(min(lows, key=lambda v: (v != v, v)), "min"),
+            _stat_bound(max(highs, key=lambda v: (v != v, v)), "max"),
+        ]
+    return stats, md.num_rows
 
 
 def _dv_map(actions) -> dict[str, dict]:
@@ -1251,9 +1200,11 @@ def _write_deletion_vectors(
     old one, carrying all deletions to date. Rows the old sidecars hold
     for OTHER files are not copied (a shared sidecar stays referenced by
     those files' own actions; copying would leak stale positions across
-    a later RESTORE). Per-file cardinality is read back from the written
-    sidecar — bounded by deleted rows, the same read-back pattern as
-    :func:`write_files`' stats."""
+    a later RESTORE). Per-file cardinality is counted by an
+    :class:`~pyspark.sql.Observation` on the sidecar write itself, one
+    ``count_if`` per file: the write stays one job and nothing is read
+    back."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     scan = _scan_files(spark, snap, files, with_meta=True)
@@ -1270,19 +1221,16 @@ def _write_deletion_vectors(
             spark.read.parquet(*old_dirs).where(F.col("file").isin(uris))
         )
     out = os.path.join(table_dir, "dv", uuid.uuid4().hex)
-    newly.write.parquet(out)
-    counts = {
-        r["file"]: r["n"]
-        for r in spark.read.parquet(out)
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    obs = Observation()
+    per_file = [
+        F.count_if(F.col("file") == u).alias(f"n{i}") for i, u in enumerate(uris)
+    ]
+    newly.observe(obs, *per_file).write.parquet(out)
+    counts = obs.get
     acts = []
-    for p in files:
+    for i, p in enumerate(files):
         new_a = dict(by_path[p])
-        card = int(counts.get(hits[p][0], 0))
-        new_a["dv"] = {"path": out, "cardinality": card}
+        new_a["dv"] = {"path": out, "cardinality": int(counts[f"n{i}"])}
         acts.append(new_a)
     return acts
 
@@ -1553,12 +1501,11 @@ def rewrite_with_retry(
 ) -> int:
     """Run a guarded copy-on-write rewrite under optimistic concurrency
     (Delta's commit loop): ``rewrite(tip)`` computes the rewrite AGAINST
-    the given tip and returns ``(add, remove)`` (optionally
-    ``(add, remove, txn)``); this helper commits it as ``tip + 1``. When
-    a concurrent writer lands first, the attempt's remove-set was
-    computed against a stale snapshot, so the helper backs off
-    (exponential, bounded, jittered — two crash-looping writers must not
-    stay phase-locked) and RE-RUNS ``rewrite`` against the new tip —
+    the given tip and returns ``(add, remove)``; this helper commits it
+    as ``tip + 1``. When a concurrent writer lands first, the attempt's
+    remove-set was computed against a stale snapshot, so the helper
+    backs off (exponential, bounded, jittered — two crash-looping
+    writers must not stay phase-locked) and RE-RUNS ``rewrite`` against the new tip —
     re-deriving touched files from current state is the only generally
     safe response to a lost rewrite race (the competing commit may have
     rewritten the very files this attempt planned to remove). After
@@ -1577,17 +1524,14 @@ def rewrite_with_retry(
 
     if max_attempts < 1:
         raise ValueError(f"max_attempts must be >= 1, got {max_attempts}")
-    last: ConcurrentCommitError | None = None
     for attempt in range(max_attempts):
         tip = latest_version(table_dir)
-        out = rewrite(tip)
-        add, remove, txn = (*out, None) if len(out) == 2 else out
+        add, remove = rewrite(tip)
         try:
             return commit(
                 table_dir,
                 add=add,
                 remove=list(remove or ()),
-                txn=txn,
                 expected_version=tip + 1,
             )
         except ConcurrentCommitError as e:
@@ -1595,11 +1539,6 @@ def rewrite_with_retry(
             _time.sleep(
                 backoff_seconds * (2**attempt) * (0.5 + random.random())
             )
-    if last is None:  # max_attempts >= 1 guarantees a bound error
-        raise RuntimeError(
-            "rewrite_with_retry exhausted attempts without binding an error "
-            f"(max_attempts={max_attempts})"
-        )
     raise last
 
 
@@ -2272,6 +2211,28 @@ def vacuum(
             },
         )
 
+    def stale(p: str, warning: str) -> bool:
+        """Whether never-committed ``p`` is past the in-flight grace. A
+        path that vanished or is younger than ``data_grace_seconds``
+        (likely an in-flight writer's pending output) is kept; an old
+        one — the one class the in-flight-writer hazard applies to — is
+        logged with ``warning`` so operators can audit whether
+        ``data_grace_seconds`` is shorter than real writes."""
+        try:
+            age = now - os.stat(p).st_mtime
+        except FileNotFoundError:
+            return False  # vanished concurrently: nothing to reclaim
+        if age <= data_grace_seconds:
+            return False
+        logging.getLogger(__name__).warning(
+            warning,
+            "would reclaim (dry run)" if dry_run else "reclaiming",
+            p,
+            age,
+            data_grace_seconds,
+        )
+        return True
+
     live, live_dv = refs(retained)
     ever_referenced, ever_dv = refs(ever)
     victims = []
@@ -2282,25 +2243,13 @@ def vacuum(
             p = os.path.abspath(os.path.join(dirpath, f))
             if p in live:
                 continue
-            if p not in ever_referenced:
-                try:
-                    age = now - os.stat(p).st_mtime
-                except FileNotFoundError:
-                    continue  # vanished concurrently: nothing to reclaim
-                if age <= data_grace_seconds:
-                    continue  # likely an in-flight writer's pending file
-                # old-but-uncommitted: the one class the in-flight-writer
-                # hazard applies to — flag it so operators can audit
-                # whether data_grace_seconds is shorter than real writes
-                logging.getLogger(__name__).warning(
-                    "vacuum %s never-committed file %s (age %.0fs > "
-                    "data_grace_seconds=%.0fs); if a live writer is "
-                    "slower than the grace, raise data_grace_seconds",
-                    "would reclaim (dry run)" if dry_run else "reclaiming",
-                    p,
-                    age,
-                    data_grace_seconds,
-                )
+            if p not in ever_referenced and not stale(
+                p,
+                "vacuum %s never-committed file %s (age %.0fs > "
+                "data_grace_seconds=%.0fs); if a live writer is "
+                "slower than the grace, raise data_grace_seconds",
+            ):
+                continue
             victims.append(p)
     # deletion-vector sidecars: the retention unit is the sidecar DIR
     # (one descriptor path = one spark write: part files + _SUCCESS
@@ -2313,21 +2262,12 @@ def vacuum(
             d = os.path.abspath(os.path.join(dv_root, entry))
             if not os.path.isdir(d) or d in live_dv:
                 continue
-            if d not in ever_dv:
-                try:
-                    age = now - os.stat(d).st_mtime
-                except FileNotFoundError:
-                    continue
-                if age <= data_grace_seconds:
-                    continue  # an in-flight DELETE's pending sidecar
-                logging.getLogger(__name__).warning(
-                    "vacuum %s never-committed deletion-vector sidecar %s "
-                    "(age %.0fs > data_grace_seconds=%.0fs)",
-                    "would reclaim (dry run)" if dry_run else "reclaiming",
-                    d,
-                    age,
-                    data_grace_seconds,
-                )
+            if d not in ever_dv and not stale(
+                d,
+                "vacuum %s never-committed deletion-vector sidecar %s "
+                "(age %.0fs > data_grace_seconds=%.0fs)",
+            ):
+                continue
             dv_rm_dirs.append(d)
             for dp, _, fs in os.walk(d):
                 victims.extend(
@@ -2481,15 +2421,15 @@ def table_changes(
         end_version = version_at_timestamp(
             table_dir, ending_timestamp, stamps=ts_stamps
         )
-    tip = latest_version(table_dir)
-    end = tip if end_version is None else end_version
-    if start_version < 0 or end > tip or start_version > end:
+    # END's snapshot types the feed and bounds the range: one listing
+    snap = _resolve(table_dir, end_version)
+    end = snap.version
+    if not 0 <= start_version <= end:
         raise ValueError(
             f"table_changes range [{start_version}, {end}] outside the "
-            f"log's committed range [0, {tip}]"
+            f"log's committed range (start must lie in [0, {end}])"
         )
     parts = txlog_stream._cdf_partitions(table_dir, start_version - 1, end, key)
-    snap = _resolve(table_dir, end)
     # the feed's meta columns live in the Delta-style underscore
     # namespace (:func:`_cdf_schema` refuses a table whose data uses one).
     # With a declared schema the column set IS the declaration (no file

@@ -98,8 +98,9 @@ def _staged_commit_slices(
     slice owns exactly ``per_slice_files`` files, the same per-commit
     file count the old ``repartition(2)`` writes produced. Returns the
     per-slice file lists, as bare paths or (with ``stats_cols``) as
-    footer-lifted stats actions carrying Delta's ``size``/``stats``/
-    ``numRecords`` fields (:func:`txlog.stats_actions_for`)."""
+    stats actions carrying Delta's ``size``/``stats``/``numRecords``
+    fields, decoded from each file's parquet footer on the driver with
+    no Spark job (:func:`txlog.stats_actions_for`)."""
     import os
     import shutil
     import uuid as _uuid
@@ -142,7 +143,7 @@ def _staged_commit_slices(
                 )
             paths.append(os.path.join(d, parts[0]))
         per_slice.append(
-            _txlog.stats_actions_for(df.sparkSession, paths, stats_cols)
+            _txlog.stats_actions_for(paths, stats_cols)
             if stats_cols
             else paths
         )

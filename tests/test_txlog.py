@@ -941,7 +941,9 @@ def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
     commits is the initial snapshot of that same listing (no guard of
     its own), and a write commits on the version it resolved instead of
     listing the tip first. The only other listing is ``commit``'s own
-    tip check."""
+    tip check. ``table_changes`` takes its range check from its END
+    resolution; a range holding a rewrite also resolves the version
+    before it."""
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamDataSource,
         TxlogStreamReader,
@@ -1017,6 +1019,14 @@ def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
         "drop_column": listings(lambda: txlog.drop_column(t, "w")),
         "apply_batch": listings(lambda: apply_batch(state, touching, batch_id=1)),
         "Scd2State.read": listings(state.read),
+        # v1 appended; v2 is the MERGE rewrite, whose remove side
+        # resolves v1
+        "table_changes append": listings(
+            lambda: txlog.table_changes(spark, t, 1, 1)
+        ),
+        "table_changes rewrite": listings(
+            lambda: txlog.table_changes(spark, t, 1, 2)
+        ),
     }
     monkeypatch.undo()
     assert counts == {
@@ -1036,6 +1046,8 @@ def test_one_log_listing_per_resolution(spark, tmp_path, monkeypatch):
         "drop_column": 2,
         "apply_batch": 2,
         "Scd2State.read": 1,
+        "table_changes append": 1,
+        "table_changes rewrite": 2,
     }
     # every rewrite committed: a no-op would have skipped commit's listing
     assert txlog.latest_version(t) == 7
@@ -1789,8 +1801,11 @@ def test_table_changes_empty_feed_for_metadata_only_range(spark, tmp_path):
 
 def _jobs_run(spark, fn):
     """``(fn(), number of Spark jobs fn ran)``."""
+    import uuid
+
     sc = spark.sparkContext
-    group = f"jobs-run-{id(fn)}"
+    # a fresh group per call: two short-lived lambdas can share an id()
+    group = f"jobs-run-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -2036,6 +2051,40 @@ def test_delete_dv_merges_with_existing_vector(spark, tmp_path):
         spark, t, "id IN (1, 3)", dv_fraction_threshold=0.9
     )
     assert (v, touched) == (tip, []) and txlog.latest_version(t) == tip
+
+
+def test_delete_dv_cardinality_counts_the_sidecar(spark, tmp_path):
+    """Each dv action's ``cardinality`` is the number of its file's rows
+    in the sidecar it names — counted while the sidecar is written —
+    after a first DV delete and after a second on the same file, whose
+    sidecar unions the old one's positions. The metadata-only
+    ``count_rows`` then agrees with a full read."""
+    t = _dv_table(spark, tmp_path)  # 4 files × 25 ids
+
+    def check():
+        acts = txlog._resolve(t).actions
+        dvs = [a for a in acts if a.get("dv")]
+        assert dvs
+        for a in dvs:
+            sidecar = spark.read.parquet(a["dv"]["path"]).collect()
+            mine = [
+                r for r in sidecar
+                if txlog._local_path(r["file"]) == os.path.abspath(a["path"])
+            ]
+            assert a["dv"]["cardinality"] == len(mine), a["path"]
+        assert txlog.count_rows(t) == txlog.read_version(spark, t).count()
+        return dvs
+
+    txlog.delete_where(spark, t, "id = 5", dv_fraction_threshold=0.5)
+    (first,) = check()
+    assert first["dv"]["cardinality"] == 1
+    # the same file again, plus one row of another file
+    txlog.delete_where(spark, t, "id IN (6, 7, 60)", dv_fraction_threshold=0.5)
+    dvs = {a["path"]: a["dv"] for a in check()}
+    assert dvs[first["path"]]["cardinality"] == 3
+    assert dvs[first["path"]]["path"] != first["dv"]["path"]
+    assert sorted(d["cardinality"] for d in dvs.values()) == [1, 3]
+    assert txlog.count_rows(t) == 96
 
 
 def test_delete_dv_parity_with_copy_on_write(spark, tmp_path):
@@ -3573,74 +3622,137 @@ def test_column_mapping_post_evolution_columns(spark, tmp_path):
 
 
 def test_write_files_footer_stats_match_readback(spark, tmp_path):
-    """r13 optimization invariant: the footer-lifted per-file stats that
-    write_files now commits are BIT-IDENTICAL to the distributed
-    read-back aggregation they replaced — same min/max, same num_rows,
-    per file — for the int/double columns the engine stats. (Columns the
-    footer can't prove exact — NaN floats, strings, timestamps — fall
-    back to the read-back, exercised below.)"""
+    """The per-file stats write_files decodes from parquet footers equal
+    a distributed read-back aggregation (min, max and count grouped by
+    ``input_file_name()``), per file, for every type the footer bounds:
+    BIGINT, DOUBLE with a NaN, STRING with a non-ASCII value, DATE,
+    DECIMAL(10,2) (an INT64-backed decimal), DECIMAL(38,2), BOOLEAN,
+    TIMESTAMP_NTZ, a column with some nulls and an all-null one.
+    Spark's default INT96 timestamp has no footer statistics: it records
+    [None, None], which never prunes. A stats column that exists only as
+    a nested leaf raises instead of taking the leaf's bounds."""
+    import datetime
     import math
 
     from pyspark.sql import functions as F
 
+    cols = ["id", "dbl", "s", "d", "price", "big", "b", "ntz", "opt", "nul"]
     df = (
-        spark.range(0, 5000)
+        spark.range(0, 3000)
         .select(
             F.col("id"),
-            (F.col("id") * 1.5 - 100.0).alias("price"),
+            F.when(F.col("id") == 7, float("nan"))
+            .otherwise(F.col("id") * 1.5 - 100.25)
+            .alias("dbl"),
+            F.when(F.col("id") % 500 == 1, F.lit("ünï-é"))
+            .otherwise(F.concat(F.lit("s"), F.col("id").cast("string")))
+            .alias("s"),
+            F.date_add(
+                F.lit("2024-01-01").cast("date"), (F.col("id") % 400).cast("int")
+            ).alias("d"),
+            (F.col("id") / 7).cast("decimal(10,2)").alias("price"),
+            F.concat(
+                (F.col("id") - 1500).cast("string"), F.lit("123456789012345.25")
+            )
+            .cast("decimal(38,2)")
+            .alias("big"),
+            (F.col("id") % 3 == 0).alias("b"),
+            F.expr("CAST(timestamp_seconds(id * 3600) AS TIMESTAMP_NTZ)").alias(
+                "ntz"
+            ),
             F.when(F.col("id") % 3 == 0, F.col("id") * 2).alias("opt"),
+            F.lit(None).cast("bigint").alias("nul"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
         )
         .repartition(3)
     )
     t = str(tmp_path / "t")
-    acts = txlog.write_files(df, t, stats_cols=["id", "price", "opt"])
+    acts = txlog.write_files(df, t, stats_cols=cols + ["ts"])
     assert len(acts) == 3
-    out_dir = os.path.dirname(acts[0]["path"])
-    by_file, nrows = txlog._readback_stats(
-        spark, [out_dir], ["id", "price", "opt"]
-    )
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    ref = {
+        txlog._local_path(r["f"]): r
+        for r in spark.read.parquet(*[a["path"] for a in acts])
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(*aggs)
+        .collect()
+    }
+
+    def same(v):  # NaN equals NaN for the comparison
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
     for a in acts:
         p = os.path.abspath(a["path"])
-        assert a["stats"] == by_file[p], p
-        assert a["num_rows"] == nrows[p], p
+        r = ref[p]
+        assert a["num_rows"] == r["n"], p
         assert a["size"] == os.path.getsize(p)
+        for c in cols:
+            want = [
+                txlog._stat_bound(r[f"min_{c}"], "min"),
+                txlog._stat_bound(r[f"max_{c}"], "max"),
+            ]
+            assert [same(v) for v in a["stats"][c]] == [same(v) for v in want], (
+                p,
+                c,
+            )
+        assert a["stats"]["nul"] == [None, None]
+        assert a["stats"]["ts"] == [None, None]  # INT96: no footer bounds
+    # the NaN and the non-ASCII string are some file's max
+    assert "NaN" in {same(a["stats"]["dbl"][1]) for a in acts}
+    assert "ünï-é" in {a["stats"]["s"][1] for a in acts}
 
-    # NaN in a double column suppresses footer stats -> the read-back
-    # fallback must still produce the Spark-exact bounds (max is NaN)
-    df2 = spark.range(0, 100).select(
-        F.col("id"),
-        F.when(F.col("id") == 7, float("nan"))
-        .otherwise(F.col("id") * 1.0)
-        .alias("v"),
-    ).repartition(1)
-    acts2 = txlog.write_files(df2, str(tmp_path / "t2"), stats_cols=["v"])
-    mn, mx = acts2[0]["stats"]["v"]
-    assert mn == 0.0 and math.isnan(mx)
-
-    # a non-int/float column (string) routes through the fallback and
-    # keeps the exact Spark-computed bounds
-    df3 = spark.createDataFrame(
-        [(1, "alpha"), (2, "zeta")], "id long, s string"
-    ).repartition(1)
-    acts3 = txlog.write_files(df3, str(tmp_path / "t3"), stats_cols=["s"])
-    assert acts3[0]["stats"]["s"] == ["alpha", "zeta"]
-    assert acts3[0]["num_rows"] == 2
+    # a range that no file's data meets on the INT96 column keeps every
+    # file: [None, None] never prunes
+    txlog.commit(t, add=acts, expected_version=0)
+    far = datetime.datetime(1990, 1, 1)
+    kept = txlog.snapshot_files(t, predicate_range=("ts", far, far))
+    assert sorted(kept) == sorted(a["path"] for a in acts)
 
     # a struct field whose LEAF NAME shadows a stats column (parquet
     # reports the nested leaf as name 'id', path 'payload.id') must not
-    # hijack the top-level column's footer stats — and a stats column
-    # that exists ONLY as a nested leaf must route to the read-back, not
-    # claim footer bounds (r14 fix: _footer_stats keys by dotted path)
+    # hijack the top-level column's footer stats
     df4 = spark.range(0, 100).select(
         F.col("id"),
         F.struct((F.col("id") + 100_000).alias("id")).alias("payload"),
     ).repartition(1)
     acts4 = txlog.write_files(df4, str(tmp_path / "t4"), stats_cols=["id"])
     assert acts4[0]["stats"]["id"] == [0, 99]  # top-level, not the leaf
-    # drop the top-level column: 'id' now matches only payload.id, so the
-    # footer path must refuse (return None) and the read-back must run
-    df5 = df4.drop("id").repartition(1)
-    paths5 = txlog.write_files(df5, str(tmp_path / "t5"))
-    assert txlog._footer_stats(paths5, ["id"]) is None
-    # (the read-back then surfaces an explicit unresolved-column error —
-    # never the nested leaf's bounds under the top-level name)
+    # drop the top-level column: 'id' now names only payload.id, which
+    # per-file stats cannot stand for
+    with pytest.raises(ValueError, match="'id'.*nested"):
+        txlog.write_files(
+            df4.drop("id").repartition(1), str(tmp_path / "t5"), stats_cols=["id"]
+        )
+
+
+def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path):
+    """Stats on DATE, DECIMAL, STRING and BOOLEAN columns cost the same
+    Spark jobs as stats on a BIGINT column: every bound comes from the
+    footers on the driver, so no column type adds a read-back pass."""
+    from pyspark.sql import functions as F
+
+    df = (
+        spark.range(0, 1000)
+        .select(
+            F.col("id"),
+            F.date_add(
+                F.lit("2024-01-01").cast("date"), (F.col("id") % 300).cast("int")
+            ).alias("d"),
+            (F.col("id") / 7).cast("decimal(10,2)").alias("price"),
+            F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+            (F.col("id") % 2 == 0).alias("b"),
+        )
+        .repartition(2)
+    )
+    t = str(tmp_path / "t")
+    _, by_id = _jobs_run(
+        spark, lambda: txlog.write_files(df, t, stats_cols=["id"])
+    )
+    acts, by_all = _jobs_run(
+        spark,
+        lambda: txlog.write_files(df, t, stats_cols=["d", "price", "s", "b"]),
+    )
+    assert by_all == by_id
+    assert all(a["stats"]["d"][0] is not None for a in acts)
