@@ -1,11 +1,21 @@
-"""Table-maintenance operators: bucketed-table compaction and data profiling.
+"""Table-maintenance operators: bucketed-table writes, appends and
+compaction, data profiling, and the routed write they share with the
+streaming stagers.
 
-Both are pipeline chores every 100 TB deployment runs on a schedule:
-streaming sinks accumulate per-micro-batch files until scan planning (file
-listing + footer reads) dominates query time; profiling feeds data-quality
-gates and optimizer-statistics decisions. Transaction-log tables compact
-and Z-order through ``sources.txlog.optimize``; this module keeps the
-catalog-bucketed layout, whose shuffle-free joins need its own rewrite.
+Compaction and profiling are pipeline chores every 100 TB deployment runs
+on a schedule: streaming sinks accumulate per-micro-batch files until scan
+planning (file listing + footer reads) dominates query time; profiling
+feeds data-quality gates and optimizer-statistics decisions.
+Transaction-log tables compact and Z-order through
+``sources.txlog.optimize``; this module keeps the catalog-bucketed layout,
+whose shuffle-free joins need its own rewrite.
+
+:func:`_routed_write` is the one write-and-claim step behind every
+"one file per slot" layout: the bucketed append's bucket files here, and
+the mtime-ordered micro-batch slices, per-commit data files and
+event-time slices that ``streaming.streaming_queries`` stages. It routes
+rows to N slots, writes them in one ``partitionBy`` job and returns each
+slot's single file.
 """
 
 from __future__ import annotations
@@ -135,8 +145,11 @@ def write_bucketed(
     used by the streaming dedup gates (only per-file sort order is lost
     with multiple files per bucket, which hash joins never needed).
     Appends are DIRECT bucket-file writes (:func:`_append_bucketed_files`)
-    — one distributed write job plus driver renames, no per-append
-    ``saveAsTable`` catalog round-trip (Hive-compat insert command,
+    — one routed write job (:func:`_routed_write`) plus driver renames
+    that keep each staged file's codec suffix. The route rides a scratch
+    column, so every data column (a ``_bucket`` one included) lands as
+    written, and a session ``maxRecordsPerFile`` splits no bucket. No
+    per-append ``saveAsTable`` catalog round-trip (Hive-compat insert command,
     commit-protocol temporary-dir dance, table-stats refresh — the
     per-tick constant every micro-batch paid pre-r14; guide §6
     small-files / §1.2). The caller's spec is validated against the
@@ -145,7 +158,7 @@ def write_bucketed(
     silently drop join matches), and so are the frame's column names and
     types: files of a drifted schema would land unreadable as the table."""
     if mode == "append":
-        columns, spec = _catalog_layout(df.sparkSession, table)
+        columns, spec, _ = _catalog_layout(df.sparkSession, table)
         if spec is None:
             raise ValueError(
                 f"append target {table} has no bucket spec in the catalog"
@@ -172,6 +185,52 @@ def write_bucketed(
     )
 
 
+def _routed_write(
+    df: DataFrame,
+    slot: Column,
+    n_slots: int,
+    out_dir: str,
+    sort: list[str] | tuple[str, ...] = (),
+) -> list[str | None]:
+    """Write ``df`` to ``out_dir`` as at most ONE parquet file per slot in
+    ONE write job, and return each slot's file (None for a slot no row
+    routed to). ``slot`` is an integer column in ``[0, n_slots)``; rows
+    whose slot is NULL or out of range land in no returned file.
+
+    The slot rides under a scratch name not already in ``df.columns``
+    (so no data column is overwritten or dropped); ``repartition`` on it
+    puts every slot in exactly one task, ``sortWithinPartitions(slot,
+    *sort)`` orders each file, and ``partitionBy`` splits the task's rows
+    by slot. The writer's ``maxRecordsPerFile=0`` overrides any session
+    cap that would split a slot over several files; a slot that still
+    holds more than one file raises rather than being claimed short. The
+    shared step of the mtime-slice, commit-slice and event-time-slice
+    stagers (``streaming.streaming_queries``) and of the bucketed append
+    (:func:`_append_bucketed_files`)."""
+    import glob
+
+    taken = {c.lower() for c in df.columns}
+    name = "_slot"
+    while name in taken:
+        name = f"_{name}"
+    (
+        df.withColumn(name, slot)
+        .repartition(n_slots, name)
+        .sortWithinPartitions(name, *sort)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 0)
+        .partitionBy(name)
+        .parquet(out_dir)
+    )
+    files: list[str | None] = []
+    for i in range(n_slots):
+        parts = glob.glob(f"{glob.escape(out_dir)}/{name}={i}/*.parquet")
+        if len(parts) > 1:
+            raise RuntimeError(f"slot {i}: expected one file, got {parts}")
+        files.append(parts[0] if parts else None)
+    return files
+
+
 def _append_bucketed_files(
     df: DataFrame, bucket_cols: list[str], num_buckets: int, path: str
 ) -> None:
@@ -179,12 +238,13 @@ def _append_bucketed_files(
     files: route every row with Spark's own bucket-id expression —
     ``pmod(hash(cols), n)``, where ``hash`` IS ``Murmur3Hash`` seed 42,
     the exact function ``HashPartitioning.partitionIdExpression`` uses
-    for bucket placement — write one file per non-empty bucket in ONE
-    job (``partitionBy`` on the routed id; rows sorted by the bucket
-    cols within each file, like a ``saveAsTable`` append), then rename
-    each file into the table directory under the ``part-..._0000N``
-    bucket-suffix name the bucketed reader keys on
-    (``BucketingUtils.getBucketId`` parses the trailing ``_(\\d+)``).
+    for bucket placement — through :func:`_routed_write` (one file per
+    non-empty bucket in ONE job, rows sorted by the bucket cols within
+    each file, like a ``saveAsTable`` append), then rename each file into
+    the table directory under a ``part-..._0000N`` bucket-suffix name
+    that keeps the staged file's own ``.c000.<codec>.parquet`` suffix
+    (the bucketed reader's ``BucketingUtils.getBucketId`` parses the
+    last ``_(\\d+)`` before the extension, whatever the codec).
     The renames are the PUBLISH, all or nothing: a failure mid-loop
     unlinks the files already renamed before it re-raises, so a retried
     append cannot land a bucket twice. Until then nothing under ``path``
@@ -205,29 +265,15 @@ def _append_bucketed_files(
     bucket_id = F.pmod(
         F.hash(*[F.col(c) for c in bucket_cols]), F.lit(num_buckets)
     )
-    (
-        df.withColumn("_bucket", bucket_id)
-        .repartition(num_buckets, "_bucket")
-        .sortWithinPartitions("_bucket", *bucket_cols)
-        .write.mode("overwrite")
-        .partitionBy("_bucket")
-        .parquet(staging)
-    )
     published: list[str] = []
     try:
-        for i in range(num_buckets):
-            d = f"{staging}/_bucket={i}"
-            if not os.path.isdir(d):
+        files = _routed_write(df, bucket_id, num_buckets, staging, bucket_cols)
+        for i, src in enumerate(files):
+            if src is None:
                 continue  # empty bucket in this batch
-            parts = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"bucket {i}: expected one staged file, got {parts}"
-                )
-            dst = os.path.join(
-                path, f"part-00000-{tag}_{i:05d}.c000.snappy.parquet"
-            )
-            os.rename(os.path.join(d, parts[0]), dst)
+            suffix = os.path.basename(src).partition(".")[2]
+            dst = os.path.join(path, f"part-00000-{tag}_{i:05d}.{suffix}")
+            os.rename(src, dst)
             published.append(dst)
     except BaseException:
         # all or nothing: a failed publish takes back the buckets it landed
@@ -240,13 +286,14 @@ def _append_bucketed_files(
 
 def _catalog_layout(
     spark: SparkSession, table: str
-) -> tuple[dict[str, str], tuple[list[str], int] | None]:
-    """The table's columns ({name: type string}) and (bucket_cols,
-    num_buckets) as the CATALOG declares them, from one ``DESCRIBE
-    FORMATTED`` (column rows up to the first blank or ``#`` row, then
-    ``Bucket Columns`` / ``Num Buckets``); the spec is None for an
-    unbucketed table. The catalog is the single source of truth for the
-    layout — rewrites must derive the spec from it, never trust a
+) -> tuple[dict[str, str], tuple[list[str], int] | None, str | None]:
+    """The table's columns ({name: type string}), (bucket_cols,
+    num_buckets) and data location as the CATALOG declares them, from one
+    ``DESCRIBE FORMATTED`` (column rows up to the first blank or ``#``
+    row, then ``Bucket Columns`` / ``Num Buckets`` / ``Location``, with a
+    ``file:`` scheme stripped); the spec is None for an unbucketed table,
+    the location None when the catalog lists none. The catalog is the
+    single source of truth for the layout — rewrites must derive the spec from it, never trust a
     caller's copy (a mismatched rewrite lands files hashed mod the WRONG
     bucket count under a catalog entry that still declares the old spec,
     and later same-spec joins skip the shuffle on a false premise,
@@ -255,6 +302,7 @@ def _catalog_layout(
     in_columns = True
     cols: list[str] | None = None
     n: int | None = None
+    location: str | None = None
     for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
         name = (row["col_name"] or "").strip()
         if not name or name.startswith("#"):
@@ -269,9 +317,10 @@ def _catalog_layout(
                 for c in row["data_type"].strip("[]").split(",")
                 if c.strip(" `")
             ]
-    if cols is None or n is None:
-        return columns, None
-    return columns, (cols, n)
+        elif name == "Location":
+            location = row["data_type"].strip().removeprefix("file:")
+    spec = None if cols is None or n is None else (cols, n)
+    return columns, spec, location
 
 
 def compact_bucketed(
@@ -319,7 +368,7 @@ def compact_bucketed(
     # caller-supplied spec as an assertion to validate, never as truth —
     # rewriting with the wrong bucket count silently corrupts every
     # later shuffle-free join against this table
-    _, spec = _catalog_layout(spark, table)
+    _, spec, location = _catalog_layout(spark, table)
     if spec is None:
         raise ValueError(f"table {table} has no bucket spec in the catalog")
     cat_cols, cat_n = spec
@@ -332,14 +381,9 @@ def compact_bucketed(
             f"num_buckets {num_buckets} != catalog spec {cat_n} for {table}"
         )
     bucket_cols, num_buckets = cat_cols, cat_n
+    path = location if path is None else path
     if path is None:
-        for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-            if (row["col_name"] or "").strip() == "Location":
-                loc = row["data_type"].strip()
-                path = loc[len("file:"):] if loc.startswith("file:") else loc
-                break
-        if path is None:
-            raise ValueError(f"table {table} has no Location in the catalog")
+        raise ValueError(f"table {table} has no Location in the catalog")
 
     tmp_tbl = f"{table}__compacting_{_uuid.uuid4().hex[:8]}"
     tmp, old = f"{path}__compacting", f"{path}__old"

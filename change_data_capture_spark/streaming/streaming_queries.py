@@ -24,24 +24,23 @@ from change_data_capture_spark.operators.dedup_queries import (
     _SIMHASH_INCR_ORACLE,
     JACCARD_THRESHOLD,
 )
+from change_data_capture_spark.operators.maintenance import _routed_write
 from change_data_capture_spark.queries import query
 from change_data_capture_spark.sources.cdc_generator import (
     CDC_EVENTS_SQL,
     product_change_events,
 )
+
+
 def _write_mtime_slices(
     df: DataFrame, slice_col, n_slices: int, slices_dir: str, tmp_dir: str
 ) -> None:
-    """ONE pass over ``df`` writes every micro-batch slice file (the
-    pre-r13 form ran one filtered scan + repartition(1) write PER slice
-    — N full passes of the upstream derivation for N slices): rows are
-    hash-routed by the slice id so each present slice value is owned by
-    exactly one task and lands as exactly one parquet file (partitionBy
-    splits by value within the task), then each file is renamed to
+    """ONE pass over ``df`` writes every micro-batch slice file: rows are
+    routed by the slice id through ``maintenance._routed_write`` (one
+    file per present slice, one write job), then each file is renamed to
     ``slice_<i>.parquet`` with strictly increasing mtimes (file mtime
     order = micro-batch order under ``maxFilesPerTrigger=1``). Rows
-    whose slice id is NULL match no slice — the same rows the old
-    per-slice equality filters dropped. A degenerate empty slice still
+    whose slice id is NULL match no slice. A degenerate empty slice still
     lands as a typed empty file (a copy of :func:`_typed_empty_file`'s
     one per call) so the drain sees one file per micro-batch either
     way."""
@@ -49,22 +48,14 @@ def _write_mtime_slices(
     import shutil
     import time as _time
 
-    (
-        df.withColumn("_slice", slice_col)
-        .repartition(n_slices, "_slice")
-        .write.mode("overwrite")
-        .partitionBy("_slice")
-        .parquet(tmp_dir)
-    )
+    files = _routed_write(df, slice_col, n_slices, tmp_dir)
     os.makedirs(slices_dir, exist_ok=True)
     now = _time.time()
     empty = None
-    for i in range(n_slices):
-        sdir = f"{tmp_dir}/_slice={i}"
+    for i, src in enumerate(files):
         dst = f"{slices_dir}/slice_{i}.parquet"
-        if os.path.isdir(sdir):
-            part = [f for f in os.listdir(sdir) if f.endswith(".parquet")][0]
-            os.rename(os.path.join(sdir, part), dst)
+        if src is not None:
+            os.rename(src, dst)
         else:
             empty = empty or _typed_empty_file(df, f"{tmp_dir}/_empty")
             shutil.copyfile(empty, dst)
@@ -91,16 +82,16 @@ def _staged_commit_slices(
     stats_cols: list[str] | None = None,
 ) -> list[list]:
     """ONE pass over ``df`` writes EVERY commit's data files for an
-    n-commit append fixture (the pre-r13 form ran one filtered
-    scan+write job per commit): rows route deterministically by
-    ``(slice, row-hash half)`` — ``repartition`` puts each pair in
-    exactly one task, ``partitionBy`` lands one file per pair — so each
-    slice owns exactly ``per_slice_files`` files, the same per-commit
-    file count the old ``repartition(2)`` writes produced. Returns the
-    per-slice file lists, as bare paths or (with ``stats_cols``) as
-    stats actions carrying Delta's ``size``/``stats``/``numRecords``
-    fields, decoded from each file's parquet footer on the driver with
-    no Spark job (:func:`txlog.stats_actions_for`)."""
+    n-commit append fixture: rows route through
+    ``maintenance._routed_write`` on slot ``slice × per_slice_files +
+    half`` (``half`` a row hash mod ``per_slice_files``), so each slice
+    owns exactly ``per_slice_files`` files. A slot no row hashed to gets
+    its own copy of one typed EMPTY file, so every commit keeps the same
+    file count. Returns the per-slice file lists, as bare paths or (with
+    ``stats_cols``) as stats actions carrying Delta's
+    ``size``/``stats``/``numRecords`` fields, decoded from each file's
+    parquet footer on the driver with no Spark job
+    (:func:`txlog.stats_actions_for`)."""
     import os
     import shutil
     import uuid as _uuid
@@ -109,44 +100,20 @@ def _staged_commit_slices(
 
     out = os.path.join(table_dir, "data", _uuid.uuid4().hex)
     half = F.pmod(F.xxhash64(*df.columns), F.lit(per_slice_files))
-    (
-        df.withColumn("_slice", slice_col)
-        .withColumn("_half", half)
-        .repartition(n_slices * per_slice_files, "_slice", "_half")
-        .write.mode("overwrite")
-        .partitionBy("_slice", "_half")
-        .parquet(out)
-    )
-    per_slice: list[list] = []
+    slot = slice_col * per_slice_files + half
+    files = _routed_write(df, slot, n_slices * per_slice_files, out)
     empty = None
-    for i in range(n_slices):
-        paths = []
-        for j in range(per_slice_files):
-            d = f"{out}/_slice={i}/_half={j}"
-            if not os.path.isdir(d):
-                # a sparse commit (no rows hashed to this slice/half) —
-                # partitionBy writes no dir. The pre-r13 per-commit
-                # repartition(2) writes landed a typed EMPTY file for it;
-                # do the same so every commit keeps exactly
-                # per_slice_files files (mirrors _write_mtime_slices);
-                # each commit adds its own copy of the one empty file
-                empty = empty or _typed_empty_file(df, f"{out}/_empty")
-                paths.append(f"{out}/_empty/slot_{i}_{j}.parquet")
-                shutil.copyfile(empty, paths[-1])
-                continue
-            parts = sorted(
-                f for f in os.listdir(d) if f.endswith(".parquet")
-            )
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"slice {i} half {j}: expected one file, got {parts}"
-                )
-            paths.append(os.path.join(d, parts[0]))
-        per_slice.append(
-            _txlog.stats_actions_for(paths, stats_cols)
-            if stats_cols
-            else paths
-        )
+    for k, src in enumerate(files):
+        if src is None:
+            empty = empty or _typed_empty_file(df, f"{out}/_empty")
+            files[k] = f"{out}/_empty/slot_{k}.parquet"
+            shutil.copyfile(empty, files[k])
+    per_slice = [
+        files[i * per_slice_files : (i + 1) * per_slice_files]
+        for i in range(n_slices)
+    ]
+    if stats_cols:
+        return [_txlog.stats_actions_for(p, stats_cols) for p in per_slice]
     return per_slice
 
 
@@ -376,49 +343,34 @@ def _stage_event_time_slices(
     the invariant expanding state depends on. Slice bounds are linear
     interpolation over [min, max] (one cheap agg; the exact-quantile form
     measured 67 s of an 81 s gate at the 100× smoke). ONE parallel write
-    lands all slice files (repartitionByRange on the slice id → one task,
-    hence one file, per slice dir; sequential coalesce(1) writes were the
-    100×-scale bottleneck)."""
+    lands all slice files (``maintenance._routed_write``: each slice is
+    owned by one task, hence one file; sequential coalesce(1) writes were
+    the 100×-scale bottleneck)."""
     import os
     import time as _time
 
-    with_us = events.withColumn("_us", F.unix_micros("ts"))
-    lo, hi = with_us.select(F.min("_us"), F.max("_us")).first()
+    us = F.unix_micros("ts")
+    lo, hi = events.select(F.min(us), F.max(us)).first()
     if lo is None:  # empty input: nothing to slice, nothing to drain
         raise RuntimeError("cannot stage time slices: events input is empty")
     bounds = [lo + (hi - lo) * (i + 1) // n for i in range(n - 1)]
-    us = F.col("_us")
     slice_id = F.lit(n - 1)
     for i in range(n - 2, -1, -1):
         slice_id = F.when(us <= bounds[i], i).otherwise(slice_id)
-    staged = f"{ws}/staged"
-    (
-        with_us.withColumn("_slice", slice_id)
-        .drop("_us")
-        .repartitionByRange(n, "_slice")
-        .write.partitionBy("_slice")
-        .mode("overwrite")
-        .parquet(staged)
-    )
+    files = _routed_write(events, slice_id, n, f"{ws}/staged")
     src = f"{ws}/slices"
     os.makedirs(src)
     now = _time.time()
-    for i in range(n):
-        d = f"{staged}/_slice={i}"
+    for i, part in enumerate(files):
         # a slice can be EMPTY under timestamp skew (or lo == hi, which
-        # sends every row to slice 0): partitionBy writes no dir for it.
-        # Merge empty slices away (fewer micro-batches; per-user ts order
-        # — the invariant the stateful gates depend on — still holds)
-        # rather than raising on a legitimate skewed input.
-        if not os.path.isdir(d):
+        # sends every row to slice 0). Merge empty slices away (fewer
+        # micro-batches; per-user ts order — the invariant the stateful
+        # gates depend on — still holds) rather than raising on a
+        # legitimate skewed input.
+        if part is None:
             continue
-        parts = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        # explicit raise, not assert: under `python -O` a 2-file slice
-        # would otherwise silently drop rows from every staged gate
-        if len(parts) != 1:
-            raise RuntimeError(f"slice {i}: expected one file, got {parts}")
         dst = f"{src}/slice_{i}.parquet"
-        os.rename(f"{d}/{parts[0]}", dst)
+        os.rename(part, dst)
         os.utime(dst, (now + i, now + i))  # strictly increasing mtimes
     return src
 
@@ -1670,15 +1622,10 @@ def _verify_candidate_pairs(union_store: DataFrame, cand: DataFrame) -> DataFram
 def streaming_dedup_minhash_incremental(
     spark: SparkSession,
     sf_dir: str,
-    band_store_buckets: int = _BAND_STORE_BUCKETS,
     compact_after_batch: int | None = None,
 ) -> DataFrame:
     """STREAMING incremental MinHash-LSH dedup — the batch
-    ``dedup_minhash_incremental`` upgraded to the shape it models
-    (``band_store_buckets`` is library/production surface — a deployment
-    sizes the store like any bucketed fact table, thousands of buckets
-    on a fleet; the driver contract always calls with the default, which
-    is sized to this harness's cores): a REAL
+    ``dedup_minhash_incremental`` upgraded to the shape it models: a REAL
     Structured Streaming query drains the delta corpus in micro-batches,
     and ``foreachBatch`` near-dup-checks each batch against a PERSISTED
     parquet signature store, then appends the batch's own signatures to the
@@ -1759,7 +1706,7 @@ def streaming_dedup_minhash_incremental(
             minhash_band_rel(spark.read.parquet(store)),
             band_tbl,
             ["band", "sig"],
-            band_store_buckets,
+            _BAND_STORE_BUCKETS,
             f"{ws}/band_store",
         )
 
@@ -1842,7 +1789,7 @@ def streaming_dedup_minhash_incremental(
                 batch_bands,
                 band_tbl,
                 ["band", "sig"],
-                band_store_buckets,
+                _BAND_STORE_BUCKETS,
                 f"{ws}/band_store",
                 mode="append",
             )
@@ -1906,7 +1853,7 @@ def streaming_dedup_minhash_incremental(
             )
 
             compact_bucketed(
-                sess, band_tbl, ["band", "sig"], band_store_buckets,
+                sess, band_tbl, ["band", "sig"], _BAND_STORE_BUCKETS,
                 f"{ws}/band_store",
             )
 
@@ -1957,13 +1904,10 @@ def streaming_dedup_compact_midstream(
 def streaming_dedup_simhash_incremental(
     spark: SparkSession,
     sf_dir: str,
-    band_store_buckets: int = _BAND_STORE_BUCKETS,
 ) -> DataFrame:
     """STREAMING incremental SimHash dedup — the Manku-style Hamming-ball
     pairing (``simhash_hamming_neardup``) on the same persisted-store
-    skeleton as ``streaming_dedup_minhash_incremental`` (and the same
-    ``band_store_buckets`` library/production surface — the driver
-    contract always calls with the default): a Structured
+    skeleton as ``streaming_dedup_minhash_incremental``: a Structured
     Streaming drain near-dup-checks each micro-batch of new docs against a
     persisted band store, then appends the batch's band rows — later
     batches pair against earlier ones with nothing recomputed. The store
@@ -2020,7 +1964,7 @@ def streaming_dedup_simhash_incremental(
             ),
             band_tbl,
             ["band", "bv"],
-            band_store_buckets,
+            _BAND_STORE_BUCKETS,
             f"{ws}/band_store",
         )
 
@@ -2089,7 +2033,7 @@ def streaming_dedup_simhash_incremental(
                 batch_bands,
                 band_tbl,
                 ["band", "bv"],
-                band_store_buckets,
+                _BAND_STORE_BUCKETS,
                 f"{ws}/band_store",
                 mode="append",
             )

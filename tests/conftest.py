@@ -24,3 +24,46 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (Spark jobs fn() launched, fn()'s result)``: a
+    max-id delta of the status store, each side read once the listener
+    bus drains, so it counts jobs from every thread, broadcasts included."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def max_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    def count(fn):
+        j0 = max_job_id()
+        out = fn()
+        return max_job_id() - j0, out
+
+    return count
+
+
+@pytest.fixture
+def session_conf(spark):
+    """``with session_conf({key: value, ...}):`` sets session confs for
+    the block and restores each one's previous value (or unsets it)."""
+    from contextlib import contextmanager
+
+    @contextmanager
+    def scoped(confs):
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return scoped

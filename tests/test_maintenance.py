@@ -300,9 +300,11 @@ def test_provenance_metadata_parity(spark, sf_dir):
     )
 
 
-def test_compact_bucketed_spec_comes_from_the_catalog(spark, tmp_path):
+def test_compact_bucketed_spec_comes_from_the_catalog(
+    spark, tmp_path, monkeypatch
+):
     """The catalog owns the bucket layout: compact_bucketed derives
-    (bucket_cols, num_buckets, path) from DESCRIBE FORMATTED when not
+    (bucket_cols, num_buckets, path) from ONE DESCRIBE FORMATTED when not
     given, and REJECTS a caller-supplied spec that contradicts the
     catalog — rewriting with the wrong bucket count would silently
     corrupt every later shuffle-free join against the table."""
@@ -329,7 +331,16 @@ def test_compact_bucketed_spec_comes_from_the_catalog(spark, tmp_path):
         with pytest.raises(ValueError, match="catalog spec"):
             compact_bucketed(spark, tbl, ["v"], 4, path)
         # fully derived call: no spec, no path — the catalog knows both
+        real_sql, described = spark.sql, []
+
+        def sql(text, *args, **kwargs):
+            described.append(text.startswith("DESCRIBE"))
+            return real_sql(text, *args, **kwargs)
+
+        monkeypatch.setattr(spark, "sql", sql)
         n = compact_bucketed(spark, tbl)
+        monkeypatch.undo()
+        assert sum(described) == 1
         assert n == 4  # one file per non-empty bucket
         assert spark.table(tbl).count() == 200
     finally:
@@ -337,42 +348,52 @@ def test_compact_bucketed_spec_comes_from_the_catalog(spark, tmp_path):
 
 
 def test_direct_bucketed_append_places_rows_by_spark_bucket_id(
-    spark, tmp_path
+    spark, tmp_path, session_conf
 ):
     """r14: bucketed APPENDS are direct bucket-file writes (no per-append
     saveAsTable catalog round-trip). The non-negotiable invariant is
     PLACEMENT: every appended file's rows must hash (Spark murmur3, pmod
     num_buckets) to exactly the bucket id its filename declares — a
     misplaced row silently vanishes from every later shuffle-free
-    bucketed join. Also pins: full row set preserved, catalog layout
-    intact, spec-mismatch appends fail loud before any file lands."""
+    bucketed join. Also pins: full row set preserved (a ``_bucket`` data
+    column included, and under a session ``maxRecordsPerFile`` cap),
+    every file named for the codec it is written with (an append under
+    zstd lands ``.zstd.`` files), catalog layout intact, spec-mismatch
+    appends fail loud before any file lands."""
     import os
     import re
     import uuid
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from change_data_capture_spark.operators.maintenance import (
         write_bucketed,
     )
 
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "CAST(id % 11 AS INT) AS b", "id AS v", "id % 3 AS _bucket"
+        )
+
     tbl = f"direct_append_{uuid.uuid4().hex[:8]}"
     path = str(tmp_path / "ba")
-    base = spark.range(0, 500).selectExpr(
-        "id AS k", "CAST(id % 11 AS INT) AS b", "id AS v"
-    )
-    delta = spark.range(500, 700).selectExpr(
-        "id AS k", "CAST(id % 11 AS INT) AS b", "id AS v"
-    )
+    base, delta = rows(0, 500), rows(500, 700)
     try:
         write_bucketed(base, tbl, ["k", "b"], 8, path)
-        write_bucketed(delta, tbl, ["k", "b"], 8, path, mode="append")
+        with session_conf({"spark.sql.files.maxRecordsPerFile": 10}):
+            write_bucketed(delta, tbl, ["k", "b"], 8, path, mode="append")
+        with session_conf({"spark.sql.parquet.compression.codec": "zstd"}):
+            write_bucketed(rows(700, 800), tbl, ["k", "b"], 8, path, mode="append")
         spark.catalog.refreshTable(tbl)
-        got = {r["k"] for r in spark.table(tbl).select("k").collect()}
-        assert got == set(range(700))
+        got = {
+            (r["k"], r["_bucket"])
+            for r in spark.table(tbl).select("k", "_bucket").collect()
+        }
+        assert got == {(k, k % 3) for k in range(800)}
         # Spark's own bucket-id parse: last _<digits> before the extension
         pat = re.compile(r".*_(\d+)(?:\..*)?$")
-        n_files = 0
+        n_files = n_zstd = 0
         for root, _dirs, fs in os.walk(path):
             for f in fs:
                 if not f.endswith(".parquet"):
@@ -385,6 +406,13 @@ def test_direct_bucketed_append_places_rows_by_spark_bucket_id(
                     .count()
                 )
                 assert misplaced == 0, f
+                codec = (
+                    pq.ParquetFile(os.path.join(root, f))
+                    .metadata.row_group(0).column(0).compression.lower()
+                )
+                assert f".{codec}." in f, (f, codec)
+                n_zstd += codec == "zstd"
+        assert n_zstd > 0  # the zstd append landed, named for its codec
         assert n_files > 8  # append really added per-bucket files
         import pytest
 

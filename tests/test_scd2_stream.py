@@ -81,16 +81,7 @@ def test_files_without_batch_keys_not_rewritten(spark):
     assert rows[0][1] is not None
 
 
-def _max_job_id(spark):
-    """Highest job id in the status store once the listener bus drains:
-    max-id deltas count jobs from every thread, broadcasts included."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-
-def test_merge_job_count(spark):
+def test_merge_job_count(spark, count_jobs):
     """One merge is three query shapes (range, touched-file probe,
     rewrite); each extra exchange or footer read is one more Spark job,
     and the fixed cost per job sets a trigger's latency floor."""
@@ -98,9 +89,7 @@ def test_merge_job_count(spark):
     state = Scd2State(spark, ws)
 
     def jobs(batch):
-        j0 = _max_job_id(spark)
-        apply_batch(state, batch)
-        return _max_job_id(spark) - j0
+        return count_jobs(lambda: apply_batch(state, batch))[0]
 
     assert jobs(_events(spark, range(100))) <= 4  # first batch: no state
     jobs(_events(spark, range(100, 200)))

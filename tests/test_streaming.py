@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from tests.oracle import compare
-from tests.test_scd2_stream import _max_job_id
 
 
 @pytest.mark.parametrize(
@@ -310,21 +309,16 @@ def test_csv_streaming_sink_roundtrips_with_explicit_schema(spark, sf_dir):
     assert got == want
 
 
-def _jobs(spark, fn):
-    """(Spark jobs ``fn()`` launches, its result): the job count is a
-    max-id delta of the status store."""
-    j0 = _max_job_id(spark)
-    out = fn()
-    return _max_job_id(spark) - j0, out
-
-
-def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
+def test_write_mtime_slices_one_pass_layout(
+    spark, tmp_path, count_jobs, session_conf
+):
     """r13 slice-writer invariants: one file per slice, strictly
     increasing mtimes (file order = micro-batch order), slice content
     exactly the rows whose slice id matches (NULL slice ids drop — the
     rows the old per-slice equality filters dropped), and a degenerate
     empty slice still lands as a typed empty file. Empty slices share
-    ONE empty write: at most one job more than a dense run."""
+    ONE empty write: at most one job more than a dense run. A session
+    ``maxRecordsPerFile`` cap splits no slice and drops no row."""
     import os
 
     from change_data_capture_spark.streaming.streaming_queries import (
@@ -336,8 +330,7 @@ def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
         "k int, v string",
     )
     sl = str(tmp_path / "slices")
-    dense, _ = _jobs(
-        spark,
+    dense, _ = count_jobs(
         lambda: _write_mtime_slices(df, F.col("k") % 2, 2, sl, str(tmp_path / "h")),
     )
     files = sorted(os.listdir(sl))
@@ -361,8 +354,7 @@ def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
 
     # three empty slices of four: one empty write, copied into each slot
     sl3 = str(tmp_path / "slices3")
-    sparse, _ = _jobs(
-        spark,
+    sparse, _ = count_jobs(
         lambda: _write_mtime_slices(
             df.where(F.col("k") == 0), F.col("k") % 4, 4, sl3, str(tmp_path / "h3")
         ),
@@ -372,13 +364,29 @@ def test_write_mtime_slices_one_pass_layout(spark, tmp_path):
         empty = spark.read.parquet(f"{sl3}/slice_{i}.parquet")
         assert empty.count() == 0 and empty.schema == df.schema
 
+    # 50 rows per slice under a 10-record session cap: still one file
+    # per slice, holding every row of it
+    sl4 = str(tmp_path / "slices4")
+    with session_conf({"spark.sql.files.maxRecordsPerFile": 10}):
+        _write_mtime_slices(
+            spark.range(100).selectExpr("id AS k"), F.col("k") % 2, 2, sl4,
+            str(tmp_path / "h4"),
+        )
+    assert sorted(os.listdir(sl4)) == ["slice_0.parquet", "slice_1.parquet"]
+    for i in (0, 1):
+        got = [r["k"] for r in spark.read.parquet(f"{sl4}/slice_{i}.parquet").collect()]
+        assert sorted(got) == list(range(i, 100, 2))
 
-def test_staged_commit_slices_layout(spark, tmp_path):
+
+def test_staged_commit_slices_layout(
+    spark, tmp_path, count_jobs, session_conf
+):
     """r13 one-pass commit staging: every slice owns exactly
     per_slice_files files, the union of a slice's files is exactly its
     predicate's rows, and stats actions carry footer-exact
     size/stats/num_rows (the byte-admission fields). Empty slots share
-    ONE empty write: at most one job more than a dense run."""
+    ONE empty write: at most one job more than a dense run. A session
+    ``maxRecordsPerFile`` cap changes none of it."""
     import os
 
     from change_data_capture_spark.streaming.streaming_queries import (
@@ -387,8 +395,8 @@ def test_staged_commit_slices_layout(spark, tmp_path):
 
     df = spark.range(0, 3000).selectExpr("id AS k", "id * 2 AS v")
     tdir = str(tmp_path / "t")
-    dense, per_slice = _jobs(
-        spark, lambda: _staged_commit_slices(df, F.col("k") % 3, 3, tdir)
+    dense, per_slice = count_jobs(
+        lambda: _staged_commit_slices(df, F.col("k") % 3, 3, tdir)
     )
     assert len(per_slice) == 3
     for i, paths in enumerate(per_slice):
@@ -414,8 +422,7 @@ def test_staged_commit_slices_layout(spark, tmp_path):
     # SPARSE commit (r14, ADVICE item): a slice with no rows must land a
     # typed EMPTY file per half — same per-commit file count, zero rows —
     # not an opaque FileNotFoundError from the missing partition dir
-    sparse_jobs, sparse = _jobs(
-        spark,
+    sparse_jobs, sparse = count_jobs(
         lambda: _staged_commit_slices(
             df.where("k < 2"), F.col("k") % 3, 3, str(tmp_path / "t3")
         ),
@@ -426,3 +433,47 @@ def test_staged_commit_slices_layout(spark, tmp_path):
     assert len({p for paths in sparse for p in paths}) == 6
     assert spark.read.parquet(*sparse[2]).count() == 0
     assert spark.read.parquet(*sparse[2]).columns == ["k", "v"]
+
+    # ~500 rows per file under a 10-record session cap: still
+    # per_slice_files files per slice, every row landed
+    with session_conf({"spark.sql.files.maxRecordsPerFile": 10}):
+        capped = _staged_commit_slices(
+            df, F.col("k") % 3, 3, str(tmp_path / "t4"), stats_cols=["k"]
+        )
+    for i, acts in enumerate(capped):
+        assert len(acts) == 2
+        got = [r["k"] for r in spark.read.parquet(*(a["path"] for a in acts)).collect()]
+        assert sorted(got) == list(range(i, 3000, 3))
+        assert sum(a["num_rows"] for a in acts) == 1000
+
+
+def test_event_time_slices_one_file_per_slice(spark, tmp_path, session_conf):
+    """The stateful gates' event-time staging lands one file per time
+    slice, in ts order across slices, with every row — also under a
+    session ``maxRecordsPerFile`` cap smaller than a slice."""
+    import os
+
+    from change_data_capture_spark.streaming.streaming_queries import (
+        _stage_event_time_slices,
+    )
+
+    events = spark.range(100).selectExpr(
+        "id AS event_id", "id % 7 AS user_id",
+        "timestamp_seconds(1700000000 + id * 60) AS ts",
+    )
+    with session_conf({"spark.sql.files.maxRecordsPerFile": 10}):
+        src = _stage_event_time_slices(spark, events, str(tmp_path), n=4)
+    names = sorted(os.listdir(src))
+    assert names == [f"slice_{i}.parquet" for i in range(4)]
+    mtimes = [os.path.getmtime(f"{src}/{n}") for n in names]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 4
+    seen, last = [], None
+    for n in names:
+        part = spark.read.parquet(f"{src}/{n}")
+        assert part.columns == events.columns
+        rows = part.collect()
+        ts = sorted(r["ts"] for r in rows)
+        assert last is None or last < ts[0]  # slices are contiguous in ts
+        last = ts[-1]
+        seen += [r["event_id"] for r in rows]
+    assert sorted(seen) == list(range(100))

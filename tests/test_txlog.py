@@ -1799,21 +1799,6 @@ def test_table_changes_empty_feed_for_metadata_only_range(spark, tmp_path):
         txlog.table_changes(spark, t, 0, 99)
 
 
-def _jobs_run(spark, fn):
-    """``(fn(), number of Spark jobs fn ran)``."""
-    import uuid
-
-    sc = spark.sparkContext
-    # a fresh group per call: two short-lived lambdas can share an id()
-    group = f"jobs-run-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _rewrite_table(spark, t, before, after):
     """v0 writes ``before`` under a declared schema, v1 rewrites the whole
     table as ``after``."""
@@ -1833,7 +1818,7 @@ def _rewrite_table(spark, t, before, after):
     )
 
 
-def test_table_changes_refuses_unknown_key(spark, tmp_path):
+def test_table_changes_refuses_unknown_key(spark, tmp_path, count_jobs):
     """A diff key that is not a data column of the feed is refused when
     the feed is built, on the driver, with no job run: over an append
     range (which never diffs, so the key would go unchecked) and over a
@@ -1852,7 +1837,7 @@ def test_table_changes_refuses_unknown_key(spark, tmp_path):
             with pytest.raises(ValueError, match=f"{key!r} is not a data column"):
                 txlog.table_changes(spark, t, lo, hi, key=key)
 
-        assert _jobs_run(spark, build)[1] == 0
+        assert count_jobs(build)[0] == 0
     schema = txlog.table_changes(spark, t, 0, 1).schema
     with pytest.raises(ValueError, match="'nope' is not a data column"):
         TxlogStreamReader(
@@ -1860,12 +1845,12 @@ def test_table_changes_refuses_unknown_key(spark, tmp_path):
         )
 
 
-def test_table_changes_builds_lazily(spark, tmp_path):
+def test_table_changes_builds_lazily(spark, tmp_path, count_jobs):
     """Building the feed runs no Spark job and raises nothing; the
     executor-side duplicate-key guard fires only when it is evaluated."""
     t = str(tmp_path / "t")
     _rewrite_table(spark, t, [(1, "a"), (1, "a2")], [(2, "b")])
-    feed, jobs = _jobs_run(spark, lambda: txlog.table_changes(spark, t, 1, 1))
+    jobs, feed = count_jobs(lambda: txlog.table_changes(spark, t, 1, 1))
     assert jobs == 0
     with pytest.raises(Exception, match="duplicated within commit 1"):
         feed.collect()
@@ -3727,7 +3712,7 @@ def test_write_files_footer_stats_match_readback(spark, tmp_path):
         )
 
 
-def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path):
+def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path, count_jobs):
     """Stats on DATE, DECIMAL, STRING and BOOLEAN columns cost the same
     Spark jobs as stats on a BIGINT column: every bound comes from the
     footers on the driver, so no column type adds a read-back pass."""
@@ -3747,12 +3732,9 @@ def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path):
         .repartition(2)
     )
     t = str(tmp_path / "t")
-    _, by_id = _jobs_run(
-        spark, lambda: txlog.write_files(df, t, stats_cols=["id"])
-    )
-    acts, by_all = _jobs_run(
-        spark,
-        lambda: txlog.write_files(df, t, stats_cols=["d", "price", "s", "b"]),
+    by_id, _ = count_jobs(lambda: txlog.write_files(df, t, stats_cols=["id"]))
+    by_all, acts = count_jobs(
+        lambda: txlog.write_files(df, t, stats_cols=["d", "price", "s", "b"])
     )
     assert by_all == by_id
     assert all(a["stats"]["d"][0] is not None for a in acts)
