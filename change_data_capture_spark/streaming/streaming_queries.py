@@ -103,18 +103,15 @@ def _staged_commit_slices(
     slot = slice_col * per_slice_files + half
     files = _routed_write(df, slot, n_slices * per_slice_files, out)
     empty = None
-    for k, src in enumerate(files):
+    for j, src in enumerate(files):
         if src is None:
             empty = empty or _typed_empty_file(df, f"{out}/_empty")
-            files[k] = f"{out}/_empty/slot_{k}.parquet"
-            shutil.copyfile(empty, files[k])
-    per_slice = [
-        files[i * per_slice_files : (i + 1) * per_slice_files]
-        for i in range(n_slices)
-    ]
+            files[j] = f"{out}/_empty/slot_{j}.parquet"
+            shutil.copyfile(empty, files[j])
     if stats_cols:
-        return [_txlog.stats_actions_for(p, stats_cols) for p in per_slice]
-    return per_slice
+        files = _txlog.stats_actions_for(files, stats_cols)
+    n = per_slice_files
+    return [files[i * n : (i + 1) * n] for i in range(n_slices)]
 
 
 _INGEST_ORACLE = f"""
