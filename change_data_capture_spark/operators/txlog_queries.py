@@ -385,9 +385,7 @@ def txlog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("merged insert").alias("description"),
         (F.col("id").cast("double") / F.lit(1000)).alias("price"),
     )
-    txlog.merge_into(
-        spark, tdir, upd.unionByName(ins), key="id", stats_cols=["id"]
-    )
+    txlog.merge_into(spark, tdir, upd.unionByName(ins), key="id")
     return txlog.read_version(spark, tdir)
 
 
@@ -584,7 +582,6 @@ def txlog_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         tdir,
         f"id BETWEEN {_DELETE_LO} AND {_DELETE_HI}",
-        stats_cols=["id"],
         prune_range=("id", _DELETE_LO, _DELETE_HI),
     )
     return txlog.read_version(spark, tdir)
@@ -641,7 +638,6 @@ def txlog_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price": "price * CAST(1.10 AS DOUBLE)",
             "name": "upper(name)",
         },
-        stats_cols=["id"],
         prune_range=("id", _UPDATE_LO, _UPDATE_HI),
     )
     return txlog.read_version(spark, tdir)
@@ -831,11 +827,8 @@ def txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         tdir,
         "o_orderkey % 8 = 0",
         {"o_totalprice": "o_totalprice * CAST(2 AS DOUBLE)"},
-        stats_cols=["o_orderkey"],
     )
-    txlog.delete_where(
-        spark, tdir, "o_orderkey % 8 = 1", stats_cols=["o_orderkey"]
-    )
+    txlog.delete_where(spark, tdir, "o_orderkey % 8 = 1")
     txlog.commit(
         tdir,
         add=[],
@@ -941,14 +934,12 @@ def txlog_cdf_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price": "price * CAST(1.10 AS DOUBLE)",
             "name": "upper(name)",
         },
-        stats_cols=["id"],
         prune_range=("id", _CDF_UPD_LO, _CDF_UPD_HI),
     )
     txlog.delete_where(
         spark,
         tdir,
         f"id BETWEEN {_CDF_DEL_LO} AND {_CDF_DEL_HI}",
-        stats_cols=["id"],
         prune_range=("id", _CDF_DEL_LO, _CDF_DEL_HI),
     )
     return txlog.table_changes(spark, tdir, 1, 2, key="id")
@@ -1088,7 +1079,6 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         tdir,
         "id % 40 = 7",
-        stats_cols=["id"],
         dv_fraction_threshold=0.25,
     )
     if not txlog._dv_map(txlog._resolve(tdir).actions):
@@ -1100,7 +1090,6 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         tdir,
         f"id BETWEEN {_DV_BULK_LO} AND {_DV_BULK_HI}",
-        stats_cols=["id"],
         prune_range=("id", _DV_BULK_LO, _DV_BULK_HI),
     )
     return txlog.read_version(spark, tdir)

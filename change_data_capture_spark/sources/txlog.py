@@ -55,6 +55,10 @@ log of add/remove file actions, folded into a snapshot):
   ``predicate_range`` prunes non-overlapping files DRIVER-SIDE, before
   Spark ever lists them — the metadata-only pruning that turns a
   100 TB scan into a few-file read when the data is range-clustered.
+  Stats are a property of the table, not of a call: a rewrite (MERGE,
+  UPDATE, DELETE, :func:`optimize`) keeps the stats columns of the files
+  it replaces (:func:`_write_files_checked`), so a DML never costs the
+  table its skipping or its metadata-only :func:`count_rows`.
 - **Deletion vectors (merge-on-read DML).** An ``add`` action may carry
   a ``dv`` descriptor — a parquet sidecar of ``(file, row position)``
   rows plus its cardinality (Delta's ``deletionVector`` field).
@@ -943,7 +947,6 @@ def merge_into(
     table_dir: str,
     source: DataFrame,
     key: str,
-    stats_cols: list[str] | None = None,
 ) -> tuple[int, list[str]]:
     """Delta-style ``MERGE INTO`` (``WHEN MATCHED THEN UPDATE SET * /
     WHEN NOT MATCHED THEN INSERT *``) as a file-pruned copy-on-write
@@ -966,7 +969,8 @@ def merge_into(
        that matches anywhere matches in a touched file BY DEFINITION,
        so anti-join-against-touched is exact, not approximate). The
        result commits as add(new files) + remove(touched files) under
-       an ``expected_version`` guard.
+       an ``expected_version`` guard. The new files carry stats on the
+       table's stats columns (:func:`_write_files_checked`).
 
     Scale: the rewrite cost is O(touched files + source), never
     O(table) — on a range-clustered 100 TB table a delta-sized upsert
@@ -1075,7 +1079,9 @@ def merge_into(
     else:
         # nothing matched anywhere: pure insert, every row is new
         merged = src.withColumn("__txlog_modified", F.lit(True))
-    new_actions = _write_files_checked(merged, table_dir, snap.meta, stats_cols)
+    new_actions = _write_files_checked(
+        merged, table_dir, snap.meta, live=snap.actions
+    )
     version = commit(
         table_dir, add=new_actions, remove=touched,
         expected_version=snap.version + 1, operation="MERGE",
@@ -1087,7 +1093,6 @@ def delete_where(
     spark: SparkSession,
     table_dir: str,
     predicate: str,
-    stats_cols: list[str] | None = None,
     prune_range: tuple[str, object, object] | None = None,
     dv_fraction_threshold: float = 0.0,
 ) -> tuple[int, list[str]]:
@@ -1119,7 +1124,9 @@ def delete_where(
        with ``f=0.0`` — the default, pure copy-on-write) are rewritten
        WITHOUT the matching rows (SQL DELETE semantics: a row is
        removed only when the predicate is TRUE — NULL keeps it, hence
-       the ``coalesce`` guard). Both classes commit together as
+       the ``coalesce`` guard) into new files that carry stats on the
+       table's stats columns (:func:`_write_files_checked`), so the
+       next DELETE can still route them. Both classes commit together as
        add(new/re-referenced) + remove(touched) under an
        ``expected_version`` guard.
 
@@ -1139,7 +1146,6 @@ def delete_where(
     cand = _files_in(snap, predicate_range=prune_range)
     if not cand:
         return snap.version, []
-    meta = snap.meta
     by_path = {_action_path(a): a for a in snap.actions}
     cond = F.coalesce(F.expr(predicate), F.lit(False))
     # the per-file match COUNT feeds the DV-vs-rewrite routing below
@@ -1163,11 +1169,7 @@ def delete_where(
     if rw_class:
         kept = _scan_files(spark, snap, rw_class).where(~cond)
         new_actions.extend(
-            write_files(
-                _to_physical(kept, meta),
-                table_dir,
-                stats_cols=_physical_stats_cols(stats_cols, meta),
-            )
+            _write_files_checked(kept, table_dir, snap.meta, live=snap.actions)
         )
     if dv_class:
         new_actions.extend(
@@ -1308,7 +1310,6 @@ def update_where(
     table_dir: str,
     predicate: str,
     set_exprs: dict[str, str],
-    stats_cols: list[str] | None = None,
     prune_range: tuple[str, object, object] | None = None,
 ) -> tuple[int, list[str]]:
     """Delta-style ``UPDATE table SET col = expr, ... WHERE predicate``
@@ -1330,8 +1331,9 @@ def update_where(
        the PRE-update row image, so ``SET a = b, b = a`` swaps — one
        side-indicator select, not sequential assignment) and committed
        as add(new) + remove(touched) under an ``expected_version``
-       guard. Untouched files keep their add actions (and stats)
-       byte-unchanged.
+       guard. The new files carry stats on the table's stats columns
+       (:func:`_write_files_checked`); untouched files keep their add
+       actions (and stats) byte-unchanged.
 
     ``set_exprs`` maps existing column names to SQL expressions over
     the table's columns; an unknown column raises (UPDATE never adds
@@ -1382,7 +1384,9 @@ def update_where(
         ],
         cond.alias("__txlog_modified"),
     )
-    new_actions = _write_files_checked(updated, table_dir, snap.meta, stats_cols)
+    new_actions = _write_files_checked(
+        updated, table_dir, snap.meta, live=snap.actions
+    )
     version = commit(
         table_dir, add=new_actions, remove=touched,
         expected_version=snap.version + 1, operation="UPDATE",
@@ -1439,9 +1443,10 @@ def optimize(
     ``repartition``; with it they are range-partitioned and sorted on the
     :func:`zorder_value` Morton key of those (logical) columns, so every
     file is a small box in their space and a range predicate on ANY of
-    them prunes files. The new files carry stats on the columns the live
-    actions already had plus ``zorder_by``, under physical names for a
-    column-mapped table. OPTIMIZE moves rows, never changes them: reads
+    them prunes files. The new files carry stats on the table's stats
+    columns plus ``zorder_by`` (:func:`_write_files_checked`).
+    ``target_file_bytes`` below 1 raises ``ValueError`` before any read.
+    OPTIMIZE moves rows, never changes them: reads
     of the tip, time travel to earlier versions and :func:`table_changes`
     over the OPTIMIZE version (empty) all see that.
 
@@ -1451,6 +1456,10 @@ def optimize(
     :func:`vacuum`."""
     from pyspark.sql import functions as F
 
+    if target_file_bytes < 1:
+        raise ValueError(
+            f"target_file_bytes must be at least 1, got {target_file_bytes}"
+        )
     snap = _resolve(table_dir)
     meta = snap.meta
     files = _files_in(snap)
@@ -1477,16 +1486,15 @@ def optimize(
         )
     else:
         rows = rows.repartition(n_files)
-    out = _to_physical(rows, meta)
-    had = [c for a in snap.actions for c in a.get("stats", {})]
-    stats_cols = [
-        c
-        for c in dict.fromkeys(had + (_physical_stats_cols(zorder_by, meta) or []))
-        if c in out.columns
-    ]
     return commit(
         table_dir,
-        add=write_files(out, table_dir, stats_cols=stats_cols),
+        add=_write_files_checked(
+            rows,
+            table_dir,
+            meta,
+            _physical_stats_cols(zorder_by, meta),
+            live=snap.actions,
+        ),
         remove=files,
         expected_version=snap.version + 1,
         operation="OPTIMIZE",
@@ -1720,12 +1728,12 @@ def _to_physical(df, meta: dict | None):
 
 def _physical_stats_cols(
     stats_cols: list[str] | None, meta: dict | None
-) -> list[str] | None:
+) -> list[str]:
     """Translate logical stats column names to the physical names the
     written files (and so the committed per-file stats) carry."""
-    if not stats_cols or not _mapping_of(meta):
-        return stats_cols
-    return [_physical_name(meta, c) for c in stats_cols]
+    if not _mapping_of(meta):
+        return list(stats_cols or ())
+    return [_physical_name(meta, c) for c in stats_cols or ()]
 
 
 def rename_column(table_dir: str, old: str, new: str) -> int:
@@ -1904,8 +1912,10 @@ def validated_write(
     from pyspark.sql import functions as F
 
     return _write_files_checked(
-        df.withColumn("__txlog_modified", F.lit(True)), table_dir, meta,
-        stats_cols,
+        df.withColumn("__txlog_modified", F.lit(True)),
+        table_dir,
+        meta,
+        _physical_stats_cols(stats_cols, meta),
     )
 
 
@@ -1945,24 +1955,42 @@ def _write_files_checked(
     flagged: DataFrame,
     table_dir: str,
     meta: dict | None,
-    stats_cols: list[str] | None,
+    stats_cols=(),
+    live=(),
 ) -> list:
-    """Write a DML rewrite frame with fused CHECK-constraint enforcement
-    (Delta enforces constraints on every write path — a violating DML is
-    refused whole, nothing committed). ``flagged`` is the rewrite frame
-    plus a boolean ``__txlog_modified`` column marking the rows the DML
-    actually changed; the constraint aggregate scopes to those rows (a
-    carried-along row cannot INTRODUCE a violation — legacy violations
-    are :func:`add_constraints`'s job to keep out, Delta's own split).
+    """The one write step of every rewrite (MERGE, UPDATE, DELETE's
+    rewrite class, :func:`optimize`) and of :func:`validated_write`:
+    write ``flagged`` under the table's physical column names
+    (:func:`_to_physical`) and return the add actions. It owns four
+    things:
 
-    The frame is persisted across the check and the write, so the
-    touched∪source input is SCANNED ONCE per DML instead of twice (the
-    round-11 shape re-ran the full-outer join / rewrite scan for the
-    check, and with a non-deterministic MERGE source the rows checked
-    were not necessarily the rows written — the persisted frame is both
-    the checked and the written data). Without declared constraints the
-    write is exactly :func:`write_files` of the unflagged frame: no
-    persist, no extra job, the r11 plan unchanged.
+    - **Stats.** The new files carry stats on every column any of
+      ``live`` has stats for, plus ``stats_cols`` (physical names — the
+      seeding list of :func:`validated_write`, ``zorder_by`` for
+      OPTIMIZE). A rewrite passes its resolved snapshot's live actions,
+      so it keeps the table's stats columns: no caller restates them,
+      and a table without stats gets none (Delta's
+      ``dataSkippingStatsColumns`` is a table property too).
+    - **The physical-name filter.** Logged stats keys are already
+      physical names; a kept one must still be a column of the physical
+      frame — a DROPPED column's key names no column any more.
+    - **The write.** :func:`write_files` of the physical frame; stats
+      come from the new files' footers, no job of their own.
+    - **The modified-rows CHECK.** A frame carrying a boolean
+      ``__txlog_modified`` column marks the rows the command actually
+      changed; with declared constraints, :func:`_enforce_constraints`
+      runs over those rows only (a carried-along row cannot INTRODUCE a
+      violation — legacy violations are :func:`add_constraints`'s job
+      to keep out, Delta's own split) and a violation refuses the whole
+      command, nothing written. A frame without the column (a DELETE's
+      surviving rows, OPTIMIZE's moved rows) changes no row and is not
+      checked.
+
+    With a check the frame is persisted across it and the write, so the
+    touched∪source input is SCANNED ONCE per DML, and with a
+    non-deterministic MERGE source the rows checked are the rows
+    written. Without one the write is exactly :func:`write_files`: no
+    persist, no extra job.
 
     CAVEAT — ``persist`` is a cache, not a barrier: a lost or evicted
     cached partition is RECOMPUTED from the source plan, so under
@@ -1974,27 +2002,26 @@ def _write_files_checked(
     should checkpoint the source themselves before the DML — the common
     case (sources that are reads of immutable data) is exact under
     plain persist, which is why the default stays the cheap one."""
-    constraints = (meta or {}).get("constraints") or {}
-    if not constraints:
-        return write_files(
-            _to_physical(flagged.drop("__txlog_modified"), meta),
-            table_dir,
-            stats_cols=_physical_stats_cols(stats_cols, meta),
-        )
     from pyspark.sql import functions as F
 
-    flagged = flagged.persist()
+    check = bool((meta or {}).get("constraints")) and (
+        "__txlog_modified" in flagged.columns
+    )
+    if check:
+        flagged = flagged.persist()
     try:
-        _enforce_constraints(
-            flagged.where(F.col("__txlog_modified")), meta
-        )
-        return write_files(
-            _to_physical(flagged.drop("__txlog_modified"), meta),
-            table_dir,
-            stats_cols=_physical_stats_cols(stats_cols, meta),
-        )
+        if check:
+            _enforce_constraints(
+                flagged.where(F.col("__txlog_modified")), meta
+            )
+        out = _to_physical(flagged.drop("__txlog_modified"), meta)
+        phys = out.columns
+        had = dict.fromkeys(c for a in live for c in a.get("stats", {}))
+        cols = [c for c in had if c in phys] + list(stats_cols)
+        return write_files(out, table_dir, stats_cols=list(dict.fromkeys(cols)))
     finally:
-        flagged.unpersist()
+        if check:
+            flagged.unpersist()
 
 
 def add_constraints(

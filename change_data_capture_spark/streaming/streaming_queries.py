@@ -2544,14 +2544,12 @@ def streaming_txlog_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price": "price * CAST(1.10 AS DOUBLE)",
             "name": "upper(name)",
         },
-        stats_cols=["id"],
         prune_range=("id", _CDF_UPD_LO, _CDF_UPD_HI),
     )
     txlog.delete_where(
         spark,
         tdir,
         f"id BETWEEN {_CDF_DEL_LO} AND {_CDF_DEL_HI}",
-        stats_cols=["id"],
         prune_range=("id", _CDF_DEL_LO, _CDF_DEL_HI),
         dv_fraction_threshold=1.0,  # merge-on-read: the feed must not care
     )

@@ -105,9 +105,7 @@ def test_merge_keeps_deletion_vector_deletes(spark):
     ws = tempfile.mkdtemp(prefix="scd2_state_")
     state = Scd2State(spark, ws)
     apply_batch(state, _events(spark, range(100)))
-    txlog.delete_where(
-        spark, ws, "id = 7", stats_cols=["id"], dv_fraction_threshold=1.0
-    )
+    txlog.delete_where(spark, ws, "id = 7", dv_fraction_threshold=1.0)
     (f7,) = [
         f for f in txlog.snapshot_files(ws)
         if spark.read.parquet(f).where("id = 7").count()

@@ -140,6 +140,11 @@ def test_compaction_preserves_data_and_history(spark, sf_dir):
     frag = txlog.snapshot_files(t, tip)
     assert len(frag) > 1
     rows_before = txlog.read_version(spark, t, tip).count()
+    # a bin size below one byte is refused up front, nothing committed
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="target_file_bytes"):
+            txlog.optimize(spark, t, target_file_bytes=bad)
+    assert txlog.latest_version(t) == tip
     assert txlog.optimize(spark, t) == tip + 1
     assert len(txlog.snapshot_files(t)) < len(frag)
     after = txlog.read_version(spark, t)
@@ -261,10 +266,19 @@ def test_products_txlog_versions_are_distinct_states(spark, sf_dir):
     assert tip.exceptAll(v2).count() == 0 and v2.exceptAll(tip).count() == 0
 
 
+def _assert_stats_kept(spark, t):
+    """Every live action of ``t`` carries ``id`` stats and a row count,
+    so the metadata-only count equals the scanned one."""
+    acts = txlog._resolve(t).actions
+    assert all("id" in a.get("stats", {}) and "num_rows" in a for a in acts)
+    assert txlog.count_rows(t) == txlog.read_version(spark, t).count()
+
+
 def test_merge_into_rewrites_only_touched_files(spark, tmp_path):
     """MERGE: untouched files keep their exact add actions in the
     snapshot, update/insert semantics are exact (including NULLs via
-    UPDATE SET *), and a disjoint-key merge touches ZERO files."""
+    UPDATE SET *), the rewritten files keep the table's stats, and a
+    disjoint-key merge touches ZERO files."""
     t = str(tmp_path / "t")
     df = spark.range(0, 800).selectExpr("id", "CAST(id AS STRING) AS v")
     txlog.commit(
@@ -294,7 +308,9 @@ def test_merge_into_rewrites_only_touched_files(spark, tmp_path):
     assert got[101] is None  # UPDATE SET * writes NULLs, not COALESCE
     assert got[5000] == "inserted"
     assert got[99] == "99" and got[102] == "102"
+    _assert_stats_kept(spark, t)
     # disjoint-key merge: stats pruning finds no candidate, zero rewrites
+    assert txlog.snapshot_files(t, predicate_range=("id", 9000, 9000)) == []
     ins_only = spark.createDataFrame([(9000, "x")], "id long, v string")
     v2, touched2 = txlog.merge_into(spark, t, ins_only, key="id")
     assert v2 == 2 and touched2 == []
@@ -678,8 +694,9 @@ def test_concurrent_writers_arbitrate_through_the_log(spark, tmp_path):
 
 def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
     """Predicate DELETE: files outside the predicate envelope keep
-    their add actions byte-untouched; a NULL predicate result KEEPS the
-    row (SQL DELETE semantics); a no-match delete makes NO commit."""
+    their add actions byte-untouched, the rewritten file keeps the
+    table's stats; a NULL predicate result KEEPS the row (SQL DELETE
+    semantics); a no-match delete makes NO commit."""
     t = str(tmp_path / "t")
     adds = []
     for lo in (0, 100, 200):  # three files with disjoint id ranges
@@ -693,8 +710,7 @@ def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
     before = {a["path"]: a for a in adds}
 
     v, touched = txlog.delete_where(
-        spark, t, "id BETWEEN 101 AND 103", stats_cols=["id"],
-        prune_range=("id", 101, 103),
+        spark, t, "id BETWEEN 101 AND 103", prune_range=("id", 101, 103),
     )
     assert v == 1 and len(touched) == 1
     assert touched[0] == next(p for p in before
@@ -706,6 +722,10 @@ def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
     assert set(untouched) <= set(after)
     got = sorted(r.id for r in txlog.read_version(spark, t).collect())
     assert got == [0, 1, 2, 3, 4, 100, 104, 200, 201, 202, 203, 204]
+    _assert_stats_kept(spark, t)
+    # a range that misses the rewritten rows drops the rewritten file
+    low = next(p for p in before if before[p]["stats"]["id"][0] == 0)
+    assert txlog.snapshot_files(t, predicate_range=("id", 0, 4)) == [low]
 
     # NULL predicate keeps the row
     t2 = str(tmp_path / "t2")
@@ -728,7 +748,9 @@ def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
 
 def test_update_where_rewrites_only_matching_files(spark, tmp_path):
     """Predicate UPDATE: files outside the predicate envelope keep
-    their add actions byte-untouched; a NULL predicate result leaves
+    their add actions byte-untouched, the rewritten file keeps the
+    table's stats (so a later small DELETE on it takes the
+    deletion-vector path); a NULL predicate result leaves
     the row unchanged (SQL UPDATE semantics); a no-match update makes
     NO commit; every SET expression sees the PRE-update row image; an
     unknown SET column raises."""
@@ -746,7 +768,7 @@ def test_update_where_rewrites_only_matching_files(spark, tmp_path):
 
     v, touched = txlog.update_where(
         spark, t, "id BETWEEN 101 AND 103", {"v": "upper(v)"},
-        stats_cols=["id"], prune_range=("id", 101, 103),
+        prune_range=("id", 101, 103),
     )
     assert v == 1 and len(touched) == 1
     assert touched[0] == next(p for p in before
@@ -762,6 +784,13 @@ def test_update_where_rewrites_only_matching_files(spark, tmp_path):
         100: "r100", 101: "R101", 102: "R102", 103: "R103", 104: "r104",
     }
     assert all(got[i] == f"r{i}" for i in (0, 1, 2, 3, 4, 200, 201, 202))
+    _assert_stats_kept(spark, t)
+    # a range that misses the rewritten rows drops the rewritten file
+    low = next(p for p in before if before[p]["stats"]["id"][0] == 0)
+    assert txlog.snapshot_files(t, predicate_range=("id", 0, 4)) == [low]
+    # one row of the rewritten file's five: routed by its num_rows to a DV
+    txlog.delete_where(spark, t, "id = 104", dv_fraction_threshold=0.5)
+    assert txlog._dv_map(txlog._resolve(t).actions)
 
     # NULL predicate leaves the row unchanged
     t2 = str(tmp_path / "t2")
@@ -1993,7 +2022,6 @@ def test_delete_dv_routes_small_fractions_and_rewrites_large(spark, tmp_path):
         spark,
         t,
         "id BETWEEN 10 AND 14 OR id BETWEEN 25 AND 44",
-        stats_cols=["id"],
         dv_fraction_threshold=0.5,
     )
     assert v == 1 and len(touched) == 2
@@ -2111,8 +2139,7 @@ def test_dml_on_dv_files_never_resurrects(spark, tmp_path):
     txlog.delete_where(spark, t, "id IN (1, 2, 3)", dv_fraction_threshold=0.5)
     # UPDATE rewrites the file holding ids 0-24; 1-3 must stay dead
     txlog.update_where(
-        spark, t, "id = 5", {"price": "price + CAST(1000 AS DOUBLE)"},
-        stats_cols=["id"],
+        spark, t, "id = 5", {"price": "price + CAST(1000 AS DOUBLE)"}
     )
     got = {r["id"]: r["price"] for r in txlog.read_version(spark, t).collect()}
     assert 1 not in got and 2 not in got and 3 not in got
@@ -2123,7 +2150,7 @@ def test_dml_on_dv_files_never_resurrects(spark, tmp_path):
     # MERGE on a DV-deleted key: delete 7 via DV, then merge key 7 back
     txlog.delete_where(spark, t, "id = 7", dv_fraction_threshold=0.5)
     src = spark.createDataFrame([(7, 777.0)], "id long, price double")
-    txlog.merge_into(spark, t, src, key="id", stats_cols=["id"])
+    txlog.merge_into(spark, t, src, key="id")
     got = {r["id"]: r["price"] for r in txlog.read_version(spark, t).collect()}
     assert got[7] == 777.0
     assert txlog.count_rows(t) == 97  # 100 - {1,2,3}; 7 is back
@@ -2238,7 +2265,7 @@ def _stream_table(spark, tmp_path):
         expected_version=1,
         operation="WRITE",
     )
-    txlog.update_where(spark, t, "id = 2", {"v": "upper(v)"}, stats_cols=["id"])
+    txlog.update_where(spark, t, "id = 2", {"v": "upper(v)"})
     txlog.delete_where(spark, t, "id = 1", dv_fraction_threshold=1.0)
     acts, _, _, _ = txlog._resolve(t, None)
     assert txlog._dv_map(acts), "the v3 DELETE must take the DV path"
@@ -2782,17 +2809,15 @@ def test_dml_and_feeds_under_url_encoded_table_path(spark, tmp_path):
         operation="WRITE",
         metadata={"schema": "id BIGINT, v STRING"},
     )
-    _, touched = txlog.delete_where(spark, t, "id = 2", stats_cols=["id"])
+    _, touched = txlog.delete_where(spark, t, "id = 2")
     assert len(touched) == 1
-    txlog.merge_into(spark, t, _df(spark, [(1, "A")]), "id", stats_cols=["id"])
+    txlog.merge_into(spark, t, _df(spark, [(1, "A")]), "id")
     assert sorted(map(tuple, txlog.read_version(spark, t).collect())) == [
         (1, "A"),
         (3, "c"),
     ]
     # a merge-on-read DELETE, read back by the batch and the streaming feed
-    v, _ = txlog.delete_where(
-        spark, t, "id = 3", stats_cols=["id"], dv_fraction_threshold=1.0
-    )
+    v, _ = txlog.delete_where(spark, t, "id = 3", dv_fraction_threshold=1.0)
     assert txlog._dv_map(txlog._resolve(t, v)[0])
     batch = [
         (r["_change_type"], r["id"], r["v"])
@@ -3425,18 +3450,14 @@ def test_column_mapping_dml_cdf_and_skipping(spark, tmp_path):
     assert len(pruned_before) < len(txlog.snapshot_files(t))
     # DML over logical names
     txlog.update_where(
-        spark, t, "pid = 1", {"v": "upper(v)"}, stats_cols=["pid"],
-        prune_range=("pid", 1, 1),
+        spark, t, "pid = 1", {"v": "upper(v)"}, prune_range=("pid", 1, 1),
     )
-    txlog.delete_where(
-        spark, t, "pid = 2", stats_cols=["pid"], prune_range=("pid", 2, 2)
-    )
+    txlog.delete_where(spark, t, "pid = 2", prune_range=("pid", 2, 2))
     txlog.merge_into(
         spark,
         t,
         spark.createDataFrame([(3, "V3"), (100, "v100")], "pid long, v string"),
         key="pid",
-        stats_cols=["pid"],
     )
     got = {r["pid"]: r["v"] for r in txlog.read_version(spark, t).collect()}
     assert got[1] == "V1" and 2 not in got and got[3] == "V3" and got[100] == "v100"
@@ -3715,7 +3736,9 @@ def test_write_files_footer_stats_match_readback(spark, tmp_path):
 def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path, count_jobs):
     """Stats on DATE, DECIMAL, STRING and BOOLEAN columns cost the same
     Spark jobs as stats on a BIGINT column: every bound comes from the
-    footers on the driver, so no column type adds a read-back pass."""
+    footers on the driver, so no column type adds a read-back pass. An
+    UPDATE that keeps a table's stats costs the same jobs as one on an
+    identical stats-less table."""
     from pyspark.sql import functions as F
 
     df = (
@@ -3738,3 +3761,13 @@ def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path, count_jobs):
     )
     assert by_all == by_id
     assert all(a["stats"]["d"][0] is not None for a in acts)
+
+    jobs = {}
+    for stats in (["id"], None):
+        u = str(tmp_path / f"u_{bool(stats)}")
+        txlog.commit(u, add=txlog.write_files(df, u, stats_cols=stats))
+        jobs[bool(stats)], _ = count_jobs(
+            lambda: txlog.update_where(spark, u, "id = 5", {"s": "upper(s)"})
+        )
+        assert ("num_rows" in txlog._resolve(u).actions[-1]) == bool(stats)
+    assert jobs[True] == jobs[False]
