@@ -97,6 +97,13 @@ A rewrite resolves its snapshot once and hands it to the stats prune
 one function for every rewrite) and its scans (:func:`_scan_files`,
 which also plans every :func:`read_version` and :func:`optimize` scan).
 
+One table schema: the log governs it. Every scan, the change feed and
+the streaming source are typed by :func:`_table_schema` before they are
+planned — the snapshot's declared ``metaData`` schema, or, for a table
+that never declared one, the Spark schema recorded in one data file's
+footer, read on the driver with no Spark job — so no txlog read launches
+a parquet schema-inference job.
+
 Scale: the log is metadata — KB-sized JSON per commit, folded
 driver-side in O(tail since checkpoint), each commit once. The data
 path stays fully distributed: a snapshot read is one parquet scan of the
@@ -131,6 +138,11 @@ _CDF_META_FIELDS = (
     ("_commit_version", IntegerType()),
     ("_operation", StringType()),
 )
+
+
+#: the deletion-vector sidecar's schema (:func:`_write_deletion_vectors`
+#: writes it), so a DV-aware scan plans its sidecar read without inference
+_DV_SCHEMA = "file STRING, pos BIGINT"
 
 
 def _cdf_schema(base):
@@ -627,13 +639,14 @@ def read_version(
     ``predicate_range`` — see :func:`snapshot_files`). The resolution is
     immune to commits that land after it — copy-on-write never deletes
     data files. A predicate that prunes EVERY file returns a typed empty
-    DataFrame (schema lifted from one live file, zero rows read), not a
-    schema-inference error.
+    DataFrame (zero rows read), not a schema-inference error.
 
     **The log's declared schema governs the read** (Delta semantics: the
     metaData action, not the parquet footers, is the table's schema).
-    When the snapshot's metadata declares one, the scan is planned with
-    it explicitly — after a schema evolution
+    Every scan is planned with an explicit schema (:func:`_table_schema`):
+    the snapshot's declaration, or for a table that never declared one
+    the footer schema of one live file, read without a Spark job. With a
+    declaration — after a schema evolution
     (``validated_write(evolve=True)`` + a metadata commit) files written
     under the OLD schema are read with the evolved shape, missing
     columns null-filled per file, with no ``mergeSchema`` footer sweep
@@ -653,19 +666,17 @@ def _read_snapshot(
     spark: SparkSession, table_dir: str, snap, predicate_range=None
 ) -> DataFrame:
     """:func:`read_version` of an already resolved :class:`Snapshot`, so
-    a DML that holds one walks the log once."""
+    a DML that holds one walks the log once. A snapshot whose files are
+    all pruned reads as an empty frame of :func:`_table_schema` over its
+    live files; with no file and no declaration it raises."""
     files = _files_in(snap, predicate_range)
     if files:
         return _scan_files(spark, snap, files)
-    declared = (snap.meta or {}).get("schema")
-    if declared is not None:
-        return spark.createDataFrame([], declared)
-    all_files = _files_in(snap)
-    if all_files:
-        return spark.read.parquet(all_files[0]).limit(0)
-    # zero files AND no declared schema: there is nothing to lift a
-    # schema from — raise the real reason instead of letting the
-    # zero-path reader fail with an unrelated inference error
+    schema = _table_schema(snap, _files_in(snap))
+    if schema is not None:
+        return spark.createDataFrame([], schema)
+    # zero files AND no declared schema: there is nothing to type the
+    # frame with — raise the real reason, not a parquet inference error
     raise ValueError(
         f"snapshot v{snap.version} of {table_dir} has no data files and no "
         "declared schema; commit table metadata to make empty "
@@ -848,19 +859,44 @@ def _dv_map(actions) -> dict[str, dict]:
     }
 
 
+def _table_schema(snap, files):
+    """The schema a read of ``snap`` is planned with: the log's declared
+    DDL string when the snapshot has one, else the Spark schema recorded
+    in the footer of ``min(files)`` (a collection of data-file paths) —
+    the file Spark's own inference would open — read on the driver, with
+    no session and no job. A file written without Spark's row metadata
+    is typed from its arrow schema. None only when there is no
+    declaration and no file."""
+    declared = (snap.meta or {}).get("schema")
+    if declared is not None or not files:
+        return declared
+    import pyarrow.parquet as pq
+
+    path = min(files)
+    spark_json = (pq.read_metadata(path).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(pq.read_schema(path))
+
+
 def _scan_files(
     spark: SparkSession, snap, files: list[str], with_meta: bool = False
 ):
     """Scan specific data files of a resolved :class:`Snapshot` under
-    its log-governed schema with its deletion vectors applied — the
-    read primitive every DML path (touched-file discovery, rewrite
-    reads) shares with :func:`read_version` and
-    :func:`optimize`, so no path can resurrect merge-on-read-deleted rows
-    by reading a data file raw. Rows listed in a file's deletion vector
-    are removed by ONE broadcast anti-join on ``(_metadata.file_path,
-    _metadata.row_index)`` against the union of the referenced sidecars;
-    files without a DV and ``with_meta=False`` keep the plain parquet
-    scan. ``with_meta`` keeps ``__txlog_file``/``__txlog_pos`` provenance
+    its :func:`_table_schema` (so the scan plans without an inference
+    job) with its deletion vectors applied — the read primitive every
+    DML path (touched-file discovery, rewrite reads) shares with
+    :func:`read_version` and :func:`optimize`, so no path can resurrect
+    merge-on-read-deleted rows by reading a data file raw. Rows listed in
+    a file's deletion vector are removed by ONE broadcast anti-join on
+    ``(_metadata.file_path, _metadata.row_index)`` against the union of
+    the referenced sidecars, read under :data:`_DV_SCHEMA`; files without
+    a DV and ``with_meta=False`` keep the plain parquet scan.
+    ``with_meta`` keeps ``__txlog_file``/``__txlog_pos`` provenance
     columns (reserved scratch names — a table using them fails analysis
     loudly). Under column mapping the scan is planned physical and
     projected to logical names (scan-meta scratch columns pass through),
@@ -875,13 +911,10 @@ def _scan_files(
     from pyspark.sql import functions as F
 
     meta = snap.meta
-    declared = (meta or {}).get("schema")
     mapping = _mapping_of(meta)
-    reader = spark.read
-    if declared is not None:
-        reader = reader.schema(
-            _physical_ddl(declared, meta) if mapping else declared
-        )
+    schema = _table_schema(snap, files)
+    if mapping:
+        schema = _physical_ddl(schema, meta)
     dv_by_path = _dv_map(snap.actions)
     dv_dirs = sorted(
         {
@@ -890,7 +923,7 @@ def _scan_files(
             if p in dv_by_path
         }
     )
-    scan = reader.parquet(*files)
+    scan = spark.read.schema(schema).parquet(*files)
     prov = ("__txlog_file", "__txlog_pos")
     if dv_dirs or with_meta:
         scan = scan.select(
@@ -899,7 +932,7 @@ def _scan_files(
             F.col("_metadata.row_index").alias(prov[1]),
         )
     if dv_dirs:
-        dv_rel = spark.read.parquet(*dv_dirs).select(
+        dv_rel = spark.read.schema(_DV_SCHEMA).parquet(*dv_dirs).select(
             F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
         )
         scan = scan.join(
@@ -1220,7 +1253,9 @@ def _write_deletion_vectors(
     )
     if old_dirs:
         newly = newly.unionByName(
-            spark.read.parquet(*old_dirs).where(F.col("file").isin(uris))
+            spark.read.schema(_DV_SCHEMA)
+            .parquet(*old_dirs)
+            .where(F.col("file").isin(uris))
         )
     out = os.path.join(table_dir, "dv", uuid.uuid4().hex)
     obs = Observation()
@@ -2383,7 +2418,9 @@ def table_changes(
     semantics: files written before an evolution null-fill the new
     columns; under column mapping, files of every vintage read through
     the END version's physical names). A table without a declared
-    schema takes the unified parquet-footer schema of the range's files.
+    schema is typed from one footer (:func:`_table_schema`) of the
+    range's part files, or of END's live files when the range plans no
+    part — the schema :func:`read_version` plans with.
 
     ``key`` must be a data column of the feed (anything else raises
     when the feed is built) and must UNIQUELY identify rows within every
@@ -2459,29 +2496,17 @@ def table_changes(
     parts = txlog_stream._cdf_partitions(table_dir, start_version - 1, end, key)
     # the feed's meta columns live in the Delta-style underscore
     # namespace (:func:`_cdf_schema` refuses a table whose data uses one).
-    # With a declared schema the column set IS the declaration (no file
-    # opened); without one, EVERY file the range's parts read is probed
-    # (footer-only reads, bounded by the range's churn) and their unified
-    # footer schema types the feed: a reserved name can hide in any file
-    # of a multi-file commit
-    base = (snap.meta or {}).get("schema")
+    # The feed is typed like every txlog read (:func:`_table_schema`): the
+    # declaration when END has one (no file opened), else one footer of
+    # the range's part files, or of END's live files for a range that
+    # plans no part
+    paths = {p for part in parts for p, _ in txlog_stream._sides(part)}
+    base = _table_schema(snap, paths or _files_in(snap))
     if base is None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        paths = sorted(
-            {p for part in parts for p, _ in txlog_stream._sides(part)}
-        ) or _files_in(snap)[:1]
-        if not paths:
-            raise ValueError(
-                f"table_changes range [{start_version}, {end}] of "
-                f"{table_dir} has no row changes, and the table has no "
-                "data files or declared schema to type an empty feed with"
-            )
-        base = from_arrow_schema(
-            pa.unify_schemas([pq.read_schema(p) for p in paths])
+        raise ValueError(
+            f"table_changes range [{start_version}, {end}] of "
+            f"{table_dir} has no row changes, and the table has no "
+            "data files or declared schema to type an empty feed with"
         )
     schema = _cdf_schema(base)
     if isinstance(schema, str):

@@ -706,15 +706,15 @@ class TxlogStreamDataSource(DataSource):
     :func:`txlog.table_changes` (same planner, same per-part read, no
     source), and snapshot reads go through :func:`txlog.read_version`.
 
-    SELF-DESCRIBING like the Delta source it models: ``schema()``
-    resolves from the table's committed ``metaData`` action (the log
-    governs, same rule as :func:`txlog.read_version`), falling back to a
-    committed file's parquet footer — so ``.load()`` works without an
-    explicit ``.schema()`` call; a caller-supplied schema still
-    overrides (Spark only calls ``schema()`` when none was given). In
-    ``readChangeFeed`` mode the resolved schema gains the CDF meta
-    columns (``_change_type``, ``_commit_version``, ``_operation``) —
-    and refuses a table whose data already uses one of those reserved
+    SELF-DESCRIBING like the Delta source it models: ``schema()`` is the
+    tip's :func:`txlog._table_schema` — the committed ``metaData``
+    declaration, else the footer schema of one of the tip's live files,
+    the schema :func:`txlog.read_version` plans with — so ``.load()``
+    works without an explicit ``.schema()`` call; a caller-supplied
+    schema still overrides (Spark only calls ``schema()`` when none was
+    given). In ``readChangeFeed`` mode the resolved schema gains the CDF
+    meta columns (``_change_type``, ``_commit_version``, ``_operation``)
+    — and refuses a table whose data already uses one of those reserved
     names, the batch feed's collision rule."""
 
     @classmethod
@@ -726,20 +726,13 @@ class TxlogStreamDataSource(DataSource):
         # must stay strings (StructType.fromDDL needs an active session)
         table_dir = _required_path(self.options)
         snap = txlog._resolve(table_dir)
-        base = (snap.meta or {}).get("schema")
+        base = txlog._table_schema(snap, txlog._files_in(snap))
         if base is None:
-            files = txlog._files_in(snap)
-            if not files:
-                raise ValueError(
-                    f"cdc_txlog source: table {table_dir} has no committed "
-                    "metadata and no data files to infer a schema from; pass "
-                    ".schema(...) explicitly or commit table metadata"
-                )
-            import pyarrow.parquet as pq
-
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            base = from_arrow_schema(pq.read_schema(files[0]))
+            raise ValueError(
+                f"cdc_txlog source: table {table_dir} has no committed "
+                "metadata and no data files to infer a schema from; pass "
+                ".schema(...) explicitly or commit table metadata"
+            )
         # a DDL string is accepted by the DataSource API
         if str(_opt(self.options, "readChangeFeed", "false")).lower() == "true":
             return txlog._cdf_schema(base)

@@ -21,8 +21,9 @@ shape over add/remove actions):
   log-schema scan (``txlog._scan_files``), like every other txlog reader,
   so rows a deletion-vector DELETE removed stay removed. The state's
   first commit declares its schema, so every later scan is planned with
-  it and launches no footer-inference job (a state table written
-  without a declared schema still merges, at one inference job a scan).
+  it and opens no footer (a state table written without a declared
+  schema is typed from one file footer on the driver, and launches no
+  inference job either).
 - atomicity: the commit is guarded by ``expected_version = tip + 1``, so
   readers see every version of the SCD2 table fully merged or not at all,
   and a concurrent writer's lost race fails loudly instead of clobbering.

@@ -2584,98 +2584,115 @@ SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
 FROM orders
 """
 
+_RATE_LIMIT_DDL = "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE"
+
+
+def _rate_limit_table(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    stats_cols: list[str] | None = None,
+):
+    """The rate-limit gates' fixture: the orders projection landed as SIX
+    append commits of TWO files each, the first declaring the schema.
+    ONE pass writes all six commits' files, and the deterministic
+    (commit, half) routing keeps exactly two files per commit — the
+    fixture both gates' drain self-checks depend on. Returns ``(table
+    dir, schema)``."""
+    from change_data_capture_spark.sources import txlog
+    from change_data_capture_spark.sources.tables import load_table
+
+    tdir = tempfile.mkdtemp(prefix=prefix)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        F.col("o_totalprice").cast("double").alias("o_totalprice"),
+    )
+    commit_files = _staged_commit_slices(
+        o, F.col("o_orderkey") % 6, 6, tdir, stats_cols=stats_cols
+    )
+    for i, files in enumerate(commit_files):
+        txlog.commit(
+            tdir,
+            add=files,
+            expected_version=i,
+            operation="WRITE",
+            metadata={"schema": _RATE_LIMIT_DDL} if i == 0 else None,
+        )
+    return tdir, spark.createDataFrame([], _RATE_LIMIT_DDL).schema
+
+
+def _drain_driven(reader, sink: str, record) -> list:
+    """Drive a txlog stream ``reader`` through its own offset protocol
+    (``initialOffset`` → ``latestOffset`` → ``partitions`` → ``read`` →
+    ``commit`` — exactly the call sequence Spark's microbatch engine
+    issues) until ``latestOffset`` stops advancing, writing each
+    micro-batch to a parquet file under ``sink``. Returns
+    ``record(start, end, parts, table)`` per micro-batch. The driven loop
+    is deterministic where a wall-clock stream would race its own trigger
+    cadence; it holds at most ONE micro-batch at a time — bounded by the
+    cap, which is the knob's own guarantee (in a live query ``read()``
+    lands executor-side and nothing routes through the driver)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(sink, exist_ok=True)
+    off = reader.initialOffset()
+    batches = []
+    while True:
+        end = reader.latestOffset()
+        if end == off:
+            return batches
+        parts = reader.partitions(off, end)
+        tbl = pa.concat_tables(
+            [pa.Table.from_batches([b]) for p in parts for b in reader.read(p)]
+        )
+        reader.commit(end)
+        pq.write_table(tbl, f"{sink}/batch_{len(batches):05d}.parquet")
+        batches.append(record(off, end, parts, tbl))
+        off = end
+
 
 @query("streaming_txlog_rate_limit", oracle=_RATE_LIMIT_ORACLE)
 def streaming_txlog_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``maxFilesPerTrigger`` on the txlog streaming source (Delta's
     production backpressure knob): the orders table lands as SIX append
-    commits of TWO files each, and the reader is driven through its own
-    offset protocol (``initialOffset`` → ``latestOffset`` →
-    ``partitions`` → ``read`` → ``commit`` — exactly the call sequence
-    Spark's microbatch engine issues) with ``maxFilesPerTrigger=4``.
+    commits of TWO files each (:func:`_rate_limit_table`), and the
+    reader is driven through its own offset protocol
+    (:func:`_drain_driven`) with ``maxFilesPerTrigger=4``.
     ``latestOffset`` must advance the one-integer version offset in
     VERSION-ALIGNED steps of at most 4 cumulative added files — the 12
     pending files drain in exactly THREE micro-batches of two commits
     each (RuntimeError otherwise: the gate self-checks the batch count
     and per-batch file cap), and the union of the batches must equal
     the full table exactly once — which is what the oracle checks
-    relationally. The driven loop is deterministic where a wall-clock
-    stream would race its own trigger cadence; the live-query path
-    (same reader, real writeStream) is exercised end-to-end by the
-    other txlog streaming gates and pinned in ``tests/test_txlog.py``,
-    including the documented best-effort edge: the engine asks for
-    ``latestOffset`` before ``initialOffset`` on a fresh run, so a
-    run's FIRST trigger is uncapped (Delta documents the same class of
-    exception for Trigger.Once/AvailableNow).
+    relationally. The live-query path (same reader, real writeStream)
+    is exercised end-to-end by the other txlog streaming gates and
+    pinned in ``tests/test_txlog.py``, including the documented
+    best-effort edge: the engine asks for ``latestOffset`` before
+    ``initialOffset`` on a fresh run, so a run's FIRST trigger is
+    uncapped (Delta documents the same class of exception for
+    Trigger.Once/AvailableNow).
 
     Scale: admission control is a driver-side metadata walk over the
     pending commits' KB-sized JSON (O(versions admitted), zero data
     read) — the knob that keeps a fallen-behind stream's catch-up
     micro-batches executor-memory-sized at any table size."""
-    from change_data_capture_spark.sources import txlog
-    from change_data_capture_spark.sources.tables import load_table
     from change_data_capture_spark.sources.txlog_stream import (
         TxlogStreamReader,
     )
 
-    tdir = tempfile.mkdtemp(prefix="cdc_txrate_")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    # ONE pass writes all six commits' 2-file payloads (the pre-r13 form
-    # ran six filtered scan+write jobs over the same orders projection);
-    # the deterministic (commit, half) routing keeps exactly two files
-    # per commit — the fixture the gate's 3×(2-commit, ≤4-file) drain
-    # self-check depends on
-    commit_files = _staged_commit_slices(o, F.col("o_orderkey") % 6, 6, tdir)
-    for i in range(6):
-        txlog.commit(
-            tdir,
-            add=commit_files[i],
-            expected_version=i,
-            operation="WRITE",
-            metadata=(
-                {
-                    "schema": "o_orderkey BIGINT, o_custkey BIGINT, "
-                    "o_totalprice DOUBLE"
-                }
-                if i == 0
-                else None
-            ),
-        )
-    schema = spark.createDataFrame(
-        [], "o_orderkey long, o_custkey long, o_totalprice double"
-    ).schema
+    tdir, schema = _rate_limit_table(spark, sf_dir, "cdc_txrate_")
     reader = TxlogStreamReader(
         schema, {"path": tdir, "maxfilespertrigger": "4"}
     )
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    off = reader.initialOffset()
-    batches: list[tuple[int, int]] = []  # (n_files, n_rows)
     sink = f"{tdir}/drained"
-    os.makedirs(sink, exist_ok=True)
-    while True:
-        end = reader.latestOffset()
-        if end == off:
-            break
-        parts = reader.partitions(off, end)
-        # the harness holds at most ONE micro-batch at a time — bounded
-        # by the cap, which is the knob's own guarantee (in a live query
-        # read() lands executor-side and nothing routes through the
-        # driver; the driven loop trades that for determinism)
-        tbl = pa.concat_tables(
-            [pa.Table.from_batches([b]) for p in parts for b in reader.read(p)]
-        )
-        reader.commit(end)
-        pq.write_table(tbl, f"{sink}/batch_{len(batches):05d}.parquet")
-        batches.append((len(parts), tbl.num_rows))
-        off = end
+    # (n_files, n_rows) per micro-batch
+    batches = _drain_driven(
+        reader, sink, lambda off, end, parts, tbl: (len(parts), tbl.num_rows)
+    )
     if len(batches) != 3 or any(nf > 4 for nf, _ in batches):
         raise RuntimeError(
             f"maxFilesPerTrigger=4 over 6×2 files must drain in exactly "
@@ -2693,58 +2710,35 @@ def streaming_txlog_rate_limit_bytes(
     right knob when file sizes vary (a count cap admits 10 small files
     or 10 huge ones alike; a byte cap holds each micro-batch's input
     volume, and so executor memory, steady). The orders table lands as
-    SIX append commits of TWO files each, committed WITH stats so every
-    add action carries Delta's required ``add.size`` field — the gate
-    asserts the sizes are IN THE LOG, because that is the scale story:
-    admission stays a pure KB-JSON driver walk, no filesystem re-stat
-    per trigger (a ``{"path"}``-only action from a stats-less writer
-    falls back to one driver-side ``stat``, pinned separately in ``tests/test_txlog.py``). The budget
+    SIX append commits of TWO files each (:func:`_rate_limit_table`),
+    committed WITH stats so every add action carries Delta's required
+    ``add.size`` field — the gate asserts the sizes are IN THE LOG,
+    because that is the scale story: admission stays a pure KB-JSON
+    driver walk, no filesystem re-stat per trigger (a ``{"path"}``-only
+    action from a stats-less writer falls back to one driver-side
+    ``stat``, pinned separately in ``tests/test_txlog.py``). The budget
     is set from the log itself to the largest consecutive-commit-pair
     byte sum, so ``latestOffset`` must drain the backlog in exactly
     THREE version-aligned micro-batches of two commits each (the gate
     self-checks batch count, per-batch admitted bytes <= budget, and
     that a third commit would have burst it); the union of the batches
     equals the full table exactly once — what the oracle checks
-    relationally. Same driven offset-protocol loop, best-effort
-    first-trigger contract, and oversized-commit progress guarantee as
-    the file-count twin.
+    relationally. Same driven offset-protocol loop
+    (:func:`_drain_driven`), best-effort first-trigger contract, and
+    oversized-commit progress guarantee as the file-count twin.
 
     Scale: byte admission reads per-file sizes the writer already
     recorded — O(versions admitted) JSON, zero data read, zero stat;
     the knob that keeps a fallen-behind stream's catch-up micro-batches
     executor-memory-sized regardless of how file sizes drift."""
     from change_data_capture_spark.sources import txlog
-    from change_data_capture_spark.sources.tables import load_table
     from change_data_capture_spark.sources.txlog_stream import TxlogStreamReader
 
-    tdir = tempfile.mkdtemp(prefix="cdc_txratebytes_")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
+    # stats ride along footer-lifted, so every add action carries Delta's
+    # required ``size`` (+ min/max + numRecords) with no read-back pass
+    tdir, schema = _rate_limit_table(
+        spark, sf_dir, "cdc_txratebytes_", stats_cols=["o_orderkey"]
     )
-    # one pass writes all six commits' files (see the file-count twin);
-    # stats ride along footer-lifted so every add action carries
-    # Delta's required ``size`` (+ min/max + numRecords) with no
-    # read-back pass either
-    commit_files = _staged_commit_slices(
-        o, F.col("o_orderkey") % 6, 6, tdir, stats_cols=["o_orderkey"]
-    )
-    for i in range(6):
-        txlog.commit(
-            tdir,
-            add=commit_files[i],
-            expected_version=i,
-            operation="WRITE",
-            metadata=(
-                {
-                    "schema": "o_orderkey BIGINT, o_custkey BIGINT, "
-                    "o_totalprice DOUBLE"
-                }
-                if i == 0
-                else None
-            ),
-        )
     sizes = []
     for c in txlog._commits(tdir, 0, 5):
         adds = c.get("add") or ()
@@ -2765,34 +2759,16 @@ def streaming_txlog_rate_limit_bytes(
             f"degenerate fixture: pair budget {budget} admits a triple "
             f"{sizes} — the gate would not exercise the byte cap"
         )
-    schema = spark.createDataFrame(
-        [], "o_orderkey long, o_custkey long, o_totalprice double"
-    ).schema
     reader = TxlogStreamReader(
         schema, {"path": tdir, "maxbytespertrigger": str(budget)}
     )
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    off = reader.initialOffset()
-    batches: list[tuple[int, int]] = []  # (n_commits, admitted_bytes)
     sink = f"{tdir}/drained"
-    os.makedirs(sink, exist_ok=True)
-    while True:
-        end = reader.latestOffset()
-        if end == off:
-            break
+
+    def record(off, end, parts, tbl):  # (n_commits, admitted_bytes)
         lo, hi = int(off["version"]), int(end["version"])
-        parts = reader.partitions(off, end)
-        tbl = pa.concat_tables(
-            [pa.Table.from_batches([b]) for p in parts for b in reader.read(p)]
-        )
-        reader.commit(end)
-        pq.write_table(tbl, f"{sink}/batch_{len(batches):05d}.parquet")
-        batches.append((hi - lo, sum(sizes[lo + 1 : hi + 1])))
-        off = end
+        return hi - lo, sum(sizes[lo + 1 : hi + 1])
+
+    batches = _drain_driven(reader, sink, record)
     if len(batches) != 3 or any(
         nc != 2 or nbytes > budget for nc, nbytes in batches
     ):

@@ -2714,19 +2714,40 @@ def test_stream_cdf_nan_and_nested_match_batch_semantics(spark, tmp_path):
     assert got == want
 
 
-def test_table_changes_probes_all_files_within_one_commit(spark, tmp_path):
-    """The reserved-name probe covers EVERY file of a diffed commit —
-    a reserved column hiding in the second file of a two-file commit
-    (heterogeneous writers, no declared metadata) still refuses."""
-    t = str(tmp_path / "t")
-    clean = txlog.write_files(_df(spark, [(1, "a")]), t)
-    poisoned = txlog.write_files(
-        spark.createDataFrame([(2, "b", "x")], "id long, v string, _operation string"),
-        t,
+def test_table_changes_types_undeclared_feed_like_read_version(spark, tmp_path):
+    """An undeclared table whose files disagree on schema: the change feed
+    is typed from the one footer ``read_version`` plans with (the lowest
+    path's). A reserved name in that footer is refused; a reserved name
+    only in another file is no column of the table, so the feed serves
+    its own ``_operation`` meta column for that file's rows."""
+
+    def table(name, first, second):
+        t = str(tmp_path / name)
+        files = []
+        for sub, df in (("a", first), ("b", second)):
+            out = os.path.join(t, "data", sub)
+            df.coalesce(1).write.parquet(out)
+            files += [
+                os.path.join(out, f)
+                for f in sorted(os.listdir(out))
+                if f.endswith(".parquet")
+            ]
+        txlog.commit(t, add=files, expected_version=0, operation="WRITE")
+        return t
+
+    clean = _df(spark, [(1, "a")])
+    poisoned = spark.createDataFrame(
+        [(2, "b", "x")], "id long, v string, _operation string"
     )
-    txlog.commit(t, add=clean + poisoned, expected_version=0, operation="WRITE")
+    t = table("poisoned_first", poisoned, clean)
     with pytest.raises(ValueError, match="_operation"):
         txlog.table_changes(spark, t, 0, 0)
+    t = table("clean_first", clean, poisoned)
+    assert txlog.read_version(spark, t).columns == ["id", "v"]
+    assert sorted(tuple(r) for r in txlog.table_changes(spark, t, 0, 0).collect()) == [
+        (1, "a", "insert", 0, "WRITE"),
+        (2, "b", "insert", 0, "WRITE"),
+    ]
 
 
 def _drain_cdf_stream(spark, t, start, name, ckpt):
@@ -3771,3 +3792,82 @@ def test_write_files_stats_run_no_job_of_their_own(spark, tmp_path, count_jobs):
         )
         assert ("num_rows" in txlog._resolve(u).actions[-1]) == bool(stats)
     assert jobs[True] == jobs[False]
+
+
+#: Spark jobs per step of ``test_undeclared_table_reads_like_a_declared_one``
+#: (read, MERGE, UPDATE, copy-on-write DELETE, DV DELETE, second DV DELETE,
+#: read over the DVs, table_changes, OPTIMIZE): a declared and an
+#: undeclared table plan every scan from a schema known before planning,
+#: so neither launches a schema-inference job
+_SCHEMA_STEP_JOBS = [1, 8, 3, 3, 3, 5, 2, 1, 3]
+
+
+@pytest.mark.parametrize("declared", [True, False], ids=["declared", "undeclared"])
+def test_undeclared_table_reads_like_a_declared_one(
+    spark, tmp_path, count_jobs, declared
+):
+    """A table with no declared schema is typed from one file footer on
+    the driver: every read and DML step launches the same jobs as on the
+    same table with a declaration, and the snapshot read, the change feed
+    and the stream source agree on its column names and types."""
+    from pyspark.sql import functions as F
+
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamDataSource,
+    )
+
+    def typed(df):
+        return df.select(
+            "id",
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+            F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 300).cast("int")).alias("d"),
+            (F.col("id") / 7).cast("decimal(10,2)").alias("price"),
+            F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+        )
+
+    t = str(tmp_path / "t")
+    rows = typed(spark.range(0, 4000)).repartitionByRange(4, "id")
+    txlog.commit(
+        t,
+        add=txlog.write_files(rows, t, stats_cols=["id"]),
+        expected_version=0,
+        metadata=(
+            {"schema": "id BIGINT, v STRING, d DATE, price DECIMAL(10,2), "
+                       "ts TIMESTAMP"}
+            if declared
+            else None
+        ),
+    )
+    assert len(txlog.snapshot_files(t)) == 4
+    src = typed(spark.range(5, 6)).withColumn("v", F.lit("merged"))
+    steps = [
+        lambda: txlog.read_version(spark, t).collect(),
+        lambda: txlog.merge_into(spark, t, src, "id"),
+        lambda: txlog.update_where(spark, t, "id = 6", {"v": "upper(v)"}),
+        lambda: txlog.delete_where(spark, t, "id = 3000"),
+        lambda: txlog.delete_where(spark, t, "id = 7", dv_fraction_threshold=0.5),
+        lambda: txlog.delete_where(
+            spark, t, "id IN (8, 9, 1500)", dv_fraction_threshold=0.5
+        ),
+        lambda: txlog.read_version(spark, t).collect(),
+        lambda: txlog.table_changes(spark, t, 1, 1).collect(),
+        lambda: txlog.optimize(spark, t),
+    ]
+    jobs = [count_jobs(step)[0] for step in steps]
+    assert jobs == _SCHEMA_STEP_JOBS, jobs
+    assert txlog._dv_map(txlog._resolve(t, 5).actions)  # the DV steps made DVs
+    assert txlog.read_version(spark, t).count() == 3995
+
+    def names_types(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    snapshot = names_types(txlog.read_version(spark, t).schema)
+    assert [n for n, _ in snapshot] == ["id", "v", "d", "price", "ts"]
+    feed = txlog.table_changes(spark, t, 0, 4).drop(
+        "_change_type", "_commit_version", "_operation"
+    )
+    assert names_types(feed.schema) == snapshot
+    stream = TxlogStreamDataSource({"path": t}).schema()
+    if isinstance(stream, str):
+        stream = spark.createDataFrame([], stream).schema
+    assert names_types(stream) == snapshot
