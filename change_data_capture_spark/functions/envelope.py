@@ -3,10 +3,11 @@
 Everything here is a built-in-function projection over the typed envelope
 struct (schemas.envelope_schema) — the Spark equivalent of the reference's
 ad-hoc JSON path chains ``json->'value'->'after'->…``
-(reference README.md:90-102). Because the envelope is a real ``StructType``,
-Catalyst prunes the nested scan down to the referenced paths
-(``spark.sql.optimizer.nestedSchemaPruning.enabled``) — the whole decode is a
-zero-shuffle, codegen'd projection at any scale.
+(reference README.md:90-102). The readers parse the envelope through its
+read projection (``schemas.envelope_read_schema``), which holds exactly the
+paths read here — Catalyst prunes nested fields only at parquet and ORC
+scans, not at the JSON scan — and the whole decode is a zero-shuffle,
+codegen'd projection at any scale.
 """
 
 from __future__ import annotations

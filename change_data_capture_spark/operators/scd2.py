@@ -71,7 +71,6 @@ def scd2(
       counting.
     """
     w_ord = Window.partitionBy(key).orderBy(order_col)
-    w_all = Window.partitionBy(key)
 
     cleaned = decoded.where(F.col(order_col).isNotNull())
     if dedup_replays:
@@ -85,18 +84,24 @@ def scd2(
             .where(
                 F.col("_prev_ord").isNull() | (F.col("_prev_ord") != F.col(order_col))
             )
-            .drop("_prev_ord")
         )
+    interval = (
+        key,
+        *payload,
+        F.timestamp_millis(F.col(ts_ms_col)).alias("row_valid_start_timestamp"),
+        F.coalesce(
+            F.lead(F.timestamp_millis(F.col(ts_ms_col)), 1).over(w_ord),
+            F.lit(sentinel_ts).cast("timestamp"),
+        ).alias("row_valid_expiration_timestamp"),
+    )
+    if min_events <= 1:
+        # every key in the output has an event, so the count filter could
+        # drop nothing: no count window
+        return cleaned.select(*interval)
     return (
         cleaned.select(
-            key,
-            *payload,
-            F.timestamp_millis(F.col(ts_ms_col)).alias("row_valid_start_timestamp"),
-            F.coalesce(
-                F.lead(F.timestamp_millis(F.col(ts_ms_col)), 1).over(w_ord),
-                F.lit(sentinel_ts).cast("timestamp"),
-            ).alias("row_valid_expiration_timestamp"),
-            F.count(F.lit(1)).over(w_all).alias("_n_events"),
+            *interval,
+            F.count(F.lit(1)).over(Window.partitionBy(key)).alias("_n_events"),
         )
         .where(F.col("_n_events") >= min_events)
         .drop("_n_events")

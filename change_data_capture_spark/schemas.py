@@ -4,8 +4,10 @@ The reference lets DuckDB infer JSON shapes at query time
 (``/root/reference/README.md:104,216-218`` — ``read_ndjson_objects`` yields one
 untyped ``json`` column). We invert that: the Debezium envelope is a stable,
 published contract (sample event at ``/root/reference/README.md:214``), so we
-pin it as a ``StructType`` and apply it with ``from_json`` — deterministic
-under Spark, and it enables nested-schema pruning at the scan.
+pin it as a ``StructType`` — deterministic under Spark. Readers parse only
+its decoded fields (:func:`envelope_read_schema`): Catalyst prunes nested
+fields at parquet and ORC scans, but not at a JSON scan, which parses every
+field of the schema it is given.
 """
 
 from __future__ import annotations
@@ -90,8 +92,28 @@ def envelope_schema(row: StructType = PRODUCT_ROW) -> StructType:
     )
 
 
+def envelope_read_schema(row: StructType = PRODUCT_ROW) -> StructType:
+    """The read projection of :func:`envelope_schema`: ``value.before``,
+    ``value.after``, ``value.op``, ``value.source.ts_ms`` and
+    ``value.source.lsn`` — the paths ``decode_envelope`` and
+    ``decode_user_envelope`` read, 11 leaves of the products envelope's
+    23. A JSON scan parses every field of its schema (Spark prunes nested
+    fields only for parquet and ORC), so the envelope readers pass this
+    projection; the other wire fields are skipped at parse time, and a
+    read of one fails analysis instead of returning nulls. Built from the
+    wire schema, so its types cannot drift from it."""
+    value = envelope_schema(row)["value"].dataType
+    source = StructType([value["source"].dataType[n] for n in ("ts_ms", "lsn")])
+    kept = [value["before"], value["after"], StructField("source", source), value["op"]]
+    return StructType([StructField("value", StructType(kept))])
+
+
+#: wire shapes: generators, writers, the Python data source, and any
+#: reader that passes them explicitly
 PRODUCTS_ENVELOPE = envelope_schema(PRODUCT_ROW)
 USERS_ENVELOPE = envelope_schema(USER_ROW)
+#: what ``read_envelope_ndjson`` and ``kafka_envelope_stream`` parse
+PRODUCTS_ENVELOPE_READ = envelope_read_schema(PRODUCT_ROW)
 
 # ---------------------------------------------------------------------------
 # Driver fixture tables (/root/testdata/sf*/ — FIXTURES.md §B)

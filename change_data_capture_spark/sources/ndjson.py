@@ -5,7 +5,8 @@ The reference's sink writes 20-record JSONL objects under
 ``/{topic}/yyyy-MM-dd/HH/{partition}-{start_offset}.json``
 (``/root/reference/connectors/s3-sink.json:13-14``) and DuckDB re-infers the
 schema per query (``README.md:104,216``). Here the envelope schema is pinned
-(schemas.envelope_schema) and the layout is real ``partitionBy`` directories
+(schemas.envelope_schema, read through its decoded-field projection
+schemas.envelope_read_schema) and the layout is real ``partitionBy`` directories
 (``ingest_date``/``ingest_hour``), so engines get partition pruning instead of
 path-glob convention.
 """
@@ -16,21 +17,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from change_data_capture_spark.schemas import PRODUCTS_ENVELOPE
+from change_data_capture_spark.schemas import PRODUCTS_ENVELOPE_READ
 from change_data_capture_spark.session import ensure_runtime_confs
 
 
 def read_envelope_ndjson(
     spark: SparkSession,
     path: str,
-    schema: StructType = PRODUCTS_ENVELOPE,
+    schema: StructType = PRODUCTS_ENVELOPE_READ,
     streaming: bool = False,
     options: dict | None = None,
 ) -> DataFrame:
     """S1: scan NDJSON event files into the typed envelope.
 
     ``spark.read.schema(...).json`` — explicit schema, so no inference pass
-    over 100 TB of text, and Catalyst prunes nested fields at the scan.
+    over 100 TB of text. The default ``schema`` is the envelope's read
+    projection (``schemas.PRODUCTS_ENVELOPE_READ``): the JSON scan parses
+    only the fields the decode reads, because Catalyst does not prune
+    nested fields at a JSON scan; every byte is still read, but the other
+    wire fields are skipped at parse time, and selecting one of them (say
+    ``value.transaction``) fails analysis. Pass
+    ``schemas.PRODUCTS_ENVELOPE`` to parse the whole wire shape.
     ``streaming=True`` returns the ``readStream`` twin (same schema, same
     downstream code — the batch/stream unification Spark gives for free);
     ``options`` forwards extra reader options (e.g.

@@ -865,8 +865,10 @@ def _table_schema(snap, files):
     in the footer of ``min(files)`` (a collection of data-file paths) —
     the file Spark's own inference would open — read on the driver, with
     no session and no job. A file written without Spark's row metadata
-    is typed from its arrow schema. None only when there is no
-    declaration and no file."""
+    is typed from its arrow schema. A footer schema is returned as its
+    nullable copy, as Spark's file scans type it, so a pruned-empty
+    read, a scan, the change feed and the stream source agree. None
+    only when there is no declaration and no file."""
     declared = (snap.meta or {}).get("schema")
     if declared is not None or not files:
         return declared
@@ -877,10 +879,10 @@ def _table_schema(snap, files):
         b"org.apache.spark.sql.parquet.row.metadata"
     )
     if spark_json is not None:
-        return StructType.fromJson(json.loads(spark_json))
+        return _nullability_norm(StructType.fromJson(json.loads(spark_json)))
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    return from_arrow_schema(pq.read_schema(path))
+    return _nullability_norm(from_arrow_schema(pq.read_schema(path)))
 
 
 def _scan_files(

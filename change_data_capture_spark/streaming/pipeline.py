@@ -31,10 +31,12 @@ from change_data_capture_spark.sources.ndjson import read_envelope_ndjson
 def kafka_envelope_stream(
     spark: SparkSession, brokers: str, topics: str
 ) -> DataFrame:
-    """S4/S5: consume Debezium topics from Kafka and decode the typed
-    envelope (``value`` is the JSON envelope bytes). Requires a live broker —
-    the file-source twin below has the identical downstream graph."""
-    from change_data_capture_spark.schemas import PRODUCTS_ENVELOPE
+    """S4/S5: consume Debezium topics from Kafka and parse the typed
+    envelope (``value`` is the JSON envelope bytes) through its read
+    projection, ``schemas.PRODUCTS_ENVELOPE_READ`` — the fields the decode
+    reads, as the file source parses them. Requires a live broker — the
+    file-source twin below has the identical downstream graph."""
+    from change_data_capture_spark.schemas import PRODUCTS_ENVELOPE_READ
 
     raw = (
         spark.readStream.format("kafka")
@@ -44,7 +46,7 @@ def kafka_envelope_stream(
         .load()
     )
     return raw.select(
-        F.from_json(F.col("value").cast("string"), PRODUCTS_ENVELOPE).alias("v")
+        F.from_json(F.col("value").cast("string"), PRODUCTS_ENVELOPE_READ).alias("v")
     ).select("v.*")
 
 

@@ -47,6 +47,38 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def count_py4j(spark):
+    """``count_py4j(fn) -> (py4j round trips fn() made, fn()'s result)``:
+    wraps py4j's ``ClientServerConnection.send_command`` for the call.
+    The object releases Python's garbage collector sends are not
+    counted, as when they are sent depends on the collector, not on
+    ``fn``."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    send = ClientServerConnection.send_command
+
+    def count(fn):
+        n = 0
+
+        def counted(self, command):
+            nonlocal n
+            if not command.startswith(release):
+                n += 1
+            return send(self, command)
+
+        ClientServerConnection.send_command = counted
+        try:
+            out = fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return n, out
+
+    return count
+
+
+@pytest.fixture
 def session_conf(spark):
     """``with session_conf({key: value, ...}):`` sets session confs for
     the block and restores each one's previous value (or unsets it)."""

@@ -20,6 +20,23 @@ def test_scd2_is_single_shuffle(spark, sf_dir):
     assert not s.has_cartesian and not s.has_bnlj
 
 
+def test_scd2_count_window_only_when_it_can_filter(spark, sf_dir):
+    """``min_events <= 1`` can drop no key, so that plan has only the
+    lag and lead windows; the default adds the per-key count window —
+    all on one exchange either way."""
+    import re
+
+    from change_data_capture_spark.functions.envelope import decode_envelope
+    from change_data_capture_spark.operators.scd2 import scd2
+    from change_data_capture_spark.sources.cdc_generator import product_change_events
+
+    decoded = decode_envelope(product_change_events(spark, sf_dir))
+    for min_events, windows in ((1, 2), (2, 3)):
+        s = plan_stats(scd2(decoded, min_events=min_events))
+        assert len(re.findall(r"^\(\d+\) Window\b", s.text, re.M)) == windows, s.text
+        assert s.shuffle_exchanges == 1, s.text
+
+
 def test_q1_filter_reaches_scan(spark, sf_dir):
     s = _stats(spark, sf_dir, "q1_pricing_summary")
     assert any("l_shipdate" in p for p in s.pushed_filters), s.pushed_filters

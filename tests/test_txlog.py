@@ -3871,3 +3871,27 @@ def test_undeclared_table_reads_like_a_declared_one(
     if isinstance(stream, str):
         stream = spark.createDataFrame([], stream).schema
     assert names_types(stream) == snapshot
+
+
+def test_pruned_empty_read_is_typed_like_a_scan(spark, tmp_path):
+    """An undeclared table is typed from its footer as Spark's nullable
+    copy, as every file scan is: a read whose predicate prunes every file
+    has the schema of a full read, and the change feed and the stream
+    source serve the same nullable column."""
+    from change_data_capture_spark.sources.txlog_stream import (
+        TxlogStreamDataSource,
+    )
+
+    t = str(tmp_path / "t")
+    txlog.commit(
+        t,
+        add=txlog.write_files(spark.range(10), t, stats_cols=["id"]),
+        expected_version=0,
+    )
+    full = txlog.read_version(spark, t).schema
+    pruned = txlog.read_version(spark, t, predicate_range=("id", 100, 200))
+    assert pruned.schema == full
+    assert pruned.count() == 0
+    assert full["id"].nullable
+    assert txlog.table_changes(spark, t, 0, 0).schema["id"] == full["id"]
+    assert TxlogStreamDataSource({"path": t}).schema()["id"] == full["id"]
